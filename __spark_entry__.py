@@ -596,9 +596,10 @@ def q_quarantine_rows(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_group_violations_scalable(spark: SparkSession, sf: str) -> DataFrame:
-    """The skew-resilient ordered-check path (ordered.py: range
-    repartition + mapInPandas + driver boundary carry) on a defect-rich
-    transcripts view of lineitem: turn_idx = l_linenumber % 3 injects
+    """The skew route (ordered.py: every conversation split into
+    turn_idx chunks of the fused window, each seeded by a carrier row)
+    on a defect-rich transcripts view of lineitem: turn_idx =
+    l_linenumber % 3 injects
     deterministic duplicate keys AND gaps; shipdate disorder across turn
     buckets injects monotonicity violations."""
     from ocsf_validator_spark.ordered import scalable_group_violations

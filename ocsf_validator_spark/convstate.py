@@ -6,9 +6,10 @@ increment, or a turn gap / ts regression straddling the increment
 boundary, is silently missed. The streaming leg already solves exactly
 this with per-conversation carried state
 (streaming.stateful_ordering_violations); this module is the batch-side
-equivalent: persist each conversation's BOUNDARY SUMMARY (the same
-summary ordered.py's Phase A computes per partition) into the
+equivalent: persist each conversation's BOUNDARY SUMMARY into the
 checkpoint, and seed the next increment's fused window checks with it.
+The skew route seeds each turn_idx chunk of a large conversation with
+the same kind of carrier (violations._chunk_carriers).
 
 State per conversation (one narrow row):
 
@@ -154,6 +155,7 @@ def attach_carriers(
     cs: list,
     ties: list[str],
     keys=("conv_id", "turn_idx"),
+    semi: bool = True,
 ) -> DataFrame:
     """Union one CARRIER row per carried conversation into the fused
     window pass's map-side projection (``pre`` — keys + bounded ties +
@@ -179,7 +181,11 @@ def attach_carriers(
     join) — at scale the state table is bucketed by hash(conv_id) next
     to the transcripts, so this probe is co-partitioned. Carrier rows
     are filtered out after the window columns are computed; they emit
-    nothing themselves."""
+    nothing themselves.
+
+    The chunked window seeds each chunk the same way: its state carries
+    a ``_chunk`` column (copied into ``pre``'s) and is derived from
+    ``pre`` itself, so ``semi=False`` skips the presence probe."""
     part, idx = keys[0], keys[1]
     mono_cols = list(
         dict.fromkeys(
@@ -187,12 +193,13 @@ def attach_carriers(
         )
     )
     prec_cs = [c for c in cs if isinstance(c, Precedence)]
-    state = state.join(pre.select(part).distinct(), part, "semi")
+    if semi:
+        state = state.join(pre.select(part).distinct(), part, "semi")
     sel = []
     for c in pre.columns:
         dt = pre.schema[c].dataType
-        if c == part:
-            sel.append(F.col(part))
+        if c in (part, "_chunk"):
+            sel.append(F.col(c))
         elif c == idx:
             sel.append(F.col(CARRY_PREV_IDX).cast(dt).alias(idx))
         elif c in mono_cols:

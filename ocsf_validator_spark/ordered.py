@@ -1,122 +1,30 @@
-"""Skew-resilient conversation-ordered checks (the 10^12-turn path).
+"""Skew-immune conversation-ordered checks: the chunked fused window.
 
 The fused window pass in violations.py partitions by conv_id, so one
-conversation = one task. A pathological conversation (synth's 5%-skew
-conv; at the design point, a conversation with 10^8 turns) serializes
-that task. This module evaluates the SAME group constraints — Unique
-(first-seen-wins occurrence ranks), TurnOrdering (dup/gap), Monotonic,
-Precedence (running prereq-seen carried across partition boundaries via
-the same prefix scan), OpeningRole (conversation-start detection via
-the carried predecessor row) — with NO per-conversation partitioning:
+conversation is one task, and a pathological conversation (at the design
+point, 10^8 turns) serializes that task. The skew route splits such a
+conversation into ``turn_idx div W`` chunks and partitions the same
+window by (conv_id, chunk). Each chunk is seeded with one carrier row
+built by a lazy aggregate over the chunks: the previous chunk's last
+row (the TurnOrdering, Monotonic and Alternation lags), the Precedence
+prereq-seen bits of every earlier chunk, and carrier presence (which
+suppresses OpeningRole after the first chunk). Duplicate
+(conv_id, turn_idx) keys never straddle a chunk, so Unique needs no
+carry. The whole route is one JVM plan: no Python stage, no eager job.
 
-1. ``repartitionByRange(conv_id, turn_idx, *ties)`` +
-   ``sortWithinPartitions``: the range partitioner balances rows by
-   SAMPLED KEY DENSITY, so a giant conversation spans many partitions
-   and every task gets ~equal rows regardless of skew.
-2. Phase A (one pass over the staged sort): per-partition boundary
-   summaries — row count, last row, the tail (conv, turn)-group's count
-   and first-seen, single-group flag — a few hundred bytes per
-   partition, collected to the driver.
-3. The driver prefix-scans the summaries into per-partition carry-in:
-   the predecessor row for lag checks at the partition head, plus the
-   running occurrence count / first-seen for a duplicate group that
-   straddles the boundary (correct across ANY number of partitions,
-   because a group spanning k partitions makes partitions 2..k-1
-   single-group).
-4. Phase B: ``mapInPandas`` (Arrow batches, vectorized pandas — the
-   only Python loops are over emitted VIOLATIONS, so work is
-   output-proportional) re-reads the staged sort with the broadcast
-   carry and emits exactly the rows the window formulation emits.
-
-The staged sort is persisted between the two phases (at real scale:
-written to a staging table) — both so it is scanned once per phase and
-so the range boundaries, which are computed from a sample at execution
-time, are FROZEN between phases.
-
-Cost model vs the window path: same single range shuffle + sort, but no
-giant-conversation straggler; price is the Arrow hop and the tiny
-summary job. Use when max-conversation >> rows-per-task; the window
-path wins when conversations are small (it stays fully in the JVM).
-Equivalence to the window path is asserted row-for-row in
-tests/test_ordered.py, including groups that straddle partitions.
+``all_violations(..., skewed_convs=...)`` chunks only the routed
+conversations. This module's entry point chunks every conversation, so
+equivalence with the unchunked window can be pinned on any input
+(tests/test_ordered.py).
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import json
-from typing import Iterator, Sequence
-
-import pandas as pd
+from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ocsf_validator_spark.spec import (
-    Alternation,
-    Monotonic,
-    OpeningRole,
-    Precedence,
-    TurnOrdering,
-    Unique,
-)
-from ocsf_validator_spark.violations import _tie_display
-
-def _violation_ddl(part: str, idx: str) -> str:
-    return (
-        f"constraint_id string, {part} string, {idx} int, "
-        "reason string, severity string"
-    )
-
-
-def _sql_str(v) -> str | None:
-    """Render one value the way Spark's CAST(x AS STRING) does."""
-    if v is None or v is pd.NaT or (isinstance(v, float) and pd.isna(v)):
-        return None
-    if hasattr(v, "strftime"):
-        if not hasattr(v, "hour"):  # datetime.date (Spark DATE): no time part
-            return v.strftime("%Y-%m-%d")
-        if getattr(v, "microsecond", 0):
-            return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-        return v.strftime("%Y-%m-%d %H:%M:%S")
-    return str(v)
-
-
-def _ties_str(pdf: pd.DataFrame, ties: Sequence[str]) -> pd.Series:
-    """concat_ws('|', cast(t as string)...) — Spark skips NULLs.
-
-    Fast path: no nulls in the batch → vectorized string concat.
-    Null rows fall back to a per-row join over that (defect-rare) subset.
-    """
-    if not ties:
-        return pd.Series([""] * len(pdf), index=pdf.index)
-    cols = []
-    for t in ties:
-        s = pdf[t]
-        if str(s.dtype).startswith("datetime"):
-            micro = s.dt.microsecond.fillna(0) != 0
-            base = s.dt.strftime("%Y-%m-%d %H:%M:%S")
-            if bool(micro.any()):
-                base = base.where(~micro, s.dt.strftime("%Y-%m-%d %H:%M:%S.%f"))
-            cols.append(base.astype("object"))
-        else:
-            cols.append(s.astype("object").where(s.notna(), None).map(
-                lambda x: None if x is None else str(x)
-            ))
-    nulls = pd.concat([c.isna() for c in cols], axis=1).any(axis=1)
-    fast = cols[0].fillna("")
-    for c in cols[1:]:
-        fast = fast + "|" + c.fillna("")
-    if bool(nulls.any()):
-        idxs = nulls[nulls].index
-        for i in idxs:
-            # pd.isna, not `is None`: strftime over NaT yields NaN (float),
-            # which `is not None` would let through into the str join
-            fast.loc[i] = "|".join(
-                str(c.loc[i]) for c in cols if not pd.isna(c.loc[i])
-            )
-    return fast
+from ocsf_validator_spark.violations import fused_group_violations
 
 
 def scalable_group_violations(
@@ -126,457 +34,15 @@ def scalable_group_violations(
     keys: Sequence[str] = ("conv_id", "turn_idx"),
     num_partitions: int | None = None,
     row_cs: Sequence = (),
-    cleanup: bool = True,
 ) -> DataFrame:
-    """Drop-in replacement for violations.fused_group_violations (group
-    legs only) that survives arbitrarily skewed conversations.
+    """violations.fused_group_violations with every conversation split
+    into turn_idx chunks of the input's rows over ``num_partitions``
+    (default: twice the default parallelism); sizing the chunks costs
+    one count job.
 
-    ``row_cs``: row-level constraints to evaluate over the SAME staged
-    data (a JVM projection over the persisted stage — the skewed subset
-    never needs a second scan of the source for its row checks).
-    ``cleanup=True`` eagerly materializes the result (localCheckpoint),
-    then unpersists the stage and destroys the carry broadcast, so
-    repeated calls in a long-lived session do not accumulate storage."""
-    part, idx = keys[0], keys[1]
-    spark = df.sparkSession
-    mono = [
-        (c.constraint_id, c.column, c.strict, c.severity.name)
-        for c in cs
-        if isinstance(c, Monotonic)
-    ]
-    uniq_specs = [
-        (c.constraint_id, c.severity.name) for c in cs if isinstance(c, Unique)
-    ]
-    order_specs = [
-        (c.constraint_id, c.severity.name) for c in cs if isinstance(c, TurnOrdering)
-    ]
-    prec_specs = [
-        (c.constraint_id, c.column, c.trigger, tuple(c.prereq), c.severity.name)
-        for c in cs
-        if isinstance(c, Precedence)
-    ]
-    open_specs = [
-        (c.constraint_id, c.column, tuple(c.allowed), c.severity.name)
-        for c in cs
-        if isinstance(c, OpeningRole)
-    ]
-    alt_specs = [
-        (c.constraint_id, c.column, tuple(c.scope), c.severity.name)
-        for c in cs
-        if isinstance(c, Alternation)
-    ]
-    narrow = [part, idx, *[t for t in ties if t not in (part, idx)]]
-    for _, col, _, _ in mono:
-        if col not in narrow:
-            narrow.append(col)
-    for spec in prec_specs:
-        if spec[1] not in narrow:
-            narrow.append(spec[1])
-    for spec in open_specs:
-        if spec[1] not in narrow:
-            narrow.append(spec[1])
-    for spec in alt_specs:
-        if spec[1] not in narrow:
-            narrow.append(spec[1])
-    # row legs may reference any column, but they are evaluated against
-    # the PRE-SHUFFLE persist below — only the narrow group-check columns
-    # ever cross the range exchange / the Arrow boundary (full text
-    # payloads through the shuffle twice would dominate at the 10^8-turn
-    # design point)
-    need = list(df.columns) if row_cs else narrow
-    P = num_partitions or spark.sparkContext.defaultParallelism * 2
-
-    # Persist the projection BEFORE repartitionByRange: the range
-    # partitioner runs a sampling job over its child, which would
-    # otherwise re-scan the source (for the runner's skew route that is
-    # a second full read of the input just to draw ~P*20 sample rows).
-    pre = df.select(*need).persist(StorageLevel.MEMORY_AND_DISK)
-    # same bounded-tie discipline as the fused path (violations.py
-    # TIE_DISPLAY_LEN): string tie columns are capped map-side before the
-    # range exchange, so a transcript's full `text` never crosses it —
-    # rows tying on the capped prefix display the same peer either way.
-    # exact-value columns (isin/equality semantics): never tie-capped
-    mono_names = (
-        {m[1] for m in mono}
-        | {s[1] for s in prec_specs}
-        | {s[1] for s in open_specs}
-        | {s[1] for s in alt_specs}
+    ``row_cs``: row-level constraints evaluated on the same scan."""
+    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    chunk_rows = max(1, -(-df.count() // parts))
+    return fused_group_violations(
+        df, cs, ties, keys, row_cs=row_cs, chunk_rows=chunk_rows
     )
-    narrow_bounded = [
-        _tie_display(F.col(c), pre.schema[c].dataType).alias(c)
-        if c in ties and c not in mono_names
-        else F.col(c)
-        for c in narrow
-    ]
-    staged = (
-        pre.select(*narrow_bounded)
-        # same null ordering as the sort below (asc_nulls_last on ties),
-        # else null-tie rows of a boundary-straddling duplicate group can
-        # land out of traversal order and skew occurrence ranks
-        .repartitionByRange(
-            P,
-            F.col(part),
-            F.col(idx),
-            *[F.col(t).asc_nulls_last() for t in ties],
-        )
-        .sortWithinPartitions(
-            F.col(part).asc(),
-            F.col(idx).asc(),
-            *[F.col(t).asc_nulls_last() for t in ties],
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    data_cols = [c for c in staged.columns if c != "_pid"]
-
-    # ---- Phase A: per-partition boundary summaries -----------------------
-    summary_ddl = (
-        "pid int, n long, single_group boolean, "
-        "tail_count long, tail_first string, last_json string, "
-        "conv_single boolean, tail_seen string"
-    )
-
-    def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = None
-        n = 0
-        single = True
-        tail_key = None  # (conv, turn) of the group at the current end
-        tail_count = 0
-        tail_first = None
-        last = None
-        first_conv = None
-        tail_conv = None  # conversation at the current end
-        # per Precedence constraint: prereq seen among the TAIL
-        # conversation's rows within THIS partition
-        tail_seen = {cid: False for cid, *_ in prec_specs}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            pid = int(pdf["_pid"].iloc[0])
-            m = len(pdf)
-            conv, turn = pdf[part], pdf[idx]
-            if first_conv is None:
-                first_conv = conv.iloc[0]
-            first_key = (conv.iloc[0], turn.iloc[0])
-            last_key = (conv.iloc[m - 1], turn.iloc[m - 1])
-            batch_single = first_key == last_key  # sorted -> ends equal = all equal
-            continues = n > 0 and tail_key == first_key
-            single = batch_single if n == 0 else (single and continues and batch_single)
-            # start index of the batch's tail group (sorted: scan from end)
-            s = m - 1
-            keys_conv, keys_turn = conv.values, turn.values
-            while s > 0 and (keys_conv[s - 1], keys_turn[s - 1]) == last_key:
-                s -= 1
-            if continues and s == 0 and batch_single:
-                tail_count += m  # whole batch extends the carry group
-            else:
-                tail_count = m - s
-                # only the tail group's FIRST row ever needs its tie
-                # string here — not the whole batch
-                tail_first = str(_ties_str(pdf.iloc[[s]], ties).iloc[0])
-            tail_key = last_key
-            if prec_specs:
-                # sorted by conv: the batch's last conversation's rows
-                # are a contiguous suffix == all rows with that conv
-                batch_last_conv = conv.iloc[m - 1]
-                in_tail_conv = conv == batch_last_conv
-                for cid, col, _trig, prereq, _sev in prec_specs:
-                    seen = bool(
-                        pdf[col][in_tail_conv].isin(prereq).any()
-                    )
-                    if tail_conv is not None and batch_last_conv == tail_conv:
-                        tail_seen[cid] = tail_seen[cid] or seen
-                    else:
-                        tail_seen[cid] = seen
-                tail_conv = batch_last_conv
-            last = {c: pdf[c].iloc[-1] for c in data_cols}
-            n += m
-        if pid is None:
-            return
-
-        def enc(v):
-            # timestamps -> SQL strings (re-parsed by Phase B); numpy
-            # scalars -> native; everything else JSON-native already
-            if v is None or v is pd.NaT or (isinstance(v, float) and pd.isna(v)):
-                return None
-            if hasattr(v, "strftime"):
-                return _sql_str(v)
-            if hasattr(v, "item"):
-                return v.item()
-            return v
-
-        yield pd.DataFrame(
-            {
-                "pid": [pid],
-                "n": [n],
-                "single_group": [bool(single)],
-                "tail_count": [int(tail_count)],
-                "tail_first": [tail_first],
-                "last_json": [json.dumps({c: enc(v) for c, v in last.items()})],
-                "conv_single": [
-                    bool(first_conv == last[part]) if last else True
-                ],
-                "tail_seen": [
-                    json.dumps({k: int(v) for k, v in tail_seen.items()})
-                ],
-            }
-        )
-
-    summaries = sorted(
-        staged.mapInPandas(summarize, summary_ddl).collect(), key=lambda r: r.pid
-    )
-    if not row_cs:
-        # the Phase A job materialized `staged`; the pre-shuffle
-        # projection has served its purpose (one source scan for
-        # sample + stage). With row_cs it lives on as the row-leg input.
-        pre.unpersist()
-
-    # ---- driver prefix scan -> carry-in per partition ---------------------
-    carry: dict[int, dict] = {}
-    prev_last = None
-    run_key = None
-    run_count = 0
-    run_first = None
-    # per Precedence constraint: prereq seen so far in the conversation
-    # OPEN at the running end (prefix-combined across partitions)
-    seen_run = {cid: False for cid, *_ in prec_specs}
-    for s in summaries:
-        carry[s.pid] = {
-            "prev": dict(prev_last) if prev_last else None,
-            "run_key": list(run_key) if run_key else None,
-            "run_count": run_count,
-            "run_first": run_first,
-            "seen": dict(seen_run),
-        }
-        last = json.loads(s.last_json)
-        this_tail = (last[part], last[idx])
-        if prec_specs:
-            tail_seen = json.loads(s.tail_seen)
-            if (
-                prev_last is not None
-                and s.conv_single
-                and last[part] == prev_last[part]
-            ):
-                # the whole partition extends the open conversation
-                for cid in seen_run:
-                    seen_run[cid] = seen_run[cid] or bool(tail_seen[cid])
-            else:
-                # the tail conversation started inside this partition
-                seen_run = {
-                    cid: bool(tail_seen[cid]) for cid, *_ in prec_specs
-                }
-        if prev_last is not None and s.single_group and run_key == this_tail:
-            run_count += int(s.tail_count)  # group spans 3+ partitions
-        else:
-            run_count = int(s.tail_count)
-            run_first = s.tail_first
-        run_key = this_tail
-        prev_last = last
-    bcarry = spark.sparkContext.broadcast(carry)
-
-    # ---- Phase B: vectorized checks with carry ----------------------------
-    def check(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict | None = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            if state is None:
-                c0 = bcarry.value.get(int(pdf["_pid"].iloc[0])) or {}
-                state = {
-                    "prev": c0.get("prev"),
-                    "run_key": tuple(c0["run_key"]) if c0.get("run_key") else None,
-                    "run_count": int(c0.get("run_count") or 0),
-                    "run_first": c0.get("run_first"),
-                    "seen": dict(c0.get("seen") or {}),
-                }
-            n = len(pdf)
-            conv, turn = pdf[part], pdf[idx]
-            prev = state["prev"]
-            lag_conv = conv.shift(1)
-            lag_turn = turn.shift(1)
-            if prev is not None:
-                lag_conv.iloc[0] = prev[part]
-                lag_turn.iloc[0] = prev[idx]
-            same_conv = (conv == lag_conv).fillna(False)
-
-            cid_rows: list[str] = []
-            sev_rows: list[str] = []
-            pos_rows: list[int] = []
-            out_rows: list[str] = []
-
-            for cid, sev in order_specs:
-                is_dup = same_conv & (turn == lag_turn)
-                expected = (lag_turn.where(same_conv).astype("float64") + 1).fillna(0)
-                is_gap = (~is_dup) & (turn.astype("float64") > expected)
-                for i in is_dup[is_dup].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    out_rows.append(f"duplicate {idx} {turn.iloc[i]}")
-                for i in is_gap[is_gap].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    out_rows.append(
-                        f"{idx} gap: expected {int(expected.iloc[i])} got {turn.iloc[i]}"
-                    )
-
-            if prec_specs or open_specs:
-                # conversation segments within the batch; with carry the
-                # head rows (same_conv[0] True) continue the open
-                # conversation from the previous batch/partition
-                conv_seg = (~same_conv).cumsum()
-            for cid, col, trig, prereq, sev in prec_specs:
-                cur = pdf[col]
-                ind = cur.isin(prereq).fillna(False).astype("int64")
-                prior = ind.groupby(conv_seg).cumsum() - ind
-                if bool(same_conv.iloc[0]) and state["seen"].get(cid):
-                    head = conv_seg == conv_seg.iloc[0]
-                    prior = prior.where(~head, prior + 1)
-                bad = (cur == trig) & (prior == 0)
-                for i in bad[bad].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    out_rows.append(
-                        f"{col} '{trig}' with no prior {'|'.join(prereq)}"
-                    )
-                # update the open-conversation seen bit for the next batch
-                tail_seg = conv_seg == conv_seg.iloc[n - 1]
-                seen_tail = bool(ind[tail_seg].any())
-                if bool(same_conv.iloc[0]) and conv_seg.iloc[0] == conv_seg.iloc[n - 1]:
-                    state["seen"][cid] = bool(state["seen"].get(cid)) or seen_tail
-                else:
-                    state["seen"][cid] = seen_tail
-
-            for cid, col, allowed, sev in open_specs:
-                cur = pdf[col]
-                is_first = ~same_conv
-                bad = is_first & (cur.isna() | ~cur.isin(allowed))
-                for i in bad[bad].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    v = cur.iloc[i]
-                    out_rows.append(
-                        "conversation opens with "
-                        + ("NULL" if pd.isna(v) else str(v))
-                    )
-
-            def lag_with_carry(col: str, cur: pd.Series) -> pd.Series:
-                """shift(1) with the carried previous-partition value
-                spliced into row 0 (re-parsed from its JSON-string
-                transport by the column's actual value type — Spark
-                DATE arrives as object-dtype date, not datetime64, so
-                dtype prefix alone is not enough)."""
-                lag_v = cur.shift(1)
-                if prev is not None and prev.get(col) is not None:
-                    pv = prev[col]
-                    if isinstance(pv, str):
-                        if str(cur.dtype).startswith("datetime"):
-                            pv = pd.Timestamp(pv)
-                        else:
-                            nn = cur.dropna()
-                            if len(nn) and isinstance(nn.iloc[0], _dt.date):
-                                pv = _dt.date.fromisoformat(pv)
-                    lag_v.iloc[0] = pv
-                return lag_v
-
-            for cid, col, strict, sev in mono:
-                cur = pdf[col]
-                lag_v = lag_with_carry(col, cur)
-                ok = same_conv & lag_v.notna() & cur.notna()
-                bad = ((cur <= lag_v) if strict else (cur < lag_v)) & ok
-                for i in bad[bad].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    out_rows.append(
-                        f"{col} not monotonic: {_sql_str(cur.iloc[i])} "
-                        f"after {_sql_str(lag_v.iloc[i])}"
-                    )
-
-            for cid, col, scope, sev in alt_specs:
-                cur = pdf[col]
-                lag_v = lag_with_carry(col, cur)
-                bad = same_conv & lag_v.notna() & cur.notna() & (cur == lag_v)
-                if scope:
-                    bad = bad & cur.isin(scope)
-                for i in bad[bad].index:
-                    cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                    out_rows.append(
-                        f"consecutive {col} '{_sql_str(cur.iloc[i])}'"
-                    )
-
-            if uniq_specs:
-                grp_change = (~same_conv) | (turn != lag_turn)
-                gid = grp_change.cumsum()
-                occ = gid.groupby(gid).cumcount() + 1
-                head_cont = prev is not None and (
-                    conv.iloc[0] == prev[part] and turn.iloc[0] == prev[idx]
-                )
-                in_head = gid == gid.iloc[0]
-                if head_cont:
-                    occ = occ.where(~in_head, occ + state["run_count"])
-                tail_mask = gid == gid.iloc[n - 1]
-                # tie strings are only needed for duplicate groups, the
-                # head group (carry continuation) and the tail group —
-                # a defect-proportional subset; never strftime the whole
-                # batch
-                need_ts = gid.duplicated(keep=False) | tail_mask
-                if head_cont:
-                    need_ts = need_ts | in_head
-                ts_sub = _ties_str(pdf.loc[need_ts], ties)
-                firsts = ts_sub.groupby(gid[need_ts]).transform("first")
-                if head_cont and state["run_first"] is not None:
-                    firsts = firsts.where(
-                        gid[need_ts] != gid.iloc[0], state["run_first"]
-                    )
-                for cid, sev in uniq_specs:
-                    dup = occ > 1
-                    for i in dup[dup].index:
-                        cid_rows.append(cid); sev_rows.append(sev); pos_rows.append(i)
-                        out_rows.append(
-                            f"duplicate key ({conv.iloc[i]},{turn.iloc[i]}) "
-                            f"occurrence {int(occ.iloc[i])}; "
-                            f"first seen {firsts.loc[i]}"
-                        )
-                tail_all_one = bool(tail_mask.all())
-                if head_cont and tail_all_one:
-                    state["run_count"] += n
-                else:
-                    tail_n = int(tail_mask.sum())
-                    state["run_count"] = tail_n
-                    state["run_first"] = str(ts_sub.loc[n - tail_n])
-                state["run_key"] = (conv.iloc[n - 1], turn.iloc[n - 1])
-
-            state["prev"] = {c: pdf[c].iloc[-1] for c in data_cols}
-            if out_rows:
-                yield pd.DataFrame(
-                    {
-                        "constraint_id": cid_rows,
-                        part: [str(conv.iloc[i]) for i in pos_rows],
-                        idx: [int(turn.iloc[i]) for i in pos_rows],
-                        "reason": out_rows,
-                        "severity": sev_rows,
-                    }
-                )
-
-    out = staged.mapInPandas(check, _violation_ddl(part, idx))
-    if row_cs:
-        # row-level legs for the skewed subset: a plain JVM projection
-        # over the ALREADY-PERSISTED pre-shuffle data — no second source
-        # scan, and no wide columns through the range exchange
-        from ocsf_validator_spark.compile import violation_entries_guarded
-
-        entries = violation_entries_guarded(row_cs)
-        rows = pre.select(part, idx, F.explode(entries).alias("_v")).select(
-            F.col("_v.constraint_id").alias("constraint_id"),
-            F.col(part).cast("string").alias(part),
-            F.col(idx).cast("int").alias(idx),
-            F.col("_v.reason").alias("reason"),
-            F.col("_v.severity").alias("severity"),
-        )
-        out = out.unionByName(rows)
-    if cleanup:
-        # violations are defect-proportional (tiny vs the stage): pin
-        # them eagerly, then release the stage + carry so long-lived
-        # sessions (runner loops, benchmarks) don't accumulate storage
-        out = out.localCheckpoint(eager=True)
-        staged.unpersist()
-        if row_cs:
-            pre.unpersist()
-        bcarry.destroy()
-    return out

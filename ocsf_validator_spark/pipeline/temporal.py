@@ -92,8 +92,8 @@ def asof_join(
     probe, the violations.detect_skewed_conv_counts pattern), that
     key's rows are split into ``hot_splits`` time ranges, each split
     fills forward independently, and the cross-split carry (the latest
-    right payload per boundary — the ordered.py boundary-summary
-    pattern) is a bounded driver fold broadcast back as a per-split
+    right payload per boundary, one row per split) is a bounded
+    driver fold broadcast back as a per-split
     seed. Result identity with the unrouted window is pinned by
     tests/test_temporal.py. ``hot_key_threshold=None`` disables the
     probe (single plan, oracle-friendly); at most ``hot_key_cap`` keys
@@ -202,9 +202,10 @@ def _asof_hot_leg(
     literals — no sampling job), each split fills forward independently
     under the SAME window logic, and the cross-split carry is a bounded
     Phase-A aggregate (one row per key × split: the split's last right
-    row) folded on the driver and broadcast back as per-split seeds —
-    the ordered.py boundary-summary pattern with the carry being just
-    the latest right payload. Output is row-identical to the unrouted
+    row) folded on the driver and broadcast back as per-split seeds,
+    the carry being just the latest right payload (the chunk carriers
+    of violations.fused_group_violations apply the same idea to
+    conversation windows). Output is row-identical to the unrouted
     window (pinned by test): a left row's match is the last right row
     at-or-before it in its own split, else the seeded carry."""
     from pyspark.sql import types as T

@@ -281,17 +281,20 @@ def run_validation(
 
     # Phase 2b — skew routing decision, now pure driver arithmetic over
     # the probe structs collected with the stats (zero extra jobs):
-    # conversations too big for one window task go to the
-    # range-partitioned ordered path. Threshold: ~4x the expected
-    # rows-per-shuffle-partition (never below skew_min_rows, the probe's
-    # collection floor, so the candidates are always a superset).
+    # conversations too big for one window task are split into turn_idx
+    # chunks of one task's share of the rows. Threshold: ~4x that share
+    # (never below skew_min_rows, the probe's collection floor, so the
+    # candidates are always a superset).
     skewed: list[str] = []
-    ordered_partitions = None
+    skew_route = None
     if detect_skew:
+        from ocsf_validator_spark.violations import skew_chunk_rows
+
         parallelism = int(
             spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
         skew_rows = max(skew_min_rows, 4 * n_rows // max(parallelism, 1))
+        chunk_rows = skew_chunk_rows(spark, n_rows)
         cand = sorted(
             (
                 (s.conv, int(s.n))
@@ -304,23 +307,30 @@ def run_validation(
         skewed_counts = [(c, n) for c, n in cand if n >= skew_rows][:10_000]
         skewed = [c for c, _ in skewed_counts]
         if skewed:
-            # partition the ordered path by DATA SIZE (~250k rows/task),
-            # rounded UP to a multiple of the available slots so the
-            # Arrow stages run full waves (13 partitions on 8 cores is
-            # a 1.6-wave schedule with a 38%-idle tail)
             n_big = sum(n for _, n in skewed_counts)
-            p = max(8, -(-n_big // 250_000))
-            dp = max(spark.sparkContext.defaultParallelism, 1)
-            ordered_partitions = -(-p // dp) * dp
+            if carry_state is not None:
+                # carried increments keep whole-conversation windows
+                # (see all_violations)
+                chunk_rows = None
+                route = "the whole-conversation window (incremental carry)"
+            else:
+                # chunk count for dense turn_idx; gaps leave fewer
+                n_chunks = sum(-(-n // chunk_rows) for _, n in skewed_counts)
+                route = (
+                    f"chunked windows of {chunk_rows} rows "
+                    f"({n_chunks} partitions)"
+                )
+            skew_route = {
+                "convs": len(skewed), "rows": n_big, "chunk_rows": chunk_rows,
+            }
             say(
                 f"skew: routing {len(skewed)} conversations >= {skew_rows} "
-                f"rows ({n_big} rows) to the range-partitioned path "
-                f"({ordered_partitions} partitions)"
+                f"rows ({n_big} rows) to {route}"
             )
 
-    # Phase 3 — violations: two fused scans (row projection + conv
-    # window) plus the bounded coverage agg. Cached only when the rows
-    # are consumed twice (parquet sink + verdict counts).
+    # Phase 3 — violations: one fused scan (row legs + conv window, the
+    # routed conversations chunked) plus the bounded coverage agg. Cached
+    # only when the rows are consumed twice (parquet sink + verdicts).
     lap("skew_probe")
     viol = all_violations(
         df,
@@ -328,17 +338,9 @@ def run_validation(
         observed_enums=observed_enums,
         observed_metrics=observed_metrics,
         skewed_convs=skewed,
-        ordered_partitions=ordered_partitions,
         carry=carry_state,
         fd_carry=fd_carry,
     )
-    # NOTE: when skew is routed, all_violations executes BOTH legs
-    # inside this phase — the ordered leg in a worker thread overlapped
-    # with the fused leg's scan (eager localCheckpoint), so the later
-    # "verdict" lap only measures the aggregation over the pinned
-    # defect-proportional rows. Serial driver barriers between the
-    # legs' jobs would otherwise idle the whole cluster — a fixed
-    # absolute cost that eats 4x more compute at 4N cores than at N.
     lap("skew_path")
     if violations_out or quarantine_out:
         from ocsf_validator_spark.violations import cap_violations
@@ -471,6 +473,7 @@ def run_validation(
             "suite_version": suite.version(),
             "skipped_buckets": skipped,
             "phase_sec": timings,
+            "skew_route": skew_route,
             "constraints": summary,
         }
         tmpp = report_json + ".tmp"

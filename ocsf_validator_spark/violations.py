@@ -66,8 +66,8 @@ DEFAULT_KEYS = ("conv_id", "turn_idx")
 # String tie columns are capped at this many characters BEFORE the
 # conversation exchange: at transcript scale `text` is the whole shuffle
 # payload, and an unbounded peer string in a reason row is useless past a
-# screenful anyway. Truncation is applied identically in the fused path,
-# the skew (ordered.py) path, the standalone unique path, and the DuckDB
+# screenful anyway. Truncation is applied identically in the fused path
+# (chunked skew route included), the standalone unique path, and the DuckDB
 # oracles, so verdicts stay engine-exact: rows that tie on the truncated
 # prefix display the same peer string whichever of them wins the rank.
 TIE_DISPLAY_LEN = 256
@@ -422,6 +422,84 @@ def _fusable(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
     return (cs, ties) if cs else None
 
 
+# chunk id of a chunked conversation's NULL turn_idx rows: they sort
+# first in the whole-conversation window, so they form its first chunk
+_NULL_CHUNK = -(2**63)
+
+
+def _chunk_carriers(
+    pre: DataFrame, cs: list, ties: list[str], keys: Sequence[str]
+) -> DataFrame:
+    """Carrier rows for a chunked window, in convstate's boundary-state
+    schema plus ``_chunk``: one per (conv, _chunk) that has an earlier
+    non-empty chunk, holding that chunk's last row in the window's
+    (idx, ties nulls-last) order — its idx and lag-column values — and
+    each Precedence prereq-seen bit OR'd over ALL earlier chunks.
+
+    One partial aggregate over the chunked rows of ``pre`` (one small
+    exchange, a row per chunk). The per-conversation prefix over chunks
+    runs on that result coalesced to one partition, which satisfies the
+    prefix window's distribution, so it adds no exchange."""
+    from ocsf_validator_spark.convstate import (
+        CARRY_COUNT,
+        CARRY_FIRST,
+        CARRY_PREV_IDX,
+        carry_mono_col,
+        carry_seen_col,
+    )
+
+    part, idx = keys[0], keys[1]
+    lag_cols = list(
+        dict.fromkeys(
+            c.column for c in cs if isinstance(c, (Monotonic, Alternation))
+        )
+    )
+    prec_cs = [c for c in cs if isinstance(c, Precedence)]
+    # max over a struct is the last row: idx first, then per tie an
+    # is-null flag ahead of the value (nulls last), lag values as payload
+    order = [F.col(idx)]
+    for t in ties:
+        order += [F.col(t).isNull(), F.col(t)]
+    last = F.max(
+        F.struct(
+            *[o.alias(f"_o{i}") for i, o in enumerate(order)],
+            *[F.col(m).alias(f"_m{j}") for j, m in enumerate(lag_cols)],
+        )
+    )
+    seen = [
+        F.max(F.col(c.column).isin(*c.prereq).cast("int")).alias(f"_s{k}")
+        for k, c in enumerate(prec_cs)
+    ]
+    summ = pre.groupBy(part, "_chunk").agg(last.alias("_last"), *seen)
+    wc = Window.partitionBy(part).orderBy("_chunk")
+    before = wc.rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        summ.coalesce(1)
+        .select(
+            part,
+            "_chunk",
+            F.lag("_last").over(wc).alias("_p"),
+            *[
+                F.max(f"_s{k}").over(before).alias(carry_seen_col(c))
+                for k, c in enumerate(prec_cs)
+            ],
+        )
+        .filter(F.col("_p").isNotNull())
+        .select(
+            part,
+            "_chunk",
+            F.col("_p._o0").alias(CARRY_PREV_IDX),
+            *[
+                F.col(f"_p._m{j}").alias(carry_mono_col(m))
+                for j, m in enumerate(lag_cols)
+            ],
+            *[carry_seen_col(c) for c in prec_cs],
+            F.lit(0).cast("long").alias(CARRY_COUNT),
+            F.lit(None).cast("string").alias(CARRY_FIRST),
+        )
+    )
+
+
 def fused_group_violations(
     df: DataFrame,
     cs: list,
@@ -429,6 +507,8 @@ def fused_group_violations(
     keys: Sequence[str] = DEFAULT_KEYS,
     row_cs: Sequence = (),
     carry: DataFrame | None = None,
+    chunk_rows: int | None = None,
+    chunk_convs: Sequence[str] | None = None,
 ) -> DataFrame:
     """All conversation-window constraints in ONE shuffle + ONE sort —
     and, when ``row_cs`` is passed, the entire row-level family rides the
@@ -447,11 +527,15 @@ def fused_group_violations(
     extra exchange and NO extra sort: one shuffle, one sort, two
     adjacent WindowExecs.
 
-    Scale note: partitionBy(conv_id) puts each conversation in one task;
-    a pathological conversation (synth's 5%-skew conv) makes one task
-    ~2x average at 32 slots — acceptable; beyond that the pass/fail
-    signal can fall back to the salted no-window formulation in
-    stats.conversation_stats.
+    Scale note: partitionBy(conv_id) puts each conversation in one task.
+    ``chunk_rows`` (the skew route) splits conversations too large for
+    one task into ``turn_idx div chunk_rows`` ranges — only those in
+    ``chunk_convs``, or every conversation when it is None — and the
+    window partitions by (conv, _chunk). NULL turn_idx rows sort first
+    in the conversation, so they form the first chunk. Equal
+    (conv, turn_idx) keys share a chunk, so Unique needs no carry; chunk
+    k is seeded with a carrier row (see _chunk_carriers) holding what
+    the whole-conversation window would have seen before its first row.
 
     Shuffle-width note (the 100 TB design point): the conv_id exchange
     carries ONLY (keys, bounded tie columns, monotonic columns, and a
@@ -459,8 +543,7 @@ def fused_group_violations(
     are evaluated MAP-SIDE before the exchange — their structs ride the
     shuffle only for violating rows — and string tie columns are capped
     at TIE_DISPLAY_LEN, so full `text` payloads never cross the
-    exchange (ordered.py's skew path applies the same discipline for
-    the same reason, ordered.py:147-152).
+    exchange.
 
     ``carry`` (incremental runs): the convstate boundary-state table —
     one carrier row per carried conversation is unioned into the
@@ -470,7 +553,11 @@ def fused_group_violations(
     first-seen string), plus one extra leg: a real row whose idx is
     BELOW the carried boundary is reported conservatively as
     ``out-of-order`` under the ordering constraint (boundary-only state
-    cannot rank it — see convstate's module contract)."""
+    cannot rank it — see convstate's module contract). It cannot be
+    combined with ``chunk_rows``: the out-of-order bound and the opening
+    suppression are per conversation, not per chunk."""
+    if carry is not None and chunk_rows is not None:
+        raise ValueError("carry and chunk_rows are mutually exclusive")
     part, idx = keys[0], keys[1]
     entry_t = "struct<constraint_id:string,reason:string,severity:string>"
     mono_cols = [c.column for c in cs if isinstance(c, Monotonic)]
@@ -513,12 +600,30 @@ def fused_group_violations(
         pre_cols.append(
             violation_entries_guarded(row_cs, cast_to=entry_t).alias("_rv")
         )
+    wpart = [part]
+    if chunk_rows is not None:
+        chunk = F.coalesce(
+            F.expr(f"`{idx}` div {int(chunk_rows)}").cast("long"),
+            F.lit(_NULL_CHUNK),
+        )
+        if chunk_convs is not None:
+            # conversations not routed are one chunk each
+            routed = F.col(part).isin(*chunk_convs)
+            chunk = F.when(routed, chunk).otherwise(F.lit(0).cast("long"))
+        pre_cols.append(chunk.alias("_chunk"))
+        wpart.append("_chunk")
     pre = df.select(*pre_cols)
-    carried = carry is not None
+    carriers = carry
+    if chunk_rows is not None:
+        src = pre if chunk_convs is None else pre.filter(routed)
+        carriers = _chunk_carriers(src, cs, ties, keys)
+    carried = carriers is not None
     if carried:
         from ocsf_validator_spark.convstate import attach_carriers
 
-        pre = attach_carriers(pre, carry, cs, ties, keys)
+        pre = attach_carriers(
+            pre, carriers, cs, ties, keys, semi=carry is not None
+        )
     # ---- reduce-side windows, over the bounded columns only ------------
     tie_order = [F.col(t).asc_nulls_last() for t in ties]
     if carried:
@@ -526,8 +631,8 @@ def fused_group_violations(
         # first in-order real row's lag is the carried boundary and a
         # boundary-key re-append ranks after the carried occurrences
         tie_order = [F.col("_cr").desc(), *tie_order]
-    w = Window.partitionBy(part).orderBy(F.col(idx).asc(), *tie_order)
-    w2 = Window.partitionBy(part, idx).orderBy(*tie_order)
+    w = Window.partitionBy(*wpart).orderBy(F.col(idx).asc(), *tie_order)
+    w2 = Window.partitionBy(*wpart, idx).orderBy(*tie_order)
     prev_idx = F.lag(F.col(idx)).over(w)
     cols: dict = {"_prev_idx": prev_idx}
     for m in lag_cols:
@@ -560,9 +665,9 @@ def fused_group_violations(
         cols["_rn1"] = F.row_number().over(w)
         if carried:
             cols["_c_has"] = F.max(F.col("_cr").cast("int")).over(
-                Window.partitionBy(part)
+                Window.partitionBy(*wpart)
             )
-    if carried:
+    if carry is not None:
         # the carried boundary idx, visible on every real row of the
         # conversation (full unordered frame; same partitioning as w,
         # so no extra exchange)
@@ -574,7 +679,7 @@ def fused_group_violations(
         first_seen_str = F.concat_ws(
             "|", *[F.col(t).cast("string") for t in ties]
         )
-        if carried:
+        if carry is not None:
             # running SUM of per-row weights instead of row_number: the
             # carrier weighs its carried tail count, real rows weigh 1,
             # so a boundary-key re-append ranks tail_count+1 — the rank
@@ -607,11 +712,13 @@ def fused_group_violations(
             F.lead(F.col(idx)).over(w).eqNullSafe(F.col(idx))
         )
         base_first = F.first(F.when(in_dup_group, first_seen_str)).over(w2)
-        if carried:
+        if carry is not None:
             # a carried group's TRUE first-seen is the string persisted
             # when the key was first observed, not the carrier's NULL
             # ties (full-frame max over the group: non-NULL only on
-            # carried groups, so uncarried groups keep base_first)
+            # carried groups, so uncarried groups keep base_first).
+            # Chunk carriers need neither: their idx is below every idx
+            # of their chunk, so they never share a (conv, idx) group.
             cols["_first"] = F.coalesce(
                 F.max(F.col("_cr_first")).over(Window.partitionBy(part, idx)),
                 base_first,
@@ -630,7 +737,7 @@ def fused_group_violations(
     # streaming operator's conservative out-of-order instead
     below_bound = (
         F.col("_c_bound").isNotNull() & (F.col(idx) < F.col("_c_bound"))
-        if carried
+        if carry is not None
         else F.lit(False)
     )
     occ = F.col("_occ") if has_unique else F.lit(1)
@@ -661,7 +768,7 @@ def fused_group_violations(
                 F.col(idx) == F.col("_prev_idx")
             )
             is_gap = F.col(idx) > expected
-            if carried:
+            if carry is not None:
                 legs.append(
                     (
                         below_bound,
@@ -1277,10 +1384,11 @@ def dataset_findings(
                     c.severity.name,
                 )
             )
+    # a coverage constraint with no declared values has nothing to miss
     cov = [
         c
         for c in suite.dataset_level()
-        if isinstance(c, EnumCoverage) and c.column in df.columns
+        if isinstance(c, EnumCoverage) and c.column in df.columns and c.values
     ]
     cov_leg = None
     if cov and include_coverage:
@@ -1665,6 +1773,15 @@ def detect_skewed_convs(
     ]
 
 
+def skew_chunk_rows(spark: SparkSession, n_rows: int) -> int:
+    """Rows per chunk of a skew-routed conversation: one shuffle task's
+    share of the input, ceil(n_rows / spark.sql.shuffle.partitions).
+    The runner routes conversations above 4x this figure, so every
+    routed conversation splits into at least four chunks."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, -(-int(n_rows) // max(parts, 1)))
+
+
 def all_violations(
     df: DataFrame,
     suite: ConstraintSet,
@@ -1673,7 +1790,6 @@ def all_violations(
     observed_enums: dict | None = None,
     skewed_convs: Sequence[str] | None = None,
     ordered_partitions: int | None = None,
-    concurrent_skew: bool = True,
     carry: DataFrame | None = None,
     observed_metrics: dict | None = None,
     fd_carry: "dict[str, DataFrame] | None" = None,
@@ -1685,98 +1801,37 @@ def all_violations(
     ``observed_enums``). Heterogeneous suites fall back to one fused row
     scan + per-constraint group legs.
 
-    ``skewed_convs`` (from detect_skewed_convs) routes pathologically
-    large conversations AROUND the window pass: their group checks run
-    on the skew-immune range-partitioned path (ordered.py) and their row
-    checks on a map-only projection, while everything else keeps the
-    single-scan plan. The window pass then never sees a partition larger
-    than the biggest NORMAL conversation — no straggler task.
-
-    ``concurrent_skew``: overlap the two legs. The ordered path is
-    eager (staging sample, boundary-summary collect, checkpoint) and
-    its driver barriers idle the cluster between jobs; the fused leg is
-    one long scan. Running the ordered leg in a worker thread while
-    this thread materializes the fused leg (eager localCheckpoint —
-    violations are defect-proportional, so the pin is small) keeps the
-    executors busy across both legs' barriers, the way two scheduler
-    pools would on a real cluster. The cost model is the reason this
-    matters for SCALING, not just wall: serial driver gaps are a fixed
-    absolute time, so at 4N cores they waste 4x the compute of N cores
-    — overlap removes them from the critical path at every level.
-    Result identity is pinned by test (the union is commutative and
-    both legs are unchanged). When False, both legs stay lazy/serial
-    in one plan (the round-3 behavior).
+    ``skewed_convs`` (from detect_skewed_convs) are conversations too
+    large for one window task. They stay on the same fused window, split
+    into turn_idx chunks of skew_chunk_rows rows, each seeded by a
+    carrier row (see fused_group_violations). The plan stays lazy: it
+    adds one small aggregate exchange and builds with no job, given
+    ``observed_metrics["__n_rows"]`` (else one count job sizes the
+    chunks). ``ordered_partitions`` is accepted and unused: the
+    benchmark's traced decomposition still passes it.
 
     ``carry`` (incremental runs): convstate boundary-state table,
     seeded into the fused window pass (see fused_group_violations).
-    Carriers semi-join against the leg's own conv set, so on the skew
-    split each leg only ever sees its own conversations' carriers; the
-    range-partitioned ordered leg does not consume carry (a >=1M-row
-    conversation's boundary checks fall back to the documented
-    per-increment contract — its sheer size makes a silent straddle
-    vanishingly unlikely to matter before the nightly full run)."""
+    With carry, skewed conversations are not chunked: the carried
+    out-of-order bound and opening suppression are per conversation."""
     fused = _fusable(suite, df, keys) if _present(df, keys) else None
-    if fused and skewed_convs:
-        from ocsf_validator_spark.ordered import scalable_group_violations
-
-        part = keys[0]
-        big = df.filter(F.col(part).isin(*skewed_convs))
-        small = df.filter(
-            ~F.col(part).isin(*skewed_convs) | F.col(part).isNull()
-        )
+    if fused:
         row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
-        if concurrent_skew:
-            from concurrent.futures import ThreadPoolExecutor
-
-            main_lazy = fused_group_violations(
-                small, *fused, keys, row_cs=row_cs, carry=carry
+        chunk_rows = None
+        if skewed_convs and carry is None:
+            n = (observed_metrics or {}).get("__n_rows")
+            chunk_rows = skew_chunk_rows(
+                df.sparkSession, df.count() if n is None else n
             )
-            if suite.residual_level():
-                main_lazy = main_lazy.unionByName(
-                    residual_violations(df, suite, keys)
-                )
-            if suite.key_level():
-                main_lazy = main_lazy.unionByName(
-                    fd_violations(df, suite, keys, carry=fd_carry)
-                )
-            main_lazy = main_lazy.unionByName(
-                dataset_findings(df, suite, keys, include_coverage, observed_enums, observed_metrics)
-            )
-            ex = ThreadPoolExecutor(max_workers=1)
-            try:
-                fut = ex.submit(
-                    scalable_group_violations,
-                    big,
-                    fused[0],
-                    fused[1],
-                    keys,
-                    num_partitions=ordered_partitions,
-                    row_cs=row_cs,
-                )
-                # runs the fused scan NOW, concurrent with the ordered
-                # leg's jobs; the pinned result is defect-proportional
-                main_eager = main_lazy.localCheckpoint(eager=True)
-                ordered = fut.result()
-            finally:
-                ex.shutdown(wait=True)
-            return main_eager.unionByName(ordered)
         main = fused_group_violations(
-            small, *fused, keys, row_cs=row_cs, carry=carry
-        ).unionByName(
-            # the skewed subset's row legs ride the same staged sort as
-            # its group checks — one scan of the source for everything
-            scalable_group_violations(
-                big,
-                fused[0],
-                fused[1],
-                keys,
-                num_partitions=ordered_partitions,
-                row_cs=row_cs,
-            )
+            df,
+            *fused,
+            keys,
+            row_cs=row_cs,
+            carry=carry,
+            chunk_rows=chunk_rows,
+            chunk_convs=list(skewed_convs) if chunk_rows else None,
         )
-    elif fused:
-        row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
-        main = fused_group_violations(df, *fused, keys, row_cs=row_cs, carry=carry)
     else:
         main = row_violations(df, suite, keys).unionByName(
             group_violations(df, suite, keys)

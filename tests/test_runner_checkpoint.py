@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 
 from ocsf_validator_spark import checkpoint as ckpt
@@ -133,8 +134,8 @@ def test_skew_probe_adds_zero_jobs(spark):
 def test_runner_skew_routing_equivalence(spark, tmp_path):
     """With the floor lowered so synth's 5%-skew conversation trips the
     threshold, the routed run must produce exactly the violations of the
-    unrouted run (ordered.py path == window path), and must report the
-    conversation as skewed."""
+    unrouted run (chunked windows == whole-conversation window), and its
+    report must name the route it took."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
@@ -142,15 +143,52 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         # skew conv = 250 rows; threshold = max(50, 4*5000/200=100) = 100
         out_a = str(tmp_path / "routed")
         out_b = str(tmp_path / "plain")
+        rep_a, rep_b = str(tmp_path / "a.json"), str(tmp_path / "b.json")
         ra = run_validation(spark, df, num_buckets=8, quiet=True,
-                            skew_min_rows=50, violations_out=out_a)
+                            skew_min_rows=50, violations_out=out_a,
+                            report_json=rep_a)
         rb = run_validation(spark, df, num_buckets=8, quiet=True,
-                            detect_skew=False, violations_out=out_b)
+                            detect_skew=False, violations_out=out_b,
+                            report_json=rep_b)
+        with open(rep_a) as f:
+            route = json.load(f)["skew_route"]
+        # 5000 rows over 200 shuffle partitions -> 25-row chunks
+        assert route["convs"] == 1 and route["chunk_rows"] == 25
+        assert route["rows"] >= 100
+        with open(rep_b) as f:
+            assert json.load(f)["skew_route"] is None
         assert ra.exit_code == rb.exit_code
         assert ra.n_violations == rb.n_violations
         a = sorted(map(tuple, spark.read.parquet(out_a).collect()))
         b = sorted(map(tuple, spark.read.parquet(out_b).collect()))
         assert a == b
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_routed_run_costs_at_most_one_job_more(spark, tmp_path):
+    """The chunked skew route adds one small carrier aggregate to the
+    violations plan and nothing else: a routed run_validation runs at
+    most one job more than the same run with detect_skew=False."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        # threshold = max(100, 4 * 4000 / 8) = 2000 < the 2400-turn conv
+        df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
+        runs = {}
+        for skew in (True, False):
+            runs[skew] = _run_jobs(
+                spark, f"route-{skew}",
+                lambda: run_validation(
+                    spark, df, num_buckets=8, quiet=True, detect_skew=skew,
+                    skew_min_rows=100,
+                    violations_out=str(tmp_path / f"v-{skew}"),
+                    report_json=str(tmp_path / f"r-{skew}.json"),
+                ),
+            )
+        with open(tmp_path / "r-True.json") as f:
+            assert json.load(f)["skew_route"]["convs"] == 1
+        assert runs[True] <= runs[False] + 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 

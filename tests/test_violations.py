@@ -444,3 +444,19 @@ def test_top_offending_groups_rank_and_ties(spark):
         ("x", 3, 2),
         ("y", 3, 1),
     ]
+
+
+def test_coverage_leg_skips_empty_enum(spark, transcripts):
+    """An EnumCoverage with no declared values has nothing to miss: the
+    lazy coverage leg skips it instead of building an aggregate with no
+    expressions, and a real coverage constraint beside it still reports."""
+    from ocsf_validator_spark.spec import ConstraintSet, EnumCoverage
+    from ocsf_validator_spark.violations import dataset_findings
+
+    empty = EnumCoverage(column="role", values=())
+    only = ConstraintSet(name="e", constraints=[empty])
+    assert dataset_findings(transcripts, only).count() == 0
+    real = EnumCoverage(column="tool", values=("search", "nope"))
+    both = ConstraintSet(name="m", constraints=[empty, real])
+    rows = dataset_findings(transcripts, both).collect()
+    assert [r.reason for r in rows] == ["enum value 'nope' never observed in tool"]
