@@ -699,16 +699,20 @@ def q_verdict_diff(spark: SparkSession, sf: str) -> DataFrame:
     diffed against the full table (today's) — emits only regressed /
     fixed / new_fail / gone_fail / still_failing / count_changed rows,
     change-proportional at any scale."""
-    t = _transcripts(spark, sf)
     suite = _events_suite()
+    cov = [c for c in suite.constraints if isinstance(c, EnumCoverage)]
+    other = sorted({c.column for c in cov} - {"role"})
+    if other:
+        # the fused stats scan observes event_type, the events column
+        # behind the transcripts' role; any other coverage column would
+        # be judged against an empty observed set
+        raise ValueError(
+            "q_verdict_diff observes enum coverage only for 'role'; the "
+            f"events suite also declares EnumCoverage on {other}"
+        )
+    t = _transcripts(spark, sf)
     ev = _t(spark, sf, "events")
-
-    cov_vals = [
-        v
-        for c in suite.constraints
-        if type(c).__name__ == "EnumCoverage"
-        for v in c.values
-    ]
+    cov_vals = [v for c in cov for v in c.values]
     obs_buckets, obs_enums = _vd_observed_stats(ev, cov_vals)
 
     def _vd(pred: str | None) -> DataFrame:

@@ -15,6 +15,13 @@ north-star extension for validating an APPEND-ONLY transcript stream
   write and the checkpoint commit rewrites the same partition instead
   of duplicating rows.
 
+  Cost: a micro-batch is two Spark jobs, the fused window's exchange
+  and the sink write. The violation count (manifest line, ``on_batch``)
+  and the input row count (``on_batch``) ride that write as observed
+  metrics (``Observation``) rather than a cache and a count. Only the
+  quarantine leg caches, because it reads the batch and its violations
+  a second time.
+
   Scope note: the conversation-window checks see one micro-batch at a
   time, so they catch intra-batch duplicates/disorder; duplicates that
   STRADDLE batches are caught by the stateful leg below.
@@ -38,7 +45,7 @@ import os
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
@@ -89,6 +96,23 @@ def _interval_ms(interval: str) -> int:
     return total
 
 
+def _observed_rows(obs: Observation, frame: DataFrame) -> int:
+    """The row count ``obs`` collected during the action that ran over
+    ``frame``.
+
+    One case reports nothing: when AQE proves an exchange empty at run
+    time it replaces the plan above it with an empty relation, and a
+    CollectMetrics node below that exchange (the input observation on a
+    zero-row micro-batch) leaves the final plan, so the action finishes
+    with an empty metrics row. ``Observation.get`` cannot convert that
+    row (``PythonSQLUtils.toPyRow`` asserts on it), so the JVM row is
+    read directly, and only that case pays a job to count ``frame``."""
+    row = obs._jo.getRow()
+    if row.length() == 0:
+        return frame.count()
+    return int(row.getLong(0))
+
+
 def validate_stream(
     sdf: DataFrame,
     violations_out: str,
@@ -116,6 +140,13 @@ def validate_stream(
     Coverage findings are skipped per batch (enum coverage over a
     micro-batch is meaningless — absence in 10k rows is not absence in
     the table); everything else is the batch engine unchanged.
+
+    Per micro-batch this costs the fused window's exchange plus the
+    sink write, two jobs, with or without ``manifest_dir`` and
+    ``on_batch``: the violation and input row counts they report are
+    observed metrics of that write. Only ``quarantine_out`` caches the
+    batch rows and their violations, for the second read its split
+    makes.
 
     Sink layout: violations land under ``batch_id=<n>`` partition
     directories (idempotent replay), so reading ``violations_out``
@@ -162,20 +193,27 @@ def validate_stream(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        if on_batch or quarantine_out:
-            # the callback needs the batch row count / the quarantine
-            # leg re-reads the batch rows; cache so those come from
-            # memory instead of a second source read
+        if quarantine_out:
+            # split_quarantine reads the batch rows and their violations
+            # a second time; cache both so that leg costs no source re-read
             batch_df = batch_df.cache()
-        viol = all_violations(batch_df, suite, include_coverage=False)
-        viol.cache()
-        n_viol = viol.count()
+        seen, found = Observation(), Observation()
+        n = F.count(F.lit(1)).alias("n")
+        viol = all_violations(
+            batch_df.observe(seen, n) if on_batch else batch_df,
+            suite,
+            include_coverage=False,
+        )
+        if quarantine_out:
+            viol = viol.cache()
         # idempotent (batch_id)-keyed commit: a replayed batch
         # OVERWRITES its own partition directory — at-least-once
         # foreachBatch delivery becomes exactly-once in the sink
-        viol.write.mode("overwrite").parquet(
+        viol.observe(found, n).write.mode("overwrite").parquet(
             os.path.join(violations_out, f"batch_id={int(batch_id)}")
         )
+        n_viol = _observed_rows(found, viol)
+        n_rows = _observed_rows(seen, batch_df) if on_batch else None
         if quarantine_out:
             # route this batch's violating INPUT rows to the quarantine
             # table, (batch_id)-keyed for the same idempotent replay.
@@ -191,12 +229,13 @@ def validate_stream(
             quarantined.write.mode("overwrite").parquet(
                 os.path.join(quarantine_out, f"batch_id={int(batch_id)}")
             )
-        viol.unpersist()
+            viol.unpersist()
+            batch_df.unpersist()
         if manifest_dir:
             os.makedirs(manifest_dir, exist_ok=True)
             line = {
                 "batch_id": int(batch_id),
-                "n_violations": int(n_viol),
+                "n_violations": n_viol,
                 "suite_version": suite.version(),
                 "wall_sec": round(time.time() - t0, 3),
                 "finished_at": time.time(),
@@ -206,9 +245,7 @@ def validate_stream(
             ) as f:
                 json.dump(line, f)
         if on_batch:
-            on_batch(int(batch_id), batch_df.count(), int(n_viol))
-        if on_batch or quarantine_out:
-            batch_df.unpersist()
+            on_batch(int(batch_id), n_rows, n_viol)
 
     writer = (
         sdf.writeStream.foreachBatch(_process)

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from pyspark.sql.streaming import StreamingQuery
 
 from ocsf_validator_spark.session import get_spark
 
@@ -9,6 +12,33 @@ from ocsf_validator_spark.session import get_spark
 def spark():
     s = get_spark("ocsf-validator-spark-tests", cores=4)
     yield s
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn) -> (fn(), jobs)``: run fn under a fresh job group
+    and count the Spark jobs it launched. When fn returns a
+    StreamingQuery (or a tuple of them), each is awaited and its jobs
+    are counted too: micro-batches run under the query's own job group
+    (its runId), not the caller's."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        groups = [group]
+        for q in out if isinstance(out, tuple) else (out,):
+            if isinstance(q, StreamingQuery):
+                q.awaitTermination()
+                groups.append(str(q.runId))
+        tracker = sc.statusTracker()
+        return out, sum(len(tracker.getJobIdsForGroup(g)) for g in groups)
+
+    return run
 
 
 @pytest.fixture()

@@ -84,3 +84,26 @@ def test_verdict_diff_fused_stats_match_naive_scans(spark):
             for x in (r["o"] or [])
         }
         assert obs_enums[half]["role"] == naive_obs, half
+
+
+def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
+    """The fused stats scan observes enum coverage only under 'role'.
+    An events suite with EnumCoverage on another column must fail at
+    construction with a clear error, not judge that column against an
+    empty observed set."""
+    from ocsf_validator_spark.spec import ConstraintSet, EnumCoverage
+
+    base = e._events_suite()
+    monkeypatch.setattr(
+        e,
+        "_events_suite",
+        lambda: ConstraintSet(
+            name=base.name,
+            constraints=[
+                *base.constraints,
+                EnumCoverage(column="tool", values=("search",)),
+            ],
+        ),
+    )
+    with pytest.raises(ValueError, match=r"\['tool'\]"):
+        e.q_verdict_diff(spark, SF)

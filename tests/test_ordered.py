@@ -6,7 +6,6 @@ row-for-row, plus job-count and plan pins for the routed plan."""
 from __future__ import annotations
 
 import random
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -390,23 +389,11 @@ def test_routed_conversation_under_increment_carry(spark):
     assert _diff(got, want) == 0
 
 
-def _jobs(spark, fn):
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_routed_plan_builds_without_jobs_or_python(spark):
+def test_routed_plan_builds_without_jobs_or_python(spark, jobs_of):
     """Building the routed plan runs no job, and the plan has no Python
     stage: the skew route is JVM windows end to end."""
     df = synth_transcripts(spark, n_turns=3000, seed=7)
-    out, jobs = _jobs(
-        spark,
+    out, jobs = jobs_of(
         lambda: all_violations(
             df, transcript_suite(), skewed_convs=["c00000000"],
             observed_metrics={"__n_rows": 3000},

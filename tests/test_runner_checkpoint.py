@@ -101,30 +101,17 @@ def test_cli_main(tmp_path):
     assert code == 1  # synthetic defects present
 
 
-def _run_jobs(spark, group: str, fn):
-    """Run fn under a job group; return how many Spark jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_skew_probe_adds_zero_jobs(spark):
+def test_skew_probe_adds_zero_jobs(spark, jobs_of):
     """Round-3 contract: the skew probe rides the stats scan (two-level
     aggregation in stats.bucketed_probe_stats), so detect_skew=True must
     launch exactly as many jobs as detect_skew=False — rounds 1-2 paid a
     separate full-scan probe job here."""
     df = synth_transcripts(spark, n_turns=5000, seed=42)
-    n_off = _run_jobs(
-        spark, "probe-off",
+    _, n_off = jobs_of(
         lambda: run_validation(spark, df, num_buckets=8, quiet=True,
                                detect_skew=False),
     )
-    n_on = _run_jobs(
-        spark, "probe-on",
+    _, n_on = jobs_of(
         lambda: run_validation(spark, df, num_buckets=8, quiet=True,
                                detect_skew=True),
     )
@@ -166,7 +153,7 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_routed_run_costs_at_most_one_job_more(spark, tmp_path):
+def test_routed_run_costs_at_most_one_job_more(spark, tmp_path, jobs_of):
     """The chunked skew route adds one small carrier aggregate to the
     violations plan and nothing else: a routed run_validation runs at
     most one job more than the same run with detect_skew=False."""
@@ -177,8 +164,7 @@ def test_routed_run_costs_at_most_one_job_more(spark, tmp_path):
         df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
         runs = {}
         for skew in (True, False):
-            runs[skew] = _run_jobs(
-                spark, f"route-{skew}",
+            _, runs[skew] = jobs_of(
                 lambda: run_validation(
                     spark, df, num_buckets=8, quiet=True, detect_skew=skew,
                     skew_min_rows=100,

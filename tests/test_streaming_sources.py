@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark import streaming as st
@@ -714,6 +717,103 @@ def test_validate_stream_quarantine_leg(spark, tmp_path):
             (F.col("conv_id") == k[0]) & (F.col("turn_idx") == k[1])
         ).count()
         assert copies > 1, f"non-duplicate key {k} missing from quarantine"
+
+
+def _land_files(spark, root: str, frames) -> list[int]:
+    """Land each frame as ONE parquet file under ``root``, oldest first
+    (explicit mtimes, so a maxFilesPerTrigger=1 stream reads them in
+    order); returns each file's row count."""
+    os.makedirs(root, exist_ok=True)
+    counts = []
+    for i, df in enumerate(frames):
+        staging = root + f"_stage{i}"
+        df.coalesce(1).write.parquet(staging)
+        (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
+        dest = os.path.join(root, f"{i:03d}.parquet")
+        shutil.move(part, dest)
+        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+        counts.append(spark.read.parquet(dest).count())
+    return counts
+
+
+def _drain(spark, root: str, out: str, **kw):
+    sdf = (
+        spark.readStream.schema(st.TRANSCRIPT_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(root)
+    )
+    return st.validate_stream(sdf, out + "/viol", out + "/ckpt", **kw)
+
+
+def _sink_counts(spark, viol_out: str) -> dict[int, int]:
+    return {
+        int(p.rsplit("=", 1)[1]): spark.read.parquet(p).count()
+        for p in glob.glob(os.path.join(viol_out, "batch_id=*"))
+    }
+
+
+def _manifest(manifest_dir: str) -> dict[int, int]:
+    lines = []
+    for path in glob.glob(os.path.join(manifest_dir, "batch-*.json")):
+        with open(path) as f:
+            lines.append(json.load(f))
+    return {m["batch_id"]: m["n_violations"] for m in lines}
+
+
+def test_validate_stream_zero_row_batch(spark, tmp_path):
+    """A landed zero-row file is a micro-batch whose fused pass AQE
+    collapses to an empty relation, taking the input observation's
+    CollectMetrics node with it. The drain must still report (bid, 0, 0)
+    for it, then the real counts for the next file, with one manifest
+    line per batch matching the sink."""
+    df = synth_transcripts(spark, n_turns=300, seed=11)
+    root, out = str(tmp_path / "land0"), str(tmp_path / "out0")
+    _, n = _land_files(spark, root, [df.limit(0), df])
+    seen = []
+    q = _drain(
+        spark, root, out, manifest_dir=out + "/manifest",
+        on_batch=lambda *a: seen.append(a),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    sink = _sink_counts(spark, out + "/viol")
+    (b0, rows0, nv0), (b1, rows1, nv1) = sorted(seen)
+    assert (rows0, nv0) == (0, 0)
+    assert rows1 == n and nv1 == sink[b1] > 0
+    assert _manifest(out + "/manifest") == {b0: 0, b1: sink[b1]}
+
+
+@pytest.mark.parametrize("opts", ["none", "callbacks", "quarantine"])
+def test_validate_stream_jobs_per_batch(spark, tmp_path, jobs_of, opts):
+    """A micro-batch runs the fused window's exchange and the sink write
+    and nothing else: the violation and input counts ride the write as
+    observed metrics. Only the quarantine leg caches and re-reads
+    (at most 7 jobs a batch). Whatever the options, every reported
+    count equals its file's rows and its batch's sink rows."""
+    df = synth_transcripts(spark, n_turns=600, seed=5, partitions=2)
+    root, out = str(tmp_path / "landj"), str(tmp_path / "outj")
+    counts = _land_files(
+        spark, root,
+        [df.filter(df.turn_idx % 3 == 0), df.filter(df.turn_idx % 3 > 0)],
+    )
+    seen, kw = [], {}
+    if opts != "none":
+        kw = dict(manifest_dir=out + "/manifest",
+                  on_batch=lambda *a: seen.append(a))
+    if opts == "quarantine":
+        kw["quarantine_out"] = out + "/quar"
+    _, jobs = jobs_of(lambda: _drain(spark, root, out, **kw))
+    n_files = len(counts)
+    if opts == "quarantine":
+        assert jobs <= 7 * n_files
+    else:
+        assert jobs == 2 * n_files
+    sink = _sink_counts(spark, out + "/viol")
+    assert len(sink) == n_files
+    if kw:
+        assert [rows for _, rows, _ in sorted(seen)] == counts
+        assert {bid: nv for bid, _, nv in seen} == sink
+        assert _manifest(out + "/manifest") == sink
 
 
 def test_validate_stream_restart_contract(spark, tmp_path):
