@@ -10,6 +10,7 @@ turn_idx=per-user row number, role=event_type, text=props).
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -104,18 +105,23 @@ EVENT_ROLES = ("click", "view", "purchase", "signup")
 # of them per execution. The memo holds the immutable LOGICAL plan only
 # — execution still scans the parquet files from disk every run (no
 # result or data caching; schema is metadata the session would cache
-# anyway if its shared FileIndex were hit). Keyed by applicationId so a
-# new session (tests spin several) never sees a dead session's plan.
-_T_CACHE: dict = {}
+# anyway if its shared FileIndex were hit). Keyed weakly by session: a
+# `newSession()` sibling shares its parent's applicationId but gets
+# frames bound to itself, and an entry lives no longer than its
+# session object. Values are the JVM plans: a DataFrame would hold its
+# session and keep its own key alive.
+_T_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _T_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _T_CACHE[key] = df
-    return df
+    plans = _T_CACHE.setdefault(spark, {})
+    jdf = plans.get((sf_dir, name))
+    if jdf is None:
+        jdf = spark.read.parquet(f"{sf_dir}/{name}.parquet")._jdf
+        plans[(sf_dir, name)] = jdf
+    return DataFrame(jdf, spark)
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,7 +40,6 @@ from ocsf_validator_spark.localframe import empty_df, local_df
 from ocsf_validator_spark import checkpoint as ckpt
 from ocsf_validator_spark.spec import (
     ConstraintSet,
-    EnumCoverage,
     Severity,
     transcript_suite,
 )
@@ -50,7 +49,12 @@ from ocsf_validator_spark.verdict import (
     summarize_rows,
     verdicts,
 )
-from ocsf_validator_spark.violations import all_violations, dataset_findings
+from ocsf_validator_spark.violations import (
+    all_violations,
+    dataset_findings,
+    fold_observations,
+    observation_aggs,
+)
 
 # metric vocabulary shared by MetricBound / GroupMetricBound CLI flags —
 # validated at argument-parse time so a typo exits 2 with [FATAL] like
@@ -58,6 +62,21 @@ from ocsf_validator_spark.violations import all_violations, dataset_findings
 _METRIC_NAMES = frozenset(
     ("null_rate", "row_count", "distinct_count", "min", "max")
 )
+
+
+def _bounds(spec: str, opts: str) -> tuple:
+    """``(lo, hi)`` from a bound flag's ``min=X,max=Y`` tail (``opts``,
+    either key optional): ints unless the text has a '.' or an 'e'. An
+    unknown key, or no bound at all, raises ValueError(spec)."""
+    got = {"min": None, "max": None}
+    for kv in filter(None, opts.split(",")):
+        k, _, v = kv.partition("=")
+        if k not in got:
+            raise ValueError(spec)
+        got[k] = float(v) if "." in v or "e" in v else int(v)
+    if got["min"] is None and got["max"] is None:
+        raise ValueError(spec)
+    return got["min"], got["max"]
 
 
 @dataclass
@@ -192,87 +211,27 @@ def run_validation(
 
     # Phase 2 — single-pass stats, collected once: yields n_rows, the
     # observed-bucket list (so the verdict pass never rescans the input),
-    # the enum-coverage observations (bounded collect_set probes riding
-    # the same scan), AND the skew-probe candidates (per-conversation
-    # heavy hitters via the two-level aggregation) — ONE data scan for
-    # all four, where rounds 1-2 spent a separate third scan on the
-    # probe (12-15% of every flagship run per the BENCH.md phase tables).
-    cov_cs = [
-        c
-        for c in suite.dataset_level()
-        if isinstance(c, EnumCoverage) and c.column in df.columns
-    ]
-    # coverage as ONE int flag per (constraint, enum value) —
-    # max-mergeable pure-codegen aggregates (collect_set here would
-    # force the stats scan onto the sort-based object-aggregation path;
-    # see bucketed_probe_stats docstring)
-    cov_flags = {
-        f"_cov{i}_{j}": F.max(
-            F.when(F.col(c.column) == F.lit(v), F.lit(1)).otherwise(F.lit(0))
-        )
-        for i, c in enumerate(cov_cs)
-        for j, v in enumerate(c.values)
-    }
-    # MetricBound thresholds ride the SAME scan: null counts sum-merge
-    # and extrema min/max-merge across the two-level aggregation, so
-    # declared metric bounds cost the flagship run zero extra jobs.
-    # distinct_count has no mergeable per-bucket form — those (only)
-    # fall back to dataset_findings' shared agg job.
-    from ocsf_validator_spark.spec import MetricBound
-
-    mb_cs = [
-        c
-        for c in suite.dataset_level()
-        if isinstance(c, MetricBound)
-        and c.column in df.columns
-        and c.metric in ("null_rate", "min", "max", "row_count")
-    ]
-    mb_aggs = {}
-    for i, c in enumerate(mb_cs):
-        col = F.col(c.column)
-        if c.metric == "null_rate":
-            mb_aggs[f"_mb{i}"] = (F.sum(col.isNull().cast("long")), "sum")
-        elif c.metric == "min":
-            mb_aggs[f"_mb{i}"] = (F.min(col), "min")
-        elif c.metric == "max":
-            mb_aggs[f"_mb{i}"] = (F.max(col), "max")
+    # the dataset-level observations (violations.observation_aggs: enum
+    # coverage flags and MetricBound aggregates, all mergeable across
+    # the two-level aggregation), AND the skew-probe candidates
+    # (per-conversation heavy hitters) — ONE data scan for all four,
+    # where rounds 1-2 spent a separate third scan on the probe (12-15%
+    # of every flagship run per the BENCH.md phase tables).
+    # distinct_count (no mergeable form) falls back to dataset_findings'
+    # shared agg job.
     bucket_stats = bucketed_probe_stats(
         df,
         conv_col=conv_col,
         num_buckets=num_buckets,
-        max_aggs=cov_flags,
         probe_floor=skew_min_rows if detect_skew else None,
-        merge_aggs=mb_aggs,
+        merge_aggs=observation_aggs(suite, df),
     ).collect()
     lap("stats")
-    n_rows = sum(r.n_rows for r in bucket_stats)
     observed = [int(r.bucket) for r in bucket_stats]
-    # fold the piggybacked MetricBound aggregates across buckets the
-    # same way level 2 merged conversations — pure driver arithmetic
-    observed_metrics: dict = {"__n_rows": n_rows}
-    for i, c in enumerate(mb_cs):
-        if c.metric == "row_count":
-            observed_metrics[c.constraint_id] = n_rows
-            continue
-        vals_ = [r[f"_mb{i}"] for r in bucket_stats if r[f"_mb{i}"] is not None]
-        if c.metric == "null_rate":
-            observed_metrics[c.constraint_id] = sum(vals_) if vals_ else 0
-        else:
-            # extrema of an all-NULL column is None — a PRESENT None
-            # (dataset_findings skips the bound, never re-aggregates)
-            observed_metrics[c.constraint_id] = (
-                (min(vals_) if c.metric == "min" else max(vals_))
-                if vals_
-                else None
-            )
-    observed_enums = {
-        c.column: {
-            v
-            for j, v in enumerate(c.values)
-            if any(r[f"_cov{i}_{j}"] == 1 for r in bucket_stats)
-        }
-        for i, c in enumerate(cov_cs)
-    }
+    observed_enums, observed_metrics = fold_observations(
+        suite, df, bucket_stats
+    )
+    n_rows = observed_metrics["__n_rows"]
     if n_rows == 0 and skipped > 0:
         # everything already validated for this (suite, snapshot) —
         # don't emit coverage findings against an empty remainder
@@ -991,16 +950,8 @@ def main(argv: list[str] | None = None) -> int:
             for s_ in args.metric_bound:
                 head, _, opts = s_.partition(",")
                 col, _, metric = head.partition(":")
-                lo = hi = None
-                for kv in filter(None, opts.split(",")):
-                    k, _, v = kv.partition("=")
-                    if k == "min":
-                        lo = float(v) if "." in v or "e" in v else int(v)
-                    elif k == "max":
-                        hi = float(v) if "." in v or "e" in v else int(v)
-                    else:
-                        raise ValueError(s_)
-                if not (col and metric) or (lo is None and hi is None):
+                lo, hi = _bounds(s_, opts)
+                if not (col and metric):
                     raise ValueError(s_)
                 if metric not in _METRIC_NAMES:
                     # validate at parse time: an unknown metric used to
@@ -1050,10 +1001,6 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         suite = suite or transcript_suite()
-
-        def _num(v: str):
-            return float(v) if "." in v or "e" in v else int(v)
-
         try:
             for s_ in args.fd:
                 dets, _, dep = s_.partition("=")
@@ -1064,16 +1011,8 @@ def main(argv: list[str] | None = None) -> int:
             for s_ in args.quantile_bound:
                 head, _, opts = s_.partition(",")
                 col, _, qtxt = head.partition(":")
-                lo = hi = None
-                for kv in filter(None, opts.split(",")):
-                    k, _, v = kv.partition("=")
-                    if k == "min":
-                        lo = _num(v)
-                    elif k == "max":
-                        hi = _num(v)
-                    else:
-                        raise ValueError(s_)
-                if not (col and qtxt) or (lo is None and hi is None):
+                lo, hi = _bounds(s_, opts)
+                if not (col and qtxt):
                     raise ValueError(s_)
                 suite.add(
                     QuantileBound(column=col, q=float(qtxt), lo=lo, hi=hi)
@@ -1101,16 +1040,8 @@ def main(argv: list[str] | None = None) -> int:
                     x for x in by_txt.split(";") if x
                 )
                 # BY columns separated by '+' (',' starts the bounds)
-                lo = hi = None
-                for kv in filter(None, opts.split(",")):
-                    k_, _, v = kv.partition("=")
-                    if k_ == "min":
-                        lo = _num(v)
-                    elif k_ == "max":
-                        hi = _num(v)
-                    else:
-                        raise ValueError(s_)
-                if not (col and metric and by) or (lo is None and hi is None):
+                lo, hi = _bounds(s_, opts)
+                if not (col and metric and by):
                     raise ValueError(s_)
                 if metric not in _METRIC_NAMES:
                     raise ValueError(

@@ -99,46 +99,17 @@ def verdicts(
     return out.unionByName(ds)
 
 
-def summarize(verdict_df: DataFrame) -> DataFrame:
-    """Per-constraint rollup across buckets → the console report rows
-    (reference runner.py:359-385's per-label PASSED/FAILED lines)."""
-    return (
-        verdict_df.groupBy("constraint_id", "severity")
-        .agg(
-            F.sum("violation_count").alias("violation_count"),
-            F.min(F.col("pass").cast("int")).cast("boolean").alias("pass"),
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((~F.col("pass")).cast("long")).alias("n_failed_buckets"),
-        )
-        .orderBy("constraint_id")
-    )
-
-
-def exit_code(verdict_df: DataFrame) -> int:
-    """0 = all pass; 1 = any constraint failed; 2 = any FATAL violated
-    (mirror of reference runner exit semantics, runner.py:233-234,
-    377-385)."""
-    row = verdict_df.agg(
-        F.max(
-            F.when(
-                (F.col("severity") == "FATAL") & (F.col("violation_count") > 0), 2
-            )
-            .when(~F.col("pass"), 1)
-            .otherwise(0)
-        ).alias("code")
-    ).collect()[0]
-    return int(row.code or 0)
-
-
 # ---------------------------------------------------------------------------
-# Driver-side equivalents over the COLLECTED verdict rows. The verdict
-# table is tiny (buckets x constraints); the runner collects it once and
+# Report and exit code over the COLLECTED verdict rows. The verdict table
+# is tiny (buckets x constraints); the runner collects it once and
 # derives the report and exit code without two more Spark jobs.
 # ---------------------------------------------------------------------------
 
 
 def summarize_rows(verdict_rows) -> list[dict]:
-    """summarize() over already-collected verdict rows (no Spark job)."""
+    """Per-constraint rollup across buckets → the console report rows
+    (reference runner.py:359-385's per-label PASSED/FAILED lines), over
+    already-collected verdict rows, sorted by constraint_id."""
     agg: dict[tuple, dict] = {}
     for r in verdict_rows:
         k = (r.constraint_id, r.severity)
@@ -162,7 +133,9 @@ def summarize_rows(verdict_rows) -> list[dict]:
 
 
 def exit_code_rows(verdict_rows) -> int:
-    """exit_code() over already-collected verdict rows (no Spark job)."""
+    """0 = all pass; 1 = any constraint failed; 2 = any FATAL violated
+    (mirror of reference runner exit semantics, runner.py:233-234,
+    377-385), over already-collected verdict rows."""
     code = 0
     for r in verdict_rows:
         if r.severity == "FATAL" and int(r.violation_count) > 0:

@@ -1317,6 +1317,96 @@ def group_violations(
     return out
 
 
+def _observations(suite: ConstraintSet, df: DataFrame) -> list[tuple]:
+    """The dataset-level observation table: ``(alias, constraint,
+    value, merge)`` per EnumCoverage declared value and per mergeable
+    MetricBound (``value`` is None for metrics). ``merge`` re-aggregates
+    partial results: "max" for coverage flags, "sum" for null counts,
+    "min" or "max" for extrema. row_count needs no aggregate (it is
+    n_rows) and distinct_count has no mergeable form."""
+    cols = set(df.columns)
+    ds = [c for c in suite.dataset_level() if c.column in cols]
+    cov = [c for c in ds if isinstance(c, EnumCoverage)]
+    mb = [
+        c for c in ds
+        if isinstance(c, MetricBound) and c.metric in ("null_rate", "min", "max")
+    ]
+    return [
+        (f"_cov{i}_{j}", c, v, "max")
+        for i, c in enumerate(cov)
+        for j, v in enumerate(c.values)
+    ] + [
+        (f"_mb{i}", c, None, "sum" if c.metric == "null_rate" else c.metric)
+        for i, c in enumerate(mb)
+    ]
+
+
+def _observation_agg(c, value) -> Column:
+    col = F.col(c.column)
+    if isinstance(c, EnumCoverage):
+        # one int flag per declared value — never collect_set, which
+        # would force the stats scan onto the sort-based object
+        # aggregation path (see stats.bucketed_probe_stats)
+        return F.max(F.when(col == F.lit(value), F.lit(1)).otherwise(F.lit(0)))
+    if c.metric == "null_rate":
+        return F.sum(col.isNull().cast("long"))
+    return F.min(col) if c.metric == "min" else F.max(col)
+
+
+def observation_aggs(suite: ConstraintSet, df: DataFrame) -> dict:
+    """``{alias: (aggregate, merge)}`` for every dataset-level
+    observation of ``suite`` on ``df``: one max-merged int flag per
+    (EnumCoverage, declared value), and per MetricBound the null count
+    (sum-merged) or extremum (min/max-merged). Every aggregate is a
+    mergeable pure-codegen scalar, so the runner hands them to
+    stats.bucketed_probe_stats and they ride its stats scan; fold the
+    resulting rows with fold_observations."""
+    return {
+        a: (_observation_agg(c, v), merge)
+        for a, c, v, merge in _observations(suite, df)
+    }
+
+
+def fold_observations(
+    suite: ConstraintSet, df: DataFrame, rows
+) -> tuple[dict, dict]:
+    """Fold rows carrying ``n_rows`` and observation_aggs' aliases (one
+    per stats bucket, or one global row) into ``(observed_enums,
+    observed_metrics)`` for dataset_findings. ``observed_enums`` is
+    ``{column: observed declared values}``, the union over every
+    coverage constraint on the column. ``observed_metrics`` is
+    ``{constraint_id: value}`` plus ``"__n_rows"``; an all-NULL column's
+    extremum is a present None. An alias a row does not carry folds as
+    NULL."""
+    rows = [r.asDict() for r in rows]
+    n = sum(int(r["n_rows"]) for r in rows)
+    enums: dict[str, set] = {
+        c.column: set()
+        for c in suite.dataset_level()
+        if isinstance(c, EnumCoverage) and c.column in df.columns
+    }
+    metrics: dict = {"__n_rows": n}
+    for c in suite.dataset_level():
+        if (
+            isinstance(c, MetricBound)
+            and c.metric == "row_count"
+            and c.column in df.columns
+        ):
+            metrics[c.constraint_id] = n
+    for a, c, v, merge in _observations(suite, df):
+        got = [r[a] for r in rows if r.get(a) is not None]
+        if isinstance(c, EnumCoverage):
+            if 1 in got:
+                enums[c.column].add(v)
+        elif merge == "sum":
+            metrics[c.constraint_id] = sum(got)
+        else:
+            metrics[c.constraint_id] = (min if merge == "min" else max)(
+                got, default=None
+            )
+    return enums, metrics
+
+
 def dataset_findings(
     df: DataFrame,
     suite: ConstraintSet,
@@ -1331,14 +1421,15 @@ def dataset_findings(
     with NULL row keys, like the reference errors that carry a file but
     no attribute trail.
 
-    ALL EnumCoverage constraints share ONE aggregation job: per column,
-    ``collect_set(when(col.isin(enum), col))`` — the when() bounds the
-    set by the enum size, so the map-side partials stay tiny no matter
-    the column's true cardinality. ``include_coverage=False`` skips the
-    data scan entirely (used by the runner's driver-only schema audit);
-    ``observed_enums`` ({column: set-of-observed-values}) supplies the
-    observations precomputed on another scan (the runner piggybacks them
-    on the stats pass, so coverage costs zero extra scans)."""
+    ALL EnumCoverage constraints share ONE lazy aggregation leg built
+    from observation_aggs' int flags, one per declared value, so the
+    partials stay tiny no matter the column's true cardinality.
+    ``include_coverage=False`` skips the data scan entirely (used by the
+    runner's driver-only schema audit); ``observed_enums`` and
+    ``observed_metrics`` (fold_observations' output) supply the
+    observations precomputed on another scan (the runner piggybacks
+    them on the stats pass, so coverage and mergeable metric bounds
+    cost zero extra scans)."""
     spark = df.sparkSession
     schema = _violation_schema(df, keys)
     rows: list[tuple] = []
@@ -1393,25 +1484,19 @@ def dataset_findings(
     cov_leg = None
     if cov and include_coverage:
         if observed_enums is None:
-            # LAZY coverage leg: one observation flag per (constraint,
-            # declared value) — max-mergeable pure-codegen aggregates
-            # (the runner's cov_flags trick) — with the never-observed
-            # findings exploding straight out of the one agg row. The
-            # rows are identical to the old collect_set membership test
-            # (flag non-null <=> the value was observed; every reason
-            # string is a literal of declared values), but they ride
+            # LAZY coverage leg: observation_aggs' flag per (constraint,
+            # declared value), with the never-observed findings
+            # exploding straight out of the one agg row, so they ride
             # the CALLER's job instead of costing every suite build a
             # separate collect job during plan construction.
-            flag_aggs = [
-                F.max(
-                    F.when(F.col(c.column) == F.lit(v), F.lit(1))
-                ).alias(f"_cv{i}_{j}")
-                for i, c in enumerate(cov)
-                for j, v in enumerate(c.values)
+            flags = [
+                (a, c, v)
+                for a, c, v, _ in _observations(suite, df)
+                if isinstance(c, EnumCoverage)
             ]
             entries = [
                 F.when(
-                    F.coalesce(F.col(f"_cv{i}_{j}"), F.lit(0)) == 0,
+                    F.coalesce(F.col(a), F.lit(0)) == 0,
                     F.struct(
                         F.lit(c.constraint_id).alias("constraint_id"),
                         F.lit(
@@ -1420,11 +1505,10 @@ def dataset_findings(
                         F.lit(c.severity.name).alias("severity"),
                     ),
                 )
-                for i, c in enumerate(cov)
-                for j, v in enumerate(c.values)
+                for a, c, v in flags
             ]
             cov_leg = (
-                df.agg(*flag_aggs)
+                df.agg(*[_observation_agg(c, v).alias(a) for a, c, v in flags])
                 .select(
                     F.explode(F.array_compact(F.array(*entries))).alias("_e")
                 )
@@ -1464,54 +1548,47 @@ def dataset_findings(
         )
     mb = [c for c in mb if c.column in df.columns]
     if mb and include_coverage:
-        # observed_metrics ({constraint_id: value} + "__n_rows": the
-        # runner's zero-extra-scan path — metric aggregates piggybacked
-        # on the stats pass via bucketed_probe_stats merge_aggs).
-        # Constraints NOT in it (e.g. distinct_count, which has no
-        # mergeable per-bucket form) fall through to the shared agg job.
-        om = observed_metrics or {}
-        pending = [
-            (i, c) for i, c in enumerate(mb) if c.constraint_id not in om
-        ]
-        vals: dict[int, object] = {}
-        n = om.get("__n_rows")
-        for i, c in enumerate(mb):
-            if c.constraint_id in om:
-                vals[i] = om[c.constraint_id]
-        for _, c in pending:
+        # observed_metrics (fold_observations' {constraint_id: value}
+        # + "__n_rows": the runner's zero-extra-scan path, aggregates
+        # piggybacked on the stats pass). Constraints NOT in it (e.g.
+        # distinct_count, which has no mergeable per-bucket form) fall
+        # through to the shared agg job.
+        om = dict(observed_metrics or {})
+        pending = [c for c in mb if c.constraint_id not in om]
+        for c in pending:
             if c.metric not in (
                 "null_rate", "distinct_count", "min", "max", "row_count"
             ):
                 raise ValueError(
                     f"{c.constraint_id}: unknown metric {c.metric!r}"
                 )
-        if pending or n is None:
+        if pending or "__n_rows" not in om:
             # ONE shared narrow aggregation job for every remaining
-            # MetricBound (the EnumCoverage discipline): row count +
-            # only the per-constraint aggregates actually referenced.
-            # All are partial-aggregatable (exact count_distinct plans
-            # via expand + two-level agg), so the exchange carries one
-            # tiny row per partition.
-            aggs = [F.count(F.lit(1)).alias("_n")]
-            for i, c in pending:
-                col = F.col(c.column)
-                if c.metric == "null_rate":
-                    aggs.append(
-                        F.sum(col.isNull().cast("long")).alias(f"_m{i}")
-                    )
-                elif c.metric == "distinct_count":
-                    aggs.append(F.count_distinct(col).alias(f"_m{i}"))
-                elif c.metric == "min":
-                    aggs.append(F.min(col).alias(f"_m{i}"))
-                elif c.metric == "max":
-                    aggs.append(F.max(col).alias(f"_m{i}"))
-            row = df.agg(*aggs).collect()[0]
-            if n is None:
-                n = int(row["_n"])
-            for i, c in pending:
-                if c.metric != "row_count":
-                    vals[i] = row[f"_m{i}"]
-        n = int(n)
+            # MetricBound (the EnumCoverage discipline): row count, the
+            # pending observation aggregates (folded like the runner's
+            # stats rows) and exact count_distinct. All are
+            # partial-aggregatable (count_distinct plans via expand +
+            # two-level agg), so the exchange carries one tiny row per
+            # partition.
+            ids = {c.constraint_id for c in pending}
+            distinct = [c for c in pending if c.metric == "distinct_count"]
+            row = df.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                *[
+                    _observation_agg(c, v).alias(a)
+                    for a, c, v, _ in _observations(suite, df)
+                    if isinstance(c, MetricBound) and c.constraint_id in ids
+                ],
+                *[
+                    F.count_distinct(F.col(c.column)).alias(f"_d{i}")
+                    for i, c in enumerate(distinct)
+                ],
+            ).collect()[0]
+            om = {**fold_observations(suite, df, [row])[1], **om}
+            for i, c in enumerate(distinct):
+                om[c.constraint_id] = row[f"_d{i}"]
+        n = int(om["__n_rows"])
+        vals = {i: om.get(c.constraint_id) for i, c in enumerate(mb)}
         for i, c in enumerate(mb):
             if c.metric == "null_rate":
                 # exact integer arithmetic, never a float division: the
@@ -1762,17 +1839,6 @@ def detect_skewed_conv_counts(
     return [(r[0], int(r[1])) for r in rows if r[0] is not None]
 
 
-def detect_skewed_convs(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    threshold: int = 1_000_000,
-    max_detected: int = 10_000,
-) -> list[str]:
-    return [
-        c for c, _ in detect_skewed_conv_counts(df, conv_col, threshold, max_detected)
-    ]
-
-
 def skew_chunk_rows(spark: SparkSession, n_rows: int) -> int:
     """Rows per chunk of a skew-routed conversation: one shuffle task's
     share of the input, ceil(n_rows / spark.sql.shuffle.partitions).
@@ -1801,14 +1867,14 @@ def all_violations(
     ``observed_enums``). Heterogeneous suites fall back to one fused row
     scan + per-constraint group legs.
 
-    ``skewed_convs`` (from detect_skewed_convs) are conversations too
-    large for one window task. They stay on the same fused window, split
-    into turn_idx chunks of skew_chunk_rows rows, each seeded by a
-    carrier row (see fused_group_violations). The plan stays lazy: it
-    adds one small aggregate exchange and builds with no job, given
-    ``observed_metrics["__n_rows"]`` (else one count job sizes the
-    chunks). ``ordered_partitions`` is accepted and unused: the
-    benchmark's traced decomposition still passes it.
+    ``skewed_convs`` (picked by the runner's stats-scan skew probe)
+    are conversations too large for one window task. They stay on the
+    same fused window, split into turn_idx chunks of skew_chunk_rows
+    rows, each seeded by a carrier row (see fused_group_violations).
+    The plan stays lazy: it adds one small aggregate exchange and builds
+    with no job, given ``observed_metrics["__n_rows"]`` (else one count
+    job sizes the chunks). ``ordered_partitions`` is accepted and
+    unused: the benchmark's traced decomposition still passes it.
 
     ``carry`` (incremental runs): convstate boundary-state table,
     seeded into the fused window pass (see fused_group_violations).

@@ -194,7 +194,7 @@ def test_metric_bounds_share_one_job(spark):
 def test_metric_bounds_in_verdicts(spark):
     """MetricBound findings flow into the suite verdict like every
     dataset finding: a breached ERROR bound fails the run."""
-    from ocsf_validator_spark.verdict import exit_code, verdicts
+    from ocsf_validator_spark.verdict import exit_code_rows, verdicts
 
     df = _df(spark, [("c1", 0, "view", "x")])
     suite = ConstraintSet(
@@ -203,7 +203,7 @@ def test_metric_bounds_in_verdicts(spark):
     )
     v = all_violations(df, suite)
     vd = verdicts(df, v, suite)
-    assert exit_code(vd) == 1
+    assert exit_code_rows(vd.collect()) == 1
 
 
 def test_runner_cli_check_and_metric_bound(spark, capsys):
@@ -230,6 +230,21 @@ def test_runner_cli_check_and_metric_bound(spark, capsys):
     assert main(["--synth", "10", "--metric-bound", "role,max=1"]) == 2
     # unknown metric name: clean parse-time FATAL, not a mid-run trace
     assert main(["--synth", "10", "--metric-bound", "role:bogus,max=1"]) == 2
+
+
+@pytest.mark.parametrize(
+    "flag, spec",
+    [
+        ("--quantile-bound", "turn_idx:0.5,max=1,foo=1"),
+        ("--group-metric", "tool:distinct_count:conv_id,max=1,foo=1"),
+    ],
+)
+def test_bound_flags_reject_unknown_key(spark, flag, spec):
+    """The shared ``,min=X,max=Y`` tail parser: an unknown key is a
+    FATAL config error (exit 2) on every bound flag."""
+    from ocsf_validator_spark.runner import main
+
+    assert main(["--synth", "10", flag, spec]) == 2
 
 
 def test_check_label_need_not_be_a_column(spark):
@@ -436,10 +451,10 @@ def test_volume_gate_flags_outage_day(spark):
     assert r.constraint_id == "volume.day.ts" and r.severity == "WARNING"
     assert "2026-01-06 00:00:00 = 3 outside" in r.reason
     # WARNING by default: the run does not fail unless --strict/remap
-    from ocsf_validator_spark.verdict import exit_code, verdicts
+    from ocsf_validator_spark.verdict import exit_code_rows, verdicts
 
     vd = verdicts(df, dataset_findings(df, suite), suite)
-    assert exit_code(vd) == 0
+    assert exit_code_rows(vd.collect()) == 0
     # unresolvable column reported, never silent
     bad = ConstraintSet("v2").add(VolumeGate(column="nope"))
     miss = dataset_findings(df, bad).collect()

@@ -107,3 +107,16 @@ def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
     )
     with pytest.raises(ValueError, match=r"\['tool'\]"):
         e.q_verdict_diff(spark, SF)
+
+
+def test_reader_memo_is_per_session(spark, tmp_path):
+    """A newSession() sibling shares its parent's applicationId; the
+    reader-plan memo must still hand it a frame bound to itself, not
+    the parent's, while each session reuses its own plan."""
+    d = str(tmp_path)
+    spark.range(3).write.parquet(f"{d}/events.parquet")
+    s2 = spark.newSession()
+    a, b = e._t(spark, d, "events"), e._t(s2, d, "events")
+    assert a.sparkSession is spark and b.sparkSession is s2
+    assert e._t(s2, d, "events")._jdf.equals(b._jdf)
+    assert b.count() == 3

@@ -21,7 +21,7 @@ from ocsf_validator_spark.spec import (
     TypeCast,
     transcript_suite,
 )
-from ocsf_validator_spark.verdict import exit_code, verdicts
+from ocsf_validator_spark.verdict import exit_code_rows, verdicts
 from ocsf_validator_spark.violations import (
     all_violations,
     dataset_findings,
@@ -112,12 +112,13 @@ def test_severity_override_flips_verdict(spark, transcripts):
         ],
     )
     v1 = all_violations(transcripts, base, KEYS)
-    assert exit_code(verdicts(transcripts, v1, base)) == 0  # WARNING passes
+    vd1 = verdicts(transcripts, v1, base).collect()
+    assert exit_code_rows(vd1) == 0  # WARNING passes
 
     remapped = base.with_severities({"deprecated.role": "ERROR"})
     assert remapped.by_id()["deprecated.role"].severity == Severity.ERROR
     v2 = all_violations(transcripts, remapped, KEYS)
-    assert exit_code(verdicts(transcripts, v2, remapped)) == 1
+    assert exit_code_rows(verdicts(transcripts, v2, remapped).collect()) == 1
 
     with pytest.raises(KeyError):
         base.with_severities({"no.such.constraint": "ERROR"})

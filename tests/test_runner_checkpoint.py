@@ -118,6 +118,35 @@ def test_skew_probe_adds_zero_jobs(spark, jobs_of):
     assert n_on == n_off
 
 
+def test_runner_coverage_matches_library_per_constraint(spark):
+    """Two EnumCoverage constraints on one column: the runner's
+    stats-scan observations must report, per constraint, exactly what
+    all_violations' lazy coverage leg reports. A column-keyed fold let
+    the second constraint's observed set replace the first's, so
+    cov.core used to report its observed values as never observed."""
+    from ocsf_validator_spark.spec import ConstraintSet, EnumCoverage
+    from ocsf_validator_spark.violations import all_violations
+
+    df = spark.createDataFrame(
+        [("a", 0, "user"), ("a", 1, "assistant"), ("b", 0, "user")],
+        "conv_id string, turn_idx int, role string",
+    )
+    suite = ConstraintSet(name="cov", constraints=[
+        EnumCoverage(column="role", values=("user", "assistant"),
+                     id_override="cov.core"),
+        EnumCoverage(column="role", values=("tool",),
+                     id_override="cov.extra"),
+    ])
+    lib: dict = {}
+    for r in all_violations(df, suite).collect():
+        lib[r.constraint_id] = lib.get(r.constraint_id, 0) + 1
+    res = run_validation(spark, df, suite=suite, num_buckets=4, quiet=True)
+    got = {s["constraint_id"]: s["violation_count"] for s in res.summary_rows}
+    assert got == {"cov.core": lib.get("cov.core", 0),
+                   "cov.extra": lib.get("cov.extra", 0)}
+    assert got == {"cov.core": 0, "cov.extra": 1}
+
+
 def test_runner_skew_routing_equivalence(spark, tmp_path):
     """With the floor lowered so synth's 5%-skew conversation trips the
     threshold, the routed run must produce exactly the violations of the

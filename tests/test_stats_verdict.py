@@ -9,7 +9,11 @@ from ocsf_validator_spark.stats import (
     length_histogram,
     overall_stats,
 )
-from ocsf_validator_spark.verdict import exit_code, summarize, verdicts
+from ocsf_validator_spark.verdict import (
+    exit_code_rows,
+    summarize_rows,
+    verdicts,
+)
 from ocsf_validator_spark.violations import all_violations
 
 SUITE = transcript_suite()
@@ -74,8 +78,9 @@ def test_verdicts_and_exit_code(transcripts):
     # required.role fails in its bucket
     req = [r for (b, cid), r in counts.items() if cid == "required.role" and r.violation_count > 0]
     assert req and not any(r["pass"] for r in req)
-    assert exit_code(vd) == 1
-    summary = {r.constraint_id: r for r in summarize(vd).collect()}
+    vd_rows = vd.collect()
+    assert exit_code_rows(vd_rows) == 1
+    summary = {s["constraint_id"]: s for s in summarize_rows(vd_rows)}
     assert not summary["required.role"]["pass"]
     assert summary["deprecated.role"]["pass"]
     vd.unpersist()
@@ -84,7 +89,7 @@ def test_verdicts_and_exit_code(transcripts):
 def test_strict_threshold(transcripts):
     v = all_violations(transcripts, SUITE)
     vd = verdicts(transcripts, v, SUITE, num_buckets=8, threshold=Severity.WARNING)
-    summary = {r.constraint_id: r for r in summarize(vd).collect()}
+    summary = {s["constraint_id"]: s for s in summarize_rows(vd.collect())}
     # under --strict, WARNING-level deprecation now fails (reference
     # runner.py:135-139 strict mode)
     assert not summary["deprecated.role"]["pass"]
