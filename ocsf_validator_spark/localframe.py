@@ -60,15 +60,20 @@ def _arrow_safe(rows) -> bool:
 
 def empty_df(spark: SparkSession, schema) -> DataFrame:
     """An empty frame over ``schema`` that never touches the Python-RDD
-    path: Range(0) + typed NULL casts folds to an empty LocalRelation
-    (an empty ``createDataFrame([])`` still parallelizes an empty
-    pickled RDD whose every empty partition launches a Python worker —
-    ~0.5 s per scan on local[32])."""
+    path: one Range row of typed NULL casts under a literal-false
+    filter, which the optimizer's PruneFilters folds to an empty
+    LocalRelation, so collecting it runs no job (an empty
+    ``createDataFrame([])`` still parallelizes an empty pickled RDD
+    whose every empty partition launches a Python worker — ~0.5 s per
+    scan on local[32] — and a bare ``Range(0)`` still runs one
+    zero-partition job)."""
     from pyspark.sql import functions as F
 
     st = _schema_of(schema)
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields])
+        .where(F.lit(False))
     )
 
 

@@ -164,7 +164,8 @@ def run_validation(
     # Phase 0 — schema audit on the driver; FATAL aborts everything
     # (reference runner.py:233-234 exits 2 on fatal before later tests).
     # include_coverage=False: the audit is a pure driver-side column-set
-    # diff, no data scan.
+    # diff, no data scan (with no finding it folds to an empty local
+    # relation and runs no job).
     audit = dataset_findings(
         df.limit(0), suite, include_coverage=False
     ).collect()
@@ -328,7 +329,7 @@ def run_validation(
         lap("quarantine")
 
     # Phase 4 — verdicts: one groupBy over the (small) violations set
-    # joined to the observed-bucket grid; collected ONCE. Report, exit
+    # unioned with the observed-bucket grid; collected ONCE. Report, exit
     # code, and manifest metrics all derive driver-side from these rows.
     vd_rows = verdicts(
         df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,

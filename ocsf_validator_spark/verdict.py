@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocsf_validator_spark.localframe import empty_df, local_df
-
+from ocsf_validator_spark.localframe import local_df
 from ocsf_validator_spark.spec import ConstraintSet, Severity
 from ocsf_validator_spark.stats import DEFAULT_BUCKETS, bucket_col
 
@@ -46,57 +45,70 @@ def verdicts(
     ``bucket_expr`` overrides the default xxhash64 bucket (e.g.
     stats.md5_bucket_col for oracle-reproducible bucketing).
     ``observed_buckets`` (usually already in hand from the stats pass)
-    skips the full-table distinct scan the default path needs."""
+    skips the full-table distinct scan the default path needs. A suite
+    that repeats a constraint id raises ``ValueError``."""
     spark = df.sparkSession
     if bucket_expr is None:
         bucket_expr = bucket_col(conv_col, num_buckets)
+    suite.by_id()  # a repeated id would fold two constraints into one row
+    cons = [(c.constraint_id, c.severity.name) for c in suite.constraints]
     if observed_buckets is not None:
-        buckets = local_df(
-            spark, [(int(b),) for b in observed_buckets], "bucket int"
+        grid = local_df(
+            spark,
+            [(int(b), cid, sev) for b in observed_buckets for cid, sev in cons],
+            "bucket int, constraint_id string, constraint_severity string",
         )
     else:
-        buckets = df.select(bucket_expr.alias("bucket")).distinct()
-    cons = local_df(
-        spark,
-        [(c.constraint_id, c.severity.name) for c in suite.constraints],
-        "constraint_id string, constraint_severity string",
-    )
-    grid = buckets.crossJoin(F.broadcast(cons))
-
-    vcounts = (
-        violations.withColumn(
-            "bucket",
-            F.when(F.col(conv_col).isNotNull(), bucket_expr).otherwise(F.lit(-1)),
+        grid = (
+            df.select(bucket_expr.alias("bucket"))
+            .distinct()
+            .crossJoin(
+                F.broadcast(
+                    local_df(
+                        spark, cons,
+                        "constraint_id string, constraint_severity string",
+                    )
+                )
+            )
         )
+    # ONE aggregate over grid cells and violations: grid rows carry the
+    # severity and a NULL _n (count(_n) counts violations only, 0 on a
+    # clean cell); a violation's group survives only inside the grid
+    # (non-NULL severity) or as a dataset-level finding (bucket -1)
+    hits = violations.select(
+        F.when(F.col(conv_col).isNotNull(), bucket_expr)
+        .otherwise(F.lit(-1))
+        .alias("bucket"),
+        "constraint_id",
+        F.lit(None).cast("string").alias("constraint_severity"),
+        F.lit(1).alias("_n"),
+        F.expr(SEV_RANK).alias("_sev"),
+    )
+    return (
+        grid.select(
+            "*", F.lit(None).cast("int").alias("_n"), F.lit(0).alias("_sev")
+        )
+        .unionByName(hits)
         .groupBy("bucket", "constraint_id")
         .agg(
-            F.count(F.lit(1)).alias("violation_count"),
-            F.max(F.expr(SEV_RANK)).alias("_max_sev"),
+            F.max("constraint_severity").alias("_grid_sev"),
+            F.count("_n").alias("violation_count"),
+            F.max("_sev").alias("_max_sev"),
         )
-    )
-    out = (
-        grid.join(vcounts, ["bucket", "constraint_id"], "left_outer")
+        .filter(F.col("_grid_sev").isNotNull() | (F.col("bucket") == -1))
         .select(
             "bucket",
             "constraint_id",
-            F.col("constraint_severity").alias("severity"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).alias("violation_count"),
-            (
-                F.coalesce(F.col("_max_sev"), F.lit(0)) < F.lit(int(threshold))
-            ).alias("pass"),
+            F.coalesce(
+                "_grid_sev",
+                F.expr(
+                    "CASE _max_sev WHEN 4 THEN 'FATAL' WHEN 3 THEN 'ERROR' WHEN 2 THEN 'WARNING' WHEN 1 THEN 'INFO' ELSE 'IGNORE' END"
+                ),
+            ).alias("severity"),
+            "violation_count",
+            (F.col("_max_sev") < F.lit(int(threshold))).alias("pass"),
         )
     )
-    # dataset-level findings (bucket -1) kept as their own verdict rows
-    ds = vcounts.filter(F.col("bucket") == -1).select(
-        "bucket",
-        "constraint_id",
-        F.expr(
-            "CASE _max_sev WHEN 4 THEN 'FATAL' WHEN 3 THEN 'ERROR' WHEN 2 THEN 'WARNING' WHEN 1 THEN 'INFO' ELSE 'IGNORE' END"
-        ).alias("severity"),
-        "violation_count",
-        (F.col("_max_sev") < F.lit(int(threshold))).alias("pass"),
-    )
-    return out.unionByName(ds)
 
 
 # ---------------------------------------------------------------------------

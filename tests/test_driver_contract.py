@@ -86,6 +86,18 @@ def test_verdict_diff_fused_stats_match_naive_scans(spark):
         assert obs_enums[half]["role"] == naive_obs, half
 
 
+@pytest.mark.parametrize("name,jobs", [("suite_verdicts", 7),
+                                       ("verdict_diff", 8)])
+def test_verdict_query_exec_jobs(spark, jobs_of, name, jobs):
+    """Executing a verdict query's built plan: the scorecard is one
+    aggregate over the grid and the violations (suite_verdicts ran 10
+    jobs and verdict_diff 16 when the grid was a left join plus a
+    second aggregate for the dataset-level rows)."""
+    df = e.queries()[name](spark, SF)
+    _, n = jobs_of(df.collect)
+    assert n == jobs
+
+
 def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
     """The fused stats scan observes enum coverage only under 'role'.
     An events suite with EnumCoverage on another column must fail at

@@ -208,6 +208,45 @@ def test_routed_run_costs_at_most_one_job_more(spark, tmp_path, jobs_of):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_schema_audit_runs_no_job(spark, jobs_of):
+    """The runner's Phase 0 audit is driver-only: an empty frame folds
+    to an empty LocalRelation, so neither empty_df nor the audit over
+    the input's empty limit launches a job."""
+    from ocsf_validator_spark.localframe import empty_df
+    from ocsf_validator_spark.violations import dataset_findings
+
+    rows, n = jobs_of(
+        lambda: empty_df(spark, "a int, b string, c array<string>").collect()
+    )
+    assert (rows, n) == ([], 0)
+    df = synth_transcripts(spark, n_turns=200, seed=42)
+    rows, n = jobs_of(lambda: dataset_findings(
+        df.limit(0), transcript_suite(), include_coverage=False
+    ).collect())
+    assert (rows, n) == ([], 0)
+
+
+def test_routed_run_with_sinks_job_count(spark, tmp_path, jobs_of):
+    """A skew-routed run_validation with a checkpoint manifest and a
+    violation sink: stats (3), the sink write (4) and the one-aggregate
+    verdict collect (2) make 9 jobs; the schema audit adds none."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
+        _, n = jobs_of(lambda: run_validation(
+            spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            violations_out=str(tmp_path / "viol"),
+            report_json=str(tmp_path / "r.json"),
+        ))
+        with open(tmp_path / "r.json") as f:
+            assert json.load(f)["skew_route"]["convs"] == 1
+        assert n <= 9
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_cli_input_records_source_snapshot(spark, tmp_path):
     """--input routes through sources.load_table; the manifest must
     record the lineage id the source handle provides (parquet content

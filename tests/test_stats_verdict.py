@@ -1,9 +1,11 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.spec import Severity, transcript_suite
 from ocsf_validator_spark.stats import (
+    bucket_col,
     column_stats,
     conversation_stats,
     length_histogram,
@@ -93,6 +95,139 @@ def test_strict_threshold(transcripts):
     # under --strict, WARNING-level deprecation now fails (reference
     # runner.py:135-139 strict mode)
     assert not summary["deprecated.role"]["pass"]
+
+
+_RANK = {"FATAL": 4, "ERROR": 3, "WARNING": 2, "INFO": 1}
+_NAME = {v: k for k, v in _RANK.items()}
+
+
+def _grid_fill(grid_buckets, suite, hits, threshold):
+    """The scorecard by hand: every (grid bucket, suite constraint)
+    cell counts its hits, plus one row per constraint_id (in the suite
+    or not) among the dataset-level hits at bucket -1. ``hits`` are
+    (bucket, constraint_id, severity) tuples."""
+    cells: dict = {}
+    for b, cid, sev in hits:
+        n, top = cells.get((b, cid), (0, 0))
+        cells[(b, cid)] = (n + 1, max(top, _RANK.get(sev, 0)))
+    out = [
+        (b, c.constraint_id, c.severity.name, n, top < int(threshold))
+        for b in grid_buckets
+        for c in suite.constraints
+        for n, top in [cells.get((b, c.constraint_id), (0, 0))]
+    ]
+    out += [
+        (b, cid, _NAME.get(top, "IGNORE"), n, top < int(threshold))
+        for (b, cid), (n, top) in cells.items()
+        if b == -1
+    ]
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize("threshold", [Severity.ERROR, Severity.WARNING],
+                         ids=["error", "warning"])
+@pytest.mark.parametrize("observed", [True, False], ids=["observed", "lazy"])
+@pytest.mark.parametrize("md5", [False, True], ids=["xxhash", "md5"])
+def test_verdicts_match_python_grid_fill(spark, transcripts, threshold,
+                                         observed, md5):
+    """The one-aggregate scorecard equals a plain grid fill over the
+    collected violation rows: zero-violation cells pass with count 0,
+    violations outside the grid (a bucket not observed, a constraint
+    not in the suite) drop, and bucket -1 keeps every dataset-level
+    id, the FATAL schema finding and a NULL id included."""
+    from ocsf_validator_spark.stats import md5_bucket_col
+
+    bucket_expr = md5_bucket_col("conv_id", 8) if md5 else None
+    bexpr = md5_bucket_col("conv_id", 8) if md5 else bucket_col("conv_id", 8)
+    v = all_violations(transcripts, SUITE)
+    fatal = SUITE.constraints[0].constraint_id  # AllowedColumns
+    extra = spark.createDataFrame(
+        [
+            (fatal, None, None, "missing required column x", "FATAL"),
+            (None, None, None, "no id", "ERROR"),
+            ("not.in.suite", None, None, "dataset-level", "WARNING"),
+            ("not.in.suite", "c002", 1, "row-level", "ERROR"),
+        ],
+        v.schema,
+    )
+    v = v.unionByName(extra)
+    hits = [
+        (int(r.b), r.constraint_id, r.severity)
+        for r in v.select(
+            F.when(F.col("conv_id").isNotNull(), bexpr)
+            .otherwise(F.lit(-1))
+            .alias("b"),
+            "constraint_id",
+            "severity",
+        ).collect()
+    ]
+    seen = sorted(
+        {int(r.b) for r in transcripts.select(bexpr.alias("b")).collect()}
+    )
+    if observed:
+        # leave out a bucket that holds violations: its rows must drop
+        gone = next(b for b, _, _ in hits if b >= 0)
+        grid = [b for b in seen if b != gone]
+    else:
+        grid = seen
+    got = sorted(
+        map(tuple, verdicts(
+            transcripts, v, SUITE, num_buckets=8, threshold=threshold,
+            bucket_expr=bucket_expr,
+            observed_buckets=grid if observed else None,
+        ).collect()),
+        key=repr,
+    )
+    assert got == _grid_fill(grid, SUITE, hits, threshold)
+    # the cases the fill covers are really in play
+    ids = {(b, cid) for b, cid, *_ in got}
+    assert (-1, fatal) in ids and (-1, None) in ids
+    assert (-1, "not.in.suite") in ids
+    assert not any(cid == "not.in.suite" for b, cid in ids if b >= 0)
+    if observed:
+        assert not any(b == gone for b, _ in ids)
+    totals: dict = {}
+    for b, cid, _, n, _ in got:
+        totals[cid] = totals.get(cid, 0) + n
+    clean = [cid for cid, n in totals.items() if n == 0]
+    assert clean and all(r[4] for r in got if r[1] in clean)
+
+
+def test_verdicts_reject_repeated_constraint_id(transcripts):
+    """Two constraints sharing an id would fold into one scorecard row:
+    the suite is refused when the verdict plan is built."""
+    from ocsf_validator_spark.spec import ConstraintSet, NotNull
+
+    suite = ConstraintSet(name="dup", constraints=[
+        NotNull(column="role"), NotNull(column="role"),
+    ])
+    v = all_violations(transcripts, SUITE)
+    with pytest.raises(ValueError, match="duplicate constraint id"):
+        verdicts(transcripts, v, suite, num_buckets=8)
+
+
+def test_verdicts_job_counts(spark, transcripts, jobs_of):
+    """The scorecard is one aggregate: over a cached violation frame
+    the observed-bucket collect runs exactly 2 jobs (its shuffle map
+    stage and the result), the lazy-bucket collect at most 4."""
+    v = all_violations(transcripts, SUITE).cache()
+    v.count()
+    try:
+        observed = sorted({
+            int(r.b) for r in transcripts.select(
+                bucket_col("conv_id", 8).alias("b")
+            ).collect()
+        })
+        _, n_obs = jobs_of(lambda: verdicts(
+            transcripts, v, SUITE, num_buckets=8, observed_buckets=observed,
+        ).collect())
+        _, n_lazy = jobs_of(lambda: verdicts(
+            transcripts, v, SUITE, num_buckets=8,
+        ).collect())
+    finally:
+        v.unpersist()
+    assert n_obs == 2
+    assert n_lazy <= 4
 
 
 def test_bucketed_probe_stats_fused(spark):
