@@ -34,7 +34,11 @@ def _disable_dataframe_debugging() -> None:
     Also enables Arrow for pandas interchange
     (spark.sql.execution.arrow.pyspark.enabled): localframe.local_df
     routes literal frames through pandas + Arrow so scanning them never
-    launches Python workers (see that module's measurements)."""
+    launches Python workers (see that module's measurements).
+
+    Also raises spark.sql.optimizer.windowGroupLimitThreshold to the
+    int maximum, as session.get_spark does, so every per-group top-k
+    keeps its WindowGroupLimit Partial stage at any k."""
     try:
         import pyspark.errors.utils as _eu
 
@@ -44,6 +48,9 @@ def _disable_dataframe_debugging() -> None:
                 "spark.python.sql.dataFrameDebugging.enabled", "false"
             )
             s.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+            s.conf.set(
+                "spark.sql.optimizer.windowGroupLimitThreshold", "2147483647"
+            )
             _eu._enable_debugging_cache = None
     except Exception:
         pass
@@ -759,8 +766,9 @@ def q_mad_outliers_value(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_weighted_sample_by_lang(spark: SparkSession, sf: str) -> DataFrame:
     """Per-stratum weighted sampling: 10 docs per language drawn
-    proportional to n_chars (md5-derived ES keys; two-stage top-k so
-    no hot language funnels through one reducer)."""
+    proportional to n_chars (md5-derived ES keys; a row_number <= 10
+    window planned as WindowGroupLimit Partial/Final, so no hot
+    language funnels through one reducer)."""
     from ocsf_validator_spark.pipeline.select import weighted_sample_per_group
 
     return weighted_sample_per_group(

@@ -385,29 +385,32 @@ def weighted_sample_per_group(
     cannot express. Same md5-derived Efraimidis–Spirakis keys, so the
     draw stays reproducible across runs, partitionings, and engines.
 
-    The obvious plan — ``row_number() OVER (PARTITION BY group)`` —
-    funnels EVERY row of a hot group through one reducer (group
-    cardinality is tiny, so the exchange is maximally skewed: the
-    cap_violations straggler). Two stages instead, the bounded-sink
-    pattern:
-
-    1. map-side: a running top-k per group inside each input partition
-       (Arrow batches; state bounded by k x groups + one batch, output
-       bounded by k x partitions x groups — collapse-proportional, not
-       data-proportional);
-    2. the exact global window over that bounded set.
-
-    Identical to the naive window by construction (stage 1 can only
-    drop rows that rank > k within their own partition, which rank > k
-    globally a fortiori). Returns (group_col, id_col, weight,
-    sample_key), the per-group winners.
+    The body is ``row_number() OVER (PARTITION BY group ORDER BY
+    sample_key, id) <= k``. A bare window would funnel EVERY row of a
+    hot group through one reducer (group cardinality is tiny, so the
+    exchange is maximally skewed), but Catalyst plans the filtered
+    window as ``WindowGroupLimit``: ``Partial`` keeps each input
+    partition's k smallest keys per group before the exchange, so the
+    shuffle carries at most k x partitions rows per group, and
+    ``Final`` ranks that set after it. The session raises
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000,
+    above which Spark drops the ``Partial`` stage) to the int maximum,
+    so the bound holds at any k. NaN weights pass the ``w > 0`` guard
+    (NaN sorts above every number) and their NaN keys rank last.
+    Returns (group_col, id_col, weight, sample_key), the per-group
+    winners.
     """
     h = _MD5_60.format(
         x=f"concat(cast(`{id_col}` as string), '|', '{salt}')"
     )
     u = f"(({h}) + 1) / 1152921504606846977e0"
     w = F.col(weight_col).cast("double")
-    keyed = (
+    rank = F.row_number().over(
+        Window.partitionBy(group_col).orderBy(
+            F.col("sample_key").asc(), F.col(id_col).asc()
+        )
+    )
+    return (
         df.filter(
             F.col(id_col).isNotNull()
             & F.col(group_col).isNotNull()
@@ -420,29 +423,7 @@ def weighted_sample_per_group(
             w.alias("weight"),
             F.round(-F.expr(f"ln({u})") / w, 6).alias("sample_key"),
         )
-    )
-    schema = keyed.schema
-
-    def local_topk(it):
-        import pandas as pd
-
-        kept = None
-        for pdf in it:
-            pool = pdf if kept is None else pd.concat((kept, pdf))
-            pool = pool.sort_values(["sample_key", id_col])
-            kept = pool.groupby(group_col, sort=False).head(k)
-        yield kept if kept is not None else pd.DataFrame(
-            columns=[f.name for f in schema.fields]
-        )
-
-    bounded = keyed.mapInPandas(local_topk, schema)
-    rank = F.row_number().over(
-        Window.partitionBy(group_col).orderBy(
-            F.col("sample_key").asc(), F.col(id_col).asc()
-        )
-    )
-    return (
-        bounded.withColumn("_rk", rank)
+        .withColumn("_rk", rank)
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )

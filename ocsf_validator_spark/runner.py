@@ -312,9 +312,9 @@ def run_validation(
         # verdict pass below counts the uncapped (cached) frame, so
         # pass/fail and violation_count stay exact
         sink = (
-            cap_violations(viol, max_violation_rows)
-            if max_violation_rows
-            else viol
+            viol
+            if max_violation_rows is None
+            else cap_violations(viol, max_violation_rows)
         )
         sink.write.mode("append").parquet(violations_out)
     if quarantine_out:
@@ -782,6 +782,9 @@ def main(argv: list[str] | None = None) -> int:
         "rows (batch_id=-2, WARNING by default)",
     )
     args = p.parse_args(argv)
+    if args.max_violation_rows is not None and args.max_violation_rows < 1:
+        print(f"[FATAL] --max-violation-rows must be >= 1, got {args.max_violation_rows}")
+        return 2
 
     from ocsf_validator_spark.session import get_spark
 

@@ -7,8 +7,16 @@ submit to a real cluster via ``spark-submit --py-files``:
   table with a few pathological conversations doesn't strand tasks.
 - shuffle partitions sized to cores locally; on a cluster this is
   superseded by AQE's target post-shuffle partition size.
-- Arrow enabled for the pandas-UDF drift legs (no per-row Python
-  anywhere in the engine — BASELINE.json input_hint).
+- Arrow enabled for pandas interchange: ``localframe.local_df``
+  builds literal frames through pandas + Arrow, and the remaining
+  ``mapInPandas`` / ``applyInPandas`` legs exchange Arrow batches (no
+  per-row Python anywhere in the engine — BASELINE.json input_hint).
+- ``spark.sql.optimizer.windowGroupLimitThreshold`` at the int maximum:
+  per-group top-k (``row_number() <= k``) keeps its ``WindowGroupLimit``
+  Partial stage before the exchange only while k is at most the
+  threshold (default 1000), and ``--max-violation-rows`` is user-set,
+  so any finite value leaves a cliff (every row of a hot group crossing
+  the exchange to one reducer) right above it.
 - session timezone pinned to UTC so results are reproducible and
   comparable against the DuckDB oracle (duckdb timestamps are
   UTC-naive).
@@ -42,6 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(cores, 4)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", "2147483647")
         # per-call call-site capture costs two extra py4j round trips
         # per DataFrame/Column call — ~40% of suite plan-construction
         # time (driver-side tooling only; results unchanged)

@@ -212,13 +212,18 @@ def column_topk_values(
     Scale shape (the ngram_topk/decontam discipline): melt to
     (col, value) map-side, count on (col, 60-bit md5-prefix hash) — the
     exchange carries 8-byte ints, never value strings, and partial agg
-    collapses it to |distinct| — localCheckpoint the counted frame once
-    for its |columns|+1 consumers, then per-column
-    TakeOrderedAndProject (no per-column single-reducer global window).
-    The k winning STRINGS come back via a bounded second pass: a
-    broadcast semi join of the winner (col, hash) set against the
-    melted stream, min(value) per hash — value strings cross an
-    exchange only for the k×|columns| winners. The md5-prefix hash (not
+    collapses it to |distinct|. The ranking is ``row_number() OVER
+    (PARTITION BY col ORDER BY cnt DESC, h ASC) <= k``, which Catalyst
+    plans as ``WindowGroupLimit``: ``Partial`` keeps each counted
+    partition's k best hashes per column before the exchange and
+    ``Final`` ranks them after it, so no reducer sees a column's whole
+    distinct set (the session raises
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` so this holds at
+    any k). The per-column totals read the same counted exchange, which
+    Spark reuses. The k winning STRINGS come back via a bounded second
+    pass: a broadcast join of the ranked winners against the melted
+    stream, min(value) per hash — value strings cross an exchange only
+    for the k×|columns| winners. The md5-prefix hash (not
     xxhash64) because it is the tie-break in the output rank and must
     replay in a SQL oracle. Display capped at 256 chars AFTER counting,
     so long-text columns profile correctly but never put unbounded
@@ -251,30 +256,17 @@ def column_topk_values(
             F.expr("cast(conv(substring(md5(val), 1, 15), 16, 10) as bigint)"),
         )
     )
-    counted = (
-        melted.groupBy("col", "h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
+    counted = melted.groupBy("col", "h").agg(F.count(F.lit(1)).alias("cnt"))
     totals = counted.groupBy("col").agg(F.sum("cnt").alias("total"))
-    tops = None
-    for c in columns:
-        t = (
-            counted.filter(F.col("col") == c)
-            .orderBy(F.col("cnt").desc(), F.col("h").asc())
-            .limit(k)
-        )
-        tops = t if tops is None else tops.unionByName(t)
-    rec = (
-        melted.join(F.broadcast(tops.select("col", "h")), ["col", "h"], "semi")
-        .groupBy("col", "h")
-        .agg(F.min("val").alias("_value"))
-    )
     w = Window.partitionBy("col").orderBy(F.col("cnt").desc(), F.col("h").asc())
+    tops = counted.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
     return (
-        tops.join(rec, ["col", "h"])
+        melted.join(F.broadcast(tops), ["col", "h"])
+        .groupBy("col", "h", "rank", "cnt")
+        .agg(F.min("val").alias("_value"))
         .join(totals, "col")
-        .withColumn("rank", F.row_number().over(w))
         .select(
             "col",
             "rank",

@@ -549,8 +549,20 @@ def streaming_psi(
     """Per-event-time-window PSI of a binned value distribution vs a
     broadcast REFERENCE histogram — the streaming leg of the drift
     family (batch single-scan: drift.psi_split; partitioned:
-    drift.psi_split_by_bucket). Same PSI formula and 1e-6 share floor
-    as the batch paths, so thresholds transfer.
+    drift.psi_split_by_bucket). The formula differs from the batch
+    paths in two ways:
+
+    - both shares are floored at ``eps`` before the difference, so a
+      bin's term is ``(max(p, eps) - max(q, eps)) * (ln max(p, eps) -
+      ln max(q, eps))``; ``drift.psi_split`` floors only inside the
+      log, so on a bin empty on one side the two differ by about
+      ``eps * |ln(eps / q)|``;
+    - a window's share ``p`` divides by its row count ``n``, which
+      also counts rows whose bin is NULL; those rows land in no bin,
+      so the window's shares sum to less than 1 when it holds any.
+
+    Thresholds calibrated on the batch paths therefore carry over
+    approximately, not exactly.
 
     ``min_n`` guards the small-sample false positive: a near-empty
     window (stream tail, quiet hour) with a couple of rare-bin rows

@@ -1929,41 +1929,27 @@ def cap_violations(
     the kept set is reproducible across runs and partitionings (ties
     beyond the full sort key are byte-identical rows).
 
-    Two stages, because the obvious
-    ``row_number() OVER (PARTITION BY constraint_id)`` funnels EVERY
-    detail row of a hot constraint through one reducer — the exact
-    straggler this module engineers out of the window legs:
-
-    1. map-side: a running top-N per constraint inside each partition
-       (Arrow batches; memory bounded by cap x constraints + one
-       batch, output bounded by cap x partitions x constraints);
-    2. the exact global window over that bounded set.
+    The body is the plain ``row_number() OVER (PARTITION BY
+    constraint_id ORDER BY ...) <= per_constraint`` filter. Catalyst
+    plans it as ``WindowGroupLimit`` twice: ``Partial`` keeps the
+    smallest ``per_constraint`` rows per constraint inside each input
+    partition before the exchange, ``Final`` ranks that bounded set
+    after it. So the exchange carries at most partitions x cap rows per
+    constraint, not every detail row of a hot constraint to one reducer
+    as a bare window would. Spark drops
+    the ``Partial`` stage when the limit exceeds
+    ``spark.sql.optimizer.windowGroupLimitThreshold``; the session
+    (``session.get_spark``) raises that threshold to the int maximum
+    because the cap is user-set.
     """
-    cols = list(viol.columns)
-    sort_cols = [*(k for k in keys if k in cols), "reason"]
-
-    def local_topn(it):
-        import pandas as pd
-
-        kept: "pd.DataFrame | None" = None
-        for pdf in it:
-            pool = pdf if kept is None else pd.concat((kept, pdf))
-            # nulls first, matching Spark's asc_nulls_first default in
-            # stage 2 — the stages must agree on the total order
-            pool = pool.sort_values(sort_cols, na_position="first")
-            kept = pool.groupby("constraint_id", sort=False).head(
-                per_constraint
-            )
-        yield kept if kept is not None else pd.DataFrame(columns=cols)
-
-    bounded = viol.mapInPandas(local_topn, viol.schema)
+    sort_cols = [*(k for k in keys if k in viol.columns), "reason"]
     rank = F.row_number().over(
         Window.partitionBy("constraint_id").orderBy(
             *[F.col(c).asc_nulls_first() for c in sort_cols]
         )
     )
     return (
-        bounded.withColumn("_rk", rank)
+        viol.withColumn("_rk", rank)
         .filter(F.col("_rk") <= per_constraint)
         .drop("_rk")
     )

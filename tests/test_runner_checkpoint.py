@@ -3,6 +3,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from ocsf_validator_spark import checkpoint as ckpt
 from ocsf_validator_spark.runner import run_validation
 from ocsf_validator_spark.spec import transcript_suite
@@ -330,6 +332,19 @@ def test_runner_max_violation_rows(spark, tmp_path):
     counts = Counter(r.constraint_id for r in written)
     assert counts and all(n <= 3 for n in counts.values())
     assert spark.read.parquet(out_full).count() == rf.n_violations
+
+
+@pytest.mark.parametrize("n", ["0", "-1"])
+def test_runner_max_violation_rows_below_one_is_fatal(spark, tmp_path, capsys, n):
+    """A cap below 1 is a config error: exit 2 with [FATAL], never a
+    silently uncapped (0) or empty (negative) sink."""
+    from ocsf_validator_spark.runner import main
+
+    out = str(tmp_path / "viol")
+    argv = ["--synth", "10", "--violations-out", out, "--max-violation-rows", n]
+    assert main(argv) == 2
+    assert "[FATAL]" in capsys.readouterr().out
+    assert not os.path.exists(out)
 
 
 def test_cli_incremental_mode(spark, tmp_path, capsys):

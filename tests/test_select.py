@@ -294,6 +294,7 @@ def test_weighted_sample_per_group_equals_naive_window(spark):
         for i in range(150)
     ]
     rows += [("dnull", None, 3.0), ("dzero", "en", 0.0), (None, "de", 2.0)]
+    rows += [("dnan", "en", float("nan"))]
     df = spark.createDataFrame(rows, "doc_id string, lang string, w double")
 
     def naive(sdf, k):
@@ -325,13 +326,14 @@ def test_weighted_sample_per_group_equals_naive_window(spark):
             .drop("_rk")
         )
 
+    # rows compare by repr: the NaN row's key is NaN, and nan != nan
     for k in (1, 7, 1000):
-        want = sorted(map(tuple, naive(df, k).collect()))
+        want = sorted(map(repr, naive(df, k).collect()))
         # stage-1's per-partition cut must be invisible at any layout
         for parts in (1, 3, 16):
             got = sorted(
                 map(
-                    tuple,
+                    repr,
                     weighted_sample_per_group(
                         df.repartition(parts), "lang", "w", k
                     ).collect(),
@@ -344,6 +346,32 @@ def test_weighted_sample_per_group_equals_naive_window(spark):
     for r in got7:
         by_lang[r.lang] = by_lang.get(r.lang, 0) + 1
     assert by_lang == {"en": 7, "de": 7, "zh": 7}
+
+
+def test_weighted_sample_per_group_plan_and_jobs(spark, jobs_of):
+    """k above Spark's default windowGroupLimitThreshold (1000) still
+    plans the WindowGroupLimit Partial stage before the exchange, with
+    no Python map stage, and the collect runs no more jobs than the
+    pandas top-k it replaced (3 on this input)."""
+    from ocsf_validator_spark.pipeline.select import weighted_sample_per_group
+
+    df = spark.createDataFrame(
+        [(f"d{i}", ["en", "de"][i % 2], float(1 + i % 5)) for i in range(100)],
+        "doc_id string, lang string, w double",
+    ).repartition(4)
+    plan = (
+        weighted_sample_per_group(df, "lang", "w", 10_000)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    limits = [ln for ln in plan.splitlines() if "WindowGroupLimit" in ln]
+    assert any(ln.rstrip().endswith("Partial") for ln in limits), plan
+    assert any(ln.rstrip().endswith("Final") for ln in limits), plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+    rows, jobs = jobs_of(weighted_sample_per_group(df, "lang", "w", 3).collect)
+    assert len(rows) == 6
+    assert jobs <= 3
 
 
 def test_corpus_mix_shares_and_entropy(spark):

@@ -425,6 +425,25 @@ def test_column_topk_plan_hash_keyed_count_and_broadcast_recovery(spark):
     assert "BroadcastExchange" in plan
 
 
+def test_column_topk_one_window_and_jobs(spark, jobs_of):
+    """The per-column ranking is one row_number window (WindowGroupLimit
+    before and after its exchange), not a TakeOrderedAndProject per
+    column, and the collect runs no more jobs than the per-column
+    orderBy().limit() union it replaced (7 on this input)."""
+    from ocsf_validator_spark.stats import column_topk_values
+
+    df = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", "x")] * 5, "cat string, sub string"
+    )
+    out = column_topk_values(df, ["cat", "sub"], k=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" not in plan
+    assert "WindowGroupLimit" in plan
+    rows, jobs = jobs_of(out.collect)
+    assert len(rows) == 4
+    assert jobs <= 7
+
+
 def test_verdict_diff_all_statuses_and_silence(spark):
     from ocsf_validator_spark.verdict import verdict_diff
 

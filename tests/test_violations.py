@@ -218,6 +218,78 @@ def test_cap_violations_deterministic(spark):
         viol.unpersist()
 
 
+def test_cap_violations_nan_and_null_keys_match_window(spark):
+    """A double key holding NaN and NULL: the cap keeps exactly the
+    naive asc_nulls_first window's rows at every cap, with NaN ranked
+    above every number (Spark's order) and returned as NaN, not NULL."""
+    import math
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from ocsf_validator_spark.violations import cap_violations
+
+    nan = float("nan")
+    rows = [
+        (cid, conv, score, reason)
+        for cid in ("a", "b")
+        for conv, score, reason in [
+            ("c1", nan, "r1"),
+            ("c1", None, "r2"),
+            ("c1", 1.5, "r3"),
+            ("c1", -2.0, "r4"),
+            ("c1", nan, "r0"),
+            ("c0", nan, "r5"),
+            (None, 3.0, "r6"),
+        ]
+    ]
+    viol = spark.createDataFrame(
+        rows, "constraint_id string, conv_id string, score double, reason string"
+    ).repartition(3)
+    keys = ("conv_id", "score")
+    rank = F.row_number().over(
+        Window.partitionBy("constraint_id").orderBy(
+            *[F.col(c).asc_nulls_first() for c in (*keys, "reason")]
+        )
+    )
+    for cap in (1, 2, 3, 4):
+        got = cap_violations(viol, cap, keys=keys).collect()
+        want = (
+            viol.withColumn("_rk", rank)
+            .filter(F.col("_rk") <= cap)
+            .drop("_rk")
+            .collect()
+        )
+        # nan != nan, so compare rows by repr
+        assert sorted(map(repr, got)) == sorted(map(repr, want)), cap
+        if cap >= 2:
+            assert any(
+                r.conv_id == "c0" and math.isnan(r.score) for r in got
+            ), cap
+
+
+def test_cap_violations_plan_and_jobs(spark, jobs_of):
+    """A cap far above Spark's default windowGroupLimitThreshold (1000)
+    still plans the WindowGroupLimit Partial stage before the exchange,
+    with no Python map stage, and the collect runs no more jobs than
+    the pandas top-k it replaced (3 on this input)."""
+    from ocsf_validator_spark.violations import cap_violations
+
+    viol = spark.createDataFrame(
+        [(f"c{i % 3}", f"k{i % 7}", i, f"r{i}") for i in range(100)],
+        "constraint_id string, conv_id string, turn_idx int, reason string",
+    ).repartition(4)
+    capped = cap_violations(viol, 10_000)
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    limits = [ln for ln in plan.splitlines() if "WindowGroupLimit" in ln]
+    assert any(ln.rstrip().endswith("Partial") for ln in limits), plan
+    assert any(ln.rstrip().endswith("Final") for ln in limits), plan
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+    rows, jobs = jobs_of(cap_violations(viol, 3).collect)
+    assert len(rows) == 9
+    assert jobs <= 3
+
+
 def test_fused_suite_zero_exchange_on_bucketed_table(spark, tmp_path):
     """The 100 TB deployment shape: when the transcript table is
     BUCKETED by conv_id (Iceberg/warehouse tables routinely are), the

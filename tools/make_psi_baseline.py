@@ -11,9 +11,11 @@ validated data, a golden corpus), plus the streaming-side knobs.
 
 One aggregation job: groupBy(bin).count over the reference table. The
 bin expression is stored verbatim so the streaming leg bins the live
-data identically — same bins, same PSI formula (streaming.streaming_psi
-mirrors drift.psi_split's share floor), so batch-calibrated thresholds
-transfer to the stream.
+data identically. The streaming PSI is close to drift.psi_split's but
+not equal: streaming.streaming_psi floors both shares at 1e-6 before
+taking their difference (psi_split floors only inside the log), and
+its window shares divide by a row count that includes NULL-bin rows.
+Batch-calibrated thresholds therefore carry over approximately.
 """
 
 from __future__ import annotations
