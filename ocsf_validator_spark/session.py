@@ -1,12 +1,16 @@
 """SparkSession factory tuned for the validation workload.
 
-Local mode is the test/bench harness; the same settings are what we'd
-submit to a real cluster via ``spark-submit --py-files``:
+Local mode is the test/bench harness. When spark-submit starts the
+JVM (it runs the script, or PySpark launches it from
+``PYSPARK_SUBMIT_ARGS`` as ``bin/pyspark`` and notebooks do), the
+submit's master and ``--conf`` values win, and the settings below fill
+only the keys it leaves unset:
 
 - AQE on (shuffle coalescing + skew-join splitting) so a 10^12-turn
   table with a few pathological conversations doesn't strand tasks.
-- shuffle partitions sized to cores locally; on a cluster this is
-  superseded by AQE's target post-shuffle partition size.
+- shuffle partitions sized to cores locally. AQE only coalesces down
+  from this initial count, so on a cluster pass
+  ``--conf spark.sql.shuffle.partitions`` sized to the data.
 - Arrow enabled for pandas interchange: ``localframe.local_df``
   builds literal frames through pandas + Arrow, and the remaining
   ``mapInPandas`` / ``applyInPandas`` legs exchange Arrow batches (no
@@ -17,6 +21,19 @@ submit to a real cluster via ``spark-submit --py-files``:
   threshold (default 1000), and ``--max-violation-rows`` is user-set,
   so any finite value leaves a cliff (every row of a hot group crossing
   the exchange to one reducer) right above it.
+- ``spark.io.compression.codec=zstd`` for every shuffle, spill and
+  broadcast block: the fused window's exchange carries most of a run's
+  shuffle bytes, much of it free text (the Unique tie column), and zstd
+  writes about half of what lz4 does (perfbench ``batch_skew`` 7.88 ->
+  4.10 MiB per pass on a 4-vCPU host). The cost is native memory and
+  CPU. Each open zstd stream holds about 0.7 MiB outside the heap, and
+  Spark's bypass-merge shuffle writer (which it picks at <= 200 reduce
+  partitions with no map-side combine, as on the window exchange)
+  keeps one open per reduce partition in every running map task. Peak
+  RSS against lz4, default heap setup: +3.4% on perfbench
+  ``batch_skew`` (4 partitions); at 8 M turns on ``local[4]``, +14%
+  with 16 partitions (executor time +15%) and +27% with 200
+  (4230-4287 -> 5299-5577 MiB). Spark's own rule picks the writer.
 - session timezone pinned to UTC so results are reproducible and
   comparable against the DuckDB oracle (duckdb timestamps are
   UTC-naive).
@@ -26,6 +43,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -37,30 +55,51 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores`` controls local parallelism; defaults to $SPARK_GRAFT_CPUS
-    or all cores. On a real cluster the master is supplied by
-    spark-submit and this falls through untouched.
+    or all cores. When spark-submit starts the JVM (it ran this script,
+    so PySpark exports ``PYSPARK_GATEWAY_PORT``, or
+    ``PYSPARK_SUBMIT_ARGS`` is set), the master is the submit's and the
+    values below apply only to keys the submit did not set.
+    ``extra_conf`` wins over both.
+
+    - ``spark.io.compression.codec=zstd``: about half the shuffle bytes
+      of lz4 (perfbench ``batch_skew`` 7.88 -> 4.10 MiB), for 3.4-27%
+      more peak RSS as the reduce partitions go from 4 to 200; see the
+      module docstring.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(cores, 4)))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.windowGroupLimitThreshold", "2147483647")
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.app.name": app_name,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(max(cores, 4)),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.optimizer.windowGroupLimitThreshold": "2147483647",
+        "spark.io.compression.codec": "zstd",
         # per-call call-site capture costs two extra py4j round trips
         # per DataFrame/Column call — ~40% of suite plan-construction
         # time (driver-side tooling only; results unchanged)
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    if not os.environ.get("SPARK_SUBMIT_DEPLOY_MODE"):
-        builder = builder.master(f"local[{cores}]")
-    for k, v in (extra_conf or {}).items():
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+    }
+    builder = SparkSession.builder
+    if "PYSPARK_GATEWAY_PORT" in os.environ or os.environ.get("PYSPARK_SUBMIT_ARGS"):
+        # spark-submit starts the JVM: it ran this script (and exported
+        # the gateway port), or PySpark launches it here from
+        # PYSPARK_SUBMIT_ARGS with these values as --conf ahead of the
+        # submit's arguments, which win. Its SparkConf then holds the
+        # master and every --conf, and a builder value would overwrite
+        # them.
+        SparkContext._ensure_initialized(
+            conf=SparkConf(loadDefaults=False).setAll(conf.items())
+        )
+        submitted = SparkConf()
+        conf = {k: v for k, v in conf.items() if not submitted.contains(k)}
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -14,29 +14,57 @@ def spark():
     yield s
 
 
+def _group_jobs(sc, fn):
+    """Run fn under a fresh job group; return (fn(), job ids). When fn
+    returns a StreamingQuery (or a tuple of them), each is awaited and
+    its jobs are included: micro-batches run under the query's own job
+    group (its runId), not the caller's."""
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    groups = [group]
+    for q in out if isinstance(out, tuple) else (out,):
+        if isinstance(q, StreamingQuery):
+            q.awaitTermination()
+            groups.append(str(q.runId))
+    tracker = sc.statusTracker()
+    return out, [j for g in groups for j in tracker.getJobIdsForGroup(g)]
+
+
 @pytest.fixture()
 def jobs_of(spark):
     """``jobs_of(fn) -> (fn(), jobs)``: run fn under a fresh job group
-    and count the Spark jobs it launched. When fn returns a
-    StreamingQuery (or a tuple of them), each is awaited and its jobs
-    are counted too: micro-batches run under the query's own job group
-    (its runId), not the caller's."""
+    and count the Spark jobs it launched (a returned StreamingQuery's
+    jobs included)."""
     sc = spark.sparkContext
 
     def run(fn):
-        group = f"pin-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        groups = [group]
-        for q in out if isinstance(out, tuple) else (out,):
-            if isinstance(q, StreamingQuery):
-                q.awaitTermination()
-                groups.append(str(q.runId))
-        tracker = sc.statusTracker()
-        return out, sum(len(tracker.getJobIdsForGroup(g)) for g in groups)
+        out, jobs = _group_jobs(sc, fn)
+        return out, len(jobs)
+
+    return run
+
+
+@pytest.fixture()
+def shuffle_bytes_of(spark):
+    """``shuffle_bytes_of(fn) -> (fn(), bytes)``: run fn under a fresh
+    job group and sum the shuffle bytes its jobs' stages wrote, read
+    from the status store as perfbench's harness does (skipped stages
+    write none)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def run(fn):
+        out, jobs = _group_jobs(sc, fn)
+        jsc.listenerBus().waitUntilEmpty()
+        tracker, store = sc.statusTracker(), jsc.statusStore()
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        return out, sum(
+            store.lastStageAttempt(s).shuffleWriteBytes() for s in stages
+        )
 
     return run
 

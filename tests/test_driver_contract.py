@@ -132,3 +132,24 @@ def test_reader_memo_is_per_session(spark, tmp_path):
     assert a.sparkSession is spark and b.sparkSession is s2
     assert e._t(s2, d, "events")._jdf.equals(b._jdf)
     assert b.count() == 3
+
+
+def test_entry_import_turns_call_site_capture_off(spark, monkeypatch):
+    """Importing the entry module turns PySpark's call-site capture off
+    even after it was cached on (the conf is static, so a running
+    session cannot change it), and still sets the session's runtime
+    confs; a PySpark that renames the module-global cache fails here
+    instead of silently keeping the capture."""
+    import importlib
+
+    import pyspark.errors.utils as eu
+
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    monkeypatch.setattr(eu, "_enable_debugging_cache", True)
+    spark.conf.set(key, "1000")
+    try:
+        importlib.reload(e)
+        assert eu.is_debugging_enabled() is False
+        assert spark.conf.get(key) == "2147483647"
+    finally:
+        spark.conf.set(key, "2147483647")

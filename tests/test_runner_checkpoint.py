@@ -784,3 +784,21 @@ def test_compact_checkpoint_preserves_reader_semantics(spark, tmp_path):
     assert main(argv) == 0
     st = convstate.read_state(spark, manifest)
     assert st.collect()[0][convstate.CARRY_PREV_IDX] == 3
+
+
+def test_session_shuffle_codec(spark):
+    """get_spark compresses shuffle, spill and broadcast blocks with
+    zstd and leaves the shuffle writer to Spark's partition-count rule."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.io.compression.codec") == "zstd"
+    assert not conf.contains("spark.shuffle.sort.bypassMergeThreshold")
+
+
+def test_run_validation_shuffle_bytes(spark, shuffle_bytes_of):
+    """Shuffle bytes of one run_validation over a fixed 20 k-turn input,
+    pinned at the zstd figure (442,806 B) plus 5%; lz4 blocks wrote
+    855,456 B."""
+    df = synth_transcripts(spark, n_turns=20_000, seed=1)
+    res, n = shuffle_bytes_of(lambda: run_validation(spark, df, quiet=True))
+    assert res.n_rows == 20_000
+    assert n <= 465_000

@@ -7,8 +7,13 @@
 #   tools/submit.sh --input /path/transcripts.parquet \
 #       --checkpoint /tmp/manifest --violations-out /tmp/violations
 #
-# MASTER / CORES env vars override the local default; on a real cluster
-# set MASTER=yarn / k8s:// and the same zip works unchanged.
+# Which settings win: the --master and --conf values below (MASTER
+# defaults to local[$CORES], CORES to 32; on a real cluster set
+# MASTER=yarn / k8s:// and the same zip works unchanged). Because
+# spark-submit runs the script, the library's session.get_spark keeps
+# the submit's master and every --conf, and fills only the keys left
+# unset (AQE, UTC session time, zstd block compression, Arrow, ...).
+# The runner's --cores flag therefore has no effect here.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CORES="${CORES:-32}"
@@ -17,10 +22,6 @@ ZIP="$(mktemp -d)/ocsf_validator_spark.zip"
 (cd "$REPO" && zip -qr "$ZIP" ocsf_validator_spark -x '*__pycache__*')
 exec "${SPARK_HOME:-/opt/spark}/bin/spark-submit" \
   --master "$MASTER" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.coalescePartitions.enabled=true \
   --conf spark.sql.shuffle.partitions="$CORES" \
-  --conf spark.sql.session.timeZone=UTC \
-  --conf spark.ui.enabled=false \
   --py-files "$ZIP" \
   "$REPO/tools/submit_entry.py" "$@"
