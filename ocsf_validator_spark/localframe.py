@@ -23,11 +23,13 @@ plain scalar (str/int/float/bool/None) and no float is NaN:
 
 The Arrow conversion itself is gated on
 ``spark.sql.execution.arrow.pyspark.enabled`` — set by
-session.get_spark and at the driver-contract import — with Spark's
-built-in silent fallback if a type is not Arrow-convertible. Values
-are unchanged either way: both paths build the same rows under the
-same explicit schema; only the physical scan of the literal data
-differs.
+session.get_spark and at the driver-contract import — with PySpark's
+own fallback to the classic path (and a ``UserWarning``) if a type is
+not Arrow-convertible. Values are unchanged either way: both paths
+build the same rows under the same explicit schema; only the physical
+scan of the literal data differs. A value the schema cannot hold (an
+int past the column's range, a string or bool in an int column) raises
+PySpark's type or value error on either path, once.
 """
 
 from __future__ import annotations
@@ -84,14 +86,11 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     st = _schema_of(schema)
     if not rows:
         return empty_df(spark, st)
-    try:
-        if _arrow_safe(rows):
-            import pandas as pd
+    if _arrow_safe(rows):
+        import pandas as pd
 
-            pdf = pd.DataFrame(
-                rows, columns=[f.name for f in st.fields], dtype=object
-            )
-            return spark.createDataFrame(pdf, st)
-    except Exception:  # noqa: BLE001 — any conversion surprise: classic path
-        pass
+        pdf = pd.DataFrame(
+            rows, columns=[f.name for f in st.fields], dtype=object
+        )
+        return spark.createDataFrame(pdf, st)
     return spark.createDataFrame(rows, st)

@@ -34,6 +34,30 @@ only the keys it leaves unset:
   ``batch_skew`` (4 partitions); at 8 M turns on ``local[4]``, +14%
   with 16 partitions (executor time +15%) and +27% with 200
   (4230-4287 -> 5299-5577 MiB). Spark's own rule picks the writer.
+- ``spark.buffer.pageSize`` of 4 MiB - 16 B: the page is the
+  allocation unit of every Tungsten memory consumer (the window's
+  sorter, hash aggregates' maps, sort-aggregate and window spill
+  buffers, the sort-based shuffle writer), and each one takes a whole
+  page on its first row. Spark sizes the page from the heap and the
+  cores, not the data (32 MiB on ``local[2]`` with a 2 GiB heap,
+  64 MiB on ``local[4]`` with 8 GiB), and an on-heap page is a
+  zero-filled ``long[]``, so it enters RSS in full even when the task
+  holds 40 rows. A record larger than a page gets a page of its own
+  size, so no record limit follows. About 4 MiB and not less because
+  the task's page table has 8,192 entries: such pages still address
+  32 GiB per task, 1 MiB pages would cap a task at 8 GiB. 16 B less
+  than 4 MiB because that is a ``long[]``'s header: the page's array
+  is then exactly 4 MiB and fills whole G1 regions (four at a 2 GiB
+  heap, one at 8 GiB), where a 4 MiB page's header spills into one
+  more region that the rest of the humongous object leaves unused. On
+  a 4-vCPU host, one perfbench-shaped ``run_validation`` (100 k turns,
+  16 partitions, 2 GiB heap) records 1,286 -> 170 MiB of peak
+  execution memory summed over its stages (window stage 515 -> 67,
+  verdict map stage 577 -> 73), and perfbench ``batch_skew`` peak RSS
+  fell from a median of 1109 to 1004 MiB over 12 pairs. At 8 M turns
+  on ``local[4]`` (8 GiB heap) warm wall and executor time stayed within
+  run-to-run noise at 16 and 200 partitions, and VmHWM did not
+  measurably fall: heap growth dominates at that scale.
 - session timezone pinned to UTC so results are reproducible and
   comparable against the DuckDB oracle (duckdb timestamps are
   UTC-naive).
@@ -65,6 +89,14 @@ def get_spark(
       of lz4 (perfbench ``batch_skew`` 7.88 -> 4.10 MiB), for 3.4-27%
       more peak RSS as the reduce partitions go from 4 to 200; see the
       module docstring.
+    - ``spark.buffer.pageSize`` of 4 MiB - 16 B: a task's execution
+      memory then follows its rows, not the heap; 8,192 page-table
+      entries still address 32 GiB per task, and the page's ``long[]``
+      fills whole G1 regions. One perfbench-shaped ``run_validation``
+      (100 k turns, 16 partitions) records 1,286 -> 170 MiB of peak
+      execution memory summed over its stages, and ``batch_skew`` peak
+      RSS falls from 1109 to 1004 MiB; at 8 M turns time and VmHWM
+      stay within noise. See the module docstring.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -79,6 +111,9 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.optimizer.windowGroupLimitThreshold": "2147483647",
         "spark.io.compression.codec": "zstd",
+        # 4 MiB less a long[]'s 16-byte header, so an on-heap page fills
+        # whole G1 regions (module docstring)
+        "spark.buffer.pageSize": str(4 * 2**20 - 16),
         # per-call call-site capture costs two extra py4j round trips
         # per DataFrame/Column call — ~40% of suite plan-construction
         # time (driver-side tooling only; results unchanged)

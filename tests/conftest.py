@@ -3,6 +3,7 @@ from __future__ import annotations
 import uuid
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql.streaming import StreamingQuery
 
 from ocsf_validator_spark.session import get_spark
@@ -48,25 +49,46 @@ def jobs_of(spark):
     return run
 
 
+def _stage_sum(sc, fn, metric):
+    """Run fn under a fresh job group; return (fn(), the sum of
+    metric(stage data) over its jobs' stages), read from the status
+    store as perfbench's harness does (skipped stages count zero)."""
+    jsc = sc._jsc.sc()
+    out, jobs = _group_jobs(sc, fn)
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+
+    def value(s):
+        try:
+            return metric(store.lastStageAttempt(s))
+        except Py4JJavaError as e:
+            # past spark.ui.retainedStages the store evicts skipped stages
+            # first (their completion time is -1), and it may do so
+            # between the job's end and this read
+            name = e.java_exception.getClass().getName()
+            if name != "java.util.NoSuchElementException":
+                raise
+            return 0
+
+    return out, sum(value(s) for s in stages)
+
+
 @pytest.fixture()
 def shuffle_bytes_of(spark):
     """``shuffle_bytes_of(fn) -> (fn(), bytes)``: run fn under a fresh
-    job group and sum the shuffle bytes its jobs' stages wrote, read
-    from the status store as perfbench's harness does (skipped stages
-    write none)."""
+    job group and sum the shuffle bytes its jobs' stages wrote."""
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()
+    return lambda fn: _stage_sum(sc, fn, lambda st: st.shuffleWriteBytes())
 
-    def run(fn):
-        out, jobs = _group_jobs(sc, fn)
-        jsc.listenerBus().waitUntilEmpty()
-        tracker, store = sc.statusTracker(), jsc.statusStore()
-        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-        return out, sum(
-            store.lastStageAttempt(s).shuffleWriteBytes() for s in stages
-        )
 
-    return run
+@pytest.fixture()
+def peak_exec_memory_of(spark):
+    """``peak_exec_memory_of(fn) -> (fn(), bytes)``: run fn under a fresh
+    job group and sum its jobs' stages' peak execution memory (each
+    stage's figure is the sum of its tasks' peaks)."""
+    sc = spark.sparkContext
+    return lambda fn: _stage_sum(sc, fn, lambda st: st.peakExecutionMemory())
 
 
 @pytest.fixture()

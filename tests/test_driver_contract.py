@@ -87,12 +87,17 @@ def test_verdict_diff_fused_stats_match_naive_scans(spark):
 
 
 @pytest.mark.parametrize("name,jobs", [("suite_verdicts", 7),
-                                       ("verdict_diff", 8)])
+                                       ("verdict_diff", 8),
+                                       ("suite_violations", 4),
+                                       ("worst_conversations", 3),
+                                       ("pmi_collocations", 5)])
 def test_verdict_query_exec_jobs(spark, jobs_of, name, jobs):
-    """Executing a verdict query's built plan: the scorecard is one
-    aggregate over the grid and the violations (suite_verdicts ran 10
-    jobs and verdict_diff 16 when the grid was a left join plus a
-    second aggregate for the dataset-level rows)."""
+    """Jobs of executing a query's built plan at sf0.001, pinned at the
+    measured count so a change that adds a job shows here. For the
+    verdict queries the scorecard is one aggregate over the grid and
+    the violations (suite_verdicts ran 10 jobs and verdict_diff 16 when
+    the grid was a left join plus a second aggregate for the
+    dataset-level rows)."""
     df = e.queries()[name](spark, SF)
     _, n = jobs_of(df.collect)
     assert n == jobs

@@ -788,10 +788,12 @@ def test_compact_checkpoint_preserves_reader_semantics(spark, tmp_path):
 
 def test_session_shuffle_codec(spark):
     """get_spark compresses shuffle, spill and broadcast blocks with
-    zstd and leaves the shuffle writer to Spark's partition-count rule."""
+    zstd, leaves the shuffle writer to Spark's partition-count rule and
+    sizes execution pages at 4 MiB instead of from the heap."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.io.compression.codec") == "zstd"
     assert not conf.contains("spark.shuffle.sort.bypassMergeThreshold")
+    assert conf.get("spark.buffer.pageSize") == str(4 * 2**20 - 16)
 
 
 def test_run_validation_shuffle_bytes(spark, shuffle_bytes_of):
@@ -802,3 +804,14 @@ def test_run_validation_shuffle_bytes(spark, shuffle_bytes_of):
     res, n = shuffle_bytes_of(lambda: run_validation(spark, df, quiet=True))
     assert res.n_rows == 20_000
     assert n <= 465_000
+
+
+def test_run_validation_peak_execution_memory(spark, peak_exec_memory_of):
+    """Peak execution memory of one run_validation over a fixed 20 k-turn
+    input, summed over its stages, pinned at the figure with get_spark's
+    4 MiB - 16 B pages (35,782,528 B) plus 5%; the 64 MiB pages Spark
+    derives from this session's heap recorded 539,099,008 B."""
+    df = synth_transcripts(spark, n_turns=20_000, seed=1)
+    res, n = peak_exec_memory_of(lambda: run_validation(spark, df, quiet=True))
+    assert res.n_rows == 20_000
+    assert n <= 37_570_000

@@ -21,6 +21,7 @@ print("SESSION " + json.dumps({
     "partitions": s.conf.get("spark.sql.shuffle.partitions"),
     "tz": s.conf.get("spark.sql.session.timeZone"),
     "codec": c.get("spark.io.compression.codec"),
+    "page": c.get("spark.buffer.pageSize"),
 }))
 """
 
@@ -33,8 +34,8 @@ def test_get_spark_keeps_spark_submit_settings(tmp_path, launch, codec):
     """When spark-submit starts the JVM (it runs the script, or PySpark
     launches it from PYSPARK_SUBMIT_ARGS), the submit's master and
     --conf values win; get_spark fills only the keys the submit left
-    unset (here the codec when no --conf names it), and extra_conf wins
-    over both."""
+    unset (here the codec and page size when no --conf names them), and
+    extra_conf wins over both."""
     script = tmp_path / "probe.py"
     script.write_text(_SCRIPT)
     submit_args = [
@@ -43,7 +44,10 @@ def test_get_spark_keeps_spark_submit_settings(tmp_path, launch, codec):
         "--conf", "spark.sql.session.timeZone=America/New_York",
     ]
     if codec:
-        submit_args += ["--conf", f"spark.io.compression.codec={codec}"]
+        submit_args += [
+            "--conf", f"spark.io.compression.codec={codec}",
+            "--conf", "spark.buffer.pageSize=8m",
+        ]
     env = {k: v for k, v in os.environ.items() if k != "SPARK_HOME"}
     env.update(
         PYTHONPATH=REPO,
@@ -65,4 +69,5 @@ def test_get_spark_keeps_spark_submit_settings(tmp_path, launch, codec):
         "partitions": "777",
         "tz": "Asia/Tokyo",
         "codec": codec or "zstd",
+        "page": "8m" if codec else str(4 * 2**20 - 16),
     }
