@@ -79,6 +79,19 @@ def empty_df(spark: SparkSession, schema) -> DataFrame:
     )
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the stored rows of a ``localCheckpoint``'d frame.
+
+    ``DataFrame.unpersist`` only drops what the cache manager holds
+    (``cache``/``persist``). A local checkpoint's rows are the blocks of
+    the RDD under the frame's ``LogicalRDD`` plan, and ``unpersist``
+    leaves them in storage: they stay listed in ``getRDDStorageInfo``
+    after it and after a driver GC. This unpersists that RDD (without
+    blocking, like ``unpersist``). Call it on the checkpointed frame
+    itself, not on a frame derived from it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """A literal DataFrame over ``rows`` with ``schema`` (DDL string or
     StructType), scanned JVM-side when possible (module contract)."""

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocsf_validator_spark.localframe import release_checkpoint
+
 # end-of-word marker (the Sennrich '</w>' convention, shortened): kept
 # out of the merge alphabet by using a char that never appears in the
 # lowercase word tokens the splitter produces
@@ -118,10 +120,10 @@ def bpe_learn(
             rewritten = words.select(
                 F.expr(_merge_sql("s", a, b)).alias("s"), "freq"
             ).localCheckpoint(eager=True)
-            words.unpersist()
+            release_checkpoint(words)
             words = rewritten
     finally:
-        words.unpersist()
+        release_checkpoint(words)
     return merges
 
 

@@ -35,7 +35,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocsf_validator_spark.localframe import empty_df, local_df
+from ocsf_validator_spark.localframe import (
+    empty_df,
+    local_df,
+    release_checkpoint,
+)
 
 from ocsf_validator_spark import checkpoint as ckpt
 from ocsf_validator_spark.spec import (
@@ -146,6 +150,31 @@ def run_validation(
     diff_verdicts_against: str | None = None,
     report_json: str | None = None,
 ) -> RunResult:
+    """Validate ``df`` against ``suite`` in the phases the module
+    docstring lists and return the exit code, counts and summary.
+
+    With ``violations_out`` or ``quarantine_out`` the violation rows are
+    read more than once (the sinks and the verdict pass), so they are
+    stored once, as a lazy local checkpoint rather than ``cache()``.
+    Taking the checkpoint runs the window's exchanges; the first sink's
+    own job then computes the AQE-coalesced rows and stores them, and
+    the detail-row cap, the quarantine split and the verdict pass read
+    the stored rows. ``cache()`` would cost one job more, because under
+    AQE the first query over a cached frame fills it in a job of its
+    own. A cached plan also keeps every shuffle partition, so the sink
+    would write one file per partition and the verdict's map stage run
+    a task for each (16 files and 18 tasks against 2 and 4 for 100 k
+    turns at 16 shuffle partitions).
+
+    The price is lineage: a lost cached block is recomputed, a lost
+    checkpoint block is not. An executor lost between the first sink
+    write and the verdict collect fails the run with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The ``checkpoint_dir``
+    manifest is written after the verdict, so a rerun revalidates those
+    buckets (the sinks append, so rows the failed run already wrote
+    appear twice). The stored rows are released once the verdict rows
+    are collected.
+    """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
     t0 = time.time()
@@ -289,8 +318,11 @@ def run_validation(
             )
 
     # Phase 3 — violations: one fused scan (row legs + conv window, the
-    # routed conversations chunked) plus the bounded coverage agg. Cached
-    # only when the rows are consumed twice (parquet sink + verdicts).
+    # routed conversations chunked) plus the bounded coverage agg. When
+    # a sink reads the rows as well as the verdict pass, they are stored
+    # once, in a lazy local checkpoint that the first sink's own job
+    # fills. Not cache(): that costs one more job and one sink file per
+    # shuffle partition. The price is lineage (see the docstring).
     lap("skew_probe")
     viol = all_violations(
         df,
@@ -302,42 +334,46 @@ def run_validation(
         fd_carry=fd_carry,
     )
     lap("skew_path")
-    if violations_out or quarantine_out:
-        from ocsf_validator_spark.violations import cap_violations
+    stored = bool(violations_out or quarantine_out)
+    if stored:
+        viol = viol.localCheckpoint(eager=False)
+    try:
+        if violations_out:
+            from ocsf_validator_spark.violations import cap_violations
 
-        # cached: consumed by the sink(s) below AND the verdict pass
-        viol = viol.cache()
-    if violations_out:
-        # cap bounds only the browsable DETAIL rows in the sink — the
-        # verdict pass below counts the uncapped (cached) frame, so
-        # pass/fail and violation_count stay exact
-        sink = (
-            viol
-            if max_violation_rows is None
-            else cap_violations(viol, max_violation_rows)
-        )
-        sink.write.mode("append").parquet(violations_out)
-    if quarantine_out:
-        from ocsf_validator_spark.violations import split_quarantine
+            # cap bounds only the browsable DETAIL rows in the sink — the
+            # verdict pass below counts the uncapped stored rows, so
+            # pass/fail and violation_count stay exact
+            sink = (
+                viol
+                if max_violation_rows is None
+                else cap_violations(viol, max_violation_rows)
+            )
+            sink.write.mode("append").parquet(violations_out)
+        if quarantine_out:
+            from ocsf_validator_spark.violations import split_quarantine
 
-        # route full input rows whose key carries a >= threshold
-        # violation to the quarantine table (key-level: duplicate keys
-        # quarantine every copy); the defect-proportional key set is
-        # the join's build side, so healthy data broadcasts past it
-        _, quarantined = split_quarantine(df, viol, threshold=threshold)
-        quarantined.write.mode("append").parquet(quarantine_out)
-        lap("quarantine")
+            # route full input rows whose key carries a >= threshold
+            # violation to the quarantine table (key-level: duplicate
+            # keys quarantine every copy); the defect-proportional key
+            # set is the join's build side, so healthy data broadcasts
+            # past it
+            _, quarantined = split_quarantine(df, viol, threshold=threshold)
+            quarantined.write.mode("append").parquet(quarantine_out)
+            lap("quarantine")
 
-    # Phase 4 — verdicts: one groupBy over the (small) violations set
-    # unioned with the observed-bucket grid; collected ONCE. Report, exit
-    # code, and manifest metrics all derive driver-side from these rows.
-    vd_rows = verdicts(
-        df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
-        threshold=threshold, observed_buckets=observed,
-    ).collect()
+        # Phase 4 — verdicts: one groupBy over the (small) violations set
+        # unioned with the observed-bucket grid; collected ONCE. Report,
+        # exit code, and manifest metrics all derive driver-side from
+        # these rows.
+        vd_rows = verdicts(
+            df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
+            threshold=threshold, observed_buckets=observed,
+        ).collect()
+    finally:
+        if stored:
+            release_checkpoint(viol)
     lap("verdict")
-    if violations_out or quarantine_out:
-        viol.unpersist()
     vd_schema = (
         "bucket int, constraint_id string, severity string, "
         "violation_count long, pass boolean"

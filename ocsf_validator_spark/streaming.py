@@ -19,8 +19,9 @@ north-star extension for validating an APPEND-ONLY transcript stream
   and the sink write. The violation count (manifest line, ``on_batch``)
   and the input row count (``on_batch``) ride that write as observed
   metrics (``Observation``) rather than a cache and a count. Only the
-  quarantine leg caches, because it reads the batch and its violations
-  a second time.
+  quarantine leg stores the batch and its violations (lazy local
+  checkpoints, filled by the sink write's own job), because it reads
+  them a second time: five jobs a batch.
 
   Scope note: the conversation-window checks see one micro-batch at a
   time, so they catch intra-batch duplicates/disorder; duplicates that
@@ -48,6 +49,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ocsf_validator_spark.localframe import release_checkpoint
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
 from ocsf_validator_spark.violations import all_violations
 
@@ -144,9 +146,14 @@ def validate_stream(
     Per micro-batch this costs the fused window's exchange plus the
     sink write, two jobs, with or without ``manifest_dir`` and
     ``on_batch``: the violation and input row counts they report are
-    observed metrics of that write. Only ``quarantine_out`` caches the
+    observed metrics of that write. Only ``quarantine_out`` stores the
     batch rows and their violations, for the second read its split
-    makes.
+    makes: both are lazy local checkpoints that the sink write's own
+    job fills, so the batch costs five jobs where ``cache()`` costs
+    six, and both are released when the batch ends. A stored block
+    lost before the split reads it fails the batch instead of being
+    recomputed; the streaming checkpoint has not committed the batch,
+    so the restarted query replays it.
 
     Sink layout: violations land under ``batch_id=<n>`` partition
     directories (idempotent replay), so reading ``violations_out``
@@ -193,44 +200,51 @@ def validate_stream(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        if quarantine_out:
-            # split_quarantine reads the batch rows and their violations
-            # a second time; cache both so that leg costs no source re-read
-            batch_df = batch_df.cache()
-        seen, found = Observation(), Observation()
-        n = F.count(F.lit(1)).alias("n")
-        viol = all_violations(
-            batch_df.observe(seen, n) if on_batch else batch_df,
-            suite,
-            include_coverage=False,
-        )
-        if quarantine_out:
-            viol = viol.cache()
-        # idempotent (batch_id)-keyed commit: a replayed batch
-        # OVERWRITES its own partition directory — at-least-once
-        # foreachBatch delivery becomes exactly-once in the sink
-        viol.observe(found, n).write.mode("overwrite").parquet(
-            os.path.join(violations_out, f"batch_id={int(batch_id)}")
-        )
-        n_viol = _observed_rows(found, viol)
-        n_rows = _observed_rows(seen, batch_df) if on_batch else None
-        if quarantine_out:
-            # route this batch's violating INPUT rows to the quarantine
-            # table, (batch_id)-keyed for the same idempotent replay.
-            # Per-batch scope: only violations THIS batch's fused pass
-            # emitted quarantine rows — the stateful leg's cross-batch
-            # findings land as violations but cannot recall rows already
-            # passed through (the nightly batch run is ground truth)
-            from ocsf_validator_spark.violations import split_quarantine
+        # split_quarantine reads the batch rows and their violations a
+        # second time; store both (lazily, filled by the sink write's
+        # own job) so that leg costs no source re-read
+        stored: list[DataFrame] = []
+        try:
+            if quarantine_out:
+                batch_df = batch_df.localCheckpoint(eager=False)
+                stored.append(batch_df)
+            seen, found = Observation(), Observation()
+            n = F.count(F.lit(1)).alias("n")
+            viol = all_violations(
+                batch_df.observe(seen, n) if on_batch else batch_df,
+                suite,
+                include_coverage=False,
+            )
+            if quarantine_out:
+                viol = viol.localCheckpoint(eager=False)
+                stored.append(viol)
+            # idempotent (batch_id)-keyed commit: a replayed batch
+            # OVERWRITES its own partition directory — at-least-once
+            # foreachBatch delivery becomes exactly-once in the sink
+            viol.observe(found, n).write.mode("overwrite").parquet(
+                os.path.join(violations_out, f"batch_id={int(batch_id)}")
+            )
+            n_viol = _observed_rows(found, viol)
+            n_rows = _observed_rows(seen, batch_df) if on_batch else None
+            if quarantine_out:
+                # route this batch's violating INPUT rows to the
+                # quarantine table, (batch_id)-keyed for the same
+                # idempotent replay. Per-batch scope: only violations
+                # THIS batch's fused pass emitted quarantine rows — the
+                # stateful leg's cross-batch findings land as violations
+                # but cannot recall rows already passed through (the
+                # nightly batch run is ground truth)
+                from ocsf_validator_spark.violations import split_quarantine
 
-            _, quarantined = split_quarantine(
-                batch_df, viol, threshold=q_threshold
-            )
-            quarantined.write.mode("overwrite").parquet(
-                os.path.join(quarantine_out, f"batch_id={int(batch_id)}")
-            )
-            viol.unpersist()
-            batch_df.unpersist()
+                _, quarantined = split_quarantine(
+                    batch_df, viol, threshold=q_threshold
+                )
+                quarantined.write.mode("overwrite").parquet(
+                    os.path.join(quarantine_out, f"batch_id={int(batch_id)}")
+                )
+        finally:
+            for frame in stored:
+                release_checkpoint(frame)
         if manifest_dir:
             os.makedirs(manifest_dir, exist_ok=True)
             line = {

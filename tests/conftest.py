@@ -92,6 +92,14 @@ def peak_exec_memory_of(spark):
 
 
 @pytest.fixture()
+def persisted_rdds(spark):
+    """``persisted_rdds() -> set``: ids of the RDDs the context holds
+    persisted, cached frames and local checkpoints alike."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture()
 def transcripts(spark):
     """Tiny hand-built fixture mirroring the reference's DictReader test
     style (reference tests/test_validators.py): one row per defect

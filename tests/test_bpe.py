@@ -55,14 +55,18 @@ def _py_tokens(text, merges):
     return total
 
 
-def test_bpe_learn_matches_reference(spark):
+def test_bpe_learn_matches_reference(spark, persisted_rdds):
+    """The learned merges match the reference, and every word table
+    bpe_learn checkpointed is freed by the time it returns."""
     df = spark.createDataFrame(DOCS, SCHEMA)
     words = []
     for _, t, _s in DOCS:
         words += re.findall("[a-z]+", t.lower())
     expected = _py_bpe(words, 8)
+    before = persisted_rdds()
     got = bpe.bpe_learn(df, n_merges=8)
     assert got == expected and len(got) >= 4
+    assert persisted_rdds() - before == set()
 
 
 def test_bpe_learn_determinism_across_partitioning(spark):

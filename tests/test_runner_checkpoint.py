@@ -228,23 +228,41 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
     assert (rows, n) == ([], 0)
 
 
-def test_routed_run_with_sinks_job_count(spark, tmp_path, jobs_of):
+@pytest.mark.parametrize(
+    "sinks, pin",
+    [("sink", 8), ("sink+cap", 9), ("sink+quarantine", 11)],
+    ids=["sink", "sink+cap", "sink+quarantine"],
+)
+def test_routed_run_with_sinks_job_count(
+    spark, tmp_path, jobs_of, persisted_rdds, sinks, pin
+):
     """A skew-routed run_validation with a checkpoint manifest and a
-    violation sink: stats (3), the sink write (4) and the one-aggregate
-    verdict collect (2) make 9 jobs; the schema audit adds none."""
+    violation sink: stats (3), the sink write (3: the window's two
+    exchanges, then one job that writes and stores the violation rows)
+    and the one-aggregate verdict collect (2) make 8 jobs; the schema
+    audit adds none. The detail-row cap adds its exchange (9); the
+    quarantine leg adds its semi-join's exchanges and write (11). Every
+    leg after the first sink reads the stored rows, and nothing the run
+    stored is left persisted when it returns."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
+        before = persisted_rdds()
         _, n = jobs_of(lambda: run_validation(
             spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
             checkpoint_dir=str(tmp_path / "ckpt"),
             violations_out=str(tmp_path / "viol"),
             report_json=str(tmp_path / "r.json"),
+            max_violation_rows=5 if sinks == "sink+cap" else None,
+            quarantine_out=(
+                str(tmp_path / "quar") if sinks == "sink+quarantine" else None
+            ),
         ))
         with open(tmp_path / "r.json") as f:
             assert json.load(f)["skew_route"]["convs"] == 1
-        assert n <= 9
+        assert n == pin
+        assert persisted_rdds() - before == set()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 

@@ -784,12 +784,16 @@ def test_validate_stream_zero_row_batch(spark, tmp_path):
 
 
 @pytest.mark.parametrize("opts", ["none", "callbacks", "quarantine"])
-def test_validate_stream_jobs_per_batch(spark, tmp_path, jobs_of, opts):
+def test_validate_stream_jobs_per_batch(
+    spark, tmp_path, jobs_of, persisted_rdds, opts
+):
     """A micro-batch runs the fused window's exchange and the sink write
     and nothing else: the violation and input counts ride the write as
-    observed metrics. Only the quarantine leg caches and re-reads
-    (at most 7 jobs a batch). Whatever the options, every reported
-    count equals its file's rows and its batch's sink rows."""
+    observed metrics. Only the quarantine leg stores the batch and its
+    violations (local checkpoints the sink write fills) and re-reads
+    them: 5 jobs a batch, and nothing left persisted. Whatever the
+    options, every reported count equals its file's rows and its
+    batch's sink rows."""
     df = synth_transcripts(spark, n_turns=600, seed=5, partitions=2)
     root, out = str(tmp_path / "landj"), str(tmp_path / "outj")
     counts = _land_files(
@@ -802,12 +806,11 @@ def test_validate_stream_jobs_per_batch(spark, tmp_path, jobs_of, opts):
                   on_batch=lambda *a: seen.append(a))
     if opts == "quarantine":
         kw["quarantine_out"] = out + "/quar"
+    before = persisted_rdds()
     _, jobs = jobs_of(lambda: _drain(spark, root, out, **kw))
     n_files = len(counts)
-    if opts == "quarantine":
-        assert jobs <= 7 * n_files
-    else:
-        assert jobs == 2 * n_files
+    assert jobs == (5 if opts == "quarantine" else 2) * n_files
+    assert persisted_rdds() - before == set()
     sink = _sink_counts(spark, out + "/viol")
     assert len(sink) == n_files
     if kw:
