@@ -30,6 +30,7 @@ import json
 import os
 import sys
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +59,7 @@ from ocsf_validator_spark.violations import (
     dataset_findings,
     fold_observations,
     observation_aggs,
+    window_route,
 )
 
 # metric vocabulary shared by MetricBound / GroupMetricBound CLI flags —
@@ -129,6 +131,28 @@ def sample_conversations(
     return df.filter(h % den < num)
 
 
+def _hadoop(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` under the session's Hadoop
+    configuration."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf), jpath
+
+
+def _publish(spark: SparkSession, staging: str) -> None:
+    """Move the data files a write left in ``staging`` into its parent
+    directory, the sink. Names starting with ``_`` or ``.`` (such as
+    ``_SUCCESS``) stay behind."""
+    fs, src = _hadoop(spark, staging)
+    for st in fs.listStatus(src):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        dest = spark._jvm.org.apache.hadoop.fs.Path(src.getParent(), name)
+        if not fs.rename(st.getPath(), dest):
+            raise OSError(f"cannot move {st.getPath()} to {dest}")
+
+
 def run_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -171,9 +195,19 @@ def run_validation(
     write and the verdict collect fails the run with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The ``checkpoint_dir``
     manifest is written after the verdict, so a rerun revalidates those
-    buckets (the sinks append, so rows the failed run already wrote
-    appear twice). The stored rows are released once the verdict rows
-    are collected.
+    buckets. The sinks still append, but each writes into a
+    ``_staging-<uuid>`` directory of this run inside the sink path,
+    which Spark's file index skips. Its files move into the sink once
+    the verdict rows are collected, before the manifest is written, and
+    the staging directory is then deleted, also when the run fails. So
+    a failed run leaves no rows in the sinks, and its rerun writes each
+    row once. The stored rows are released once the verdict rows are
+    collected.
+
+    With ``report_json`` the report carries ``window_route``
+    (``violations.window_route``: ``"in_place"`` when the input is one
+    small task and the window runs in it, else ``"exchange"``) next to
+    ``skew_route``.
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -335,6 +369,14 @@ def run_validation(
     )
     lap("skew_path")
     stored = bool(violations_out or quarantine_out)
+    # each sink is written to a staging directory of this run inside it
+    # and published once the verdict is in: a run that fails before
+    # then leaves no rows behind for its rerun to duplicate
+    staging = {
+        out: os.path.join(out, f"_staging-{uuid.uuid4().hex}")
+        for out in (violations_out, quarantine_out)
+        if out
+    }
     if stored:
         viol = viol.localCheckpoint(eager=False)
     try:
@@ -349,7 +391,7 @@ def run_validation(
                 if max_violation_rows is None
                 else cap_violations(viol, max_violation_rows)
             )
-            sink.write.mode("append").parquet(violations_out)
+            sink.write.parquet(staging[violations_out])
         if quarantine_out:
             from ocsf_validator_spark.violations import split_quarantine
 
@@ -359,7 +401,7 @@ def run_validation(
             # set is the join's build side, so healthy data broadcasts
             # past it
             _, quarantined = split_quarantine(df, viol, threshold=threshold)
-            quarantined.write.mode("append").parquet(quarantine_out)
+            quarantined.write.parquet(staging[quarantine_out])
             lap("quarantine")
 
         # Phase 4 — verdicts: one groupBy over the (small) violations set
@@ -370,9 +412,14 @@ def run_validation(
             df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed,
         ).collect()
+        for tmp in staging.values():
+            _publish(spark, tmp)
     finally:
         if stored:
             release_checkpoint(viol)
+        for tmp in staging.values():
+            fs, path = _hadoop(spark, tmp)
+            fs.delete(path, True)
     lap("verdict")
     vd_schema = (
         "bucket int, constraint_id string, severity string, "
@@ -470,6 +517,7 @@ def run_validation(
             "skipped_buckets": skipped,
             "phase_sec": timings,
             "skew_route": skew_route,
+            "window_route": window_route(df),
             "constraints": summary,
         }
         tmpp = report_json + ".tmp"
@@ -493,7 +541,6 @@ def stream_main(spark: SparkSession, args) -> int:
     (batch_id=-2) — by the drain_id stamped on their rows, so a later
     clean drain does not re-fail on an earlier drain's findings."""
     import os
-    import uuid
 
     from pyspark.sql import functions as F
 

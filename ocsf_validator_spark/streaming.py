@@ -15,13 +15,18 @@ north-star extension for validating an APPEND-ONLY transcript stream
   write and the checkpoint commit rewrites the same partition instead
   of duplicating rows.
 
-  Cost: a micro-batch is two Spark jobs, the fused window's exchange
-  and the sink write. The violation count (manifest line, ``on_batch``)
-  and the input row count (``on_batch``) ride that write as observed
-  metrics (``Observation``) rather than a cache and a count. Only the
-  quarantine leg stores the batch and its violations (lazy local
-  checkpoints, filled by the sink write's own job), because it reads
-  them a second time: five jobs a batch.
+  Cost: a micro-batch Spark reads as one small task (a one-file batch
+  below the AQE advisory size) is one Spark job, the sink write: the
+  fused window runs in the scan's task (``violations.window_route``).
+  A larger batch adds the window's exchange as a job of its own. The
+  violation count (manifest line, ``on_batch``) and the input row
+  count (``on_batch``) ride that write as observed metrics
+  (``Observation``) rather than a cache and a count. Only the
+  quarantine leg stores the batch (a lazy local checkpoint, filled by
+  the sink write's own job), because it reads it a second time: three
+  jobs a one-task batch. On the exchange route it stores the batch's
+  violations as well, so the split does not rerun the exchange: five
+  jobs a batch.
 
   Scope note: the conversation-window checks see one micro-batch at a
   time, so they catch intra-batch duplicates/disorder; duplicates that
@@ -51,7 +56,7 @@ from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import release_checkpoint
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
-from ocsf_validator_spark.violations import all_violations
+from ocsf_validator_spark.violations import all_violations, window_route
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -143,17 +148,26 @@ def validate_stream(
     micro-batch is meaningless — absence in 10k rows is not absence in
     the table); everything else is the batch engine unchanged.
 
-    Per micro-batch this costs the fused window's exchange plus the
-    sink write, two jobs, with or without ``manifest_dir`` and
-    ``on_batch``: the violation and input row counts they report are
-    observed metrics of that write. Only ``quarantine_out`` stores the
-    batch rows and their violations, for the second read its split
-    makes: both are lazy local checkpoints that the sink write's own
-    job fills, so the batch costs five jobs where ``cache()`` costs
-    six, and both are released when the batch ends. A stored block
-    lost before the split reads it fails the batch instead of being
-    recomputed; the streaming checkpoint has not committed the batch,
-    so the restarted query replays it.
+    A micro-batch Spark reads as one small task (``window_route`` is
+    ``"in_place"``) costs one job, the sink write, with or without
+    ``manifest_dir`` and ``on_batch``: the window runs in the scan's
+    task, and the violation and input row counts they report are
+    observed metrics of that write. A batch that takes the exchange
+    route costs one job more, the window's exchange. Only
+    ``quarantine_out`` stores the batch rows, for the second read its
+    split makes, in a lazy local checkpoint that the sink write's own
+    job fills: a one-task batch costs three jobs. On the exchange route
+    the batch's violations are stored the same way, so the split does
+    not rerun the exchange: five jobs. In place they are not: the split
+    recomputes the window in its own first stage, which costs no job,
+    and a checkpoint would report the input row observation beneath it
+    before any row is read. What is stored is released when the batch
+    ends. A stored block lost before the split reads it fails the batch
+    instead of being recomputed; the streaming checkpoint has not
+    committed the batch, so the restarted query replays it.
+
+    Each manifest line carries the batch's ``window_route``
+    (``"in_place"`` or ``"exchange"``).
 
     Sink layout: violations land under ``batch_id=<n>`` partition
     directories (idempotent replay), so reading ``violations_out``
@@ -201,8 +215,8 @@ def validate_stream(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
         # split_quarantine reads the batch rows and their violations a
-        # second time; store both (lazily, filled by the sink write's
-        # own job) so that leg costs no source re-read
+        # second time; store the rows (lazily, filled by the sink
+        # write's own job) so that leg costs no source re-read
         stored: list[DataFrame] = []
         try:
             if quarantine_out:
@@ -210,12 +224,22 @@ def validate_stream(
                 stored.append(batch_df)
             seen, found = Observation(), Observation()
             n = F.count(F.lit(1)).alias("n")
+            route = (
+                window_route(batch_df)
+                if manifest_dir or quarantine_out
+                else None
+            )
             viol = all_violations(
                 batch_df.observe(seen, n) if on_batch else batch_df,
                 suite,
                 include_coverage=False,
             )
-            if quarantine_out:
+            if quarantine_out and route == "exchange":
+                # store the violations too, so the split does not run
+                # the window's exchange again. In place the split
+                # recomputes the window in its own first stage at no
+                # job, and a checkpoint would report the input
+                # observation under it (as 0) before any row is read
                 viol = viol.localCheckpoint(eager=False)
                 stored.append(viol)
             # idempotent (batch_id)-keyed commit: a replayed batch
@@ -250,6 +274,7 @@ def validate_stream(
             line = {
                 "batch_id": int(batch_id),
                 "n_violations": n_viol,
+                "window_route": route,
                 "suite_version": suite.version(),
                 "wall_sec": round(time.time() - t0, 3),
                 "finished_at": time.time(),

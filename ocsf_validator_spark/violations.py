@@ -527,6 +527,14 @@ def fused_group_violations(
     extra exchange and NO extra sort: one shuffle, one sort, two
     adjacent WindowExecs.
 
+    Exchange note: the conv_id exchange is planned only when the input
+    does not already satisfy the window's distribution. ``all_violations``
+    hands this function ``df.coalesce(1)`` when the input is one small
+    task (see ``window_route``); ``SinglePartition`` satisfies both
+    windows, so the pass then runs in that task with no exchange. A
+    file large enough to be worth splitting is already two or more
+    scan partitions, so that route never removes map-side parallelism.
+
     Scale note: partitionBy(conv_id) puts each conversation in one task.
     ``chunk_rows`` (the skew route) splits conversations too large for
     one task into ``turn_idx div chunk_rows`` ranges — only those in
@@ -1839,6 +1847,60 @@ def detect_skewed_conv_counts(
     return [(r[0], int(r[1])) for r in rows if r[0] is not None]
 
 
+# plan nodes that rule the in-place window out: an exchange (adaptive
+# plans wrap every plan that has one), or a node whose RDD is built by
+# running jobs first (a cached relation's plan, and subqueries below)
+_NOT_IN_PLACE = (
+    "org.apache.spark.sql.execution.exchange.Exchange",
+    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+    "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec",
+)
+
+
+def window_route(df: DataFrame) -> str:
+    """How ``all_violations`` plans the conversation window over ``df``:
+    ``"in_place"`` when the whole input is one small task, else
+    ``"exchange"``.
+
+    In place means all three of:
+
+    1. the physical plan of ``df`` holds no exchange (and no node whose
+       RDD would run jobs to be built, so this decision runs none);
+    2. Spark plans ``df`` as exactly one partition;
+    3. the optimizer's size estimate of ``df`` is at most
+       ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
+
+    Then ``df.coalesce(1)`` is ``SinglePartition``, which satisfies the
+    window's, the skew-chunk carriers' and the coverage aggregate's
+    distributions, so the suite runs as one scan-to-sink stage with no
+    exchange. It takes no map-side parallelism away: Spark already
+    splits a file larger than ``spark.sql.files.openCostInBytes`` into
+    two or more scan partitions, so condition 2 fails for it. It takes
+    none away on the reduce side either: below the advisory size AQE
+    would coalesce the exchange's reducers to one partition anyway."""
+    from py4j.java_gateway import is_instance_of
+
+    spark = df.sparkSession
+    gateway = spark.sparkContext._gateway
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if not node.subqueries().isEmpty() or any(
+            is_instance_of(gateway, node, c) for c in _NOT_IN_PLACE
+        ):
+            return "exchange"
+        children = node.children()
+        nodes += [children.apply(i) for i in range(children.size())]
+    cap = gateway.jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if qe.optimizedPlan().stats().sizeInBytes() > cap:
+        return "exchange"
+    return "in_place" if plan.execute().getNumPartitions() == 1 else "exchange"
+
+
 def skew_chunk_rows(spark: SparkSession, n_rows: int) -> int:
     """Rows per chunk of a skew-routed conversation: one shuffle task's
     share of the input, ceil(n_rows / spark.sql.shuffle.partitions).
@@ -1879,7 +1941,15 @@ def all_violations(
     ``carry`` (incremental runs): convstate boundary-state table,
     seeded into the fused window pass (see fused_group_violations).
     With carry, skewed conversations are not chunked: the carried
-    out-of-order bound and opening suppression are per conversation."""
+    out-of-order bound and opening suppression are per conversation.
+
+    An input Spark reads as one small task (``window_route`` is
+    ``"in_place"``: no exchange in its plan, one partition, at most the
+    AQE advisory size) is planned as ``df.coalesce(1)``, so the whole
+    suite runs in that one task with no exchange. Deciding runs no
+    job."""
+    if window_route(df) == "in_place":
+        df = df.coalesce(1)
     fused = _fusable(suite, df, keys) if _present(df, keys) else None
     if fused:
         row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]

@@ -174,7 +174,10 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         assert route["convs"] == 1 and route["chunk_rows"] == 25
         assert route["rows"] >= 100
         with open(rep_b) as f:
-            assert json.load(f)["skew_route"] is None
+            rep = json.load(f)
+        assert rep["skew_route"] is None
+        # synth scans as several partitions: the window keeps its exchange
+        assert rep["window_route"] == "exchange"
         assert ra.exit_code == rb.exit_code
         assert ra.n_violations == rb.n_violations
         a = sorted(map(tuple, spark.read.parquet(out_a).collect()))
@@ -208,6 +211,40 @@ def test_routed_run_costs_at_most_one_job_more(spark, tmp_path, jobs_of):
         assert runs[True] <= runs[False] + 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_failed_run_leaves_no_sink_rows_for_its_rerun(
+    spark, tmp_path, monkeypatch
+):
+    """A run that writes its sinks and then fails before its verdict
+    leaves no rows in them (they stay in its staging directory, which
+    is deleted), so a clean rerun with the same checkpoint writes each
+    violation once; nothing is left staged."""
+    from ocsf_validator_spark import runner
+
+    df = synth_transcripts(spark, n_turns=2000, seed=42)
+    out = {
+        "checkpoint_dir": str(tmp_path / "ckpt"),
+        "violations_out": str(tmp_path / "viol"),
+        "quarantine_out": str(tmp_path / "quar"),
+    }
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("verdict failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(runner, "verdicts", fail)
+        with pytest.raises(RuntimeError, match="verdict failed"):
+            run_validation(spark, df, num_buckets=8, quiet=True, **out)
+    res = run_validation(spark, df, num_buckets=8, quiet=True, **out)
+    assert res.n_violations > 0
+    assert spark.read.parquet(out["violations_out"]).count() == res.n_violations
+    fresh = str(tmp_path / "fresh")
+    run_validation(spark, df, num_buckets=8, quiet=True, quarantine_out=fresh)
+    quarantined = spark.read.parquet(out["quarantine_out"]).count()
+    assert quarantined == spark.read.parquet(fresh).count() > 0
+    for sink in (out["violations_out"], out["quarantine_out"], fresh):
+        assert not [n for n in os.listdir(sink) if n.startswith("_staging")]
 
 
 def test_schema_audit_runs_no_job(spark, jobs_of):
@@ -728,6 +765,8 @@ def test_report_json_and_gc_state(spark, tmp_path, capsys):
     assert main(argv) == 0
     r1 = _json.load(open(rep))
     assert r1["exit_code"] == 0 and r1["n_rows"] == 1
+    # a one-row, one-file increment is one small task: window in place
+    assert r1["window_route"] == "in_place"
     assert "phase_sec" in r1 and isinstance(r1["constraints"], list)
     inc([("a", 1, "assistant", "t1", "search", "2026-01-01 00:00:01")])
     assert main(argv) == 0

@@ -752,12 +752,12 @@ def _sink_counts(spark, viol_out: str) -> dict[int, int]:
     }
 
 
-def _manifest(manifest_dir: str) -> dict[int, int]:
+def _manifest(manifest_dir: str, field: str = "n_violations") -> dict:
     lines = []
     for path in glob.glob(os.path.join(manifest_dir, "batch-*.json")):
         with open(path) as f:
             lines.append(json.load(f))
-    return {m["batch_id"]: m["n_violations"] for m in lines}
+    return {m["batch_id"]: m[field] for m in lines}
 
 
 def test_validate_stream_zero_row_batch(spark, tmp_path):
@@ -783,17 +783,29 @@ def test_validate_stream_zero_row_batch(spark, tmp_path):
     assert _manifest(out + "/manifest") == {b0: 0, b1: sink[b1]}
 
 
-@pytest.mark.parametrize("opts", ["none", "callbacks", "quarantine"])
+@pytest.mark.parametrize(
+    "opts,route,pin",
+    [
+        ("none", "in_place", 1),
+        ("callbacks", "in_place", 1),
+        ("quarantine", "in_place", 3),
+        ("quarantine", "exchange", 5),
+    ],
+    ids=["none", "callbacks", "quarantine", "quarantine-exchange"],
+)
 def test_validate_stream_jobs_per_batch(
-    spark, tmp_path, jobs_of, persisted_rdds, opts
+    spark, tmp_path, jobs_of, persisted_rdds, opts, route, pin
 ):
-    """A micro-batch runs the fused window's exchange and the sink write
-    and nothing else: the violation and input counts ride the write as
-    observed metrics. Only the quarantine leg stores the batch and its
-    violations (local checkpoints the sink write fills) and re-reads
-    them: 5 jobs a batch, and nothing left persisted. Whatever the
-    options, every reported count equals its file's rows and its
-    batch's sink rows."""
+    """A one-file micro-batch is one small scan task, so the fused
+    window runs in it (manifest ``window_route`` "in_place") and the
+    batch is one job, the sink write: the violation and input counts
+    ride the write as observed metrics. The quarantine leg stores the
+    batch (a local checkpoint the sink write fills) and re-reads it: 3
+    jobs a batch. With the AQE advisory size forced to one byte the
+    window takes its exchange; the leg then stores the violations too,
+    so the split does not rerun that exchange: 5 jobs a batch. Nothing
+    is left persisted, and whatever the options, every reported count
+    equals its file's rows and its batch's sink rows."""
     df = synth_transcripts(spark, n_turns=600, seed=5, partitions=2)
     root, out = str(tmp_path / "landj"), str(tmp_path / "outj")
     counts = _land_files(
@@ -806,10 +818,17 @@ def test_validate_stream_jobs_per_batch(
                   on_batch=lambda *a: seen.append(a))
     if opts == "quarantine":
         kw["quarantine_out"] = out + "/quar"
-    before = persisted_rdds()
-    _, jobs = jobs_of(lambda: _drain(spark, root, out, **kw))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    if route == "exchange":
+        spark.conf.set(key, "1b")
+    try:
+        before = persisted_rdds()
+        _, jobs = jobs_of(lambda: _drain(spark, root, out, **kw))
+    finally:
+        spark.conf.set(key, prev)
     n_files = len(counts)
-    assert jobs == (5 if opts == "quarantine" else 2) * n_files
+    assert jobs == pin * n_files
     assert persisted_rdds() - before == set()
     sink = _sink_counts(spark, out + "/viol")
     assert len(sink) == n_files
@@ -817,6 +836,8 @@ def test_validate_stream_jobs_per_batch(
         assert [rows for _, rows, _ in sorted(seen)] == counts
         assert {bid: nv for bid, _, nv in seen} == sink
         assert _manifest(out + "/manifest") == sink
+        routes = _manifest(out + "/manifest", "window_route")
+        assert set(routes.values()) == {route}
 
 
 def test_validate_stream_restart_contract(spark, tmp_path):

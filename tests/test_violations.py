@@ -9,6 +9,7 @@ from ocsf_validator_spark.violations import (
     dataset_findings,
     group_violations,
     row_violations,
+    window_route,
 )
 
 SUITE = transcript_suite()
@@ -532,3 +533,58 @@ def test_coverage_leg_skips_empty_enum(spark, transcripts):
     both = ConstraintSet(name="m", constraints=[empty, real])
     rows = dataset_findings(transcripts, both).collect()
     assert [r.reason for r in rows] == ["enum value 'nope' never observed in tool"]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
+    """One single-partition transcripts file, validated on both routes:
+    in place (one scan partition, below the AQE advisory size) the
+    suite plans no exchange and a write is one job; with the advisory
+    size forced to one byte the window takes its exchange, a job of its
+    own. Both routes emit the same violation rows."""
+    from collections import Counter
+
+    from ocsf_validator_spark.synth import synth_transcripts
+
+    path = str(tmp_path / "one")
+    synth_transcripts(spark, n_turns=2000, seed=42).coalesce(1).write.parquet(
+        path
+    )
+    df = spark.read.parquet(path)
+
+    def run():
+        viol = all_violations(df, SUITE, include_coverage=False)
+        _, jobs = jobs_of(
+            lambda: viol.write.format("noop").mode("overwrite").save()
+        )
+        return window_route(df), _executed_plan(viol), jobs, viol.collect()
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    route, plan, jobs, in_place = run()
+    assert (route, jobs) == ("in_place", 1)
+    assert "Exchange" not in plan, plan
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        route, plan, jobs, exchanged = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert (route, jobs) == ("exchange", 2)
+    assert "Exchange" in plan, plan
+    assert in_place and Counter(in_place) == Counter(exchanged)
+
+
+def test_window_route_keeps_the_exchange_of_an_exchange_input(spark, jobs_of):
+    """An input whose plan already has an exchange keeps the exchange
+    route, and deciding so runs no job (building the RDD of an
+    adaptive plan would run its shuffle stages)."""
+    from ocsf_validator_spark.synth import synth_transcripts
+
+    df = synth_transcripts(spark, n_turns=500, seed=3).repartition(1)
+    out, jobs = jobs_of(lambda: (window_route(df), all_violations(df, SUITE)))
+    assert jobs == 0
+    assert out[0] == "exchange"
+    assert "Coalesce 1" not in _executed_plan(out[1])
