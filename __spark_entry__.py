@@ -67,6 +67,7 @@ from ocsf_validator_spark.pipeline import (
     temporal,
     textstats,
 )
+from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import (
     AllowedColumns,
     Alternation,
@@ -124,16 +125,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     plans = _T_CACHE.setdefault(spark, {})
     jdf = plans.get((sf_dir, name))
     if jdf is None:
-        jdf = spark.read.parquet(f"{sf_dir}/{name}.parquet")._jdf
+        jdf = read_parquet(spark, f"{sf_dir}/{name}.parquet")._jdf
         plans[(sf_dir, name)] = jdf
     return DataFrame(jdf, spark)
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # the turn window is partitioned by conv_id, not user_id: the same
+    # groups (the cast is injective), and the suite's conversation
+    # window then reuses this window's exchange instead of shuffling
+    # again
+    ev = _t(spark, sf_dir, "events").withColumn(
+        "conv_id", F.col("user_id").cast("string")
+    )
+    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
     return ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
+        "conv_id",
         (F.row_number().over(w) - 1).alias("turn_idx"),
         F.col("event_type").alias("role"),
         F.col("props").alias("text"),

@@ -55,6 +55,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import Alternation, Monotonic, Precedence, Unique
 
 CARRY_PREV_IDX = "_c_prev_idx"
@@ -330,7 +331,7 @@ def read_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame | None:
     path = latest_state_dir(checkpoint_dir)
     if path is None or not os.path.isdir(path):
         return None
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # --- FunctionalDependency group-state carry (same ledger discipline as
@@ -384,7 +385,7 @@ def read_fd_states(
     out = {}
     for cid, path in latest_fd_state_dirs(checkpoint_dir).items():
         if os.path.isdir(path):
-            out[cid] = spark.read.parquet(path)
+            out[cid] = read_parquet(spark, path)
     return out
 
 

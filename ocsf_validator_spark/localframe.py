@@ -92,6 +92,59 @@ def release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+def stored_bytes(df: DataFrame) -> int | None:
+    """Bytes a ``localCheckpoint``'d frame holds in storage (memory plus
+    disk, from ``getRDDStorageInfo``), or None while it is not a
+    checkpoint whose every partition is stored: a frame of any other
+    plan, or a lazy checkpoint no job has filled yet. Reading it runs no
+    job; it first waits for the listener bus, which carries the block
+    updates the storage info is built from."""
+    from py4j.java_gateway import is_instance_of
+
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().analyzed()
+    if not is_instance_of(
+        spark.sparkContext._gateway,
+        plan,
+        "org.apache.spark.sql.execution.LogicalRDD",
+    ):
+        return None
+    sc = spark.sparkContext._jsc.sc()
+    try:
+        sc.listenerBus().waitUntilEmpty()
+    except Exception:
+        return None
+    rdd = plan.rdd().id()
+    for info in sc.getRDDStorageInfo():
+        if info.id() == rdd and info.numCachedPartitions() == info.numPartitions():
+            return int(info.memSize()) + int(info.diskSize())
+    return None
+
+
+def size_estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes (no job)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size conf (``"4m"``, ``"4194304"``) in bytes, parsed the
+    way Spark parses it."""
+    return int(
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get(key)
+        )
+    )
+
+
+def one_task_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.openCostInBytes`` (4 MiB by default): the size
+    up to which a stage gathers its input into one task rather than
+    shuffle it. Spark's file scan charges this cost for opening a file,
+    so smaller files share a scan task, and on two or more cores one
+    larger file splits into two or more scan tasks."""
+    return conf_bytes(spark, "spark.sql.files.openCostInBytes")
+
+
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """A literal DataFrame over ``rows`` with ``schema`` (DDL string or
     StructType), scanned JVM-side when possible (module contract)."""

@@ -221,12 +221,12 @@ def connected_components(
     iteration jobs, no per-round convergence counts. Beyond
     ``small_graph_max`` pairs the distributed propagation below takes
     over unchanged (set it to 0 to force that path, e.g. to exercise
-    the convergence backstop)."""
-    base = pairs.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
-    if base.count() <= small_graph_max:
-        tb = base.toArrow()
+    the convergence backstop). One bounded collect decides the path and
+    is the small path's input: ``limit(small_graph_max + 1)`` of the
+    edges, one job. Only the distributed path stores the edges."""
+    base = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    tb = base.limit(small_graph_max + 1).toArrow()
+    if tb.num_rows <= small_graph_max:
         parent: dict = {}
 
         def find(x):
@@ -257,7 +257,7 @@ def connected_components(
         return local_df(pairs.sparkSession, 
             [(n, comp_min[find(n)]) for n in sorted(nodes)], schema
         )
-    edges = base
+    edges = base.localCheckpoint(eager=True)
     edges = (
         edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -43,15 +43,21 @@ from ocsf_validator_spark.localframe import (
 )
 
 from ocsf_validator_spark import checkpoint as ckpt
+from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import (
     ConstraintSet,
     Severity,
     transcript_suite,
 )
-from ocsf_validator_spark.stats import DEFAULT_BUCKETS, bucketed_probe_stats
+from ocsf_validator_spark.stats import (
+    DEFAULT_BUCKETS,
+    bucketed_probe_stats,
+    stats_route,
+)
 from ocsf_validator_spark.verdict import (
     exit_code_rows,
     summarize_rows,
+    verdict_route,
     verdicts,
 )
 from ocsf_validator_spark.violations import (
@@ -204,10 +210,14 @@ def run_validation(
     row once. The stored rows are released once the verdict rows are
     collected.
 
-    With ``report_json`` the report carries ``window_route``
-    (``violations.window_route``: ``"in_place"`` when the input is one
-    small task and the window runs in it, else ``"exchange"``) next to
-    ``skew_route``.
+    With ``report_json`` the report carries the route each adaptive
+    step took, read from the helper that step's own call reads:
+    ``window_route`` (``violations.window_route``: ``"in_place"`` when
+    the input is one small task and the window runs in it, else
+    ``"exchange"``), ``stats_route`` (``stats.stats_route``) and
+    ``verdict_route`` (``verdict.verdict_route``), each ``"one_task"``
+    when that aggregate finishes in one task without its exchange, else
+    ``"exchange"``, and ``skew_route``.
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -283,6 +293,7 @@ def run_validation(
     # of every flagship run per the BENCH.md phase tables).
     # distinct_count (no mergeable form) falls back to dataset_findings'
     # shared agg job.
+    routes = {"stats_route": stats_route(df)}
     bucket_stats = bucketed_probe_stats(
         df,
         conv_col=conv_col,
@@ -407,7 +418,9 @@ def run_validation(
         # Phase 4 — verdicts: one groupBy over the (small) violations set
         # unioned with the observed-bucket grid; collected ONCE. Report,
         # exit code, and manifest metrics all derive driver-side from
-        # these rows.
+        # these rows. The stored rows' size decides the route, so it is
+        # read once the sinks have filled them.
+        routes["verdict_route"] = verdict_route(viol)
         vd_rows = verdicts(
             df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed,
@@ -436,7 +449,7 @@ def run_validation(
 
         prior = None
         try:
-            prior_rows = spark.read.parquet(diff_verdicts_against).collect()
+            prior_rows = read_parquet(spark, diff_verdicts_against).collect()
         except Exception as e:
             say(f"[WARN] --diff-verdicts: cannot read prior verdicts: {e}")
             prior_rows = None
@@ -518,6 +531,7 @@ def run_validation(
             "phase_sec": timings,
             "skew_route": skew_route,
             "window_route": window_route(df),
+            **routes,
             "constraints": summary,
         }
         tmpp = report_json + ".tmp"
@@ -589,7 +603,7 @@ def stream_main(spark: SparkSession, args) -> int:
     bad = False
     if batches:
         drained = [bid for bid, _, _ in batches]
-        sunk = spark.read.parquet(args.violations_out).filter(
+        sunk = read_parquet(spark, args.violations_out).filter(
             F.col("batch_id").isin(drained)
             & F.col("severity").isin("ERROR", "FATAL")
         )
@@ -604,7 +618,7 @@ def stream_main(spark: SparkSession, args) -> int:
             continue
         leg_dir = os.path.join(args.violations_out, f"batch_id={leg_id}")
         try:
-            leg_rows = spark.read.parquet(leg_dir)
+            leg_rows = read_parquet(spark, leg_dir)
         except Exception:
             continue  # leg emitted nothing yet — no directory
         bad = (

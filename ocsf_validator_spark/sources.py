@@ -20,10 +20,12 @@ unreadable table raises, and the runner maps that to exit 2.
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ocsf_validator_spark.checkpoint import snapshot_of_path
 
@@ -166,6 +168,139 @@ def write_bucketed(
     w.mode(mode).saveAsTable(table)
 
 
+# Spark's glob characters (SparkHadoopUtil.isGlobPath)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+# directory entries read_parquet lists on the driver before it leaves
+# the schema to Spark's job: each entry costs a few py4j calls, and a
+# listing of 1,002 entries (500 files with their .crc files) took
+# 0.15-0.22 s, about what spark.read.parquet's schema job took there
+_LIST_CAP = 1024
+
+
+def _listed(name: str) -> bool:
+    """False for the names Spark's file index leaves out
+    (HadoopFSUtils.shouldFilterOutPathName): ``.`` names, ``_`` names
+    without ``=``, ``._COPYING_`` files, except parquet summary files."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _footer_schema(spark: SparkSession, paths: list[str]) -> StructType | None:
+    """The data schema ``spark.read.parquet(*paths)`` would infer, read
+    from one footer on the driver; None where this cannot mirror
+    Spark. Spark's own inference
+    (``ParquetUtils.inferSchema`` without ``mergeSchema``) lists the
+    leaf files the way its file index does, sorts them by path, and
+    reads the footer of ``_common_metadata``, else ``_metadata``, else
+    the first data file, in a job of one task. Here the same listing
+    rules, the same footer reader and converter run on the driver."""
+    conf = spark.conf
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    if (
+        any(_GLOB_CHARS.intersection(p) for p in paths)
+        or conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+        or conf.get("spark.sql.files.ignoreCorruptFiles", "false").lower() == "true"
+        # the converter Spark's inference builds keeps these three at
+        # their defaults; one built from the session conf would not
+        or sql_conf.caseSensitiveAnalysis()
+        or sql_conf.parquetFieldIdReadEnabled()
+        or sql_conf.parquetIgnoreVariantAnnotation()
+    ):
+        return None
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    try:
+        roots = []
+        for p in paths:
+            jp = jvm.org.apache.hadoop.fs.Path(p)
+            fs = jp.getFileSystem(hconf)
+            roots.append((fs, fs.getFileStatus(jp)))
+    except Exception:
+        return None  # a missing path: Spark raises its own error
+    if len(roots) > 1 and any(st.isDirectory() for _, st in roots):
+        return None  # several roots: leave partition discovery to Spark
+    leaves, part_cols, listed = {}, set(), 0
+    for fs, root in roots:
+        sink_log = root.getPath().toString() + "/_spark_metadata"
+        todo = list(fs.listStatus(root.getPath())) if root.isDirectory() else [root]
+        while todo:
+            listed += 1
+            if listed > _LIST_CAP:
+                return None  # a large listing: the schema job costs less
+            st = todo.pop()
+            path = st.getPath().toString()
+            name = path.rsplit("/", 1)[-1]
+            if path == sink_log:
+                return None  # a streaming sink: Spark reads its committed files
+            if not _listed(name):
+                continue
+            if st.isDirectory():
+                if "=" in name:
+                    part_cols.add(name.split("=", 1)[0].lower())
+                todo += list(fs.listStatus(st.getPath()))
+            else:
+                leaves[path] = st
+    order = sorted(leaves)
+    names = [p.rsplit("/", 1)[-1] for p in order]
+    data = [p for p, n in zip(order, names) if n not in _SUMMARY_FILES]
+    if not data:
+        return None  # nothing to infer from: Spark raises its own error
+    pick = next(
+        (p for s in _SUMMARY_FILES for p, n in zip(order, names) if n == s),
+        data[0],
+    )
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    fmt = getattr(parquet, "ParquetFileFormat$").__getattr__("MODULE$")
+    try:
+        files = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
+            jvm.java.util.Collections.singletonList(leaves[pick])
+        ).toList()
+        footer = fmt.readParquetFootersInParallel(hconf, files, False).head()
+        jschema = fmt.readSchemaFromFooter(
+            footer,
+            parquet.ParquetToSparkSchemaConverter(sql_conf),
+        )
+    except Exception:
+        return None  # an unreadable footer: Spark raises its own error
+    schema = StructType.fromJson(json.loads(jschema.json()))
+    if any(f.lower() in part_cols for f in schema.fieldNames()):
+        return None  # a partition column stored in the files too
+    return schema
+
+
+def read_parquet(spark: SparkSession, path_or_paths) -> DataFrame:
+    """``spark.read.parquet(path_or_paths)`` without the schema job.
+
+    Spark infers a parquet schema in a job of one task that reads one
+    footer. This reads that footer on the driver instead (see
+    ``_footer_schema``: the same file choice, listing rules, footer
+    reader and converter) and opens the paths with
+    ``spark.read.schema(...)``, which applies the same ``asNullable``
+    and partition discovery, so the frame's schema is the one
+    ``spark.read.parquet`` gives, and opening it runs no job. A glob,
+    several roots of which one is a directory, a streaming sink's
+    directory (Spark reads only the files its ``_spark_metadata`` log
+    committed), more than ``_LIST_CAP`` directory entries,
+    ``mergeSchema`` or ``ignoreCorruptFiles`` set, a conf under which
+    the session's schema converter differs from the one Spark's
+    inference builds (``spark.sql.caseSensitive``, parquet field-id
+    reads, ignored variant annotations), no data file, an unreadable
+    footer, or a partition column that the files store too fall back to
+    ``spark.read.parquet``, whose errors then are Spark's own."""
+    paths = (
+        [path_or_paths] if isinstance(path_or_paths, str) else list(path_or_paths)
+    )
+    schema = _footer_schema(spark, paths)
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def load_table(
     spark: SparkSession,
     location: str,
@@ -200,7 +335,7 @@ def load_table(
         )
         return TableHandle(spark.table(location), snap, "table")
     return TableHandle(
-        spark.read.parquet(location), snapshot_of_path(location), "parquet"
+        read_parquet(spark, location), snapshot_of_path(location), "parquet"
     )
 
 
@@ -255,7 +390,7 @@ def load_increment(
     digest = hashlib.md5(
         "\n".join(f"{f['path']}:{f['bytes']}" for f in new).encode()
     ).hexdigest()[:12]
-    df = spark.read.parquet(*[f["path"] for f in new])
+    df = read_parquet(spark, [f["path"] for f in new])
     return TableHandle(df, f"inc:{digest}:files={len(new)}", "parquet"), new
 
 

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import release_checkpoint
+from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
 from ocsf_validator_spark.violations import all_violations, window_route
 
@@ -368,7 +369,7 @@ def read_violations(spark: SparkSession, violations_out: str) -> DataFrame:
     windowed PSI drift leg); this selects the canonical violation
     columns so the result unions cleanly with the batch runner's flat
     append-mode parquet output."""
-    return spark.read.parquet(violations_out).select(*CANONICAL_COLS)
+    return read_parquet(spark, violations_out).select(*CANONICAL_COLS)
 
 
 def cross_batch_duplicates(

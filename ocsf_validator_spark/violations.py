@@ -35,7 +35,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ocsf_validator_spark.localframe import empty_df, local_df
+from ocsf_validator_spark.localframe import (
+    conf_bytes,
+    empty_df,
+    local_df,
+    size_estimate,
+)
 
 from ocsf_validator_spark.compile import violation_entries_guarded
 from ocsf_validator_spark.spec import (
@@ -534,6 +539,9 @@ def fused_group_violations(
     windows, so the pass then runs in that task with no exchange. A
     file large enough to be worth splitting is already two or more
     scan partitions, so that route never removes map-side parallelism.
+    It can remove reduce-side parallelism: via the exchange, AQE keeps
+    up to ``defaultParallelism`` reducers once the shuffle passes
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MiB).
 
     Scale note: partitionBy(conv_id) puts each conversation in one task.
     ``chunk_rows`` (the skew route) splits conversations too large for
@@ -1875,9 +1883,16 @@ def window_route(df: DataFrame) -> str:
     distributions, so the suite runs as one scan-to-sink stage with no
     exchange. It takes no map-side parallelism away: Spark already
     splits a file larger than ``spark.sql.files.openCostInBytes`` into
-    two or more scan partitions, so condition 2 fails for it. It takes
-    none away on the reduce side either: below the advisory size AQE
-    would coalesce the exchange's reducers to one partition anyway."""
+    two or more scan partitions, so condition 2 fails for it. On the
+    reduce side it can: with ``spark.sql.adaptive.coalescePartitions.
+    parallelismFirst`` (the default) AQE does not coalesce toward the
+    advisory size but toward ``defaultParallelism`` reducers of at
+    least ``minPartitionSize`` (1 MiB), so a shuffle past 1 MiB keeps
+    two or more reducers (``batch_skew``'s 2.1 MB window shuffle runs
+    as 2 tasks). The trade was measured at the largest one-partition
+    input (one 3.4 MB file of 170 k turns, ``local[2]``): a write of
+    the suite's violations took 1.09 s in place against 1.15 s via the
+    exchange."""
     from py4j.java_gateway import is_instance_of
 
     spark = df.sparkSession
@@ -1893,10 +1908,8 @@ def window_route(df: DataFrame) -> str:
             return "exchange"
         children = node.children()
         nodes += [children.apply(i) for i in range(children.size())]
-    cap = gateway.jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    if qe.optimizedPlan().stats().sizeInBytes() > cap:
+    cap = conf_bytes(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    if size_estimate(df) > cap:
         return "exchange"
     return "in_place" if plan.execute().getNumPartitions() == 1 else "exchange"
 
@@ -1946,8 +1959,9 @@ def all_violations(
     An input Spark reads as one small task (``window_route`` is
     ``"in_place"``: no exchange in its plan, one partition, at most the
     AQE advisory size) is planned as ``df.coalesce(1)``, so the whole
-    suite runs in that one task with no exchange. Deciding runs no
-    job."""
+    suite runs in that one task with no exchange, and with one reducer
+    where AQE could have kept more (see ``window_route``). Deciding runs
+    no job."""
     if window_route(df) == "in_place":
         df = df.coalesce(1)
     fused = _fusable(suite, df, keys) if _present(df, keys) else None

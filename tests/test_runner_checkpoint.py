@@ -267,20 +267,22 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
 
 @pytest.mark.parametrize(
     "sinks, pin",
-    [("sink", 8), ("sink+cap", 9), ("sink+quarantine", 11)],
+    [("sink", 6), ("sink+cap", 7), ("sink+quarantine", 9)],
     ids=["sink", "sink+cap", "sink+quarantine"],
 )
 def test_routed_run_with_sinks_job_count(
     spark, tmp_path, jobs_of, persisted_rdds, sinks, pin
 ):
     """A skew-routed run_validation with a checkpoint manifest and a
-    violation sink: stats (3), the sink write (3: the window's two
-    exchanges, then one job that writes and stores the violation rows)
-    and the one-aggregate verdict collect (2) make 8 jobs; the schema
-    audit adds none. The detail-row cap adds its exchange (9); the
-    quarantine leg adds its semi-join's exchanges and write (11). Every
-    leg after the first sink reads the stored rows, and nothing the run
-    stored is left persisted when it returns."""
+    violation sink: stats (2: level 1's exchange, then level 2 in the
+    task that reads it), the sink write (3: the window's two exchanges,
+    then one job that writes and stores the violation rows) and the
+    verdict collect over the small stored rows (1) make 6 jobs; the
+    schema audit adds none. The detail-row cap adds its exchange (7);
+    the quarantine leg adds its semi-join's exchanges and write (9).
+    Every leg after the first sink reads the stored rows, the report
+    names the one-task routes, and nothing the run stored is left
+    persisted when it returns."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -297,7 +299,9 @@ def test_routed_run_with_sinks_job_count(
             ),
         ))
         with open(tmp_path / "r.json") as f:
-            assert json.load(f)["skew_route"]["convs"] == 1
+            rep = json.load(f)
+        assert rep["skew_route"]["convs"] == 1
+        assert (rep["stats_route"], rep["verdict_route"]) == ("one_task",) * 2
         assert n == pin
         assert persisted_rdds() - before == set()
     finally:
@@ -767,6 +771,9 @@ def test_report_json_and_gc_state(spark, tmp_path, capsys):
     assert r1["exit_code"] == 0 and r1["n_rows"] == 1
     # a one-row, one-file increment is one small task: window in place
     assert r1["window_route"] == "in_place"
+    # the stats probe finishes in one task; with no sink nothing stores
+    # the violation rows, so the verdict keeps its exchange
+    assert (r1["stats_route"], r1["verdict_route"]) == ("one_task", "exchange")
     assert "phase_sec" in r1 and isinstance(r1["constraints"], list)
     inc([("a", 1, "assistant", "t1", "search", "2026-01-01 00:00:01")])
     assert main(argv) == 0

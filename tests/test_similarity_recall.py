@@ -291,19 +291,22 @@ def test_ivf_topk_recall(spark):
     assert c1 == c2
 
 
-def test_connected_components_chain_and_dedup(spark):
+def test_connected_components_chain_and_dedup(spark, jobs_of):
     """Min-label propagation merges chains that no single pair states
     (1-2, 2-3 -> {1,2,3}), labels every member with the component min,
     and drop_duplicate_docs keeps exactly canonicals + untouched docs.
     A 6-node chain needs multiple propagation rounds — exercises the
-    loop, the convergence check, and the lineage checkpointing."""
+    loop, the convergence check, and the lineage checkpointing. On the
+    driver path the bounded collect that picks the path is the only job
+    (an eager checkpoint, a count and the collect made 4)."""
     import pytest
 
     pairs = spark.createDataFrame(
         [(2, 3), (10, 11), (1, 2), (5, 6), (6, 7), (7, 8), (8, 9)],
         "a_id long, b_id long",
     )
-    cc = dedup.connected_components(pairs)
+    cc, n = jobs_of(lambda: dedup.connected_components(pairs))
+    assert n == 1
     got = {r.doc_id: r.canonical_id for r in cc.collect()}
     assert got == {
         1: 1, 2: 1, 3: 1,

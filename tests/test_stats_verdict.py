@@ -532,3 +532,82 @@ def test_loop_detector_semantics(spark):
     # min_repeats=2 picks up the cross-role c2 pair? no — roles differ
     ids2 = {r.conv_id for r in loop_detector(df, min_repeats=2).collect()}
     assert ids2 == {"c1", "c4"}
+
+
+@pytest.fixture()
+def no_one_task(spark):
+    """Runs fn with the one-task routes forced onto their exchange: no
+    non-empty input fits an openCostInBytes of 0."""
+    def run(fn):
+        prev = spark.conf.get("spark.sql.files.openCostInBytes")
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        try:
+            return fn()
+        finally:
+            spark.conf.set("spark.sql.files.openCostInBytes", prev)
+
+    return run
+
+
+def test_stats_routes_agree(spark, jobs_of, no_one_task):
+    """A small input's stats probe gathers level 1 into one task and
+    runs level 2 there: 2 jobs where the exchange route runs 3, and the
+    same rows."""
+    from ocsf_validator_spark.stats import bucketed_probe_stats, stats_route
+    from ocsf_validator_spark.synth import synth_transcripts
+
+    df = synth_transcripts(spark, n_turns=3000, seed=11, skew_turns=600)
+    flags = {"_user": F.max((F.col("role") == "user").cast("int"))}
+
+    def collect():
+        rows = bucketed_probe_stats(
+            df, num_buckets=8, probe_floor=100, merge_aggs={
+                "_nulls": (F.sum(F.col("tool").isNull().cast("long")), "sum")
+            }, max_aggs=flags,
+        ).collect()
+        return sorted(rows, key=lambda r: r.bucket)
+
+    assert stats_route(df) == "one_task"
+    gathered, n_gathered = jobs_of(collect)
+    assert no_one_task(lambda: stats_route(df)) == "exchange"
+    exchanged, n_exchanged = no_one_task(lambda: jobs_of(collect))
+    assert (n_gathered, n_exchanged) == (2, 3)
+    assert gathered == exchanged
+    assert any(r._skew for r in gathered)
+
+
+def test_verdict_routes_agree(spark, transcripts, jobs_of, no_one_task):
+    """Stored violation rows of at most openCostInBytes are aggregated
+    in one task: the collect runs 1 job where the exchange route runs 2,
+    with the same rows. A lazy frame, and a checkpoint no job has filled
+    yet, keep the exchange."""
+    from ocsf_validator_spark.localframe import release_checkpoint
+    from ocsf_validator_spark.verdict import verdict_route
+
+    lazy = all_violations(transcripts, SUITE)
+    assert verdict_route(lazy) == "exchange"
+    v = lazy.localCheckpoint(eager=False)
+    try:
+        assert verdict_route(v) == "exchange"
+        v.write.format("noop").mode("overwrite").save()
+        observed = sorted({
+            int(r.b) for r in transcripts.select(
+                bucket_col("conv_id", 8).alias("b")
+            ).collect()
+        })
+
+        def collect():
+            return sorted(verdicts(
+                transcripts, v, SUITE, num_buckets=8,
+                observed_buckets=observed,
+            ).collect())
+
+        assert verdict_route(v) == "one_task"
+        gathered, n_gathered = jobs_of(collect)
+        assert no_one_task(lambda: verdict_route(v)) == "exchange"
+        exchanged, n_exchanged = no_one_task(lambda: jobs_of(collect))
+    finally:
+        release_checkpoint(v)
+    assert (n_gathered, n_exchanged) == (1, 2)
+    assert gathered == exchanged
+    assert any(r.violation_count for r in gathered)
