@@ -121,24 +121,26 @@ def snapshot_of_path(path: str) -> str:
     return f"path:{os.path.abspath(path)}:files={n}:mtime={int(mt)}"
 
 
+def ledger_lines(manifest_dir: str, names: "list[str] | None" = None):
+    """The JSON lines of the file-ledger part-files ``names`` (default:
+    all of them), in commit order: their names sort in commit order."""
+    if names is None:
+        names = (
+            sorted(n for n in os.listdir(manifest_dir) if n.endswith(".files"))
+            if os.path.isdir(manifest_dir)
+            else []
+        )
+    for name in names:
+        with open(os.path.join(manifest_dir, name)) as f:
+            yield from (json.loads(line) for line in f if line.strip())
+
+
 def seen_files(manifest_dir: str) -> set[str]:
     """Paths already validated by previous incremental runs (the
     parquet-dir analogue of Iceberg's last-validated snapshot id).
     Stored as ``*.files`` part-files so ``read_entries`` never confuses
     them with bucket manifests."""
-    out: set[str] = set()
-    if not os.path.isdir(manifest_dir):
-        return out
-    for name in sorted(os.listdir(manifest_dir)):
-        if not name.endswith(".files"):
-            continue
-        with open(os.path.join(manifest_dir, name)) as f:
-            for line in f:
-                if line.strip():
-                    d = json.loads(line)
-                    if "path" in d:  # skip the conv_state pointer line
-                        out.add(d["path"])
-    return out
+    return {d["path"] for d in ledger_lines(manifest_dir) if "path" in d}
 
 
 def record_files(
@@ -147,6 +149,7 @@ def record_files(
     state_dir: str | None = None,
     fd_state: "dict[str, str] | None" = None,
     schema: "dict[str, str] | None" = None,
+    name: str | None = None,
 ) -> str:
     """Atomically commit the file set an incremental run validated
     ({path, bytes} rows, temp + rename). Called AFTER the run's bucket
@@ -158,7 +161,11 @@ def record_files(
     line — the ledger and the carried state can never disagree, which
     matters because stale state would fabricate turn-gap reports for
     turns a committed-but-unstated increment already delivered. Part
-    files are time-ordered by name so the newest pointer wins."""
+    files are time-ordered by name so the newest pointer wins.
+
+    ``name`` replaces that name: a stream's state commit
+    (``convstate.publish``) names its part-file by batch id, so a
+    replayed batch replaces its own."""
     os.makedirs(manifest_dir, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=manifest_dir, suffix=".tmp")
     with os.fdopen(fd, "w") as f:
@@ -177,9 +184,10 @@ def record_files(
             # changes before any constraint sees the renamed column
             f.write(json.dumps({"schema": schema}) + "\n")
     final = os.path.join(
-        manifest_dir, f"files-{time.time_ns():020d}-{uuid.uuid4().hex}.files"
+        manifest_dir,
+        name or f"files-{time.time_ns():020d}-{uuid.uuid4().hex}.files",
     )
-    os.rename(tmp, final)
+    os.replace(tmp, final)
     return final
 
 
@@ -238,18 +246,9 @@ def last_schema(manifest_dir: str) -> "dict[str, str] | None":
     """The most recently committed increment's input schema
     ({column: simple type}), from the newest ledger part-file carrying
     a ``schema`` line — None before the first schema-recording run."""
-    if not os.path.isdir(manifest_dir):
-        return None
     best = None
-    for name in sorted(os.listdir(manifest_dir)):
-        if not name.endswith(".files"):
-            continue
-        with open(os.path.join(manifest_dir, name)) as f:
-            for line in f:
-                if line.strip():
-                    d = json.loads(line)
-                    if "schema" in d:
-                        best = d["schema"]
+    for d in ledger_lines(manifest_dir):
+        best = d.get("schema", best)
     return best
 
 
@@ -285,22 +284,14 @@ def compact(manifest_dir: str) -> "tuple[int, int]":
         conv_state = None
         fd_state: dict[str, str] = {}
         schema = None
-        for n in ledgers:
-            with open(os.path.join(manifest_dir, n)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    d = json.loads(line)
-                    if "path" in d:
-                        if d["path"] not in seen:
-                            seen.add(d["path"])
-                            files.append(d)
-                    elif "conv_state" in d:
-                        conv_state = d["conv_state"]
-                    elif "fd_state" in d:
-                        fd_state.update(d["fd_state"])
-                    elif "schema" in d:
-                        schema = d["schema"]
+        for d in ledger_lines(manifest_dir, ledgers):
+            if "path" in d:
+                if d["path"] not in seen:
+                    seen.add(d["path"])
+                    files.append(d)
+            conv_state = d.get("conv_state", conv_state)
+            fd_state.update(d.get("fd_state", {}))
+            schema = d.get("schema", schema)
         record_files(
             manifest_dir,
             files,

@@ -1,66 +1,86 @@
-"""Cross-increment conversation state for ``--incremental`` runs.
+"""Cross-batch conversation state, shared by ``runner --incremental``
+and ``validate_stream(..., stateful_ordering=True)``.
 
-An incremental run validates only the appended sliver, so without
-carried state a (conv_id, turn_idx) key duplicating one from a PRIOR
-increment, or a turn gap / ts regression straddling the increment
-boundary, is silently missed. The streaming leg already solves exactly
-this with per-conversation carried state
-(streaming.stateful_ordering_violations); this module is the batch-side
-equivalent: persist each conversation's BOUNDARY SUMMARY into the
-checkpoint, and seed the next increment's fused window checks with it.
-The skew route seeds each turn_idx chunk of a large conversation with
-the same kind of carrier (violations._chunk_carriers).
+A run that validates only an appended sliver (an increment, a stream
+micro-batch) would otherwise miss a (conv_id, turn_idx) key duplicating
+one from an EARLIER sliver, or a turn gap / ts regression straddling
+the boundary. This module persists each conversation's BOUNDARY
+SUMMARY next to the checkpoint and seeds the next sliver's fused window
+with it (``all_violations(carry=...)``). The skew route seeds each
+turn_idx chunk of a large conversation with the same kind of carrier
+(violations._chunk_carriers).
 
 State per conversation (one narrow row):
 
 - ``_c_prev_idx``    — turn_idx of the last row in (turn_idx, ties)
                        order (the full-run window's lag for the next
-                       increment's first row)
-- ``_c_prev_<col>``  — that last row's value of each Monotonic column
+                       sliver's first row)
+- ``_c_prev_<col>``  — that last row's value of each Monotonic or
+                       Alternation column
+- ``_c_seen_<slug>`` / ``_c_pre_<slug>`` — per Precedence constraint,
+                       whether a prereq was seen, and its lowest turn_idx
 - ``_c_tail_count``  — occurrences of the boundary key
                        (conv, _c_prev_idx): the Unique occurrence-rank
                        offset for re-appends of that key
 - ``_c_tail_first``  — the boundary key's FIRST-seen tie display string
                        (what the full run would print as "first seen")
+- ``_c_last_ts``     — the conversation's newest ``ts`` (a stream's
+                       idle GC reads it)
 
-Semantics contract (matches the streaming leg's): appends that arrive
-in order — every new turn_idx >= the carried boundary — reproduce the
-fresh-full-run violations row-for-row (pinned by
-tests/test_incremental_state.py). An out-of-order append (turn_idx
-BELOW the carried boundary) is reported conservatively as
-``out-of-order turn_idx t: already past p`` on each such row, exactly
-like the streaming operator; and a re-append of a
-non-boundary key from a prior increment surfaces through that same
-out-of-order report rather than as a Unique occurrence (boundary-only
-state cannot rank it — the nightly full run is ground truth, the same
-contract streaming documents for post-eviction resumes).
+Semantics contract: appends that arrive in order — every new turn_idx
+>= the carried boundary — reproduce the fresh-full-run violations
+row-for-row (pinned by tests/test_incremental_state.py, for increments
+and for a stream). An out-of-order append (turn_idx BELOW the carried
+boundary) is reported conservatively as ``out-of-order turn_idx t:
+already past p`` on each such row; a re-append of a non-boundary key
+from an earlier sliver surfaces through that same report rather than
+as a Unique occurrence (boundary-only state cannot rank it — the
+nightly full run is ground truth). A conversation resuming after the
+idle GC dropped its state is validated from fresh state (a gap from 0).
 
-Scale notes (10^12 turns): the state table carries ONE narrow row per
-conversation ever seen — at deployment scale it lives bucketed by
-hash(conv_id) next to the transcript table (or as an Iceberg MERGE
-target) so the per-increment merge and the carry join are both
-co-partitioned, zero-exchange on the state side. Commit is atomic WITH
-the increment's file ledger: the state snapshot directory is written
-first (data-only, unreferenced), then the ledger part-file naming it is
-renamed into place — a crash between increments can never leave the
-ledger and the state disagreeing (stale state would fabricate gap
-reports for turns the missing increment already delivered).
+Commit protocol: ``commit`` writes snapshot directories keyed by a
+commit id (an increment's snapshot id, a stream's batch id), so a
+replay overwrites its own. They become current only when a ledger
+part-file naming them lands by rename: the runner adds the pointer
+lines to the part-file recording the increment's files, so ledger and
+state can never disagree (stale state would fabricate gap reports for
+turns the missing increment already delivered); a stream writes
+``state-<batch id>.files`` (``publish``), and batch N reads the newest
+one below N, so a replayed batch reads what its first attempt read.
+
+Scale notes (10^12 turns): the state table carries one narrow row per
+conversation (live ones, under a stream's idle GC) — at deployment
+scale it lives bucketed by hash(conv_id) next to the transcript table
+(or as an Iceberg MERGE target), so the merge and the carry join are
+co-partitioned, zero-exchange on the state side.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
+from ocsf_validator_spark.checkpoint import ledger_lines, record_files
 from ocsf_validator_spark.sources import read_parquet
-from ocsf_validator_spark.spec import Alternation, Monotonic, Precedence, Unique
+from ocsf_validator_spark.spec import (
+    Alternation,
+    ConstraintSet,
+    FunctionalDependency,
+    Monotonic,
+    Precedence,
+    Unique,
+)
 
 CARRY_PREV_IDX = "_c_prev_idx"
 CARRY_COUNT = "_c_tail_count"
 CARRY_FIRST = "_c_tail_first"
+CARRY_LAST_TS = "_c_last_ts"
+EVENT_TS = "ts"  # the event-time column the idle GC reads
 
 
 def carry_mono_col(column: str) -> str:
@@ -72,6 +92,27 @@ def carry_seen_col(c: Precedence) -> str:
     bit (0/1). Monotone under merge (greatest) — once a conversation
     has seen a prereq, later increments can never unsee it."""
     return f"_c_seen_{c.seen_slug}"
+
+
+# the carried prereq idx of a NULL turn_idx row: the window sorts NULL
+# first, so it ranks before every trigger
+_NULL_IDX = -(2**63)
+
+
+def carry_pre_col(c: Precedence) -> str:
+    """Per-Precedence-constraint lowest turn_idx of a prereq row in any
+    prior sliver (NULL: none). Merged by least. A trigger appended
+    BELOW the carried boundary is not ordered after the carried rows by
+    the window, so it fires unless this ranks strictly before it."""
+    return f"_c_pre_{c.seen_slug}"
+
+
+def carries_ts(df: DataFrame) -> bool:
+    """Whether ``df`` has the timestamp ``ts`` column the state carries
+    as ``_c_last_ts``."""
+    return EVENT_TS in df.columns and isinstance(
+        df.schema[EVENT_TS].dataType, (TimestampType, TimestampNTZType)
+    )
 
 
 def boundary_state(
@@ -87,7 +128,9 @@ def boundary_state(
     pass, so "last row" means exactly what the full run's lag would
     see), then window aggregates — last row's idx and mono values over
     the full frame, the boundary key's group count, and its first-seen
-    tie string. Output is one row per conversation.
+    tie string. Output is one row per conversation. With a timestamp
+    ``ts`` column it also carries the conversation's newest ``ts``
+    (``_c_last_ts``), which the idle GC reads.
     """
     from ocsf_validator_spark.violations import _tie_display
 
@@ -113,6 +156,10 @@ def boundary_state(
         else:
             proj.append(_tie_display(F.col(t), df.schema[t].dataType).alias(t))
     proj += [F.col(m) for m in full_cols if m not in (part, idx, *ties)]
+    last_ts = []
+    if carries_ts(df):
+        proj.append(F.col(EVENT_TS).alias(CARRY_LAST_TS))
+        last_ts = [CARRY_LAST_TS]
     pre = df.select(*proj)
     tie_order = [F.col(t).asc_nulls_last() for t in ties]
     w = Window.partitionBy(part).orderBy(F.col(idx).asc(), *tie_order)
@@ -135,8 +182,20 @@ def boundary_state(
             .alias(carry_seen_col(c))
             for c in prec_cs
         ],
+        *[
+            F.min(
+                F.when(
+                    F.col(c.column).isin(*c.prereq),
+                    F.coalesce(F.col(idx).cast("long"), F.lit(_NULL_IDX)),
+                )
+            )
+            .over(wf)
+            .alias(carry_pre_col(c))
+            for c in prec_cs
+        ],
         F.count(F.lit(1)).over(w2f).alias("_grp_n"),
         F.first(tie_str).over(w2o).alias("_grp_first"),
+        *[F.max(c).over(wf).alias(c) for c in last_ts],
     )
     # keep only the boundary key's rows (identical summary values on
     # each), then collapse to one row per conversation
@@ -145,8 +204,10 @@ def boundary_state(
         F.min("_last_idx").alias(CARRY_PREV_IDX),
         *[F.min(carry_mono_col(m)).alias(carry_mono_col(m)) for m in mono_cols],
         *[F.min(carry_seen_col(c)).alias(carry_seen_col(c)) for c in prec_cs],
+        *[F.min(carry_pre_col(c)).alias(carry_pre_col(c)) for c in prec_cs],
         F.min("_grp_n").alias(CARRY_COUNT),
         F.min("_grp_first").alias(CARRY_FIRST),
+        *[F.min(c).alias(c) for c in last_ts],
     )
 
 
@@ -215,22 +276,32 @@ def attach_carriers(
         else:  # tie display columns and the row-leg array
             sel.append(F.lit(None).cast(dt).alias(c))
     # carried 'prereq seen' bits: 0 on real rows, the persisted bit on
-    # carriers (state written before the constraint existed -> 0)
-    seen = [
-        (
-            f"_cr_seen_{c.seen_slug}",
+    # carriers (state written before the constraint existed -> 0); and
+    # the lowest carried prereq idx, NULL on real rows (state written
+    # before it was carried: a seen bit ranks before every trigger)
+    seen, pre_idx = [], []
+    for c in prec_cs:
+        bit = (
             F.col(carry_seen_col(c))
             if carry_seen_col(c) in state.columns
-            else F.lit(0),
+            else F.lit(0)
         )
-        for c in prec_cs
-    ]
+        seen.append((f"_cr_seen_{c.seen_slug}", bit))
+        pre_idx.append(
+            (
+                f"_cr_pre_{c.seen_slug}",
+                F.col(carry_pre_col(c))
+                if carry_pre_col(c) in state.columns
+                else F.when(bit == 1, F.lit(_NULL_IDX)),
+            )
+        )
     carriers = state.select(
         *sel,
         F.lit(True).alias("_cr"),
         F.col(CARRY_COUNT).cast("long").alias("_cr_n"),
         F.col(CARRY_FIRST).cast("string").alias("_cr_first"),
         *[v.cast("int").alias(k) for k, v in seen],
+        *[v.cast("long").alias(k) for k, v in pre_idx],
     )
     real = pre.select(
         *pre.columns,
@@ -238,6 +309,7 @@ def attach_carriers(
         F.lit(1).cast("long").alias("_cr_n"),
         F.lit(None).cast("string").alias("_cr_first"),
         *[F.lit(0).alias(k) for k, _ in seen],
+        *[F.lit(None).cast("long").alias(k) for k, _ in pre_idx],
     )
     return real.unionByName(carriers)
 
@@ -254,12 +326,23 @@ def merge_state(prior: DataFrame | None, new: DataFrame, part: str = "conv_id") 
                                 later rows in full-run order)
     - new boundary BELOW prior (out-of-order append) -> prior stands
       (the conservative contract: the boundary never moves backwards)
+    - ``_c_last_ts``: the later of the two, ``_c_pre_*`` the lower,
+      whichever boundary wins
+
+    A column the prior state lacks (written before its constraint, or
+    the carried ts, existed) merges as NULL on the prior side.
     """
     if prior is None:
         return new
     data_cols = [c for c in new.columns if c != part]
     p = prior.select(
-        part, *[F.col(c).alias(f"_p{c}") for c in data_cols]
+        part,
+        *[
+            (F.col(c) if c in prior.columns else F.lit(None))
+            .cast(new.schema[c].dataType)
+            .alias(f"_p{c}")
+            for c in data_cols
+        ],
     )
     j = p.join(new, part, "full")
     nidx, pidx = F.col(CARRY_PREV_IDX), F.col(f"_p{CARRY_PREV_IDX}")
@@ -281,6 +364,10 @@ def merge_state(prior: DataFrame | None, new: DataFrame, part: str = "conv_id") 
                 .when(same, F.col(f"_p{c}"))
                 .otherwise(F.col(f"_p{c}"))
             )
+        elif c == CARRY_LAST_TS:
+            merged = F.greatest(F.col(c), F.col(f"_p{c}"))
+        elif c.startswith("_c_pre_"):
+            merged = F.least(F.col(c), F.col(f"_p{c}"))
         elif c.startswith("_c_seen_"):
             # monotone bit: once any increment saw a prereq, it stays
             # seen — independent of which side's boundary wins
@@ -296,118 +383,217 @@ def merge_state(prior: DataFrame | None, new: DataFrame, part: str = "conv_id") 
     return j.select(*out)
 
 
+def _safe(tag: str) -> str:
+    return "".join(ch if ch.isalnum() or ch in "-_." else "_" for ch in tag)
+
+
 def write_state(state: DataFrame, checkpoint_dir: str, tag: str) -> str:
     """Write a state snapshot directory (data-only; it becomes current
-    only when a ledger part-file referencing it is committed — see
-    checkpoint.record_files). ``tag`` keys the snapshot to its
-    increment so a re-validation after a partial crash overwrites the
-    SAME uncommitted directory instead of leaking orphans."""
-    safe = "".join(ch if ch.isalnum() or ch in "-_." else "_" for ch in tag)
-    out = os.path.join(checkpoint_dir, "convstate", safe)
+    only when a ledger part-file naming it is committed). ``tag`` keys
+    the snapshot to its commit so a replay overwrites the SAME
+    uncommitted directory instead of leaking orphans."""
+    out = os.path.join(checkpoint_dir, "convstate", _safe(tag))
     state.write.mode("overwrite").parquet(out)
     return out
-
-
-def latest_state_dir(checkpoint_dir: str) -> str | None:
-    """The committed state snapshot: the ``conv_state`` line of the
-    newest ledger part-file that carries one (ledger files are named
-    files-<time_ns>-<uuid> so lexical order is commit order)."""
-    if not os.path.isdir(checkpoint_dir):
-        return None
-    best = None
-    for name in sorted(os.listdir(checkpoint_dir)):
-        if not name.endswith(".files"):
-            continue
-        with open(os.path.join(checkpoint_dir, name)) as f:
-            for line in f:
-                if line.strip():
-                    d = json.loads(line)
-                    if "conv_state" in d:
-                        best = d["conv_state"]
-    return best
-
-
-def read_state(spark: SparkSession, checkpoint_dir: str) -> DataFrame | None:
-    path = latest_state_dir(checkpoint_dir)
-    if path is None or not os.path.isdir(path):
-        return None
-    return read_parquet(spark, path)
-
-
-# --- FunctionalDependency group-state carry (same ledger discipline as
-# the conversation boundary state: data directories become current only
-# when the ledger part-file referencing them commits) -----------------
 
 
 def write_fd_state(
     state: DataFrame, checkpoint_dir: str, constraint_id: str, tag: str
 ) -> str:
     """Write one FD constraint's group-state snapshot
-    (violations.fd_group_state schema). Keyed by constraint_id AND
-    increment tag so a crash re-validation overwrites the same
-    uncommitted directory."""
-    safe = "".join(
-        ch if ch.isalnum() or ch in "-_." else "_"
-        for ch in f"{constraint_id}__{tag}"
+    (violations.fd_group_state schema), keyed by constraint_id AND
+    commit tag, like ``write_state``."""
+    out = os.path.join(
+        checkpoint_dir, "fdstate", _safe(f"{constraint_id}__{tag}")
     )
-    out = os.path.join(checkpoint_dir, "fdstate", safe)
     state.write.mode("overwrite").parquet(out)
     return out
 
 
-def latest_fd_state_dirs(checkpoint_dir: str) -> dict[str, str]:
-    """constraint_id -> committed state snapshot dir. MERGED per key
-    across ledger part-files in commit order (newest pointer wins per
-    constraint): a run executed with a SUBSET of the FD constraints
-    (edited flags, a column temporarily unresolvable under schema
-    drift) commits only that subset's pointers, and a whole-map
-    replacement would silently drop the other constraints' carried
-    state — re-opening exactly the cross-increment blind spot the
-    carry exists to close."""
-    if not os.path.isdir(checkpoint_dir):
-        return {}
-    best: dict[str, str] = {}
-    for name in sorted(os.listdir(checkpoint_dir)):
-        if not name.endswith(".files"):
+_IDLE_UNITS_MS = dict(
+    millisecond=1, second=1000, minute=60_000, hour=3_600_000, day=86_400_000
+)
+_IDLE_TERM = r"(\d+(?:\.\d+)?)\s*(millisecond|second|minute|hour|day)s?"
+
+
+def idle_timeout_ms(text: str) -> int:
+    """Milliseconds in a sum of ``<number> <unit>`` terms (``"2 hours"``,
+    ``"1.5 hours"``, ``"1 hour 30 minutes"``); any other text, or less
+    than 1 ms, raises ``ValueError``."""
+    total = sum(
+        float(n) * _IDLE_UNITS_MS[u] for n, u in re.findall(_IDLE_TERM, text)
+    )
+    if not re.fullmatch(rf"\s*(?:{_IDLE_TERM}\s*)+", text) or total < 1:
+        raise ValueError(f"bad idle timeout: {text!r}")
+    return int(total)
+
+
+def commit(
+    df: DataFrame,
+    suite: ConstraintSet,
+    checkpoint_dir: str,
+    commit_id,
+    carry: DataFrame | None = None,
+    fd_carry: "dict[str, DataFrame] | None" = None,
+    keys=("conv_id", "turn_idx"),
+    stale_before_us: int | None = None,
+) -> "tuple[str | None, dict[str, str]]":
+    """Fold ``df``'s boundary summaries into ``carry`` and each FD
+    constraint's group state into its ``fd_carry`` entry, and write the
+    snapshots tagged ``commit_id``. Returns ``(state_dir, fd_dirs)``
+    (no ``state_dir`` without fusable window constraints) for the
+    caller to make current: the runner in its file ledger, a stream with
+    ``publish``. ``stale_before_us`` (the idle GC) drops conversations
+    whose ``_c_last_ts`` is before that epoch-microsecond bound, in the
+    plan that writes the state."""
+    from ocsf_validator_spark.violations import (
+        _fusable,
+        _present,
+        _resolves,
+        fd_group_state,
+        merge_fd_state,
+    )
+
+    state_dir = None
+    fz = _fusable(suite, df, keys) if _present(df, keys) else None
+    if fz:
+        merged = merge_state(carry, boundary_state(df, fz[0], fz[1], keys))
+        if stale_before_us is not None and CARRY_LAST_TS in merged.columns:
+            merged = merged.filter(
+                F.col(CARRY_LAST_TS).isNull()
+                | (F.unix_micros(CARRY_LAST_TS) >= F.lit(stale_before_us))
+            )
+        state_dir = write_state(merged, checkpoint_dir, tag=str(commit_id))
+    fd_dirs = {}
+    for c in suite.key_level():
+        if not isinstance(c, FunctionalDependency):
+            continue  # other key-level kinds carry no state
+        if not (c.determinants and _resolves(df, [*c.determinants, c.column])):
             continue
-        with open(os.path.join(checkpoint_dir, name)) as f:
-            for line in f:
-                if line.strip():
-                    d = json.loads(line)
-                    if "fd_state" in d:
-                        best.update(d["fd_state"])
-    return best
+        prior = (fd_carry or {}).get(c.constraint_id)
+        fd_dirs[c.constraint_id] = write_fd_state(
+            merge_fd_state(prior, fd_group_state(df, c)),
+            checkpoint_dir,
+            c.constraint_id,
+            tag=str(commit_id),
+        )
+    return state_dir, fd_dirs
+
+
+_STREAM_COMMIT = re.compile(r"state-(\d+)\.files")
+
+
+def _ledger(checkpoint_dir: str, below: int | None = None) -> list[str]:
+    """Ledger part-file names in commit order; with ``below``, only a
+    stream's state commits numbered below it."""
+    if not os.path.isdir(checkpoint_dir):
+        return []
+    return sorted(
+        name
+        for name in os.listdir(checkpoint_dir)
+        if name.endswith(".files")
+        and (
+            below is None
+            or ((m := _STREAM_COMMIT.fullmatch(name)) and int(m[1]) < below)
+        )
+    )
+
+
+def _pointers(
+    checkpoint_dir: str, names: list[str]
+) -> "tuple[str | None, dict[str, str]]":
+    """The snapshots the part-files ``names`` point at, read in order:
+    the newest ``conv_state`` line, and the ``fd_state`` maps MERGED per
+    constraint (newest wins per key): a run with a SUBSET of the FD
+    constraints (edited flags, a column unresolvable under schema drift)
+    commits only that subset's pointers, and the others' state must
+    survive."""
+    conv, fd = None, {}
+    for d in ledger_lines(checkpoint_dir, names):
+        conv = d.get("conv_state", conv)
+        fd.update(d.get("fd_state", {}))
+    return conv, fd
+
+
+def latest_state_dir(checkpoint_dir: str, below: int | None = None) -> str | None:
+    """The committed conversation-state snapshot: the newest ledger
+    part-file's ``conv_state`` line; with ``below``, the newest of a
+    stream's commits numbered below it."""
+    return _pointers(checkpoint_dir, _ledger(checkpoint_dir, below))[0]
+
+
+def latest_fd_state_dirs(
+    checkpoint_dir: str, below: int | None = None
+) -> dict[str, str]:
+    """constraint_id -> committed FD state snapshot dir (see
+    ``_pointers``); ``below`` as in ``latest_state_dir``."""
+    return _pointers(checkpoint_dir, _ledger(checkpoint_dir, below))[1]
+
+
+def read_state(
+    spark: SparkSession, checkpoint_dir: str, below: int | None = None
+) -> DataFrame | None:
+    path = latest_state_dir(checkpoint_dir, below)
+    if path is None or not os.path.isdir(path):
+        return None
+    return read_parquet(spark, path)
 
 
 def read_fd_states(
-    spark: SparkSession, checkpoint_dir: str
+    spark: SparkSession, checkpoint_dir: str, below: int | None = None
 ) -> dict[str, DataFrame]:
     out = {}
-    for cid, path in latest_fd_state_dirs(checkpoint_dir).items():
+    for cid, path in latest_fd_state_dirs(checkpoint_dir, below).items():
         if os.path.isdir(path):
             out[cid] = read_parquet(spark, path)
     return out
 
 
-def gc_state(checkpoint_dir: str) -> list[str]:
+def publish(
+    checkpoint_dir: str,
+    batch_id: int,
+    state_dir: str | None,
+    fd_dirs: dict[str, str],
+) -> str:
+    """Make a stream batch's ``commit`` current: ledger part-file
+    ``state-<batch_id>.files`` (a replay replaces its own), naming what
+    the batch read overlaid with what it wrote — a whole snapshot, so
+    ``gc_state`` may drop every older one."""
+    conv, fd = _pointers(checkpoint_dir, _ledger(checkpoint_dir, batch_id))
+    return record_files(
+        checkpoint_dir,
+        [],
+        state_dir=state_dir or conv,
+        fd_state={**fd, **fd_dirs} or None,
+        name=f"state-{int(batch_id):012d}.files",
+    )
+
+
+def gc_state(checkpoint_dir: str, below: int | None = None) -> list[str]:
     """Prune superseded state snapshots: every convstate/fdstate data
-    directory NOT referenced by the CURRENT committed pointers (older
-    increments' snapshots, or orphans from a crash whose retry
-    committed a different tag). The keep-set derives from the same
-    ledger lines the readers use, so anything removable is by
-    definition unreachable. Returns the removed paths. Run AFTER the
-    increment's ledger commit (the runner's ``--gc-state`` does)."""
+    directory no committed pointer that is still current names (older
+    commits' snapshots, or orphans of a crashed attempt). Returns the
+    removed paths. Without ``below`` (the runner's ``--gc-state``,
+    after the increment's ledger commit) the whole ledger's pointers
+    are current. With ``below`` (a stream at the start of that batch,
+    which Spark runs only after committing the ones before it) the
+    stream's commits older than the newest below it go too, and what
+    that one and any at or above ``below`` (a replayed batch's first
+    attempt) name is kept."""
     import shutil
 
-    keep: set[str] = set()
-    cur = latest_state_dir(checkpoint_dir)
-    if cur:
-        keep.add(os.path.abspath(cur))
-    keep |= {
-        os.path.abspath(p)
-        for p in latest_fd_state_dirs(checkpoint_dir).values()
-    }
     removed: list[str] = []
+    if below is None:
+        current = [_ledger(checkpoint_dir)]
+    else:
+        for name in _ledger(checkpoint_dir, below)[:-1]:
+            os.remove(os.path.join(checkpoint_dir, name))
+            removed.append(os.path.join(checkpoint_dir, name))
+        current = [[name] for name in _ledger(checkpoint_dir)]
+    keep = set()
+    for names in current:
+        conv, fd = _pointers(checkpoint_dir, names)
+        keep |= {os.path.abspath(p) for p in (conv, *fd.values()) if p}
     for sub in ("convstate", "fdstate"):
         root = os.path.join(checkpoint_dir, sub)
         if not os.path.isdir(root):

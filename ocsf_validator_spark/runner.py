@@ -530,7 +530,7 @@ def run_validation(
             "skipped_buckets": skipped,
             "phase_sec": timings,
             "skew_route": skew_route,
-            "window_route": window_route(df),
+            "window_route": window_route(df, carry_state),
             **routes,
             "constraints": summary,
         }
@@ -550,9 +550,9 @@ def stream_main(spark: SparkSession, args) -> int:
     0 = clean, 1 = ERROR/FATAL violations found in this drain's batches
     (coverage is excluded per micro-batch by design). The exit verdict
     reads back only the sink rows THIS drain wrote: batch partitions by
-    this drain's batch ids, and the append-across-drains legs — the
-    stateful ordering leg (batch_id=-1) and the --psi-ref drift leg
-    (batch_id=-2) — by the drain_id stamped on their rows, so a later
+    this drain's batch ids (with --stateful-ordering, cross-batch
+    findings among them), and the append-across-drains --psi-ref drift
+    leg (batch_id=-2) by the drain_id stamped on its rows, so a later
     clean drain does not re-fail on an earlier drain's findings."""
     import os
 
@@ -560,7 +560,6 @@ def stream_main(spark: SparkSession, args) -> int:
 
     from ocsf_validator_spark.streaming import (
         DRIFT_BATCH_ID,
-        STATEFUL_BATCH_ID,
         stream_transcripts,
         validate_stream,
     )
@@ -597,30 +596,28 @@ def stream_main(spark: SparkSession, args) -> int:
         q.awaitTermination()
     for bid, rows, nv in batches:
         print(f"[batch {bid}] {rows} turns, {nv} violations")
-    if not batches and not args.stateful_ordering:
+    if not batches:
         print("stream: nothing pending")
         return 0
-    bad = False
-    if batches:
-        drained = [bid for bid, _, _ in batches]
-        sunk = read_parquet(spark, args.violations_out).filter(
+    drained = [bid for bid, _, _ in batches]
+    bad = (
+        read_parquet(spark, args.violations_out)
+        .filter(
             F.col("batch_id").isin(drained)
             & F.col("severity").isin("ERROR", "FATAL")
         )
-        bad = sunk.limit(1).count() > 0
-    # the append-across-drains legs are drain-scoped (see validate_stream):
-    # only rows THIS drain stamped may fail THIS drain's exit code
-    for leg_id, enabled in (
-        (STATEFUL_BATCH_ID, args.stateful_ordering),
-        (DRIFT_BATCH_ID, bool(psi_kw)),
-    ):
-        if bad or not enabled:
-            continue
-        leg_dir = os.path.join(args.violations_out, f"batch_id={leg_id}")
+        .limit(1)
+        .count()
+        > 0
+    )
+    if psi_kw and not bad:
+        # the drift leg appends across drains: only rows THIS drain
+        # stamped may fail THIS drain's exit code
+        leg_dir = os.path.join(args.violations_out, f"batch_id={DRIFT_BATCH_ID}")
         try:
             leg_rows = read_parquet(spark, leg_dir)
         except Exception:
-            continue  # leg emitted nothing yet — no directory
+            return 0  # the leg emitted nothing yet — no directory
         bad = (
             leg_rows.filter(
                 (F.col("drain_id") == drain_id)
@@ -866,8 +863,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--stateful-ordering",
         action="store_true",
-        help="with --stream: also run the cross-batch stateful ordering "
-        "leg into the same sink (batch_id=-1)",
+        help="with --stream: carry per-conversation boundary state "
+        "across micro-batches (as --incremental does across increments), "
+        "so defects straddling batches land in their batch's partition",
     )
     p.add_argument(
         "--psi-ref",
@@ -1230,45 +1228,22 @@ def main(argv: list[str] | None = None) -> int:
         # commit the file ledger only after the bucket manifest landed:
         # a crash in between re-validates (at-least-once), never skips.
         # Exit 1 (violations found) still counts as validated. The
-        # carried conversation state rides the SAME atomic rename (one
-        # trailing conv_state line), so ledger and state can never
-        # disagree. Iceberg-diff increments (empty file list) commit a
-        # ledger part-file carrying only the state pointer — file
-        # tracking there is snapshot lineage, not the ledger.
-        state_dir = None
+        # carried conversation and FD group state ride the SAME atomic
+        # rename (trailing conv_state / fd_state lines), so ledger and
+        # state can never disagree. Iceberg-diff increments (empty file
+        # list) commit a ledger part-file carrying only the state
+        # pointers — file tracking there is snapshot lineage, not the
+        # ledger.
         from ocsf_validator_spark import convstate
-        from ocsf_validator_spark.violations import _fusable, _present
 
-        eff_suite = suite or transcript_suite()
-        keys = ("conv_id", "turn_idx")
-        fz = _fusable(eff_suite, df, keys) if _present(df, keys) else None
-        if fz:
-            bound = convstate.boundary_state(df, fz[0], fz[1], keys)
-            merged = convstate.merge_state(carry_state, bound)
-            state_dir = convstate.write_state(
-                merged, args.checkpoint, tag=str(snapshot)
-            )
-        # FD group state: same sticky-canonical contract, same atomic
-        # ledger commit (one fd_state line mapping constraint_id -> dir)
-        from ocsf_validator_spark.spec import FunctionalDependency
-        from ocsf_validator_spark.violations import (
-            _resolves,
-            fd_group_state,
-            merge_fd_state,
+        state_dir, fd_dirs = convstate.commit(
+            df,
+            suite or transcript_suite(),
+            args.checkpoint,
+            snapshot,
+            carry=carry_state,
+            fd_carry=fd_carry,
         )
-
-        fd_dirs = {}
-        for c in eff_suite.key_level():
-            if not isinstance(c, FunctionalDependency):
-                continue  # other key-level kinds carry no state
-            if not (c.determinants and _resolves(df, [*c.determinants, c.column])):
-                continue
-            merged_fd = merge_fd_state(
-                fd_carry.get(c.constraint_id), fd_group_state(df, c)
-            )
-            fd_dirs[c.constraint_id] = convstate.write_fd_state(
-                merged_fd, args.checkpoint, c.constraint_id, tag=str(snapshot)
-            )
         ckpt.record_files(
             args.checkpoint,
             inc_files,

@@ -360,11 +360,11 @@ def load_increment(
       new file set is returned for the runner to commit AFTER a
       successful run (at-least-once, never skip).
 
-    Returns None when nothing new landed. Cross-increment caveat
-    (documented contract, same as streaming's per-batch suite): a
-    conversation straddling increments is order/uniqueness-checked
-    within each increment only — the cross-batch analogue is the
-    streaming stateful leg (``--stream --stateful-ordering``)."""
+    Returns None when nothing new landed. A conversation straddling
+    increments is checked across the boundary by the runner, which
+    seeds the increment's window checks with the per-conversation
+    state earlier increments committed (``convstate``; the same carry
+    ``--stream --stateful-ordering`` runs per micro-batch)."""
     if _route_to_iceberg(spark, location):
         cur = _iceberg_snapshot_id(spark, location)
         if since_snapshot == cur or cur == "iceberg:empty":

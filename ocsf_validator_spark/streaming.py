@@ -28,9 +28,12 @@ north-star extension for validating an APPEND-ONLY transcript stream
   violations as well, so the split does not rerun the exchange: five
   jobs a batch.
 
-  Scope note: the conversation-window checks see one micro-batch at a
-  time, so they catch intra-batch duplicates/disorder; duplicates that
-  STRADDLE batches are caught by the stateful leg below.
+  Scope note: by default the conversation-window checks see one
+  micro-batch at a time, so they catch intra-batch duplicates/disorder
+  only. ``stateful_ordering=True`` seeds each batch's fused window with
+  the per-conversation boundary state the batches before it committed
+  (``convstate``, the same carry ``runner --incremental`` uses), so
+  defects that STRADDLE batches land in their own batch's partition.
 
 - ``cross_batch_duplicates``: stateful uniqueness across batches via
   ``dropDuplicatesWithinWatermark`` — rows evicted as duplicates within
@@ -54,6 +57,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ocsf_validator_spark import convstate
 from ocsf_validator_spark.localframe import release_checkpoint
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
@@ -77,48 +81,32 @@ def stream_transcripts(
 
 CANONICAL_COLS = ("constraint_id", "conv_id", "turn_idx", "reason", "severity")
 
-STATEFUL_BATCH_ID = -1  # partition value of the cross-batch stateful leg
 DRIFT_BATCH_ID = -2  # partition value of the windowed PSI drift leg
 
-_INTERVAL_UNITS_MS = {
-    "millisecond": 1,
-    "second": 1000,
-    "minute": 60_000,
-    "hour": 3_600_000,
-    "day": 86_400_000,
-}
 
+def _observed(obs: Observation, name: str) -> int | None:
+    """The long ``obs`` collected as ``name`` during the action that
+    ran over its frame; None when it is NULL or there is no metrics row.
 
-def _interval_ms(interval: str) -> int:
-    """Parse a Spark-style interval string ('2 hours', '30 minutes')
-    into milliseconds — used for event-time timeout arithmetic."""
-    import re
-
-    total = 0
-    for num, unit in re.findall(
-        r"(\d+)\s*(millisecond|second|minute|hour|day)s?", interval.strip()
-    ):
-        total += int(num) * _INTERVAL_UNITS_MS[unit]
-    if total <= 0:
-        raise ValueError(f"unparseable interval: {interval!r}")
-    return total
-
-
-def _observed_rows(obs: Observation, frame: DataFrame) -> int:
-    """The row count ``obs`` collected during the action that ran over
-    ``frame``.
-
-    One case reports nothing: when AQE proves an exchange empty at run
+    One case reports no row: when AQE proves an exchange empty at run
     time it replaces the plan above it with an empty relation, and a
     CollectMetrics node below that exchange (the input observation on a
     zero-row micro-batch) leaves the final plan, so the action finishes
     with an empty metrics row. ``Observation.get`` cannot convert that
     row (``PythonSQLUtils.toPyRow`` asserts on it), so the JVM row is
-    read directly, and only that case pays a job to count ``frame``."""
+    read directly."""
     row = obs._jo.getRow()
     if row.length() == 0:
-        return frame.count()
-    return int(row.getLong(0))
+        return None
+    i = row.fieldIndex(name)
+    return None if row.isNullAt(i) else int(row.getLong(i))
+
+
+def _observed_rows(obs: Observation, frame: DataFrame) -> int:
+    """The row count ``obs`` collected as ``n`` over ``frame``; only a
+    missing metrics row (see ``_observed``) pays a job to count it."""
+    n = _observed(obs, "n")
+    return frame.count() if n is None else n
 
 
 def validate_stream(
@@ -131,7 +119,6 @@ def validate_stream(
     on_batch: Callable[[int, int, int], None] | None = None,
     stateful_ordering: bool = False,
     drain_id: str | None = None,
-    stateful_watermark: str = "1 hour",
     stateful_idle_timeout: str | None = "2 hours",
     psi_ref: dict[int, int] | None = None,
     psi_bin_expr: str | None = None,
@@ -175,17 +162,25 @@ def validate_stream(
     yields an extra int ``batch_id`` partition column. Use
     ``read_violations`` to get the canonical batch-runner schema back.
 
-    ``stateful_ordering=True`` ALSO starts the cross-batch stateful leg
-    (``stateful_ordering_violations``: gaps / duplicates / ts
-    regressions that STRADDLE micro-batches, which the per-batch window
-    checks cannot see) writing into the same sink under
-    ``batch_id=-1``, and returns ``(batch_query, stateful_query)``
-    instead of a single query. Its state is bounded by
-    ``stateful_watermark`` + ``stateful_idle_timeout`` (event-time
-    eviction — see stateful_ordering_violations). The stateful leg is
-    APPEND-only across drains; ``drain_id`` (when given) is stamped on
-    its rows so a caller can scope a verdict to the rows THIS drain
-    produced instead of re-counting earlier drains' findings.
+    ``stateful_ordering=True`` carries per-conversation boundary state
+    across micro-batches as ``runner --incremental`` does across
+    increments (``convstate``): each batch's fused pass is seeded with
+    the state earlier batches committed, so an ordering, Unique,
+    Monotonic, Precedence, OpeningRole or Alternation finding that
+    STRADDLES batches lands once, in its own batch's partition, and
+    reaches ``quarantine_out`` like any other; FD group state is carried
+    too. Batch N reads the newest commit below N under
+    ``checkpoint_dir/carry``, deletes older ones, and commits its own
+    keyed by N, so a replay overwrites it as the sink's partition is. A
+    carried batch takes the exchange route behind the carriers' semi
+    join, and every batch's commit adds its boundary window, the state
+    merge and the write: a one-file batch costs 3 jobs uncarried (in
+    place), 7 carried. ``stateful_idle_timeout``
+    (``<number> <unit>`` terms, millisecond to day, e.g. ``"1.5 hours"``;
+    anything else raises ``ValueError`` before the query starts) drops,
+    as a batch commits, conversations whose newest ``ts`` is older than
+    the batch's newest ``ts`` minus the timeout; a resumed one is then
+    validated from fresh state. None keeps all state.
 
     ``psi_ref`` + ``psi_bin_expr`` ALSO start the windowed drift leg
     (``streaming_psi`` vs the given reference histogram): event-time
@@ -193,31 +188,48 @@ def validate_stream(
     under ``batch_id=-2`` as ``drift.psi`` rows with NULL row keys —
     drift is a dataset-level finding, WARNING by default, so it
     surfaces in the report without failing the drain unless the caller
-    raises ``psi_severity``. Append-only across drains, drain-scoped
-    like the stateful leg.
+    raises ``psi_severity``. The leg is APPEND-only across drains;
+    ``drain_id`` (when given) is stamped on its rows so a caller can
+    scope a verdict to the rows THIS drain produced instead of
+    re-counting earlier drains' findings.
 
     ``quarantine_out`` ALSO routes each micro-batch's violating INPUT
     rows (key named by a >= ``quarantine_threshold`` violation from
-    THIS batch's fused pass — per-batch scope; the stateful leg cannot
-    recall rows already passed through) into
-    ``quarantine_out/batch_id=<n>`` with the same idempotent
-    overwrite-per-batch replay semantics as the violations sink.
+    THIS batch's fused pass) into ``quarantine_out/batch_id=<n>`` with
+    the same idempotent overwrite-per-batch replay semantics as the
+    violations sink.
 
-    Returns the StreamingQuery (or a tuple when extra legs started);
-    with ``available_now`` the caller can ``awaitTermination()`` each
-    for a drain-and-stop run (used by tests and backfills)."""
+    Returns the StreamingQuery, or ``(batch_query, drift_query)`` with
+    the drift leg; with ``available_now`` the caller can
+    ``awaitTermination()`` each for a drain-and-stop run (used by tests
+    and backfills)."""
     if (psi_ref is None) != (psi_bin_expr is None):
         raise ValueError("psi_ref and psi_bin_expr must be given together")
     suite = suite or transcript_suite()
     q_threshold = (
         Severity.ERROR if quarantine_threshold is None else quarantine_threshold
     )
+    carry_dir = os.path.join(checkpoint_dir, "carry") if stateful_ordering else None
+    idle_us = (
+        convstate.idle_timeout_ms(stateful_idle_timeout) * 1000
+        if carry_dir and stateful_idle_timeout is not None
+        else None
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
+        spark = batch_df.sparkSession
+        carry = fd_carry = None
+        if carry_dir:
+            # Spark runs batch N only after committing every batch
+            # before it, so snapshots older than N's are superseded
+            convstate.gc_state(carry_dir, below=batch_id)
+            carry = convstate.read_state(spark, carry_dir, below=batch_id)
+            fd_carry = convstate.read_fd_states(spark, carry_dir, below=batch_id)
         # split_quarantine reads the batch rows and their violations a
-        # second time; store the rows (lazily, filled by the sink
-        # write's own job) so that leg costs no source re-read
+        # second time (and the state commit reads the rows again);
+        # store the rows (lazily, filled by the sink write's own job) so
+        # that leg costs no source re-read
         stored: list[DataFrame] = []
         try:
             if quarantine_out:
@@ -225,15 +237,25 @@ def validate_stream(
                 stored.append(batch_df)
             seen, found = Observation(), Observation()
             n = F.count(F.lit(1)).alias("n")
+            # the idle GC's horizon: the batch's newest ts, observed on
+            # the sink write rather than collected
+            newest = (
+                [F.max(F.unix_micros(convstate.EVENT_TS)).alias("newest_us")]
+                if idle_us is not None and convstate.carries_ts(batch_df)
+                else []
+            )
+            seen_aggs = ([n] if on_batch else []) + newest
             route = (
-                window_route(batch_df)
+                window_route(batch_df, carry)
                 if manifest_dir or quarantine_out
                 else None
             )
             viol = all_violations(
-                batch_df.observe(seen, n) if on_batch else batch_df,
+                batch_df.observe(seen, *seen_aggs) if seen_aggs else batch_df,
                 suite,
                 include_coverage=False,
+                carry=carry,
+                fd_carry=fd_carry,
             )
             if quarantine_out and route == "exchange":
                 # store the violations too, so the split does not run
@@ -254,11 +276,7 @@ def validate_stream(
             if quarantine_out:
                 # route this batch's violating INPUT rows to the
                 # quarantine table, (batch_id)-keyed for the same
-                # idempotent replay. Per-batch scope: only violations
-                # THIS batch's fused pass emitted quarantine rows — the
-                # stateful leg's cross-batch findings land as violations
-                # but cannot recall rows already passed through (the
-                # nightly batch run is ground truth)
+                # idempotent replay
                 from ocsf_validator_spark.violations import split_quarantine
 
                 _, quarantined = split_quarantine(
@@ -266,6 +284,23 @@ def validate_stream(
                 )
                 quarantined.write.mode("overwrite").parquet(
                     os.path.join(quarantine_out, f"batch_id={int(batch_id)}")
+                )
+            if carry_dir:
+                newest_us = _observed(seen, "newest_us") if newest else None
+                convstate.publish(
+                    carry_dir,
+                    batch_id,
+                    *convstate.commit(
+                        batch_df,
+                        suite,
+                        carry_dir,
+                        batch_id,
+                        carry=carry,
+                        fd_carry=fd_carry,
+                        stale_before_us=(
+                            None if newest_us is None else newest_us - idle_us
+                        ),
+                    ),
                 )
         finally:
             for frame in stored:
@@ -294,79 +329,58 @@ def validate_stream(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    queries = [writer.start()]
-    if stateful_ordering:
-        leg = stateful_ordering_violations(
+    query = writer.start()
+    if psi_ref is None:
+        return query
+    drift = (
+        streaming_psi(
             sdf,
-            watermark=stateful_watermark,
-            idle_timeout=stateful_idle_timeout,
-        ).select(*CANONICAL_COLS)
-        if drain_id is not None:
-            leg = leg.withColumn("drain_id", F.lit(str(drain_id)))
-        state_writer = (
-            leg.writeStream.format("parquet")
-            .option(
-                "path",
-                os.path.join(violations_out, f"batch_id={STATEFUL_BATCH_ID}"),
-            )
-            .option("checkpointLocation", checkpoint_dir.rstrip("/") + "_state")
-            .outputMode("append")
+            ref_hist=psi_ref,
+            bin_expr=psi_bin_expr,
+            watermark=psi_watermark,
+            window=psi_window,
+            threshold=psi_threshold,
+            min_n=psi_min_n,
         )
-        if available_now:
-            state_writer = state_writer.trigger(availableNow=True)
-        queries.append(state_writer.start())
-    if psi_ref is not None:
-        drift = (
-            streaming_psi(
-                sdf,
-                ref_hist=psi_ref,
-                bin_expr=psi_bin_expr,
-                watermark=psi_watermark,
-                window=psi_window,
-                threshold=psi_threshold,
-                min_n=psi_min_n,
-            )
-            .filter(F.col("drifted"))
-            .select(
-                F.lit("drift.psi").alias("constraint_id"),
-                F.lit(None).cast("string").alias("conv_id"),
-                F.lit(None).cast("int").alias("turn_idx"),
-                F.concat(
-                    F.lit("window ["),
-                    F.date_format("win_start", "yyyy-MM-dd HH:mm:ss"),
-                    F.lit(", "),
-                    F.date_format("win_end", "HH:mm:ss"),
-                    F.lit("): psi="),
-                    F.round("psi", 4).cast("string"),
-                    F.lit(" over "),
-                    F.col("n").cast("string"),
-                    F.lit(" rows"),
-                ).alias("reason"),
-                F.lit(psi_severity).alias("severity"),
-            )
+        .filter(F.col("drifted"))
+        .select(
+            F.lit("drift.psi").alias("constraint_id"),
+            F.lit(None).cast("string").alias("conv_id"),
+            F.lit(None).cast("int").alias("turn_idx"),
+            F.concat(
+                F.lit("window ["),
+                F.date_format("win_start", "yyyy-MM-dd HH:mm:ss"),
+                F.lit(", "),
+                F.date_format("win_end", "HH:mm:ss"),
+                F.lit("): psi="),
+                F.round("psi", 4).cast("string"),
+                F.lit(" over "),
+                F.col("n").cast("string"),
+                F.lit(" rows"),
+            ).alias("reason"),
+            F.lit(psi_severity).alias("severity"),
         )
-        if drain_id is not None:
-            drift = drift.withColumn("drain_id", F.lit(str(drain_id)))
-        drift_writer = (
-            drift.writeStream.format("parquet")
-            .option(
-                "path",
-                os.path.join(violations_out, f"batch_id={DRIFT_BATCH_ID}"),
-            )
-            .option("checkpointLocation", checkpoint_dir.rstrip("/") + "_drift")
-            .outputMode("append")
+    )
+    if drain_id is not None:
+        drift = drift.withColumn("drain_id", F.lit(str(drain_id)))
+    drift_writer = (
+        drift.writeStream.format("parquet")
+        .option(
+            "path",
+            os.path.join(violations_out, f"batch_id={DRIFT_BATCH_ID}"),
         )
-        if available_now:
-            drift_writer = drift_writer.trigger(availableNow=True)
-        queries.append(drift_writer.start())
-    return queries[0] if len(queries) == 1 else tuple(queries)
+        .option("checkpointLocation", checkpoint_dir.rstrip("/") + "_drift")
+        .outputMode("append")
+    )
+    if available_now:
+        drift_writer = drift_writer.trigger(availableNow=True)
+    return query, drift_writer.start()
 
 
 def read_violations(spark: SparkSession, violations_out: str) -> DataFrame:
     """Read a streaming violations sink back in the CANONICAL batch
     schema. The (batch_id)-keyed layout adds an int ``batch_id``
-    partition column (−1 = the cross-batch stateful leg, −2 = the
-    windowed PSI drift leg); this selects the canonical violation
+    partition column (−2 = the windowed PSI drift leg); this selects the canonical violation
     columns so the result unions cleanly with the batch runner's flat
     append-mode parquet output."""
     return read_parquet(spark, violations_out).select(*CANONICAL_COLS)
@@ -384,194 +398,6 @@ def cross_batch_duplicates(
     watermark so 10^12-turn streams don't accumulate unbounded keys."""
     return sdf.withWatermark(watermark_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)
-    )
-
-
-def stateful_ordering_violations(
-    sdf: DataFrame,
-    keys: tuple[str, str] = ("conv_id", "turn_idx"),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    idle_timeout: str | None = "2 hours",
-    precedence=None,
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: dense
-    turn ordering + ts monotonicity ACROSS micro-batches. Per-group
-    state carries (last_idx, last_ts_epoch_us), so a gap, duplicate, or
-    ts regression that straddles batches is caught — the stateful
-    complement to the per-batch window checks in validate_stream (the
-    batch engine's fused_group_violations semantics, carried as state
-    instead of a window frame).
-
-    Output: (conv_id, turn_idx, constraint_id, reason, severity),
-    append mode (violations are final facts).
-
-    State lifetime: two scalars per conversation, EVICTED by an
-    event-time timeout once the watermark passes the conversation's last
-    event by ``idle_timeout`` — without eviction, a long-lived stream
-    over churning conversations grows state monotonically (at 10^10
-    conversations that is a state-store OOM; mirrors how
-    cross_batch_duplicates bounds its dedup state by the watermark).
-    Documented blind-spot contract, same as cross_batch_duplicates:
-    rows later than ``watermark`` are dropped before the operator, and a
-    conversation RESUMING after eviction is validated from fresh state
-    (its first post-eviction row reports a turn_idx gap from 0 — a
-    conservative over-report; the nightly batch run is ground truth).
-    Size ``idle_timeout`` above the longest plausible conversation idle
-    gap. ``idle_timeout=None`` restores unbounded NoTimeout state for
-    bounded backfills where eviction is undesirable.
-
-    ``precedence`` (optional spec.Precedence): carries the MINIMUM
-    turn_idx of any prereq row seen so far per conversation, so a
-    trigger turn fires iff no prereq ranks strictly below it in TURN
-    order — exact full-run semantics even when batches arrive out of
-    turn order (a late prereq at turn 0 arriving after the trigger at
-    turn 1 was already reported follows the same
-    violations-are-final-facts contract as the ordering legs: the
-    conservative early report stands, nightly batch is ground truth).
-    State adds one int; NULL never matches trigger or prereq. Equal
-    turn_idx ties are compared strictly (an equal-idx prereq does not
-    count — duplicate-idx rows are already Unique violations)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    part, idx = keys
-    bounded = idle_timeout is not None
-    horizon_ms = _interval_ms(idle_timeout) if bounded else 0
-    NO_PRE = (1 << 62)  # sentinel: no prereq seen yet
-
-    def check(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if bounded and state.hasTimedOut:
-            # idle past the horizon: drop the conversation's state (a
-            # later resume re-validates from scratch — see docstring)
-            state.remove()
-            return
-        if state.exists:
-            if precedence is not None:
-                last_idx, last_us, min_pre = state.get
-                min_pre = NO_PRE if min_pre is None else min_pre
-            else:
-                last_idx, last_us = state.get
-                min_pre = NO_PRE
-        else:
-            last_idx, last_us, min_pre = None, None, NO_PRE
-        conv = key[0]
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values([idx, ts_col]).reset_index(drop=True)
-            t = pdf[idx].to_numpy(dtype="int64")
-            # highest turn seen before each row: cummax lag within the
-            # batch, FLOORED by the carry everywhere (not just row 0) —
-            # otherwise a batch like [1,3] after carry 2 reports a false
-            # gap at 3 and silently passes the re-delivered 1
-            carry = last_idx if last_idx is not None else -1
-            prev = np.empty_like(t)
-            prev[1:] = np.maximum.accumulate(t)[:-1]
-            prev[0] = carry
-            prev = np.maximum(prev, carry)
-            dup = (t == prev) & (prev >= 0)
-            below = (t < prev) & (prev >= 0)
-            gap = t > prev + 1
-            # ts regression vs the running max (vectorized cummax with
-            # the state carry as seed); NaT never regresses
-            us = (
-                pdf[ts_col].values.astype("datetime64[us]").astype("int64")
-                if str(pdf[ts_col].dtype).startswith("datetime")
-                else pdf[ts_col].to_numpy(dtype="int64")
-            )
-            valid = pdf[ts_col].notna().to_numpy()
-            seed = last_us if last_us is not None else np.iinfo("int64").min
-            run = np.maximum.accumulate(np.where(valid, us, seed))
-            prev_max = np.empty_like(run)
-            prev_max[1:] = run[:-1]
-            prev_max[0] = seed
-            prev_max = np.maximum(prev_max, seed)
-            regressed = valid & (us < prev_max)
-            for i in np.flatnonzero(dup):
-                out.append((conv, int(t[i]), "order.turn_idx",
-                            f"duplicate {idx} {t[i]}", "ERROR"))
-            for i in np.flatnonzero(below):
-                out.append((conv, int(t[i]), "order.turn_idx",
-                            f"out-of-order {idx} {t[i]}: already past {prev[i]}",
-                            "ERROR"))
-            for i in np.flatnonzero(gap & ~dup):
-                exp = prev[i] + 1 if prev[i] >= 0 else 0
-                out.append((conv, int(t[i]), "order.turn_idx",
-                            f"{idx} gap: expected {exp} got {t[i]}", "ERROR"))
-            for i in np.flatnonzero(regressed):
-                out.append((conv, int(t[i]), "monotonic.ts",
-                            f"{ts_col} regressed", "ERROR"))
-            if precedence is not None:
-                pc = precedence
-                ind = (
-                    pdf[pc.column].isin(pc.prereq).fillna(False).to_numpy()
-                )
-                # min prereq turn_idx STRICTLY BEFORE each row: shifted
-                # running min over the (idx, ts)-sorted batch, floored
-                # by the carried cross-batch minimum
-                pre_t = np.where(ind, t, NO_PRE)
-                run_min = np.minimum.accumulate(pre_t)
-                before = np.empty_like(run_min)
-                before[1:] = run_min[:-1]
-                before[0] = NO_PRE
-                before = np.minimum(before, min_pre)
-                trig = (pdf[pc.column] == pc.trigger).fillna(False).to_numpy()
-                bad = trig & ~(before < t)
-                reason = (
-                    f"{pc.column} '{pc.trigger}' with no prior "
-                    f"{'|'.join(pc.prereq)}"
-                )
-                for i in np.flatnonzero(bad):
-                    out.append((conv, int(t[i]), pc.constraint_id,
-                                reason, pc.severity.name))
-                if ind.any():
-                    min_pre = min(min_pre, int(pre_t.min()))
-            bmax = int(t.max())
-            last_idx = bmax if last_idx is None else max(last_idx, bmax)
-            if valid.any():
-                vmax = int(us[valid].max())
-                last_us = vmax if last_us is None else max(last_us, vmax)
-        if precedence is not None:
-            state.update(
-                (last_idx, last_us, None if min_pre == NO_PRE else min_pre)
-            )
-        else:
-            state.update((last_idx, last_us))
-        if bounded:
-            # evict once the watermark passes the conversation's last
-            # event (or the current watermark, for late-ish data) by the
-            # idle horizon; must be strictly beyond the watermark
-            wm = state.getCurrentWatermarkMs()
-            last_ms = (last_us // 1000) if last_us is not None else 0
-            state.setTimeoutTimestamp(max(wm, last_ms) + horizon_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[part, idx, "constraint_id", "reason", "severity"]
-            )
-
-    src = sdf.withWatermark(ts_col, watermark) if bounded else sdf
-    return src.groupBy(part).applyInPandasWithState(
-        check,
-        outputStructType=(
-            f"{part} string, {idx} int, constraint_id string, "
-            "reason string, severity string"
-        ),
-        stateStructType=(
-            "last_idx int, last_us long, min_pre long"
-            if precedence is not None
-            else "last_idx int, last_us long"
-        ),
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if bounded
-            else GroupStateTimeout.NoTimeout
-        ),
     )
 
 

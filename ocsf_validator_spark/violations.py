@@ -684,12 +684,15 @@ def fused_group_violations(
                 Window.partitionBy(*wpart)
             )
     if carry is not None:
-        # the carried boundary idx, visible on every real row of the
-        # conversation (full unordered frame; same partitioning as w,
-        # so no extra exchange)
-        cols["_c_bound"] = F.max(
-            F.when(F.col("_cr"), F.col(idx))
-        ).over(Window.partitionBy(part))
+        # the carried boundary idx and lowest prereq idxs, visible on
+        # every real row of the conversation (full unordered frame;
+        # same partitioning as w, so no extra exchange)
+        whole = Window.partitionBy(part)
+        cols["_c_bound"] = F.max(F.when(F.col("_cr"), F.col(idx))).over(whole)
+        for c in prec_cs:
+            cols[f"_c_pre_{c.seen_slug}"] = F.max(
+                F.col(f"_cr_pre_{c.seen_slug}")
+            ).over(whole)
     has_unique = any(isinstance(c, Unique) for c in cs)
     if has_unique:
         first_seen_str = F.concat_ws(
@@ -849,11 +852,21 @@ def fused_group_violations(
             )
         elif isinstance(c, Precedence):
             prior = F.coalesce(F.col(f"_prior_{c.seen_slug}"), F.lit(0))
+            # a trigger below the carried boundary sorts before the
+            # carrier, so its prior count holds only this sliver's rows:
+            # the carried prereqs count when they rank strictly before it
+            carried_before = (
+                F.coalesce(
+                    F.col(f"_c_pre_{c.seen_slug}") < F.col(idx), F.lit(False)
+                )
+                if carry is not None
+                else F.lit(False)
+            )
             legs.append(
                 (
                     (F.col(c.column) == F.lit(c.trigger))
                     & (prior == 0)
-                    & ~below_bound,
+                    & ~(below_bound & carried_before),
                     F.struct(
                         F.lit(c.constraint_id).alias("constraint_id"),
                         F.lit(
@@ -1865,10 +1878,11 @@ _NOT_IN_PLACE = (
 )
 
 
-def window_route(df: DataFrame) -> str:
+def window_route(df: DataFrame, carry: DataFrame | None = None) -> str:
     """How ``all_violations`` plans the conversation window over ``df``:
     ``"in_place"`` when the whole input is one small task, else
-    ``"exchange"``.
+    ``"exchange"``. With ``carry`` it is always ``"exchange"``: the
+    carried state's carrier rows reach the window through its exchange.
 
     In place means all three of:
 
@@ -1895,6 +1909,8 @@ def window_route(df: DataFrame) -> str:
     exchange."""
     from py4j.java_gateway import is_instance_of
 
+    if carry is not None:
+        return "exchange"
     spark = df.sparkSession
     gateway = spark.sparkContext._gateway
     qe = df._jdf.queryExecution()
@@ -1951,8 +1967,9 @@ def all_violations(
     job sizes the chunks). ``ordered_partitions`` is accepted and
     unused: the benchmark's traced decomposition still passes it.
 
-    ``carry`` (incremental runs): convstate boundary-state table,
-    seeded into the fused window pass (see fused_group_violations).
+    ``carry`` (incremental runs and carried streams): convstate
+    boundary-state table, seeded into the fused window pass (see
+    fused_group_violations).
     With carry, skewed conversations are not chunked: the carried
     out-of-order bound and opening suppression are per conversation.
 
@@ -1962,7 +1979,7 @@ def all_violations(
     suite runs in that one task with no exchange, and with one reducer
     where AQE could have kept more (see ``window_route``). Deciding runs
     no job."""
-    if window_route(df) == "in_place":
+    if window_route(df, carry) == "in_place":
         df = df.coalesce(1)
     fused = _fusable(suite, df, keys) if _present(df, keys) else None
     if fused:

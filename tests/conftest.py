@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 import uuid
 
 import pytest
@@ -97,6 +100,29 @@ def persisted_rdds(spark):
     persisted, cached frames and local checkpoints alike."""
     jsc = spark.sparkContext._jsc
     return lambda: set(jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture()
+def land_files(spark):
+    """``land_files(root, frames) -> [rows]``: land each frame as ONE
+    parquet file under ``root``, oldest first (explicit mtimes, so a
+    maxFilesPerTrigger=1 stream reads them in order); returns each
+    file's row count."""
+
+    def land(root, frames):
+        os.makedirs(root, exist_ok=True)
+        counts = []
+        for i, df in enumerate(frames):
+            staging = root + f"_stage{i}"
+            df.coalesce(1).write.parquet(staging)
+            (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
+            dest = os.path.join(root, f"{i:03d}.parquet")
+            shutil.move(part, dest)
+            os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+            counts.append(spark.read.parquet(dest).count())
+        return counts
+
+    return land
 
 
 @pytest.fixture()

@@ -1,19 +1,27 @@
 """Cross-increment conversation state (convstate.py): an incremental
-run seeded with the prior increments' per-conversation boundary
-summaries must reproduce the FRESH FULL RUN's violations row-for-row
-for in-order appends — duplicates, gaps, and ts regressions that
-straddle the increment boundary are caught, and conversations that
-merely continue in order stop producing the old false "gap: expected 0"
-reports. Out-of-order appends follow the streaming operator's
-conservative contract (convstate module docstring)."""
+run — or a stream micro-batch with ``stateful_ordering=True`` — seeded
+with the earlier slivers' per-conversation boundary summaries must
+reproduce the FRESH FULL RUN's violations row-for-row for in-order
+appends — duplicates, gaps, and ts regressions that straddle the
+boundary are caught, and conversations that merely continue in order
+stop producing the old false "gap: expected 0" reports. Out-of-order
+appends follow the conservative contract (convstate module
+docstring)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from ocsf_validator_spark import checkpoint as ckpt
 from ocsf_validator_spark import convstate
 from ocsf_validator_spark.runner import main
+from ocsf_validator_spark.streaming import (
+    TRANSCRIPT_DDL,
+    read_violations,
+    validate_stream,
+)
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -69,8 +77,41 @@ INC2_OOO = [
 ]
 
 
-def _run_two_increments(spark, tmp_path, inc2_rows):
+def _drain(spark, root, out, **kw):
+    """Drain ``root`` one file per micro-batch with the carried state;
+    returns the batch ids run."""
+    seen = []
+    sdf = (
+        spark.readStream.schema(TRANSCRIPT_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(root)
+    )
+    q = validate_stream(
+        sdf, out + "/viol", out + "/ckpt", stateful_ordering=True,
+        on_batch=lambda bid, *_: seen.append(bid), **kw,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return seen
+
+
+def _run_two_increments(spark, tmp_path, inc2_rows, via="increments",
+                        land_files=None):
     root = str(tmp_path / "landing")
+    if via == "stream":
+        # the two increments land as two files, one micro-batch each
+        land_files(root, [_df(spark, INC1), _df(spark, inc2_rows)])
+        out = str(tmp_path / "stream")
+        assert _drain(spark, root, out) == [0, 1]
+        rows = (
+            read_violations(spark, out + "/viol")
+            .filter("conv_id is not null")
+            .collect()
+        )
+        return root, out + "/ckpt", {
+            (r.constraint_id, r.conv_id, r.turn_idx, r.reason, r.severity)
+            for r in rows
+        }
     manifest = str(tmp_path / "manifest")
     viol = str(tmp_path / "viol_inc")
     _df(spark, INC1).coalesce(1).write.mode("append").parquet(root)
@@ -103,8 +144,13 @@ def _full_run(spark, tmp_path, root):
     }
 
 
-def test_in_order_increments_match_fresh_full_run(spark, tmp_path):
-    root, manifest, inc_set = _run_two_increments(spark, tmp_path, INC2)
+@pytest.mark.parametrize("via", ["increments", "stream"])
+def test_in_order_increments_match_fresh_full_run(
+    spark, tmp_path, land_files, via
+):
+    root, manifest, inc_set = _run_two_increments(
+        spark, tmp_path, INC2, via, land_files
+    )
     full_set = _full_run(spark, tmp_path, root)
     assert inc_set == full_set
     # and the specific cross-boundary defects actually fired:
@@ -125,14 +171,45 @@ def test_in_order_increments_match_fresh_full_run(spark, tmp_path):
     assert f3 and "f1 first" in f3[0]
 
 
-def test_out_of_order_append_is_conservatively_reported(spark, tmp_path):
-    _, _, inc_set = _run_two_increments(spark, tmp_path, INC2_OOO)
+@pytest.mark.parametrize("via", ["increments", "stream"])
+def test_out_of_order_append_is_conservatively_reported(
+    spark, tmp_path, land_files, via
+):
+    _, _, inc_set = _run_two_increments(
+        spark, tmp_path, INC2_OOO, via, land_files
+    )
     e2 = {(cid, r) for (cid, conv, t, r, _) in inc_set
           if conv == "e" and t == 2}
-    # exactly the streaming operator's conservative report, and no
-    # false 'gap: expected 0' / dup noise from the wrong lag context
+    # exactly the conservative out-of-order report, and no false
+    # 'gap: expected 0' / dup noise from the wrong lag context
     assert ("order.turn_idx", "out-of-order turn_idx 2: already past 3") in e2
     assert not any("gap" in r or "duplicate" in r for _, r in e2)
+
+
+def test_stream_replay_rewrites_its_own_batch(spark, tmp_path, land_files):
+    """A carried stream whose last batch Spark runs again (its commit
+    lost after the batch wrote its sink partition and its state) reads
+    the state its first attempt read and rewrites its own: the sink
+    rows and the state equal those of the uninterrupted drain."""
+    root, out = str(tmp_path / "landing"), str(tmp_path / "stream")
+    land_files(root, [_df(spark, INC1), _df(spark, INC2)])
+
+    def drained():
+        sink = sorted(
+            (r.batch_id, r.constraint_id, r.conv_id, r.turn_idx, r.reason)
+            for r in spark.read.parquet(out + "/viol").collect()
+        )
+        state = convstate.read_state(spark, out + "/ckpt/carry")
+        return sink, sorted(tuple(r) for r in state.collect())
+
+    assert _drain(spark, root, out) == [0, 1]
+    first = drained()
+    commits = os.path.join(out, "ckpt", "commits")
+    assert sorted(os.listdir(commits)) == [".0.crc", ".1.crc", "0", "1"]
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(commits, name))
+    assert _drain(spark, root, out) == [1]  # Spark ran batch 1 again
+    assert drained() == first
 
 
 def test_state_is_committed_with_the_ledger(spark, tmp_path):

@@ -475,10 +475,11 @@ def test_cli_stream_mode(spark, tmp_path):
 
 
 def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
-    """Advisor regression (round 3): the stateful leg APPENDS across
-    drains into batch_id=-1, so a later clean drain must not re-read an
-    earlier drain's stateful ERROR rows into its exit verdict. The fix
-    stamps a drain_id on stateful rows and scopes the verdict to it."""
+    """--stream --stateful-ordering carries conversation state across
+    drains: a duplicate of a turn an EARLIER drain delivered is an ERROR
+    in the partition of the batch that re-delivers it (exit 1), and a
+    later clean drain does not re-read that drain's ERROR rows into its
+    own exit verdict, which reads only its own batch partitions."""
     import glob as g
     import shutil
     import time as t
@@ -486,7 +487,6 @@ def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ocsf_validator_spark.runner import main
-    from ocsf_validator_spark.streaming import STATEFUL_BATCH_ID
 
     def _land(root, rows, name):
         df = spark.createDataFrame(
@@ -502,29 +502,27 @@ def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
         t.sleep(1.1)
 
     root = str(tmp_path / "landing2")
-    # drain 1: a cross-batch duplicate -> stateful ERROR, exit 1
-    _land(root, [
-        ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
-        ("c1", 1, "user", "b", None, "2026-01-01 00:00:01"),
-    ], "a_first")
-    _land(root, [
-        ("c1", 1, "user", "dup", None, "2026-01-01 00:00:02"),
-    ], "b_second")
     viol = str(tmp_path / "sviol2")
     ck = str(tmp_path / "sckpt2")
     argv = [
         "--input", root, "--stream", "--stateful-ordering",
         "--violations-out", viol, "--checkpoint", ck,
     ]
+    _land(root, [
+        ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
+        ("c1", 1, "user", "b", None, "2026-01-01 00:00:01"),
+    ], "a_first")
+    assert main(argv) == 0
+    # drain 2: a cross-drain duplicate -> ERROR in its batch, exit 1
+    _land(root, [
+        ("c1", 1, "user", "dup", None, "2026-01-01 00:00:02"),
+    ], "b_second")
     assert main(argv) == 1
-    state = spark.read.parquet(
-        os.path.join(viol, f"batch_id={STATEFUL_BATCH_ID}")
+    dup = spark.read.parquet(os.path.join(viol, "batch_id=1")).filter(
+        (F.col("conv_id") == "c1") & (F.col("turn_idx") == 1)
     )
-    assert "drain_id" in state.columns
-    assert state.filter(F.col("severity") == "ERROR").count() >= 1
-    # drain 2: a CLEAN fresh conversation (complete within its batch, so
-    # the per-batch leg passes) — before the drain_id scope the exit
-    # verdict re-read drain 1's appended stateful ERROR and exited 1
+    assert dup.filter(F.col("severity") == "ERROR").count() >= 1
+    # drain 3: a CLEAN fresh conversation (complete within its batch)
     _land(root, [
         ("c2", 0, "user", "c", None, "2026-01-01 00:00:03"),
         ("c2", 1, "user", "d", None, "2026-01-01 00:00:04"),

@@ -25,6 +25,26 @@ def _land_batches(spark, root: str, n: int = 4000) -> int:
     return n
 
 
+def _rows_df(spark, rows):
+    """Transcript rows with a string ts, as a frame with a timestamp ts."""
+    df = spark.createDataFrame(
+        rows, st.TRANSCRIPT_DDL.replace("timestamp", "string")
+    )
+    return df.withColumn("ts", df.ts.cast("timestamp"))
+
+
+def _carried_sink(spark, tmp_path, land_files, batches, name="c", **kw):
+    """Land each row list as one file, drain them one micro-batch each
+    with the carried conversation state (``stateful_ordering=True``)
+    and return the sink's rows."""
+    root, out = str(tmp_path / f"{name}_in"), str(tmp_path / f"{name}_out")
+    land_files(root, [_rows_df(spark, rows) for rows in batches])
+    q = _drain(spark, root, out, stateful_ordering=True, **kw)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return spark.read.parquet(out + "/viol").collect()
+
+
 def test_validate_stream_drains_and_matches_batch(spark, tmp_path):
     root = str(tmp_path / "landing")
     n = _land_batches(spark, root, 4000)
@@ -196,16 +216,11 @@ def test_list_partitions_parquet(spark, tmp_path):
     assert all(f["path"].endswith(".parquet") and f["bytes"] > 0 for f in files)
 
 
-def test_stateful_ordering_across_batches(spark, tmp_path):
-    """applyInPandasWithState custom stateful operator: a gap, a
-    duplicate, and a ts regression that STRADDLE micro-batches are all
-    caught (per-batch window checks cannot see them)."""
-    import pandas as pd
-
-    from ocsf_validator_spark import streaming as st
-
-    root = str(tmp_path / "in")
-    os.makedirs(root)
+def test_stateful_ordering_across_batches(spark, tmp_path, land_files):
+    """With the carried state, a gap, a duplicate and a ts regression
+    that STRADDLE micro-batches are all caught, each in the partition
+    of the batch that completes it (per-batch window checks alone
+    cannot see them)."""
     rows1 = [
         ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
         ("c1", 1, "user", "b", None, "2026-01-01 00:00:01"),
@@ -216,47 +231,21 @@ def test_stateful_ordering_across_batches(spark, tmp_path):
         ("c2", 0, "user", "dup-across-batch", None, "2026-01-01 00:00:05"),  # dup
         ("c2", 1, "user", "ts-regresses", None, "2025-12-31 23:59:00"),      # mono
     ]
-    for i, rows in enumerate([rows1, rows2]):
-        df = spark.createDataFrame(rows, st.TRANSCRIPT_DDL.replace("timestamp", "string"))
-        df.withColumn("ts", df.ts.cast("timestamp")).coalesce(1).write.parquet(
-            f"{root}/b{i}", mode="overwrite"
-        )
-    out_dir = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    sdf = (
-        spark.readStream.schema(st.TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root + "/b*")
-    )
-    q = (
-        st.stateful_ordering_violations(sdf)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     got = {
-        (r.conv_id, r.turn_idx, r.constraint_id)
-        for r in spark.read.parquet(out_dir).collect()
+        (r.conv_id, r.turn_idx, r.constraint_id): r.batch_id
+        for r in _carried_sink(spark, tmp_path, land_files, [rows1, rows2])
     }
-    assert ("c1", 3, "order.turn_idx") in got       # cross-batch gap
-    assert ("c2", 0, "order.turn_idx") in got       # cross-batch duplicate
-    assert ("c2", 1, "monotonic.ts") in got         # cross-batch regression
+    assert got.get(("c1", 3, "order.turn_idx")) == 1    # cross-batch gap
+    assert got.get(("c2", 0, "order.turn_idx")) == 1    # cross-batch duplicate
+    assert got.get(("c2", 1, "monotonic.ts")) == 1      # cross-batch regression
     # clean continuations produce nothing else for c1
     assert ("c1", 1, "order.turn_idx") not in got
 
 
-def test_stateful_ordering_carry_floor(spark, tmp_path):
-    """Review regression: after carry last_idx=2, a batch [1,3] must
-    flag the re-delivered 1 (out-of-order) and NOT flag 3 (the correct
-    next turn) — the carry floors the whole batch, not just row 0."""
-    from ocsf_validator_spark import streaming as st
-
-    root = str(tmp_path / "in")
-    os.makedirs(root)
+def test_stateful_ordering_carry_floor(spark, tmp_path, land_files):
+    """After carry last_idx=2, a batch [1,3] must flag the re-delivered
+    1 (out-of-order) and NOT flag 3 (the correct next turn) — the carry
+    floors the whole batch, not just row 0."""
     rows1 = [
         ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
         ("c1", 1, "user", "b", None, "2026-01-01 00:00:01"),
@@ -266,30 +255,9 @@ def test_stateful_ordering_carry_floor(spark, tmp_path):
         ("c1", 1, "user", "redelivered", None, "2026-01-01 00:00:05"),
         ("c1", 3, "user", "correct-next", None, "2026-01-01 00:00:06"),
     ]
-    for i, rows in enumerate([rows1, rows2]):
-        df = spark.createDataFrame(rows, st.TRANSCRIPT_DDL.replace("timestamp", "string"))
-        df.withColumn("ts", df.ts.cast("timestamp")).coalesce(1).write.parquet(
-            f"{root}/b{i}", mode="overwrite"
-        )
-    out_dir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    sdf = (
-        spark.readStream.schema(st.TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root + "/b*")
-    )
-    q = (
-        st.stateful_ordering_violations(sdf)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     got = {
         (r.turn_idx, r.constraint_id, r.reason)
-        for r in spark.read.parquet(out_dir).collect()
+        for r in _carried_sink(spark, tmp_path, land_files, [rows1, rows2])
     }
     reasons = {t: r for t, c, r in got if c == "order.turn_idx"}
     assert 1 in reasons and "out-of-order" in reasons[1]
@@ -522,108 +490,79 @@ def test_validate_stream_psi_leg_and_cli(spark, tmp_path, monkeypatch):
     assert code2 == 1
 
 
-def test_stateful_ordering_idle_state_eviction(spark, tmp_path):
-    """Event-time timeout bounds the stateful leg's store: once the
-    watermark passes an idle conversation's last event by the idle
-    horizon, its state is evicted. A row arriving AFTER eviction is
-    validated from fresh state per the documented blind-spot contract
-    (reports a gap from 0, not from the forgotten carry) — proving the
-    state was actually dropped. With idle_timeout=None the same
-    sequence keeps the carry and reports the gap from the true last
-    turn."""
-    from ocsf_validator_spark import streaming as st
-
-    def land(root, batches):
-        os.makedirs(root)
-        import time as t
-
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(
-                rows, st.TRANSCRIPT_DDL.replace("timestamp", "string")
-            )
-            df.withColumn("ts", df.ts.cast("timestamp")).coalesce(
-                1
-            ).write.parquet(f"{root}/b{i}", mode="overwrite")
-            t.sleep(1.1)  # distinct mtimes: deterministic batch order
-
+def test_stateful_ordering_idle_state_eviction(spark, tmp_path, land_files):
+    """The idle GC bounds the carried state: a batch whose newest ts
+    is past a conversation's last ts by ``stateful_idle_timeout`` drops
+    that conversation's state when it commits. A row arriving AFTER
+    that is validated from fresh state (a gap from 0, not from the
+    forgotten carry) — proving the state was dropped. With
+    ``stateful_idle_timeout=None`` the same sequence keeps the carry
+    and reports the gap from the true last turn."""
     batches = [
         [  # b0: conv A active, conv B starts
             ("cA", 0, "user", "a", None, "2026-01-01 00:00:00"),
             ("cA", 1, "user", "b", None, "2026-01-01 00:00:01"),
             ("cB", 0, "user", "x", None, "2026-01-01 00:00:00"),
         ],
-        [  # b1: only B; event time jumps 12h -> watermark will pass
+        [  # b1: only B; event time jumps 12h -> A is idle past 2 hours
+            # of b1's newest ts, so b1's commit drops A's state
             ("cB", 1, "user", "y", None, "2026-01-01 12:00:00"),
         ],
-        [  # b2: watermark (11:00) now exceeds A's timeout (02:00) ->
-            # A's state evicts during this batch
+        [  # b2: B continues
             ("cB", 2, "user", "z", None, "2026-01-01 12:01:00"),
         ],
-        [  # b3: A resumes AFTER eviction
+        [  # b3: A resumes AFTER its state was dropped
             ("cA", 5, "user", "resumed", None, "2026-01-01 12:30:00"),
         ],
     ]
 
-    def run(root, out, ck, idle_timeout):
-        sdf = (
-            spark.readStream.schema(st.TRANSCRIPT_DDL)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(root + "/b*")
+    def run(name, idle_timeout):
+        sink = _carried_sink(
+            spark, tmp_path, land_files, batches, name=name,
+            stateful_idle_timeout=idle_timeout,
         )
-        q = (
-            st.stateful_ordering_violations(
-                sdf, watermark="1 hour", idle_timeout=idle_timeout
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
         return {
             (r.conv_id, r.turn_idx): r.reason
-            for r in spark.read.parquet(out).collect()
+            for r in sink
             if r.constraint_id == "order.turn_idx"
         }
 
-    land(str(tmp_path / "in_evict"), batches)
-    evicted = run(
-        str(tmp_path / "in_evict"),
-        str(tmp_path / "out_evict"),
-        str(tmp_path / "ck_evict"),
-        "2 hours",
-    )
+    evicted = run("evict", "2 hours")
     # fresh state after eviction: gap measured from 0, not carry 1
     assert ("cA", 5) in evicted, evicted
     assert "expected 0 got 5" in evicted[("cA", 5)]
 
-    land(str(tmp_path / "in_keep"), batches)
-    kept = run(
-        str(tmp_path / "in_keep"),
-        str(tmp_path / "out_keep"),
-        str(tmp_path / "ck_keep"),
-        None,  # unbounded NoTimeout: carry survives the idle gap
-    )
+    kept = run("keep", None)  # no GC: the carry survives the idle gap
     assert ("cA", 5) in kept, kept
     assert "expected 2 got 5" in kept[("cA", 5)]
 
 
-def test_validate_stream_with_stateful_ordering(spark, tmp_path):
-    """Composed pipeline (round-3): the cross-batch stateful leg runs
-    alongside the per-batch suite and lands in the SAME sink under
-    batch_id=-1 with the canonical schema. A duplicate that straddles
-    micro-batches must appear exactly once in the stateful partition."""
-    root = str(tmp_path / "landing_state")
+def test_stateful_idle_timeout_parsed_exactly(spark, tmp_path):
+    """An idle timeout is a sum of <number> <unit> terms, parsed
+    exactly; any other text raises ValueError before a query starts."""
+    from ocsf_validator_spark.convstate import idle_timeout_ms
 
-    def _mk(rows):
-        df = spark.createDataFrame(
-            rows,
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts string",
-        )
-        return df.withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1)
+    assert idle_timeout_ms("1.5 hours") == 5_400_000
+    assert idle_timeout_ms("1 hour 30 minutes") == 5_400_000
+    active = len(spark.streams.active)
+    os.makedirs(tmp_path / "none")
+    for bad in ("2 hours junk", "2 hourz", "0 seconds"):
+        with pytest.raises(ValueError):
+            _drain(
+                spark, str(tmp_path / "none"), str(tmp_path / "out"),
+                stateful_ordering=True, stateful_idle_timeout=bad,
+            )
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "out")
+
+
+def test_validate_stream_with_stateful_ordering(spark, tmp_path, land_files):
+    """Composed pipeline: with ``stateful_ordering=True`` validate_stream
+    returns ONE query, and a re-delivery that straddles micro-batches
+    is reported exactly once in the whole sink, in the partition of the
+    batch that re-delivers it, with the canonical schema; its input row
+    is quarantined with that batch like any other violating row."""
+    from pyspark.sql.streaming import StreamingQuery
 
     b1 = [
         ("cx", 0, "user", "a", None, "2026-01-01 00:00:00"),
@@ -631,42 +570,27 @@ def test_validate_stream_with_stateful_ordering(spark, tmp_path):
         ("cx", 2, "user", "c", None, "2026-01-01 00:00:02"),
     ]
     b2 = [b1[1]]  # re-delivery of turn 1 in a LATER batch
-    # land as FLAT files (the file stream source does not descend into
-    # non-partition subdirs); names + mtimes order b1 before b2
-    import glob as g
-    import shutil
-    import time as t
-
-    os.makedirs(root)
-    for name, rows in (("a_batch1", b1), ("b_batch2", b2)):
-        staging = str(tmp_path / f"stage_{name}")
-        _mk(rows).write.parquet(staging)
-        part = g.glob(os.path.join(staging, "part-*.parquet"))[0]
-        shutil.copy(part, os.path.join(root, f"{name}.parquet"))
-        t.sleep(1.1)  # distinct mtimes for deterministic batch order
-
-    sdf = (
-        spark.readStream.schema(st.TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", "1")  # force one file per batch
-        .parquet(root)
+    root, out = str(tmp_path / "landing_state"), str(tmp_path / "state")
+    land_files(root, [_rows_df(spark, b1), _rows_df(spark, b2)])
+    q = _drain(
+        spark, root, out, stateful_ordering=True, quarantine_out=out + "/quar"
     )
-    viol_out = str(tmp_path / "viol_state")
-    q, sq = st.validate_stream(
-        sdf,
-        violations_out=viol_out,
-        checkpoint_dir=str(tmp_path / "ckpt_state"),
-        stateful_ordering=True,
-    )
+    assert isinstance(q, StreamingQuery)
     q.awaitTermination(120)
-    sq.awaitTermination(120)
+    assert q.exception() is None
+    quar = spark.read.parquet(out + "/quar")
+    assert [(r.batch_id, r.conv_id, r.turn_idx) for r in quar.collect()] == [
+        (1, "cx", 1)
+    ]
 
+    viol_out = out + "/viol"
     allv = spark.read.parquet(viol_out)
     assert "batch_id" in allv.columns
-    stateful = allv.filter(F.col("batch_id") == st.STATEFUL_BATCH_ID)
-    cross = stateful.filter(
+    cross = allv.filter(
         (F.col("constraint_id") == "order.turn_idx") & (F.col("turn_idx") == 1)
     ).collect()
-    assert len(cross) == 1, stateful.collect()
+    assert len(cross) == 1, allv.collect()
+    assert cross[0].batch_id == 1
     assert "already past" in cross[0].reason
     # canonical read unions cleanly with a batch-runner-shaped frame
     canon = st.read_violations(spark, viol_out)
@@ -719,23 +643,6 @@ def test_validate_stream_quarantine_leg(spark, tmp_path):
         assert copies > 1, f"non-duplicate key {k} missing from quarantine"
 
 
-def _land_files(spark, root: str, frames) -> list[int]:
-    """Land each frame as ONE parquet file under ``root``, oldest first
-    (explicit mtimes, so a maxFilesPerTrigger=1 stream reads them in
-    order); returns each file's row count."""
-    os.makedirs(root, exist_ok=True)
-    counts = []
-    for i, df in enumerate(frames):
-        staging = root + f"_stage{i}"
-        df.coalesce(1).write.parquet(staging)
-        (part,) = glob.glob(os.path.join(staging, "part-*.parquet"))
-        dest = os.path.join(root, f"{i:03d}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-        counts.append(spark.read.parquet(dest).count())
-    return counts
-
-
 def _drain(spark, root: str, out: str, **kw):
     sdf = (
         spark.readStream.schema(st.TRANSCRIPT_DDL)
@@ -760,7 +667,7 @@ def _manifest(manifest_dir: str, field: str = "n_violations") -> dict:
     return {m["batch_id"]: m[field] for m in lines}
 
 
-def test_validate_stream_zero_row_batch(spark, tmp_path):
+def test_validate_stream_zero_row_batch(spark, tmp_path, land_files):
     """A landed zero-row file is a micro-batch whose fused pass AQE
     collapses to an empty relation, taking the input observation's
     CollectMetrics node with it. The drain must still report (bid, 0, 0)
@@ -768,7 +675,7 @@ def test_validate_stream_zero_row_batch(spark, tmp_path):
     line per batch matching the sink."""
     df = synth_transcripts(spark, n_turns=300, seed=11)
     root, out = str(tmp_path / "land0"), str(tmp_path / "out0")
-    _, n = _land_files(spark, root, [df.limit(0), df])
+    _, n = land_files(root, [df.limit(0), df])
     seen = []
     q = _drain(
         spark, root, out, manifest_dir=out + "/manifest",
@@ -790,11 +697,16 @@ def test_validate_stream_zero_row_batch(spark, tmp_path):
         ("callbacks", "in_place", 1),
         ("quarantine", "in_place", 3),
         ("quarantine", "exchange", 5),
+        ("stateful", "in_place", (3, 7)),
+        ("stateful", "exchange", (4, 7)),
     ],
-    ids=["none", "callbacks", "quarantine", "quarantine-exchange"],
+    ids=[
+        "none", "callbacks", "quarantine", "quarantine-exchange",
+        "stateful", "stateful-exchange",
+    ],
 )
 def test_validate_stream_jobs_per_batch(
-    spark, tmp_path, jobs_of, persisted_rdds, opts, route, pin
+    spark, tmp_path, jobs_of, persisted_rdds, land_files, opts, route, pin
 ):
     """A one-file micro-batch is one small scan task, so the fused
     window runs in it (manifest ``window_route`` "in_place") and the
@@ -803,13 +715,16 @@ def test_validate_stream_jobs_per_batch(
     batch (a local checkpoint the sink write fills) and re-reads it: 3
     jobs a batch. With the AQE advisory size forced to one byte the
     window takes its exchange; the leg then stores the violations too,
-    so the split does not rerun that exchange: 5 jobs a batch. Nothing
-    is left persisted, and whatever the options, every reported count
-    equals its file's rows and its batch's sink rows."""
+    so the split does not rerun that exchange: 5 jobs a batch. With
+    ``stateful_ordering`` a pin is (first batch, carried batch): the
+    first batch has no state to read, and every batch pays the state
+    commit; a carried batch takes the exchange route. Nothing is left
+    persisted, and whatever the options, every reported count equals
+    its file's rows and its batch's sink rows."""
     df = synth_transcripts(spark, n_turns=600, seed=5, partitions=2)
     root, out = str(tmp_path / "landj"), str(tmp_path / "outj")
-    counts = _land_files(
-        spark, root,
+    counts = land_files(
+        root,
         [df.filter(df.turn_idx % 3 == 0), df.filter(df.turn_idx % 3 > 0)],
     )
     seen, kw = [], {}
@@ -818,6 +733,8 @@ def test_validate_stream_jobs_per_batch(
                   on_batch=lambda *a: seen.append(a))
     if opts == "quarantine":
         kw["quarantine_out"] = out + "/quar"
+    if opts == "stateful":
+        kw["stateful_ordering"] = True
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)
     if route == "exchange":
@@ -828,7 +745,8 @@ def test_validate_stream_jobs_per_batch(
     finally:
         spark.conf.set(key, prev)
     n_files = len(counts)
-    assert jobs == pin * n_files
+    first, carried = pin if isinstance(pin, tuple) else (pin, pin)
+    assert jobs == first + carried * (n_files - 1)
     assert persisted_rdds() - before == set()
     sink = _sink_counts(spark, out + "/viol")
     assert len(sink) == n_files
@@ -837,19 +755,23 @@ def test_validate_stream_jobs_per_batch(
         assert {bid: nv for bid, _, nv in seen} == sink
         assert _manifest(out + "/manifest") == sink
         routes = _manifest(out + "/manifest", "window_route")
-        assert set(routes.values()) == {route}
+        carried_route = "exchange" if opts == "stateful" else route
+        assert routes == {
+            bid: route if bid == min(routes) else carried_route
+            for bid in routes
+        }
 
 
 def test_validate_stream_restart_contract(spark, tmp_path):
-    """Kill-and-resume with the same checkpoints (round-5 worklist 6):
-    the stateful (batch_id=-1) and drift (batch_id=-2) legs must emit
-    each finding EXACTLY ONCE across drains — cross-batch state is
-    restored from the checkpoint on restart (a defect straddling the
-    kill still fires, a PSI window straddling the kill still counts its
-    pre-kill rows), re-runs never re-emit committed rows, and drain_id
-    scopes every row to the drain that produced it. An abrupt stop()
-    mid-drain exercises the crash path; the final union must equal a
-    fresh uninterrupted run over the same files."""
+    """Kill-and-resume with the same checkpoints: the carried batches
+    and the drift (batch_id=-2) leg must emit each finding EXACTLY ONCE
+    across drains — cross-batch state is restored from the checkpoints
+    on restart (a defect straddling the kill still fires, in its own
+    batch's partition; a PSI window straddling the kill still counts
+    its pre-kill rows), re-runs never re-emit committed rows, and
+    drain_id scopes every drift row to the drain that produced it. An
+    abrupt stop() mid-drain exercises the crash path; the final sink
+    must equal a fresh uninterrupted run over the same files."""
     import glob as g
     import shutil
     import time as t
@@ -877,8 +799,9 @@ def test_validate_stream_restart_contract(spark, tmp_path):
     ]
     f3 = [
         # re-delivery of turn 1 with a CURRENT ts: an original-ts replay
-        # would fall below the drain-1 watermark and be dropped — the
-        # documented late-data blind spot, not the restart contract
+        # would fall below the drift leg's watermark and leave its
+        # windows — the documented late-data blind spot, not the
+        # restart contract
         ("cx", 1, "user", "b", None, "2026-01-01 00:12:29"),
         ("cy", 5, "user", "long text again", None, "2026-01-01 00:12:30"),
         ("zz", 1, "user", "x", None, "2026-01-01 00:12:31"),
@@ -916,7 +839,6 @@ def test_validate_stream_restart_contract(spark, tmp_path):
             violations_out=out,
             checkpoint_dir=ck,
             stateful_ordering=True,
-            stateful_watermark="1 minute",
             drain_id=drain,
             **PSI,
         )
@@ -945,44 +867,42 @@ def test_validate_stream_restart_contract(spark, tmp_path):
 
     def legs(path):
         df = spark.read.parquet(path)
-        stateful = df.filter(F.col("batch_id") == st.STATEFUL_BATCH_ID)
+        batches = df.filter(F.col("batch_id") >= 0)
         drift = df.filter(F.col("batch_id") == st.DRIFT_BATCH_ID)
-        return stateful.collect(), drift.collect()
+        return batches.collect(), drift.collect()
 
     got_s, got_d = legs(out)
     want_s, want_d = legs(fout)
     # exactly once, equal to the uninterrupted run (reason strings carry
     # the PSI window's n — a straddling window must count its pre-kill
     # rows, proving state restoration, not just de-duplication)
-    key = lambda r: (r.constraint_id, r.conv_id, r.turn_idx, r.reason)
+    key = lambda r: (r.batch_id, r.constraint_id, r.conv_id, r.turn_idx, r.reason)
     assert sorted(map(key, got_s)) == sorted(map(key, want_s))
     assert sorted(r.reason for r in got_d) == sorted(r.reason for r in want_d)
-    assert len(want_s) >= 2 and len(want_d) >= 1  # the legs actually fired
-    # drain scoping: every row names the drain that produced it, and the
-    # killed drain's rows (if any committed) were never re-emitted
-    assert {r.drain_id for r in got_s} | {r.drain_id for r in got_d} <= {
-        "d1", "d2a", "d2b"
-    }
-    cross = [r for r in got_s if r.conv_id == "cx" and r.turn_idx == 1]
+    assert len(want_d) >= 1  # the drift leg actually fired
+    # drain scoping: every drift row names the drain that produced it,
+    # and the killed drain's rows (if any committed) were never
+    # re-emitted
+    assert {r.drain_id for r in got_d} <= {"d1", "d2a", "d2b"}
+    order = [r for r in got_s if r.constraint_id == "order.turn_idx"]
+    cross = [r for r in order if r.conv_id == "cx" and r.turn_idx == 1]
     assert len(cross) == 1 and "already past 2" in cross[0].reason
-    assert cross[0].drain_id in ("d2a", "d2b")  # fired AFTER the restart
-    gap = [r for r in got_s if r.conv_id == "cy" and r.turn_idx == 5]
+    assert cross[0].batch_id == 2  # c3's batch: fired AFTER the restart
+    gap = [r for r in order if r.conv_id == "cy" and r.turn_idx == 5]
     assert len(gap) == 1 and "expected 3 got 5" in gap[0].reason
 
 
-def test_stateful_precedence_across_batches(spark, tmp_path):
-    """Precedence carried as streaming state (min prereq turn_idx per
-    conversation): a trigger whose prereq landed in an EARLIER
-    micro-batch stays clean; a trigger with no prereq anywhere fires;
-    a carried prereq that ranks ABOVE the trigger in turn order does
-    NOT satisfy it (min-idx state, not a bit)."""
-    from ocsf_validator_spark.spec import Precedence
+def test_stateful_precedence_across_batches(spark, tmp_path, land_files):
+    """Precedence carried across micro-batches: a trigger whose prereq
+    landed in an EARLIER micro-batch stays clean; a trigger with no
+    prereq anywhere fires; a carried prereq that ranks ABOVE the
+    trigger in turn order does NOT satisfy it (the carry holds the
+    lowest prereq turn_idx, not only a seen bit)."""
+    from ocsf_validator_spark.spec import Precedence, transcript_suite
 
     prec = Precedence(
         column="role", trigger="purchase", prereq=("view", "click")
     )
-    root = str(tmp_path / "in")
-    os.makedirs(root)
     rows1 = [
         ("c1", 0, "view", "a", None, "2026-01-01 00:00:00"),
         ("c2", 0, "error", "x", None, "2026-01-01 00:00:00"),
@@ -994,33 +914,13 @@ def test_stateful_precedence_across_batches(spark, tmp_path):
         ("c3", 2, "purchase", "fires-too", None, "2026-01-01 00:00:10"),  # prereq idx 5 > 2
         ("c3", 6, "purchase", "ok-after", None, "2026-01-01 00:00:11"),   # prereq idx 5 < 6
     ]
-    for i, rows in enumerate([rows1, rows2]):
-        df = spark.createDataFrame(
-            rows, st.TRANSCRIPT_DDL.replace("timestamp", "string")
-        )
-        df.withColumn("ts", df.ts.cast("timestamp")).coalesce(1).write.parquet(
-            f"{root}/b{i}", mode="overwrite"
-        )
-    out_dir = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    sdf = (
-        spark.readStream.schema(st.TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(root + "/b*")
+    sink = _carried_sink(
+        spark, tmp_path, land_files, [rows1, rows2],
+        suite=transcript_suite().add(prec),
     )
-    q = (
-        st.stateful_ordering_violations(sdf, precedence=prec)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     prec_rows = {
         (r.conv_id, r.turn_idx)
-        for r in spark.read.parquet(out_dir).collect()
+        for r in sink
         if r.constraint_id == "precedence.role.purchase"
     }
     assert prec_rows == {("c2", 1), ("c3", 2)}
