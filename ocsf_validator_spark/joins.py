@@ -112,8 +112,9 @@ def pick_num_salts(
 def probe_hot_key_rows(df: DataFrame, on: Sequence[str]) -> int:
     """Row count of the hottest join key on the probe side: one
     key-column-pruned scan with map-side partial aggregation, then a
-    1-row global max — the same bounded-output discipline as
-    violations.detect_skewed_conv_counts. NULL keys are excluded (they
+    1-row global max — the same bounded-output discipline as the
+    runner's skew probe (stats.bucketed_probe_stats, which collects only
+    conversations above its floor). NULL keys are excluded (they
     never match an equi-join, so they cannot make a hot task)."""
     probe = df.select(*on).na.drop(how="any", subset=list(on))
     row = (

@@ -145,6 +145,59 @@ def one_task_bytes(spark: SparkSession) -> int:
     return conf_bytes(spark, "spark.sql.files.openCostInBytes")
 
 
+# plan nodes that keep a frame from running in the task that scans it:
+# an exchange (adaptive plans wrap every plan that has one), or a node
+# whose RDD is built by running jobs first (a cached relation's plan,
+# and subqueries below)
+_NOT_IN_PLACE = (
+    "org.apache.spark.sql.execution.exchange.Exchange",
+    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+    "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec",
+)
+
+
+def one_task(df: DataFrame) -> bool:
+    """Whether ``df`` can run whole in one task where it is scanned, so
+    ``df.coalesce(1)`` plans no exchange and is ``SinglePartition``:
+
+    1. its physical plan holds no exchange (and no node whose RDD would
+       run jobs to be built, so this decision runs none);
+    2. its size estimate is at most ``one_task_bytes``, or Spark plans
+       it as exactly one partition anyway.
+
+    Below ``openCostInBytes`` Spark still scans each file as a task of
+    its own (100 k synth turns in two files, a 2.2 MB estimate: 2
+    tasks), and a stage after that scan would shuffle what one task
+    can hold. Gathering it gives up that scan parallelism.
+    The cap was measured with one ``run_validation`` (a violation sink
+    and a checkpoint manifest, 40% of the turns in one conversation,
+    two scan files, ``local[2]``, 16 shuffle partitions, 4-vCPU host;
+    medians of 7 alternating warm runs after 2 warm-up rounds, the
+    other route forced by moving this cap for the window and the stats
+    probe only). Just under it, 183 k turns at a 3.85 MiB estimate:
+    2.42 s in place against 3.36 s via the exchanges. Just over it,
+    205 k turns at 4.28 MiB: 2.86 s via the exchanges against 2.16 s
+    forced in place. So the cap costs nothing where it gathers, and
+    errs toward the exchange past it."""
+    from py4j.java_gateway import is_instance_of
+
+    spark = df.sparkSession
+    gateway = spark.sparkContext._gateway
+    plan = df._jdf.queryExecution().executedPlan()
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if not node.subqueries().isEmpty() or any(
+            is_instance_of(gateway, node, c) for c in _NOT_IN_PLACE
+        ):
+            return False
+        children = node.children()
+        nodes += [children.apply(i) for i in range(children.size())]
+    if size_estimate(df) <= one_task_bytes(spark):
+        return True
+    return plan.execute().getNumPartitions() == 1
+
+
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """A literal DataFrame over ``rows`` with ``schema`` (DDL string or
     StructType), scanned JVM-side when possible (module contract)."""

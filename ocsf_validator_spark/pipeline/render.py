@@ -25,9 +25,9 @@ Scale notes (the 100 TB design point):
   not a shuffle-side sort.
 - The skew hazard is a single giant conversation. Upstream constraint
   validation bounds it (MaxLen per turn + the suite's turn-count
-  stats), and the same probe that auto-routes hot as-of keys
-  (violations.detect_skewed_conv_counts) applies if a corpus
-  legitimately contains million-turn conversations.
+  stats), and the runner's skew probe (the heavy-hitter conversations
+  stats.bucketed_probe_stats collects on its stats scan) names them if
+  a corpus legitimately contains million-turn conversations.
 - Determinism: turns order by (turn_idx, rendered-turn-text), so even a
   defective duplicate-turn_idx conversation renders identically across
   engines, partitionings, and retries.

@@ -89,7 +89,7 @@ def asof_join(
     Hot keys are routed AUTOMATICALLY: a single hot key concentrates
     that key's full history in one window partition, so when any key
     carries >= ``hot_key_threshold`` unioned rows (one pruned-column
-    probe, the violations.detect_skewed_conv_counts pattern), that
+    probe that collects only the keys above the threshold), that
     key's rows are split into ``hot_splits`` time ranges, each split
     fills forward independently, and the cross-split carry (the latest
     right payload per boundary, one row per split) is a bounded
@@ -164,9 +164,9 @@ def asof_join(
 
     hot: list[tuple] = []
     if hot_key_threshold:
-        # the skew probe (violations.detect_skewed_conv_counts pattern):
-        # pruned-column groupBy with map-side partial agg, only
-        # above-threshold keys collected — bounded whatever the keyspace
+        # the hot-key probe: pruned-column groupBy with map-side
+        # partial agg, only above-threshold keys collected — bounded
+        # whatever the keyspace
         hot = [
             tuple(r[k] for k in keys)
             for r in u.groupBy(*keys)

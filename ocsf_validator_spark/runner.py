@@ -213,11 +213,13 @@ def run_validation(
     With ``report_json`` the report carries the route each adaptive
     step took, read from the helper that step's own call reads:
     ``window_route`` (``violations.window_route``: ``"in_place"`` when
-    the input is one small task and the window runs in it, else
+    the input is small and the window runs in one task, else
     ``"exchange"``), ``stats_route`` (``stats.stats_route``) and
     ``verdict_route`` (``verdict.verdict_route``), each ``"one_task"``
     when that aggregate finishes in one task without its exchange, else
-    ``"exchange"``, and ``skew_route``.
+    ``"exchange"``, and ``skew_route``: the conversations split into
+    chunks, or None when none is (no skew, a carried run, or a window
+    in place).
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -318,9 +320,11 @@ def run_validation(
     # conversations too big for one window task are split into turn_idx
     # chunks of one task's share of the rows. Threshold: ~4x that share
     # (never below skew_min_rows, the probe's collection floor, so the
-    # candidates are always a superset).
+    # candidates are always a superset). A window that runs in place is
+    # one task, so nothing is chunked there (see all_violations).
     skewed: list[str] = []
     skew_route = None
+    routes["window_route"] = window_route(df, carry_state)
     if detect_skew:
         from ocsf_validator_spark.violations import skew_chunk_rows
 
@@ -345,8 +349,9 @@ def run_validation(
             if carry_state is not None:
                 # carried increments keep whole-conversation windows
                 # (see all_violations)
-                chunk_rows = None
                 route = "the whole-conversation window (incremental carry)"
+            elif routes["window_route"] == "in_place":
+                route = "the whole-conversation window (one task, in place)"
             else:
                 # chunk count for dense turn_idx; gaps leave fewer
                 n_chunks = sum(-(-n // chunk_rows) for _, n in skewed_counts)
@@ -354,9 +359,10 @@ def run_validation(
                     f"chunked windows of {chunk_rows} rows "
                     f"({n_chunks} partitions)"
                 )
-            skew_route = {
-                "convs": len(skewed), "rows": n_big, "chunk_rows": chunk_rows,
-            }
+                skew_route = {
+                    "convs": len(skewed), "rows": n_big,
+                    "chunk_rows": chunk_rows,
+                }
             say(
                 f"skew: routing {len(skewed)} conversations >= {skew_rows} "
                 f"rows ({n_big} rows) to {route}"
@@ -530,7 +536,6 @@ def run_validation(
             "skipped_buckets": skipped,
             "phase_sec": timings,
             "skew_route": skew_route,
-            "window_route": window_route(df, carry_state),
             **routes,
             "constraints": summary,
         }

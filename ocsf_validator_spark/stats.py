@@ -97,23 +97,26 @@ def column_stats(
 
 
 def stats_route(df: DataFrame) -> str:
-    """How ``bucketed_probe_stats`` plans its second level over ``df``:
+    """How ``bucketed_probe_stats`` plans its two levels over ``df``:
     ``"one_task"`` when the optimizer's size estimate of ``df`` is at
     most ``spark.sql.files.openCostInBytes`` (``localframe.
     one_task_bytes``), else ``"exchange"``.
 
-    Level 1 combines map-side, so its shuffle carries at most one row
-    per conversation and scan task: on 100 k turns (2.2 MB) it is 18 KB,
-    which AQE reads in one reducer, and the level-2 exchange is then a
-    job of one task that moves 18 KB in and 1.8 KB out. Gathered, level
-    1's reducers and level 2 run in one task, so its cost grows with
-    the number of conversations. The cap is the measured one, not the
-    AQE advisory size (64 MiB). Medians of 5 alternating collects on
-    ``local[2]`` with 16 shuffle partitions: one-turn conversations (a
-    level 1 as large as the input) at a 4.8 MB estimate, 0.72 s gathered
-    against 0.75 s via the exchange; 20 turns per conversation at
-    38 MB, 0.75 s on both; one-turn conversations at 57 MB, 5.28 s
-    against 3.84 s."""
+    Via the exchanges, level 1 combines map-side, so its shuffle carries
+    at most one row per conversation and scan task: on 100 k turns
+    (2.2 MB) it is 18 KB, which AQE reads in one reducer, and the
+    level-2 exchange is then a job of one task that moves 18 KB in and
+    1.8 KB out. On the one-task route the scan, both levels and their
+    merge run in one task, so its cost grows with the input and the
+    number of conversations. The cap is the measured one, not the AQE
+    advisory size (64 MiB). Medians of 5 alternating collects on
+    ``local[2]`` with 16 shuffle partitions, when this route still ran
+    level 1 on the scan's tasks and gathered only its output: one-turn
+    conversations (a level 1 as large as the input) at a 4.8 MB
+    estimate, 0.72 s gathered against 0.75 s via the exchange; 20 turns
+    per conversation at 38 MB, 0.75 s on both; one-turn conversations
+    at 57 MB, 5.28 s against 3.84 s. The route that also scans in one
+    task is measured within a whole run in ``localframe.one_task``."""
     cap = one_task_bytes(df.sparkSession)
     return "one_task" if size_estimate(df) <= cap else "exchange"
 
@@ -161,10 +164,11 @@ def bucketed_probe_stats(
     Output: (bucket int, n_rows long, <max_aggs aliases...>,
     _skew array<struct<n:long, conv>> sorted desc) — one row per bucket.
 
-    Level 2 runs in one task without an exchange when ``stats_route(df)``
-    is ``"one_task"``: level 1's output is gathered with ``coalesce(1)``,
-    so the collect runs 2 jobs (level 1's exchange, then the rest)
-    instead of 3.
+    Both levels run in the scan's task, without an exchange, when
+    ``stats_route(df)`` is ``"one_task"``: they aggregate
+    ``df.coalesce(1)``, whose ``SinglePartition`` satisfies both
+    groupings, so the collect runs 1 job where the exchange route runs
+    3 (level 1's exchange, level 2's, then the final aggregate).
     """
     max_aggs = max_aggs or {}
     # merge_aggs ({alias: (aggregate Column, merge)} with merge in
@@ -175,13 +179,13 @@ def bucketed_probe_stats(
     # run ZERO extra jobs. Same pure-codegen discipline as max_aggs.
     merge_aggs = merge_aggs or {}
     _MERGE = {"sum": F.sum, "min": F.min, "max": F.max}
+    if stats_route(df) == "one_task":
+        df = df.coalesce(1)
     l1 = df.groupBy(conv_col).agg(
         F.count(F.lit(1)).alias("_n"),
         *[e.alias(a) for a, e in max_aggs.items()],
         *[e.alias(a) for a, (e, _) in merge_aggs.items()],
     )
-    if stats_route(df) == "one_task":
-        l1 = l1.coalesce(1)
     aggs = [F.sum("_n").alias("n_rows")]
     for a in max_aggs:
         aggs.append(F.max(a).alias(a))

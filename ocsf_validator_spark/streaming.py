@@ -15,9 +15,10 @@ north-star extension for validating an APPEND-ONLY transcript stream
   write and the checkpoint commit rewrites the same partition instead
   of duplicating rows.
 
-  Cost: a micro-batch Spark reads as one small task (a one-file batch
-  below the AQE advisory size) is one Spark job, the sink write: the
-  fused window runs in the scan's task (``violations.window_route``).
+  Cost: a small micro-batch (files of at most ``spark.sql.files.
+  openCostInBytes`` in all, or one file below the AQE advisory size) is
+  one Spark job, the sink write: the fused window runs in one scan
+  task (``violations.window_route``).
   A larger batch adds the window's exchange as a job of its own. The
   violation count (manifest line, ``on_batch``) and the input row
   count (``on_batch``) ride that write as observed metrics
@@ -136,8 +137,8 @@ def validate_stream(
     micro-batch is meaningless — absence in 10k rows is not absence in
     the table); everything else is the batch engine unchanged.
 
-    A micro-batch Spark reads as one small task (``window_route`` is
-    ``"in_place"``) costs one job, the sink write, with or without
+    A small micro-batch (``window_route`` is ``"in_place"``) costs one
+    job, the sink write, with or without
     ``manifest_dir`` and ``on_batch``: the window runs in the scan's
     task, and the violation and input row counts they report are
     observed metrics of that write. A batch that takes the exchange

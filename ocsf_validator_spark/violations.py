@@ -39,6 +39,7 @@ from ocsf_validator_spark.localframe import (
     conf_bytes,
     empty_df,
     local_df,
+    one_task,
     size_estimate,
 )
 
@@ -534,13 +535,13 @@ def fused_group_violations(
 
     Exchange note: the conv_id exchange is planned only when the input
     does not already satisfy the window's distribution. ``all_violations``
-    hands this function ``df.coalesce(1)`` when the input is one small
-    task (see ``window_route``); ``SinglePartition`` satisfies both
-    windows, so the pass then runs in that task with no exchange. A
-    file large enough to be worth splitting is already two or more
-    scan partitions, so that route never removes map-side parallelism.
-    It can remove reduce-side parallelism: via the exchange, AQE keeps
-    up to ``defaultParallelism`` reducers once the shuffle passes
+    hands this function ``df.coalesce(1)`` when the input is small
+    (see ``window_route``); ``SinglePartition`` satisfies both
+    windows, so the pass then runs in that task with no exchange. That
+    route gives up parallelism on both sides: an input below
+    ``spark.sql.files.openCostInBytes`` that Spark scans as two or more
+    tasks is read by one, and via the exchange AQE keeps up to
+    ``defaultParallelism`` reducers once the shuffle passes
     ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MiB).
 
     Scale note: partitionBy(conv_id) puts each conversation in one task.
@@ -1847,87 +1848,45 @@ def residual_violations(
     return df.select(*need_cols).mapInPandas(run, schema)
 
 
-def detect_skewed_conv_counts(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    threshold: int = 1_000_000,
-    max_detected: int = 10_000,
-) -> list[tuple[str, int]]:
-    """[(conv_id, n_rows)] for conversations too large for one window
-    task. groupBy(conv).count reads ONLY the conv column (pruned scan),
-    does map-side partial aggregation, and only rows above the threshold
-    are collected — bounded output no matter the conversation count."""
-    rows = (
-        df.groupBy(conv_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= threshold)
-        .orderBy(F.col("_n").desc())
-        .limit(max_detected)
-        .collect()
-    )
-    return [(r[0], int(r[1])) for r in rows if r[0] is not None]
-
-
-# plan nodes that rule the in-place window out: an exchange (adaptive
-# plans wrap every plan that has one), or a node whose RDD is built by
-# running jobs first (a cached relation's plan, and subqueries below)
-_NOT_IN_PLACE = (
-    "org.apache.spark.sql.execution.exchange.Exchange",
-    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
-    "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec",
-)
-
-
 def window_route(df: DataFrame, carry: DataFrame | None = None) -> str:
     """How ``all_violations`` plans the conversation window over ``df``:
-    ``"in_place"`` when the whole input is one small task, else
+    ``"in_place"`` when the whole input runs in one small task, else
     ``"exchange"``. With ``carry`` it is always ``"exchange"``: the
     carried state's carrier rows reach the window through its exchange.
 
-    In place means all three of:
+    In place means both of:
 
-    1. the physical plan of ``df`` holds no exchange (and no node whose
-       RDD would run jobs to be built, so this decision runs none);
-    2. Spark plans ``df`` as exactly one partition;
-    3. the optimizer's size estimate of ``df`` is at most
-       ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
+    1. ``localframe.one_task(df)``: no exchange in the physical plan of
+       ``df``, and a size estimate of at most ``spark.sql.files.
+       openCostInBytes`` or one partition as Spark plans it;
+    2. the size estimate is at most
+       ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the outer
+       cap on a one-partition input (set it to ``1b`` to force the
+       exchange).
 
     Then ``df.coalesce(1)`` is ``SinglePartition``, which satisfies the
-    window's, the skew-chunk carriers' and the coverage aggregate's
-    distributions, so the suite runs as one scan-to-sink stage with no
-    exchange. It takes no map-side parallelism away: Spark already
-    splits a file larger than ``spark.sql.files.openCostInBytes`` into
-    two or more scan partitions, so condition 2 fails for it. On the
-    reduce side it can: with ``spark.sql.adaptive.coalescePartitions.
-    parallelismFirst`` (the default) AQE does not coalesce toward the
-    advisory size but toward ``defaultParallelism`` reducers of at
-    least ``minPartitionSize`` (1 MiB), so a shuffle past 1 MiB keeps
-    two or more reducers (``batch_skew``'s 2.1 MB window shuffle runs
-    as 2 tasks). The trade was measured at the largest one-partition
-    input (one 3.4 MB file of 170 k turns, ``local[2]``): a write of
-    the suite's violations took 1.09 s in place against 1.15 s via the
-    exchange."""
-    from py4j.java_gateway import is_instance_of
-
+    window's and the coverage aggregate's distributions, so the suite
+    runs as one scan-to-sink stage with no exchange. Deciding runs no
+    job. It takes parallelism away on both sides: an input below
+    ``openCostInBytes`` that Spark scans as two or more tasks
+    (``batch_skew``'s 2.2 MB input of two files scans as 2) is read by
+    one, and on the reduce
+    side ``spark.sql.adaptive.coalescePartitions.parallelismFirst``
+    (the default) would keep ``defaultParallelism`` reducers once a
+    shuffle passes ``minPartitionSize`` (1 MiB; ``batch_skew``'s 2.1 MB
+    window shuffle ran as 2 tasks). Measured at both caps: one 3.4 MB
+    file of 170 k turns (one partition, ``local[2]``), a write of the
+    suite's violations took 1.09 s in place against 1.15 s via the
+    exchange; the openCostInBytes cap is measured in
+    ``localframe.one_task``."""
     if carry is not None:
         return "exchange"
-    spark = df.sparkSession
-    gateway = spark.sparkContext._gateway
-    qe = df._jdf.queryExecution()
-    plan = qe.executedPlan()
-    nodes = [plan]
-    while nodes:
-        node = nodes.pop()
-        if not node.subqueries().isEmpty() or any(
-            is_instance_of(gateway, node, c) for c in _NOT_IN_PLACE
-        ):
-            return "exchange"
-        children = node.children()
-        nodes += [children.apply(i) for i in range(children.size())]
-    cap = conf_bytes(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    if size_estimate(df) > cap:
+    cap = conf_bytes(
+        df.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    )
+    if size_estimate(df) > cap or not one_task(df):
         return "exchange"
-    return "in_place" if plan.execute().getNumPartitions() == 1 else "exchange"
+    return "in_place"
 
 
 def skew_chunk_rows(spark: SparkSession, n_rows: int) -> int:
@@ -1973,19 +1932,22 @@ def all_violations(
     With carry, skewed conversations are not chunked: the carried
     out-of-order bound and opening suppression are per conversation.
 
-    An input Spark reads as one small task (``window_route`` is
-    ``"in_place"``: no exchange in its plan, one partition, at most the
-    AQE advisory size) is planned as ``df.coalesce(1)``, so the whole
-    suite runs in that one task with no exchange, and with one reducer
-    where AQE could have kept more (see ``window_route``). Deciding runs
-    no job."""
-    if window_route(df, carry) == "in_place":
+    A small input (``window_route`` is ``"in_place"``: no exchange in
+    its plan, a size estimate of at most ``openCostInBytes`` or one
+    partition, and at most the AQE advisory size) is planned as
+    ``df.coalesce(1)``, so the whole suite runs in one task with no
+    exchange, where Spark would have scanned it in two or more tasks
+    and AQE could have kept two or more reducers (see
+    ``window_route``). Its ``skewed_convs`` are not chunked: one task
+    has nothing to balance. Deciding runs no job."""
+    in_place = window_route(df, carry) == "in_place"
+    if in_place:
         df = df.coalesce(1)
     fused = _fusable(suite, df, keys) if _present(df, keys) else None
     if fused:
         row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
         chunk_rows = None
-        if skewed_convs and carry is None:
+        if skewed_convs and carry is None and not in_place:
             n = (observed_metrics or {}).get("__n_rows")
             chunk_rows = skew_chunk_rows(
                 df.sparkSession, df.count() if n is None else n

@@ -95,6 +95,25 @@ def peak_exec_memory_of(spark):
 
 
 @pytest.fixture()
+def no_one_task(spark):
+    """``no_one_task(fn) -> fn()``: run fn with the one-task routes
+    forced onto their exchanges: no non-empty input fits an
+    openCostInBytes of 0, so the stats probe, the verdict aggregate and
+    the window over an input Spark plans as two or more partitions all
+    take their exchange."""
+
+    def run(fn):
+        prev = spark.conf.get("spark.sql.files.openCostInBytes")
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        try:
+            return fn()
+        finally:
+            spark.conf.set("spark.sql.files.openCostInBytes", prev)
+
+    return run
+
+
+@pytest.fixture()
 def persisted_rdds(spark):
     """``persisted_rdds() -> set``: ids of the RDDs the context holds
     persisted, cached frames and local checkpoints alike."""

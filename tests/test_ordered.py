@@ -205,9 +205,10 @@ def test_scalable_row_legs_ride_staged(spark):
     assert _diff(got, want) == 0
 
 
-def test_all_violations_routed_matches_unrouted(spark):
+def test_all_violations_routed_matches_unrouted(spark, no_one_task):
     """all_violations with skewed_convs (chunked windows) returns exactly
-    the rows of the run that keeps every conversation whole."""
+    the rows of the run that keeps every conversation whole (on the
+    forced exchange: in place nothing is chunked)."""
     df = synth_transcripts(spark, n_turns=6000, seed=7)
     suite = transcript_suite()
     skewed = [
@@ -215,10 +216,53 @@ def test_all_violations_routed_matches_unrouted(spark):
         for r in df.groupBy("conv_id").count().filter(F.col("count") > 200).collect()
     ]
     assert skewed, "fixture must contain a skewed conversation"
-    routed = all_violations(
-        df, suite, skewed_convs=skewed, observed_metrics={"__n_rows": 600}
+
+    def diff():
+        routed = all_violations(
+            df, suite, skewed_convs=skewed, observed_metrics={"__n_rows": 600}
+        )
+        assert "_chunk" in routed._jdf.queryExecution().executedPlan().toString()
+        return _diff(routed, all_violations(df, suite))
+
+    assert no_one_task(diff) == 0
+
+
+def test_in_place_rows_equal_forced_exchange_chunks(spark, no_one_task):
+    """A small skewed input with duplicate keys and NULL turn_idx rows:
+    in place the skewed conversation stays whole in the one task, with
+    no exchange; with the one-task routes forced onto the exchange it
+    is chunked. Both return the same rows."""
+    from collections import Counter
+
+    from ocsf_validator_spark.violations import window_route
+
+    base = synth_transcripts(spark, n_turns=6000, seed=7, skew_turns=1500)
+    dups = base.filter(F.xxhash64("conv_id", "turn_idx") % 41 == 0).withColumn(
+        "ts", F.col("ts") + F.expr("INTERVAL 5 MINUTES")
     )
-    assert _diff(routed, all_violations(df, suite)) == 0
+    nulls = base.filter(F.xxhash64("conv_id", "turn_idx") % 37 == 0).withColumn(
+        "turn_idx", F.lit(None).cast("int")
+    )
+    df = base.unionByName(dups).unionByName(nulls)
+    n_rows = df.count()
+
+    def run():
+        viol = all_violations(
+            df, transcript_suite(), skewed_convs=["c00000000"],
+            observed_metrics={"__n_rows": n_rows}, include_coverage=False,
+        )
+        plan = viol._jdf.queryExecution().executedPlan().toString()
+        return window_route(df), plan, viol.collect()
+
+    route, plan, in_place = run()
+    assert route == "in_place"
+    assert "_chunk" not in plan and "Exchange" not in plan, plan
+    route, plan, chunked = no_one_task(run)
+    assert route == "exchange" and "_chunk" in plan, plan
+    assert Counter(in_place) == Counter(chunked)
+    big = [r for r in in_place if r.conv_id == "c00000000"]
+    assert any(r.turn_idx is None for r in big)
+    assert any(r.constraint_id == "unique.conv_turn" for r in big)
 
 
 # ---- the chunked kernel, case by case -------------------------------------
@@ -389,16 +433,19 @@ def test_routed_conversation_under_increment_carry(spark):
     assert _diff(got, want) == 0
 
 
-def test_routed_plan_builds_without_jobs_or_python(spark, jobs_of):
-    """Building the routed plan runs no job, and the plan has no Python
-    stage: the skew route is JVM windows end to end."""
+def test_routed_plan_builds_without_jobs_or_python(
+    spark, jobs_of, no_one_task
+):
+    """Building the routed plan (on the forced exchange, where it
+    chunks) runs no job, and the plan has no Python stage: the skew
+    route is JVM windows end to end."""
     df = synth_transcripts(spark, n_turns=3000, seed=7)
-    out, jobs = jobs_of(
+    out, jobs = no_one_task(lambda: jobs_of(
         lambda: all_violations(
             df, transcript_suite(), skewed_convs=["c00000000"],
             observed_metrics={"__n_rows": 3000},
         ),
-    )
+    ))
     assert jobs == 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "_chunk" in plan

@@ -149,11 +149,12 @@ def test_runner_coverage_matches_library_per_constraint(spark):
     assert got == {"cov.core": 0, "cov.extra": 1}
 
 
-def test_runner_skew_routing_equivalence(spark, tmp_path):
+def test_runner_skew_routing_equivalence(spark, tmp_path, no_one_task):
     """With the floor lowered so synth's 5%-skew conversation trips the
     threshold, the routed run must produce exactly the violations of the
     unrouted run (chunked windows == whole-conversation window), and its
-    report must name the route it took."""
+    report must name the route it took. Both run on the forced exchange:
+    in place nothing is chunked."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
@@ -162,12 +163,14 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         out_a = str(tmp_path / "routed")
         out_b = str(tmp_path / "plain")
         rep_a, rep_b = str(tmp_path / "a.json"), str(tmp_path / "b.json")
-        ra = run_validation(spark, df, num_buckets=8, quiet=True,
-                            skew_min_rows=50, violations_out=out_a,
-                            report_json=rep_a)
-        rb = run_validation(spark, df, num_buckets=8, quiet=True,
-                            detect_skew=False, violations_out=out_b,
-                            report_json=rep_b)
+        ra = no_one_task(lambda: run_validation(
+            spark, df, num_buckets=8, quiet=True, skew_min_rows=50,
+            violations_out=out_a, report_json=rep_a,
+        ))
+        rb = no_one_task(lambda: run_validation(
+            spark, df, num_buckets=8, quiet=True, detect_skew=False,
+            violations_out=out_b, report_json=rep_b,
+        ))
         with open(rep_a) as f:
             route = json.load(f)["skew_route"]
         # 5000 rows over 200 shuffle partitions -> 25-row chunks
@@ -176,7 +179,8 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         with open(rep_b) as f:
             rep = json.load(f)
         assert rep["skew_route"] is None
-        # synth scans as several partitions: the window keeps its exchange
+        # synth scans as several partitions: past the forced cap the
+        # window keeps its exchange
         assert rep["window_route"] == "exchange"
         assert ra.exit_code == rb.exit_code
         assert ra.n_violations == rb.n_violations
@@ -187,10 +191,13 @@ def test_runner_skew_routing_equivalence(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_routed_run_costs_at_most_one_job_more(spark, tmp_path, jobs_of):
+def test_routed_run_costs_at_most_one_job_more(
+    spark, tmp_path, jobs_of, no_one_task
+):
     """The chunked skew route adds one small carrier aggregate to the
     violations plan and nothing else: a routed run_validation runs at
-    most one job more than the same run with detect_skew=False."""
+    most one job more than the same run with detect_skew=False (both on
+    the forced exchange, where the route chunks)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -198,14 +205,14 @@ def test_routed_run_costs_at_most_one_job_more(spark, tmp_path, jobs_of):
         df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
         runs = {}
         for skew in (True, False):
-            _, runs[skew] = jobs_of(
+            _, runs[skew] = no_one_task(lambda: jobs_of(
                 lambda: run_validation(
                     spark, df, num_buckets=8, quiet=True, detect_skew=skew,
                     skew_min_rows=100,
                     violations_out=str(tmp_path / f"v-{skew}"),
                     report_json=str(tmp_path / f"r-{skew}.json"),
                 ),
-            )
+            ))
         with open(tmp_path / "r-True.json") as f:
             assert json.load(f)["skew_route"]["convs"] == 1
         assert runs[True] <= runs[False] + 1
@@ -266,42 +273,70 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
 
 
 @pytest.mark.parametrize(
-    "sinks, pin",
-    [("sink", 6), ("sink+cap", 7), ("sink+quarantine", 9)],
-    ids=["sink", "sink+cap", "sink+quarantine"],
+    "sinks, route, pin",
+    [
+        ("sink", "in_place", 3),
+        ("sink+cap", "in_place", 4),
+        ("sink+quarantine", "in_place", 6),
+        ("sink", "exchange", 8),
+        ("sink+cap", "exchange", 9),
+        ("sink+quarantine", "exchange", 11),
+    ],
+    ids=[
+        "sink", "sink+cap", "sink+quarantine",
+        "sink-exchange", "sink+cap-exchange", "sink+quarantine-exchange",
+    ],
 )
 def test_routed_run_with_sinks_job_count(
-    spark, tmp_path, jobs_of, persisted_rdds, sinks, pin
+    spark, tmp_path, jobs_of, persisted_rdds, no_one_task, sinks, route, pin
 ):
-    """A skew-routed run_validation with a checkpoint manifest and a
-    violation sink: stats (2: level 1's exchange, then level 2 in the
-    task that reads it), the sink write (3: the window's two exchanges,
-    then one job that writes and stores the violation rows) and the
-    verdict collect over the small stored rows (1) make 6 jobs; the
-    schema audit adds none. The detail-row cap adds its exchange (7);
-    the quarantine leg adds its semi-join's exchanges and write (9).
-    Every leg after the first sink reads the stored rows, the report
-    names the one-task routes, and nothing the run stored is left
-    persisted when it returns."""
+    """A run_validation with a skewed conversation, a checkpoint
+    manifest and a violation sink. The input is small, so in place the
+    stats probe (1), the sink write (1: scan, window and write in one
+    task, which stores the violation rows) and the verdict collect over
+    the small stored rows (1) make 3 jobs, and the skewed conversation
+    is not chunked; the schema audit adds none. The detail-row cap adds
+    its exchange (4); the quarantine leg adds its semi-join's exchanges
+    and write (6). With every one-task route forced onto its exchange
+    the conversation is chunked: stats 3 (two exchanges, then the final
+    aggregate), the sink write 3 (the skew-chunk carriers' exchange, the
+    window's, then the write) and the verdict 2 make 8; the cap 9, the
+    quarantine leg 11. Every leg after the first sink reads the stored
+    rows, the report names the routes, and nothing the run stored is
+    left persisted when it returns."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
         before = persisted_rdds()
-        _, n = jobs_of(lambda: run_validation(
-            spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            violations_out=str(tmp_path / "viol"),
-            report_json=str(tmp_path / "r.json"),
-            max_violation_rows=5 if sinks == "sink+cap" else None,
-            quarantine_out=(
-                str(tmp_path / "quar") if sinks == "sink+quarantine" else None
-            ),
-        ))
+
+        def run():
+            return jobs_of(lambda: run_validation(
+                spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+                violations_out=str(tmp_path / "viol"),
+                report_json=str(tmp_path / "r.json"),
+                max_violation_rows=5 if sinks == "sink+cap" else None,
+                quarantine_out=(
+                    str(tmp_path / "quar")
+                    if sinks == "sink+quarantine" else None
+                ),
+            ))
+
+        _, n = run() if route == "in_place" else no_one_task(run)
         with open(tmp_path / "r.json") as f:
             rep = json.load(f)
-        assert rep["skew_route"]["convs"] == 1
-        assert (rep["stats_route"], rep["verdict_route"]) == ("one_task",) * 2
+        if route == "in_place":
+            assert rep["skew_route"] is None
+            assert (rep["stats_route"], rep["verdict_route"]) == (
+                "one_task", "one_task"
+            )
+        else:
+            assert rep["skew_route"]["convs"] == 1
+            assert (rep["stats_route"], rep["verdict_route"]) == (
+                "exchange", "exchange"
+            )
+        assert rep["window_route"] == route
         assert n == pin
         assert persisted_rdds() - before == set()
     finally:
@@ -858,22 +893,39 @@ def test_session_shuffle_codec(spark):
     assert conf.get("spark.buffer.pageSize") == str(4 * 2**20 - 16)
 
 
-def test_run_validation_shuffle_bytes(spark, shuffle_bytes_of):
-    """Shuffle bytes of one run_validation over a fixed 20 k-turn input,
-    pinned at the zstd figure (442,806 B) plus 5%; lz4 blocks wrote
-    855,456 B."""
+def test_run_validation_shuffle_bytes(
+    spark, tmp_path, shuffle_bytes_of, no_one_task
+):
+    """Shuffle bytes of one run_validation over a fixed 20 k-turn input.
+    With a violation sink every phase runs in one task and it writes
+    none (without one, the verdict over the lazy violation rows keeps
+    its exchange). With the one-task routes forced onto their exchanges
+    and no sink it is pinned at the zstd figure (442,806 B) plus 5%;
+    lz4 blocks wrote 855,456 B."""
     df = synth_transcripts(spark, n_turns=20_000, seed=1)
-    res, n = shuffle_bytes_of(lambda: run_validation(spark, df, quiet=True))
+    res, n = shuffle_bytes_of(lambda: run_validation(
+        spark, df, quiet=True, violations_out=str(tmp_path / "viol")
+    ))
+    assert (res.n_rows, n) == (20_000, 0)
+    res, n = no_one_task(
+        lambda: shuffle_bytes_of(lambda: run_validation(spark, df, quiet=True))
+    )
     assert res.n_rows == 20_000
     assert n <= 465_000
 
 
-def test_run_validation_peak_execution_memory(spark, peak_exec_memory_of):
+def test_run_validation_peak_execution_memory(
+    spark, peak_exec_memory_of, no_one_task
+):
     """Peak execution memory of one run_validation over a fixed 20 k-turn
-    input, summed over its stages, pinned at the figure with get_spark's
-    4 MiB - 16 B pages (35,782,528 B) plus 5%; the 64 MiB pages Spark
-    derives from this session's heap recorded 539,099,008 B."""
+    input with the one-task routes forced onto their exchanges (whose
+    reduce tasks each take pages), summed over its stages, pinned at
+    the figure with get_spark's 4 MiB - 16 B pages (35,782,528 B) plus
+    5%; the 64 MiB pages Spark derives from this session's heap
+    recorded 539,099,008 B."""
     df = synth_transcripts(spark, n_turns=20_000, seed=1)
-    res, n = peak_exec_memory_of(lambda: run_validation(spark, df, quiet=True))
+    res, n = no_one_task(lambda: peak_exec_memory_of(
+        lambda: run_validation(spark, df, quiet=True)
+    ))
     assert res.n_rows == 20_000
     assert n <= 37_570_000

@@ -534,25 +534,9 @@ def test_loop_detector_semantics(spark):
     assert ids2 == {"c1", "c4"}
 
 
-@pytest.fixture()
-def no_one_task(spark):
-    """Runs fn with the one-task routes forced onto their exchange: no
-    non-empty input fits an openCostInBytes of 0."""
-    def run(fn):
-        prev = spark.conf.get("spark.sql.files.openCostInBytes")
-        spark.conf.set("spark.sql.files.openCostInBytes", "0")
-        try:
-            return fn()
-        finally:
-            spark.conf.set("spark.sql.files.openCostInBytes", prev)
-
-    return run
-
-
 def test_stats_routes_agree(spark, jobs_of, no_one_task):
-    """A small input's stats probe gathers level 1 into one task and
-    runs level 2 there: 2 jobs where the exchange route runs 3, and the
-    same rows."""
+    """A small input's stats probe scans and runs both levels in one
+    task: 1 job where the exchange route runs 3, and the same rows."""
     from ocsf_validator_spark.stats import bucketed_probe_stats, stats_route
     from ocsf_validator_spark.synth import synth_transcripts
 
@@ -571,7 +555,7 @@ def test_stats_routes_agree(spark, jobs_of, no_one_task):
     gathered, n_gathered = jobs_of(collect)
     assert no_one_task(lambda: stats_route(df)) == "exchange"
     exchanged, n_exchanged = no_one_task(lambda: jobs_of(collect))
-    assert (n_gathered, n_exchanged) == (2, 3)
+    assert (n_gathered, n_exchanged) == (1, 3)
     assert gathered == exchanged
     assert any(r._skew for r in gathered)
 

@@ -544,15 +544,26 @@ def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
     in place (one scan partition, below the AQE advisory size) the
     suite plans no exchange and a write is one job; with the advisory
     size forced to one byte the window takes its exchange, a job of its
-    own. Both routes emit the same violation rows."""
+    own. Both routes emit the same violation rows. Three small files,
+    which Spark scans as three partitions, are below openCostInBytes,
+    so they too run in place in one job, with the same rows."""
     from collections import Counter
 
+    from ocsf_validator_spark.localframe import one_task_bytes, size_estimate
     from ocsf_validator_spark.synth import synth_transcripts
 
-    path = str(tmp_path / "one")
-    synth_transcripts(spark, n_turns=2000, seed=42).coalesce(1).write.parquet(
-        path
-    )
+    path, multi = str(tmp_path / "one"), str(tmp_path / "three")
+    synth = synth_transcripts(spark, n_turns=2000, seed=42)
+    synth.coalesce(1).write.parquet(path)
+    synth.repartition(3).write.parquet(multi)
+    df = spark.read.parquet(multi)
+    assert df.rdd.getNumPartitions() == 3
+    assert size_estimate(df) <= one_task_bytes(spark)
+    viol = all_violations(df, SUITE, include_coverage=False)
+    _, jobs = jobs_of(lambda: viol.write.format("noop").mode("overwrite").save())
+    assert (window_route(df), jobs) == ("in_place", 1)
+    assert "Exchange" not in _executed_plan(viol)
+    from_three = viol.collect()
     df = spark.read.parquet(path)
 
     def run():
@@ -575,6 +586,7 @@ def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
     assert (route, jobs) == ("exchange", 2)
     assert "Exchange" in plan, plan
     assert in_place and Counter(in_place) == Counter(exchanged)
+    assert Counter(from_three) == Counter(in_place)
 
 
 def test_window_route_keeps_the_exchange_of_an_exchange_input(spark, jobs_of):
