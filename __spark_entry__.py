@@ -4281,7 +4281,7 @@ FROM tf JOIN cb ON tf.hb = cb.hb JOIN cl ON tf.hl = cl.hl
 GROUP BY tf.doc_id ORDER BY tf.doc_id
 """
 
-    # replay of drift.emd_split/_emd_of_counts: same conditional
+    # replay of drift.emd_split/emd_table: same conditional
     # per-bin counts, cumulative sums in HUGEINT (cum·total products
     # exceed int64 at corpus scale), gap-width multipliers, one
     # cast-then-divide

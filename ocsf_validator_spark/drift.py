@@ -1,27 +1,50 @@
-"""Distribution-drift checks — KS and PSI (north-star additions; the
-reference has no statistical checks, SURVEY.md §2.10).
+"""Distribution-drift checks — PSI, EMD and KS (north-star additions;
+the reference has no statistical checks, SURVEY.md §2.10).
 
-Two drift statistics over ``ts`` and ``length(text)`` (or any numeric
-expression):
+PSI and EMD are each defined once, over one binned histogram:
 
-- **PSI** — pure column algebra over fixed-bin histograms: one
-  aggregation per side, a tiny full-outer join on bin ids, a sum of
-  ``(p - q) * ln(p / q)``. No UDF, fully distributed, scale-free (the
-  histograms are ≤ a few hundred rows regardless of input size).
+- **One staging.** ``binned_counts`` maps rows to ``(bucket, bin,
+  c_cnt, r_cnt)``: one groupBy(bucket, bin) with conditional counts of
+  the current and the reference slice, NULL values dropped. The scalar
+  paths (``psi_split``, ``emd_split``) use a constant bucket;
+  ``psi_split_by_bucket`` defaults to ``stats.bucket_col``.
+  ``psi_from_histograms`` / ``emd_from_histograms`` (and with them
+  ``psi`` and the DriftGate leg of ``violations.dataset_findings``,
+  whose baseline is a ``local_df``) union two one-sided ``(bin, cnt)``
+  histograms into the same shape.
+- **One table kernel per metric.** ``psi_table`` / ``emd_table`` fold
+  that histogram through ``coalesce(1)`` (no exchange: it holds at
+  most buckets × bins rows, and the scalar paths collect all of it
+  anyway), per-bucket total windows and the term builders, to one row
+  per bucket. The scalar APIs collect that row (NaN on an empty side).
+  The streaming legs (``streaming.streaming_psi`` /
+  ``streaming_emd``) call the same builders over their per-bin
+  columns.
 
-- **KS** (two-sample, exact) — two implementations:
+PSI sums ``psi_term`` = ``(p - q) * (ln max(p, eps) - ln max(q, eps))``
+over bins, with p and q shares of the binned rows: the floor applies
+only inside the log, so a bin present on one side only contributes a
+finite term. EMD (Wasserstein-1, bin units) sums ``emd_term`` =
+``|cum_c·n_r − cum_r·n_c| · gap`` in decimal(38,0) and ``emd_value``
+divides once, cast-then-divide, so a SQL replay's
+``::DOUBLE / ::DOUBLE`` matches it bit for bit.
 
-  1. ``ks_distance`` — SQL-expressible: union both samples with
-     indicator columns, cumulative counts over a RANGE window ordered by
-     value (RANGE so ties are handled exactly), D = max |ECDF_a - ECDF_b|.
-     The global ordered window means one reducer touches the union — use
-     it on bounded samples/buckets (it doubles as the DuckDB oracle
-     formulation).
-  2. ``ks_by_bucket`` — the scale path: grouped ``applyInPandas``
-     (Arrow-vectorized, per BASELINE.json input_hint "no per-row
-     Python"): each conv-hash bucket computes its KS statistic against a
-     broadcast reference sample with numpy. 10^12 turns → NB independent
-     group tasks, no global sort.
+KS (two-sample, exact) — two implementations:
+
+1. ``ks_distance`` — SQL-expressible: union both samples with
+   indicator columns, cumulative counts over a RANGE window ordered by
+   value (RANGE so ties are handled exactly), D = max |ECDF_a - ECDF_b|.
+   The global ordered window means one reducer touches the union — use
+   it on bounded samples/buckets (it doubles as the DuckDB oracle
+   formulation).
+2. ``ks_by_bucket`` — the scale path: grouped ``applyInPandas``
+   (Arrow-vectorized, per BASELINE.json input_hint "no per-row
+   Python"): each conv-hash bucket computes its KS statistic against a
+   broadcast reference sample with numpy. 10^12 turns → NB independent
+   group tasks, no global sort. (A RANGE window with the reference
+   replicated per bucket gives the same rows in 2 jobs, but took
+   5.1–7.5 s against 2.1–3.0 s for this path on 4 M rows, m = 5000,
+   ``local[4]``.)
 
 Thresholds: PSI ≥ 0.2 is the conventional "significant shift"; KS uses
 the large-sample critical value c(α)·sqrt((n+m)/(n·m)), c(0.05)=1.358.
@@ -32,16 +55,15 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocsf_validator_spark.localframe import empty_df, local_df
+from ocsf_validator_spark.localframe import local_df
+from ocsf_validator_spark.stats import bucket_col
 
 PSI_SIGNIFICANT = 0.2
 KS_C_ALPHA_05 = 1.358
+_DEC = "decimal(38,0)"  # exact EMD cross-products
 
 
 def histogram(df: DataFrame, value_expr: str, bin_expr: str) -> DataFrame:
@@ -58,44 +80,152 @@ def histogram(df: DataFrame, value_expr: str, bin_expr: str) -> DataFrame:
     )
 
 
-def _psi_of_counts(
-    pairs: list[tuple[float, float]], epsilon: float = 1e-6
-) -> float:
-    """PSI from [(cur_cnt, ref_cnt)] per bin — driver-side arithmetic
-    over the (tiny, ≤ a few hundred rows) collected histogram."""
-    ct = float(sum(c for c, _ in pairs))
-    rt = float(sum(r for _, r in pairs))
-    if ct == 0 or rt == 0:
-        return float("nan")
-    out = 0.0
-    for c, r in pairs:
-        p, q = c / ct, r / rt
-        out += (p - q) * (
-            math.log(max(p, epsilon)) - math.log(max(q, epsilon))
+def binned_counts(
+    df: DataFrame,
+    value_expr: str,
+    bin_expr: str,
+    cur_pred: str,
+    ref_pred: str | None = None,
+    bucket: Column | None = None,
+) -> DataFrame:
+    """The one drift staging: ``(bucket int, bin bigint, c_cnt long,
+    r_cnt long)`` counts, per bucket and bin, of the rows matching
+    ``cur_pred`` and ``ref_pred`` (default NOT cur_pred) whose
+    ``value_expr`` is not NULL. One scan and one groupBy: rows matching
+    neither predicate are ignored, a row matching both counts on both
+    sides. ``bucket`` defaults to the constant 0 of the scalar paths."""
+    rp = f"NOT ({cur_pred})" if ref_pred is None else ref_pred
+    staged = df.select(
+        (F.lit(0) if bucket is None else bucket).cast("int").alias("bucket"),
+        F.expr(value_expr).alias("_v"),
+        F.expr(cur_pred).alias("_is_cur"),
+        F.expr(rp).alias("_is_ref"),
+    ).filter(F.col("_v").isNotNull() & (F.col("_is_cur") | F.col("_is_ref")))
+    return staged.groupBy(
+        "bucket", F.expr(bin_expr).cast("bigint").alias("bin")
+    ).agg(
+        F.count_if(F.col("_is_cur")).alias("c_cnt"),
+        F.count_if(F.col("_is_ref")).alias("r_cnt"),
+    )
+
+
+def _paired(cur: DataFrame, ref: DataFrame) -> DataFrame:
+    """Two (bin, cnt) histograms as one constant-bucket binned_counts
+    histogram; a bin on both sides repeats, and the kernel merges it."""
+    zero = F.lit(0).cast("long")
+    return cur.select(
+        F.lit(0).alias("bucket"), "bin", F.col("cnt").alias("c_cnt"),
+        zero.alias("r_cnt"),
+    ).unionByName(
+        ref.select(
+            F.lit(0).alias("bucket"), "bin", zero.alias("c_cnt"),
+            F.col("cnt").alias("r_cnt"),
         )
-    return out
+    )
+
+
+def _in_one_task(hist: DataFrame) -> DataFrame:
+    """The histogram in one task with one row per (bucket, bin).
+    ``coalesce(1)`` adds no exchange, and its single partition satisfies
+    every later group and window, so the kernel adds none either."""
+    return hist.coalesce(1).groupBy("bucket", "bin").agg(
+        F.sum("c_cnt").alias("c_cnt"), F.sum("r_cnt").alias("r_cnt")
+    )
+
+
+def psi_term(
+    c: Column, r: Column, ct: Column, rt: Column, epsilon: float
+) -> Column:
+    """One bin's PSI term from its counts and the side totals. The
+    shares are floored at ``epsilon`` only inside the log; a zero total
+    makes the term NULL (try_divide, never an ANSI divide-by-zero)."""
+    p, q = F.try_divide(c, ct), F.try_divide(r, rt)
+    eps = F.lit(epsilon)
+    return (p - q) * (F.log(F.greatest(p, eps)) - F.log(F.greatest(q, eps)))
+
+
+def emd_term(
+    cum_c: Column, cum_r: Column, nc: Column, nr: Column, gap: Column
+) -> Column:
+    """One CDF step of the EMD fold, exact in decimal(38,0):
+    ``|cum_c·nr − cum_r·nc| · gap``, gap = bins to the next step."""
+    cum_c, cum_r, nc, nr, gap = (
+        x.cast(_DEC) for x in (cum_c, cum_r, nc, nr, gap)
+    )
+    return F.abs(cum_c * nr - cum_r * nc) * gap
+
+
+def emd_value(total: Column, nc: Column, nr: Column) -> Column:
+    """EMD from the summed emd_terms: one cast-then-divide by
+    ``nc·nr``; NULL when a side is empty."""
+    return F.when(
+        (nc > 0) & (nr > 0),
+        total.cast("double") / (nc.cast(_DEC) * nr.cast(_DEC)).cast("double"),
+    )
+
+
+def psi_table(hist: DataFrame, epsilon: float = 1e-6) -> DataFrame:
+    """The PSI kernel: (bucket, n_cur, n_ref, psi) from a binned_counts
+    histogram; psi is NULL for a bucket with an empty side."""
+    w = Window.partitionBy("bucket")
+    terms = _in_one_task(hist).select(
+        "bucket",
+        "c_cnt",
+        "r_cnt",
+        psi_term(
+            F.col("c_cnt"), F.col("r_cnt"),
+            F.sum("c_cnt").over(w), F.sum("r_cnt").over(w), epsilon,
+        ).alias("_t"),
+    )
+    return terms.groupBy("bucket").agg(
+        F.sum("c_cnt").alias("n_cur"),
+        F.sum("r_cnt").alias("n_ref"),
+        F.sum("_t").alias("psi"),
+    )
+
+
+def emd_table(hist: DataFrame) -> DataFrame:
+    """The EMD kernel: (bucket, n_cur, n_ref, emd) from a binned_counts
+    histogram. The empty bins between occupied ones count through the
+    gap to the next bin, not by materializing them; emd is NULL for a
+    bucket with an empty side."""
+    w = Window.partitionBy("bucket")
+    wo = w.orderBy("bin")
+    steps = _in_one_task(hist).select(
+        "bucket",
+        "c_cnt",
+        "r_cnt",
+        emd_term(
+            F.sum("c_cnt").over(wo), F.sum("r_cnt").over(wo),
+            F.sum("c_cnt").over(w), F.sum("r_cnt").over(w),
+            F.lead("bin").over(wo) - F.col("bin"),
+        ).alias("_t"),
+    )
+    return steps.groupBy("bucket").agg(
+        F.sum("c_cnt").alias("n_cur"),
+        F.sum("r_cnt").alias("n_ref"),
+        F.coalesce(F.sum("_t"), F.lit(0).cast(_DEC)).alias("_total"),
+    ).select(
+        "bucket",
+        "n_cur",
+        "n_ref",
+        emd_value(*map(F.col, ("_total", "n_cur", "n_ref"))).alias("emd"),
+    )
+
+
+def _scalar(table: DataFrame, metric: str) -> float:
+    """The metric of a constant-bucket table: NaN on an empty side."""
+    rows = table.collect()
+    v = rows[0][metric] if rows else None
+    return float("nan") if v is None else float(v)
 
 
 def psi_from_histograms(
     cur: DataFrame, ref: DataFrame, epsilon: float = 1e-6
 ) -> float:
-    """PSI between two (bin, cnt) histograms. Missing bins get an
-    ``epsilon`` floor so new/vanished bins contribute finite terms.
-    ONE collect: the joined histogram is ≤ a few hundred rows, so the
-    totals and the PSI sum are driver-side arithmetic (round 2 ran two
-    jobs here — one for totals, one for the sum)."""
-    joined = (
-        cur.select("bin", F.col("cnt").alias("c_cnt"))
-        .join(ref.select("bin", F.col("cnt").alias("r_cnt")), "bin", "full_outer")
-        .select(
-            F.coalesce("c_cnt", F.lit(0)).alias("c_cnt"),
-            F.coalesce("r_cnt", F.lit(0)).alias("r_cnt"),
-        )
-    )
-    rows = joined.collect()
-    return _psi_of_counts(
-        [(float(r.c_cnt), float(r.r_cnt)) for r in rows], epsilon
-    )
+    """PSI between two (bin, cnt) histograms. One collect: the two
+    histograms are unioned and folded in one task."""
+    return _scalar(psi_table(_paired(cur, ref), epsilon), "psi")
 
 
 def psi(
@@ -118,35 +248,16 @@ def psi_split(
     ref_pred: str | None = None,
     epsilon: float = 1e-6,
 ) -> float:
-    """PSI between two slices of the SAME table in ONE scan: rows are
-    tagged with the ``cur_pred`` indicator and both histograms come out
-    of a single groupBy(bin) with conditional counts — one job, one
-    shuffle of ≤ n_bins tiny rows, one driver collect. Use this (not
-    ``psi(df.filter(a), df.filter(b), ...)``, which scans the source
-    twice) whenever current and reference are partitions of one table —
-    the common snapshot-vs-snapshot drift shape. ``ref_pred`` defaults
-    to NOT cur_pred; rows matching neither predicate are ignored."""
-    rp = f"NOT ({cur_pred})" if ref_pred is None else ref_pred
-    staged = (
-        df.select(
-            F.expr(value_expr).alias("_v"),
-            F.expr(cur_pred).alias("_is_cur"),
-            F.expr(rp).alias("_is_ref"),
-        )
-        .filter(F.col("_v").isNotNull() & (F.col("_is_cur") | F.col("_is_ref")))
-        .select("_is_cur", "_is_ref", F.expr(bin_expr).cast("bigint").alias("bin"))
-    )
-    rows = (
-        staged.groupBy("bin")
-        .agg(
-            F.sum(F.col("_is_cur").cast("long")).alias("c_cnt"),
-            F.sum(F.col("_is_ref").cast("long")).alias("r_cnt"),
-        )
-        .collect()
-    )
-    return _psi_of_counts(
-        [(float(r.c_cnt), float(r.r_cnt)) for r in rows], epsilon
-    )
+    """PSI between two slices of the SAME table in ONE scan: both
+    histograms come out of binned_counts' single groupBy, so the collect
+    runs the scan's map stage and one task over ≤ n_bins rows. Use this
+    (not ``psi(df.filter(a), df.filter(b), ...)``, which scans the
+    source twice) whenever current and reference are partitions of one
+    table — the common snapshot-vs-snapshot drift shape. ``ref_pred``
+    defaults to NOT cur_pred; rows matching neither predicate are
+    ignored."""
+    hist = binned_counts(df, value_expr, bin_expr, cur_pred, ref_pred)
+    return _scalar(psi_table(hist, epsilon), "psi")
 
 
 def psi_split_by_bucket(
@@ -162,74 +273,22 @@ def psi_split_by_bucket(
     psi_threshold: float = PSI_SIGNIFICANT,
 ) -> DataFrame:
     """Per-bucket PSI between two slices of the same table — the
-    PARTITIONED drift path (north star: per-partition checks). One scan:
-    groupBy(bucket, bin) with conditional counts, a window over the
-    bucket to attach the per-bucket totals, then one aggregation per
-    bucket for the PSI sum. Everything is column algebra; output is one
-    row per bucket — at 10^12 turns this is NB independent reductions
-    over a histogram that is already tiny after the first map-side
-    combine.
+    PARTITIONED drift path (north star: per-partition checks). One
+    scan and one exchange: binned_counts with the bucket
+    (``stats.bucket_col`` by default), then psi_table in one task —
+    the histogram is already tiny after the first map-side combine.
 
     Returns (bucket int, n_cur long, n_ref long, psi double,
-    drifted boolean)."""
-    rp = f"NOT ({cur_pred})" if ref_pred is None else ref_pred
+    drifted boolean); a bucket with an empty side has psi NULL and is
+    drifted."""
     if bucket_expr is None:
-        bucket_expr = F.pmod(
-            F.xxhash64(F.col(conv_col)), F.lit(num_buckets)
-        ).cast("int")
-    staged = (
-        df.select(
-            bucket_expr.alias("bucket"),
-            F.expr(value_expr).alias("_v"),
-            F.expr(cur_pred).alias("_is_cur"),
-            F.expr(rp).alias("_is_ref"),
-        )
-        .filter(F.col("_v").isNotNull() & (F.col("_is_cur") | F.col("_is_ref")))
-        .select(
-            "bucket",
-            "_is_cur",
-            "_is_ref",
-            F.expr(bin_expr).cast("bigint").alias("bin"),
-        )
+        bucket_expr = bucket_col(conv_col, num_buckets)
+    hist = binned_counts(
+        df, value_expr, bin_expr, cur_pred, ref_pred, bucket=bucket_expr
     )
-    hist = staged.groupBy("bucket", "bin").agg(
-        F.sum(F.col("_is_cur").cast("long")).alias("c_cnt"),
-        F.sum(F.col("_is_ref").cast("long")).alias("r_cnt"),
-    )
-    w = Window.partitionBy("bucket")
-    tot = hist.select(
-        "bucket",
-        "c_cnt",
-        "r_cnt",
-        F.sum("c_cnt").over(w).alias("_ct"),
-        F.sum("r_cnt").over(w).alias("_rt"),
-    )
-    # try_divide: a bucket whose cur or ref side is EMPTY must yield a
-    # NULL psi (flagged drifted below), not an ANSI divide-by-zero that
-    # kills the whole job
-    p = F.try_divide(F.col("c_cnt"), F.col("_ct"))
-    q = F.try_divide(F.col("r_cnt"), F.col("_rt"))
-    term = (p - q) * (
-        F.log(F.greatest(p, F.lit(epsilon)))
-        - F.log(F.greatest(q, F.lit(epsilon)))
-    )
-    return (
-        tot.groupBy("bucket")
-        .agg(
-            F.sum("c_cnt").alias("n_cur"),
-            F.sum("r_cnt").alias("n_ref"),
-            F.sum(term).alias("psi"),
-        )
-        .withColumn(
-            "psi",
-            F.when(
-                (F.col("n_cur") > 0) & (F.col("n_ref") > 0), F.col("psi")
-            ),
-        )
-        .withColumn(
-            "drifted",
-            F.coalesce(F.col("psi") >= F.lit(psi_threshold), F.lit(True)),
-        )
+    return psi_table(hist, epsilon).withColumn(
+        "drifted",
+        F.coalesce(F.col("psi") >= F.lit(psi_threshold), F.lit(True)),
     )
 
 
@@ -278,6 +337,9 @@ def ks_by_bucket(
 
     Returns (bucket int, n long, ks double, threshold double,
     drifted boolean)."""
+    import numpy as np
+    import pandas as pd
+
     ref = np.sort(np.asarray(list(ref_sample), dtype="float64"))
     m = len(ref)
     if m == 0:
@@ -309,9 +371,7 @@ def ks_by_bucket(
         )
 
     if bucket_expr is None:
-        bucket_expr = F.pmod(
-            F.xxhash64(F.col(conv_col)), F.lit(num_buckets)
-        ).cast("int")
+        bucket_expr = bucket_col(conv_col, num_buckets)
     staged = df.select(
         bucket_expr.alias("bucket"),
         F.expr(value_expr).cast("double").alias("_v"),
@@ -419,55 +479,10 @@ def volume_anomaly(
     ).orderBy("bucket")
 
 
-def _emd_of_counts(rows: list[tuple[int, int, int]]) -> float:
-    """1-D EMD (Wasserstein-1, in bin-width units) from sorted
-    ``(bin, cur_cnt, ref_cnt)`` rows — driver arithmetic over the tiny
-    collected histogram, EXACT until the final division:
-
-        EMD = sum over the support range of |CDF_cur − CDF_ref|
-            = Σ_i |cum_c_i·n_r − cum_r_i·n_c| · (bin_{i+1} − bin_i)
-              / (n_c · n_r)
-
-    Every term is Python big-int (no float accumulation order to
-    diverge, no epsilon floors — unlike PSI, EMD is finite for
-    disjoint supports); gaps of empty bins between occupied ones
-    contribute via the (bin_{i+1} − bin_i) multiplier, not by
-    materializing them. The one division is cast-then-divide
-    (float(total)/float(n_c·n_r)) to match a SQL replay's
-    ``::DOUBLE / ::DOUBLE`` bit-for-bit."""
-    rows = sorted(rows)
-    nc = sum(c for _, c, _ in rows)
-    nr = sum(r for _, _, r in rows)
-    if nc == 0 or nr == 0:
-        return float("nan")
-    total = 0
-    cum_c = cum_r = 0
-    for i, (b, c, r) in enumerate(rows[:-1]):
-        cum_c += c
-        cum_r += r
-        total += abs(cum_c * nr - cum_r * nc) * (rows[i + 1][0] - b)
-    return float(total) / float(nc * nr)
-
-
 def emd_from_histograms(cur: DataFrame, ref: DataFrame) -> float:
     """EMD between two (bin, cnt) histograms (one collect, like
     psi_from_histograms)."""
-    joined = (
-        cur.select("bin", F.col("cnt").alias("c_cnt"))
-        .join(
-            ref.select("bin", F.col("cnt").alias("r_cnt")),
-            "bin",
-            "full_outer",
-        )
-        .select(
-            "bin",
-            F.coalesce("c_cnt", F.lit(0)).alias("c_cnt"),
-            F.coalesce("r_cnt", F.lit(0)).alias("r_cnt"),
-        )
-    )
-    return _emd_of_counts(
-        [(int(r.bin), int(r.c_cnt), int(r.r_cnt)) for r in joined.collect()]
-    )
+    return _scalar(emd_table(_paired(cur, ref)), "emd")
 
 
 def emd_split(
@@ -478,37 +493,12 @@ def emd_split(
     ref_pred: str | None = None,
 ) -> float:
     """EMD between two slices of the SAME table in ONE scan (the
-    psi_split shape: conditional counts per bin, one shuffle of
-    ≤ n_bins tiny rows, one collect). EMD complements PSI/KS in the
-    drift triad: PSI is support-sensitive but unordered (shifting mass
-    one bin vs fifty bins scores the same per-bin term), KS sees only
-    the max CDF gap; EMD integrates the ordered CDF gap, so it scales
-    with HOW FAR the distribution moved — the right gate for
-    "text lengths drifted longer" magnitude questions."""
-    rp = f"NOT ({cur_pred})" if ref_pred is None else ref_pred
-    staged = (
-        df.select(
-            F.expr(value_expr).alias("_v"),
-            F.expr(cur_pred).alias("_is_cur"),
-            F.expr(rp).alias("_is_ref"),
-        )
-        .filter(
-            F.col("_v").isNotNull() & (F.col("_is_cur") | F.col("_is_ref"))
-        )
-        .select(
-            "_is_cur",
-            "_is_ref",
-            F.expr(bin_expr).cast("bigint").alias("bin"),
-        )
-    )
-    rows = (
-        staged.groupBy("bin")
-        .agg(
-            F.sum(F.col("_is_cur").cast("long")).alias("c_cnt"),
-            F.sum(F.col("_is_ref").cast("long")).alias("r_cnt"),
-        )
-        .collect()
-    )
-    return _emd_of_counts(
-        [(int(r.bin), int(r.c_cnt), int(r.r_cnt)) for r in rows]
-    )
+    psi_split shape). EMD complements PSI/KS in the drift triad: PSI is
+    support-sensitive but unordered (shifting mass one bin vs fifty
+    bins scores the same per-bin term), KS sees only the max CDF gap;
+    EMD integrates the ordered CDF gap, so it scales with HOW FAR the
+    distribution moved — the right gate for "text lengths drifted
+    longer" magnitude questions. Unlike PSI it needs no epsilon floor:
+    it is finite for disjoint supports."""
+    hist = binned_counts(df, value_expr, bin_expr, cur_pred, ref_pred)
+    return _scalar(emd_table(hist), "emd")

@@ -603,8 +603,8 @@ class DriftGate(Constraint):
     'emd' (Wasserstein-1 in bin units, magnitude-sensitive; exact
     big-int arithmetic until one division, rendered %.6f). Default
     severity WARNING, like every data-derived gate. Cost: one
-    partial-agg histogram scan per gate; the compare runs driver-side
-    over the tiny collected histogram."""
+    partial-agg histogram scan per gate, folded with the baseline (a
+    local frame) by drift's PSI/EMD kernel in one task: 2 jobs."""
 
     bin_expr: str = "floor(_v / 16)"
     baseline: Mapping[str, int] = field(default_factory=dict)

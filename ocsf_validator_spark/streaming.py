@@ -51,14 +51,17 @@ north-star extension for validating an APPEND-ONLY transcript stream
 from __future__ import annotations
 
 import json
+import operator
 import os
 import time
+from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark import convstate
+from ocsf_validator_spark.drift import emd_term, emd_value, psi_term
 from ocsf_validator_spark.localframe import release_checkpoint
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
@@ -354,7 +357,7 @@ def validate_stream(
                 F.lit(", "),
                 F.date_format("win_end", "HH:mm:ss"),
                 F.lit("): psi="),
-                F.round("psi", 4).cast("string"),
+                F.coalesce(F.round("psi", 4).cast("string"), F.lit("NULL")),
                 F.lit(" over "),
                 F.col("n").cast("string"),
                 F.lit(" rows"),
@@ -402,6 +405,60 @@ def cross_batch_duplicates(
     )
 
 
+def _binned_windows(
+    sdf: DataFrame,
+    bins: list[int],
+    bin_expr: str,
+    watermark_col: str,
+    watermark: str,
+    window: str,
+    other: bool,
+) -> DataFrame:
+    """ONE stateful aggregation per event-time window: a conditional
+    count ``_c<bin>`` per reference bin (the bins are a bounded literal
+    set; a second groupBy(bin) level would be a chained stateful
+    aggregation, which Structured Streaming restricts), with ``other``
+    an ``_c_other`` count of the rows binning outside them, and ``n``,
+    every row of the window. State = one row of per-bin longs per open
+    window, bounded by the watermark."""
+    b_col = F.expr(bin_expr).cast("long")
+    aggs = [
+        F.sum(F.when(b_col == b, 1).otherwise(0)).alias(f"_c{b}")
+        for b in bins
+    ]
+    if other:
+        aggs.append(
+            F.sum(
+                F.when(b_col.isin(bins) | b_col.isNull(), 0).otherwise(1)
+            ).alias("_c_other")
+        )
+    aggs.append(F.count(F.lit(1)).alias("n"))
+    return (
+        sdf.withWatermark(watermark_col, watermark)
+        .groupBy(F.window(F.col(watermark_col), window))
+        .agg(*aggs)
+    )
+
+
+def _window_verdicts(
+    win: DataFrame, metric: str, value: Column, threshold: float, min_n: int
+) -> DataFrame:
+    """(win_start, win_end, n, <metric>, drifted). A window whose metric
+    is NULL (no row lands in a bin it can score) is drifted, as a
+    bucket with an empty side is in drift.psi_split_by_bucket; a window
+    with n < min_n never is."""
+    return win.select(
+        F.col("window.start").alias("win_start"),
+        F.col("window.end").alias("win_end"),
+        F.col("n"),
+        value.alias(metric),
+        (
+            F.coalesce(value >= F.lit(threshold), F.lit(True))
+            & (F.col("n") >= F.lit(int(min_n)))
+        ).alias("drifted"),
+    )
+
+
 def streaming_psi(
     sdf: DataFrame,
     ref_hist: dict[int, int],
@@ -416,76 +473,37 @@ def streaming_psi(
     """Per-event-time-window PSI of a binned value distribution vs a
     broadcast REFERENCE histogram — the streaming leg of the drift
     family (batch single-scan: drift.psi_split; partitioned:
-    drift.psi_split_by_bucket). The formula differs from the batch
-    paths in two ways:
+    drift.psi_split_by_bucket), with the same term builder
+    (``drift.psi_term``) and so the same formula: thresholds
+    calibrated on the batch paths carry over.
 
-    - both shares are floored at ``eps`` before the difference, so a
-      bin's term is ``(max(p, eps) - max(q, eps)) * (ln max(p, eps) -
-      ln max(q, eps))``; ``drift.psi_split`` floors only inside the
-      log, so on a bin empty on one side the two differ by about
-      ``eps * |ln(eps / q)|``;
-    - a window's share ``p`` divides by its row count ``n``, which
-      also counts rows whose bin is NULL; those rows land in no bin,
-      so the window's shares sum to less than 1 when it holds any.
-
-    Thresholds calibrated on the batch paths therefore carry over
-    approximately, not exactly.
+    - Rows binning outside the reference lump into one "other" bin
+      whose reference count is 0.
+    - Rows whose bin is NULL land in no bin: the window's shares divide
+      by its binned rows, as the batch paths drop NULL values. ``n``
+      still counts every row of the window.
+    - A window where every bin is NULL has psi NULL and is drifted
+      (subject to ``min_n``).
 
     ``min_n`` guards the small-sample false positive: a near-empty
     window (stream tail, quiet hour) with a couple of rare-bin rows
     can spike PSI far past any threshold. Windows with n < min_n still
     report their psi but are never marked drifted.
 
-    ONE stateful aggregation: the reference bins are a bounded literal
-    set, so per-bin counts are conditional sums inside the single
-    windowed groupBy (a second groupBy(bin) level would be a chained
-    stateful aggregation, which Structured Streaming restricts). Rows
-    binning outside the reference lump into an "other" bin whose
-    reference share is the eps floor. State = one row of per-bin longs
-    per open window, bounded by the watermark.
-
     Returns (win_start, win_end, n, psi, drifted); append mode — a
     window's verdict is final once the watermark closes it."""
     bins = sorted(int(b) for b in ref_hist)
-    rt = float(sum(ref_hist.values())) or 1.0
-    ref_share = {b: max(ref_hist[b] / rt, eps) for b in bins}
-    b_col = F.expr(bin_expr).cast("long")
-    aggs = [
-        F.sum(F.when(b_col == int(b), 1).otherwise(0)).alias(f"_c{b}")
-        for b in bins
-    ]
-    aggs.append(
-        F.sum(
-            F.when(b_col.isin([int(b) for b in bins]) | b_col.isNull(), 0)
-            .otherwise(1)
-        ).alias("_c_other")
+    win = _binned_windows(
+        sdf, bins, bin_expr, watermark_col, watermark, window, other=True
     )
-    aggs.append(F.count(F.lit(1)).alias("n"))
-    win = (
-        sdf.withWatermark(watermark_col, watermark)
-        .groupBy(F.window(F.col(watermark_col), window))
-        .agg(*aggs)
+    cur = [F.col(f"_c{b}") for b in bins] + [F.col("_c_other")]
+    ref = [int(ref_hist[b]) for b in bins] + [0]
+    ct, rt = reduce(operator.add, cur), F.lit(sum(ref))
+    psi = reduce(
+        operator.add,
+        [psi_term(c, F.lit(r), ct, rt, eps) for c, r in zip(cur, ref)],
     )
-    n = F.col("n").cast("double")
-    terms = []
-    for b in bins:
-        cur = F.greatest(F.col(f"_c{b}") / n, F.lit(eps))
-        ref = F.lit(ref_share[b])
-        terms.append((cur - ref) * (F.log(cur) - F.log(ref)))
-    cur_o = F.greatest(F.col("_c_other") / n, F.lit(eps))
-    terms.append((cur_o - F.lit(eps)) * (F.log(cur_o) - F.log(F.lit(eps))))
-    psi = terms[0]
-    for t in terms[1:]:
-        psi = psi + t
-    return win.select(
-        F.col("window.start").alias("win_start"),
-        F.col("window.end").alias("win_end"),
-        F.col("n"),
-        psi.alias("psi"),
-        (
-            (psi >= F.lit(threshold)) & (F.col("n") >= F.lit(int(min_n)))
-        ).alias("drifted"),
-    )
+    return _window_verdicts(win, "psi", psi, threshold, min_n)
 
 
 def streaming_turn_stats(
@@ -534,71 +552,34 @@ def streaming_emd(
     """Per-event-time-window EMD (Wasserstein-1, bin units) vs a
     broadcast reference histogram — the streaming leg of the magnitude
     drift gate (batch: drift.emd_split). Same single-stateful-agg shape
-    as streaming_psi: per-bin conditional counts inside ONE windowed
-    groupBy; the EMD fold over the ordered reference bins is pure
-    column arithmetic over those counts with the reference cumulative
-    counts baked as literals —
-
-        EMD = sum_i |cum_c_i·N_r − cum_r_i·N_c| · gap_i / (N_c·N_r)
-
-    (decimal(38,0) cross-products so corpus-scale windows cannot
-    overflow, one division at the end). Rows binning outside the
-    reference support are excluded from the EMD (EMD needs an ordered
-    support; PSI's "other" lump has no position) but still count in
-    ``n`` — pair with streaming_psi when out-of-support mass itself is
-    the signal. ``min_n`` guards the small-sample false positive, as in
-    streaming_psi. Returns (win_start, win_end, n, emd, drifted);
+    as streaming_psi; the fold over the ordered reference bins is
+    drift.emd_term / drift.emd_value over the per-bin counts with the
+    reference cumulative counts baked as literals. Rows binning outside
+    the reference support are excluded from the EMD (EMD needs an
+    ordered support; PSI's "other" lump has no position) but still
+    count in ``n`` — pair with streaming_psi when out-of-support mass
+    itself is the signal. A window with no row in the support has emd
+    NULL and is drifted, the maximally-drifted window rather than an
+    unknown one. ``min_n`` guards the small-sample false positive, as
+    in streaming_psi. Returns (win_start, win_end, n, emd, drifted);
     append mode — final once the watermark closes the window."""
     bins = sorted(int(b) for b in ref_hist)
     if not bins:
         raise ValueError("streaming_emd: empty reference histogram")
-    nr = sum(int(ref_hist[b]) for b in bins)
-    cum_r = []
-    acc = 0
-    for b in bins:
-        acc += int(ref_hist[b])
-        cum_r.append(acc)
-    b_col = F.expr(bin_expr).cast("long")
-    aggs = [
-        F.sum(F.when(b_col == int(b), 1).otherwise(0)).alias(f"_c{b}")
-        for b in bins
-    ]
-    aggs.append(F.count(F.lit(1)).alias("n"))
-    win = (
-        sdf.withWatermark(watermark_col, watermark)
-        .groupBy(F.window(F.col(watermark_col), window))
-        .agg(*aggs)
+    win = _binned_windows(
+        sdf, bins, bin_expr, watermark_col, watermark, window, other=False
     )
-    dec = "decimal(38,0)"
-    nc = F.col(f"_c{bins[0]}").cast(dec)
-    for b in bins[1:]:
-        nc = nc + F.col(f"_c{b}").cast(dec)
-    total = F.lit(0).cast(dec)
-    cum_c = F.lit(0).cast(dec)
+    cur = [F.col(f"_c{b}") for b in bins]
+    nc = reduce(operator.add, cur)
+    nr = F.lit(sum(int(ref_hist[b]) for b in bins))
+    steps = []
+    cum_c, cum_r = F.lit(0), 0
     for i, b in enumerate(bins[:-1]):
-        cum_c = cum_c + F.col(f"_c{b}").cast(dec)
-        gap = bins[i + 1] - b
-        total = total + F.abs(
-            cum_c * F.lit(nr).cast(dec)
-            - F.lit(cum_r[i]).cast(dec) * nc
-        ) * F.lit(gap).cast(dec)
-    emd = F.when(
-        nc > 0,
-        total.cast("double") / (nc.cast("double") * F.lit(float(nr))),
-    )
-    # a window whose rows ALL bin outside the reference support is the
-    # maximally-drifted window, not an unknown one: emd stays NULL
-    # (undefined on an empty in-support sample) but drifted must be
-    # TRUE, not NULL — a sink filtering on drifted = true would
-    # otherwise silently drop the worst case
-    drifted = F.when(
-        nc > 0,
-        (emd >= F.lit(threshold)) & (F.col("n") >= F.lit(int(min_n))),
-    ).otherwise(F.col("n") >= F.lit(int(min_n)))
-    return win.select(
-        F.col("window.start").alias("win_start"),
-        F.col("window.end").alias("win_end"),
-        F.col("n"),
-        emd.alias("emd"),
-        drifted.alias("drifted"),
+        cum_c, cum_r = cum_c + cur[i], cum_r + int(ref_hist[b])
+        steps.append(
+            emd_term(cum_c, F.lit(cum_r), nc, nr, F.lit(bins[i + 1] - b))
+        )
+    total = reduce(operator.add, steps, F.lit(0).cast("decimal(38,0)"))
+    return _window_verdicts(
+        win, "emd", emd_value(total, nc, nr), threshold, min_n
     )

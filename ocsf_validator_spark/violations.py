@@ -29,6 +29,7 @@ Three evaluation strategies by constraint class:
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -1736,26 +1737,19 @@ def dataset_findings(
                 raise ValueError(
                     f"{c.constraint_id}: unknown metric {c.metric!r}"
                 )
-            ref = {int(k): int(v) for k, v in c.baseline.items()}
-            cur = {
-                int(r.bin): int(r.cnt)
-                for r in _drift.histogram(df, c.column, c.bin_expr).collect()
-            }
-            bins = sorted(set(ref) | set(cur))
+            cur = _drift.histogram(df, c.column, c.bin_expr)
+            ref = local_df(
+                spark,
+                [(int(k), int(v)) for k, v in c.baseline.items()],
+                "bin bigint, cnt bigint",
+            )
             if c.metric == "psi":
-                val = _drift._psi_of_counts(
-                    [(float(cur.get(b, 0)), float(ref.get(b, 0)))
-                     for b in bins]
-                )
+                val = _drift.psi_from_histograms(cur, ref)
                 shown = f"{val:.4f}"
             else:
-                val = _drift._emd_of_counts(
-                    [(b, cur.get(b, 0), ref.get(b, 0)) for b in bins]
-                )
+                val = _drift.emd_from_histograms(cur, ref)
                 shown = f"{val:.6f}"
-            import math as _math
-
-            if not _math.isnan(val) and val >= float(c.threshold):
+            if not math.isnan(val) and val >= float(c.threshold):
                 rows.append((
                     c.constraint_id, *nulls,
                     f"{c.metric}({c.column}) = {shown} above threshold "

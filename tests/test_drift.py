@@ -21,6 +21,40 @@ from ocsf_validator_spark.synth import (
 )
 
 
+def _psi_of_counts(pairs, epsilon=1e-6):
+    """Plain-Python PSI oracle over [(cur_cnt, ref_cnt)] per bin: shares
+    floored at epsilon only inside the log, NaN on an empty side."""
+    ct = float(sum(c for c, _ in pairs))
+    rt = float(sum(r for _, r in pairs))
+    if ct == 0 or rt == 0:
+        return float("nan")
+    out = 0.0
+    for c, r in pairs:
+        p, q = c / ct, r / rt
+        out += (p - q) * (
+            math.log(max(p, epsilon)) - math.log(max(q, epsilon))
+        )
+    return out
+
+
+def _emd_of_counts(rows):
+    """Plain-Python EMD oracle (Wasserstein-1, bin units) over
+    [(bin, cur_cnt, ref_cnt)]: big-int CDF fold, gaps between occupied
+    bins by multiplier, one cast-then-divide, NaN on an empty side."""
+    rows = sorted(rows)
+    nc = sum(c for _, c, _ in rows)
+    nr = sum(r for _, _, r in rows)
+    if nc == 0 or nr == 0:
+        return float("nan")
+    total = 0
+    cum_c = cum_r = 0
+    for i, (b, c, r) in enumerate(rows[:-1]):
+        cum_c += c
+        cum_r += r
+        total += abs(cum_c * nr - cum_r * nc) * (rows[i + 1][0] - b)
+    return float(total) / float(nc * nr)
+
+
 @pytest.fixture(scope="module")
 def samples(spark):
     ref = synth_reference_sample(spark, n=4000, seed=7).cache()
@@ -109,7 +143,6 @@ def test_psi_split_matches_two_df_psi(spark):
 
 def test_psi_split_single_scan_plan(spark):
     """The one-scan contract: a single source appears in the plan."""
-    from ocsf_validator_spark.drift import _psi_of_counts  # noqa: F401
     from pyspark.sql import functions as F
 
     df = spark.range(0, 100).select(F.col("id"), (F.col("id") % 5).alias("v"))
@@ -255,3 +288,111 @@ def test_emd_from_histograms_matches_split(spark):
     assert drift.emd_from_histograms(a, b) == drift.emd_split(
         df, "cur", "v", "_v"
     )
+
+
+def test_drift_paths_match_python_oracles(spark, jobs_of):
+    """Every drift path folds the same binned histogram through one
+    kernel: psi_split, psi_from_histograms, each psi_split_by_bucket
+    bucket and the DriftGate legs equal the plain-Python folds (PSI to
+    1e-12, EMD exactly), on data with a NULL value, a bin on one side
+    only and an empty side. Job counts: psi_split / emd_split 2,
+    psi_from_histograms 3, psi_split_by_bucket 2, a DriftGate leg 2."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from ocsf_validator_spark import drift
+    from ocsf_validator_spark.spec import ConstraintSet, DriftGate
+    from ocsf_validator_spark.violations import dataset_findings
+
+    # v is NULL on every 97th id; v = 100 (bin 33) only on even
+    # (current) ids; bucket 3 holds current rows only
+    df = spark.range(0, 3000).select(
+        F.col("id"),
+        F.when(F.col("id") % 97 == 0, None)
+        .when(F.col("id") % 50 == 0, F.lit(100))
+        .otherwise(F.col("id") % 23)
+        .alias("v"),
+        F.when(F.col("id") % 10 == 4, 3)
+        .otherwise(F.col("id") % 3)
+        .cast("int")
+        .alias("b"),
+    )
+    raw = [r for r in df.collect() if r.v is not None]
+
+    def counts(bucket=None):
+        side = [Counter(), Counter()]  # [reference, current] per bin
+        for r in raw:
+            if bucket in (None, r.b):
+                side[r.id % 2 == 0][r.v // 3] += 1
+        ref, cur = side
+        return [(b, cur[b], ref[b]) for b in sorted(set(cur) | set(ref))]
+
+    whole = counts()
+    assert any(c and not r for _, c, r in whole)  # a one-sided bin
+    want_psi = _psi_of_counts([(c, r) for _, c, r in whole])
+    want_emd = _emd_of_counts(whole)
+    bin_expr = "floor(_v / 3)"
+
+    split = ("id % 2 = 0", "v", bin_expr)
+    got, jobs = jobs_of(lambda: drift.psi_split(df, *split))
+    assert math.isclose(got, want_psi, rel_tol=1e-12) and jobs == 2
+    got, jobs = jobs_of(lambda: drift.emd_split(df, *split))
+    assert got == want_emd and jobs == 2
+    halves = [
+        drift.histogram(df.filter(f"id % 2 = {k}"), "v", bin_expr)
+        for k in (0, 1)
+    ]
+    got, jobs = jobs_of(lambda: drift.psi_from_histograms(*halves))
+    assert math.isclose(got, want_psi, rel_tol=1e-12) and jobs == 3
+    assert drift.emd_from_histograms(*halves) == want_emd
+    assert math.isnan(drift.psi_split(df, "false", "v", bin_expr))
+    assert math.isnan(drift.emd_split(df, "false", "v", bin_expr))
+
+    rows, jobs = jobs_of(
+        lambda: drift.psi_split_by_bucket(
+            df, *split, bucket_expr=F.col("b")
+        ).collect()
+    )
+    assert jobs == 2
+    assert sorted(r.bucket for r in rows) == [0, 1, 2, 3]
+    for r in rows:
+        pairs = [(c, ref) for _, c, ref in counts(r.bucket)]
+        assert (r.n_cur, r.n_ref) == tuple(map(sum, zip(*pairs)))
+        want = _psi_of_counts(pairs)
+        if r.bucket == 3:  # no reference rows
+            assert math.isnan(want) and r.psi is None and r.drifted
+        else:
+            assert math.isclose(r.psi, want, rel_tol=1e-12), r
+
+    # the DriftGate leg: current rows vs the reference slice recorded
+    # as a baseline; a threshold at the oracle's value fires, one just
+    # past it does not
+    cur = df.filter("id % 2 = 0")
+    baseline = {str(b): r for b, _, r in whole if r}
+
+    def gates(psi_thr, emd_thr):
+        suite = ConstraintSet(
+            name="g",
+            constraints=[
+                DriftGate(column="v", bin_expr=bin_expr, baseline=baseline,
+                          metric="psi", threshold=psi_thr),
+                DriftGate(column="v", bin_expr=bin_expr, baseline=baseline,
+                          metric="emd", threshold=emd_thr),
+            ],
+        )
+        return [r.reason for r in dataset_findings(cur, suite).collect()]
+
+    reasons, jobs = jobs_of(
+        lambda: gates(want_psi * (1 - 1e-12), want_emd)
+    )
+    assert reasons == [
+        f"psi(v) = {want_psi:.4f} above threshold {want_psi * (1 - 1e-12)} "
+        "vs recorded baseline",
+        f"emd(v) = {want_emd:.6f} above threshold {want_emd} "
+        "vs recorded baseline",
+    ]
+    assert jobs == 4  # 2 per leg
+    assert gates(
+        want_psi * (1 + 1e-12), math.nextafter(want_emd, math.inf)
+    ) == []

@@ -313,10 +313,14 @@ def test_iceberg_identifier_quoting():
 
 def test_streaming_psi_windows(spark, tmp_path):
     """Streaming PSI vs a broadcast reference histogram: an in-ref
-    window scores ~0, a shifted window crosses the drift threshold;
-    expected values recomputed with the same formula in pure Python."""
+    window scores ~0, a shifted window crosses the drift threshold and
+    equals drift.psi_split over the same rows, and a window whose every
+    bin is NULL has psi NULL and is drifted; expected values recomputed
+    with the batch formula in pure Python."""
     import math
     import time as t
+
+    from ocsf_validator_spark.drift import psi_split
 
     root = str(tmp_path / "psi_in")
     os.makedirs(root)
@@ -330,8 +334,11 @@ def test_streaming_psi_windows(spark, tmp_path):
     rows_b = [
         ("c", 1, "user", "x", None, "2026-01-01 01:01:00") for _ in range(8)
     ] + [("c", 7, "user", "x", None, "2026-01-01 01:02:00")] * 2
-    # flusher batch far in the future closes A and B
-    rows_c = [("c", 0, "user", "x", None, "2026-01-01 09:00:00")]
+    # window C (05:00-05:10): 2 rows whose bin is NULL; a flusher row
+    # far in the future closes A, B and C
+    rows_c = [("c", None, "user", "x", None, "2026-01-01 05:01:00")] * 2 + [
+        ("c", 0, "user", "x", None, "2026-01-01 09:00:00")
+    ]
     for i, rows in enumerate([rows_a, rows_b, rows_c]):
         df = spark.createDataFrame(
             rows, st.TRANSCRIPT_DDL.replace("timestamp", "string")
@@ -365,26 +372,41 @@ def test_streaming_psi_windows(spark, tmp_path):
     got = {r.win_start.strftime("%H:%M"): r for r in spark.read.parquet(out).collect()}
     assert "00:00" in got and "01:00" in got, sorted(got)
 
-    def psi_py(counts, n):
+    def psi_py(counts):
+        # the batch formula: shares of the binned rows, out-of-ref rows
+        # a bin with reference count 0, eps floor only inside the log
         eps = 1e-6
-        ref = {0: 0.5, 1: 0.5}
+        ref = {0: 50, 1: 50}
+        ct, rt = sum(counts.values()), sum(ref.values())
         s = 0.0
-        for b in (0, 1):
-            cur = max(counts.get(b, 0) / n, eps)
-            s += (cur - ref[b]) * (math.log(cur) - math.log(ref[b]))
-        cur_o = max(counts.get("other", 0) / n, eps)
-        s += (cur_o - eps) * (math.log(cur_o) - math.log(eps))
+        for b in set(ref) | set(counts):
+            p, q = counts.get(b, 0) / ct, ref.get(b, 0) / rt
+            s += (p - q) * (math.log(max(p, eps)) - math.log(max(q, eps)))
         return s
 
     a = got["00:00"]
     # A: 10 rows alternating bins 0/1 -> 5/5, psi ~ 0
-    assert a.n == 10 and abs(a.psi - psi_py({0: 5, 1: 5}, 10)) < 1e-9
+    assert a.n == 10 and abs(a.psi - psi_py({0: 5, 1: 5})) < 1e-9
     assert not a.drifted
     b = got["01:00"]
     # B: 8 rows bin 1 + 2 out-of-ref -> strong shift
     assert b.n == 10
-    assert abs(b.psi - psi_py({1: 8, "other": 2}, 10)) < 1e-9
+    assert abs(b.psi - psi_py({1: 8, "other": 2})) < 1e-9
     assert b.drifted
+    # the same rows through the batch path: B's rows as the current
+    # slice, the reference histogram as 50 + 50 rows
+    batch = spark.createDataFrame(
+        [(1, True)] * 8 + [(7, True)] * 2 + [(0, False)] * 50 + [(1, False)] * 50,
+        "turn_idx int, cur boolean",
+    )
+    assert math.isclose(
+        b.psi,
+        psi_split(batch, "cur", "turn_idx % 10", "_v"),
+        rel_tol=1e-12,
+    )
+    c = got["05:00"]
+    # C: every bin NULL -> nothing to score; psi NULL, and drifted
+    assert c.n == 2 and c.psi is None and c.drifted
 
     # min_n guard: same input, min_n=2 — the n=1 flusher window's PSI
     # spike is suppressed while B (n=10) still alerts
@@ -488,6 +510,37 @@ def test_validate_stream_psi_leg_and_cli(spark, tmp_path, monkeypatch):
         "--checkpoint", str(tmp_path / "psi_ck2"),
     ])
     assert code2 == 1
+
+
+def test_validate_stream_psi_leg_null_window(spark, tmp_path):
+    """A window whose every bin is NULL reaches the drift sink: its psi
+    is NULL, so it is drifted by the empty-window rule, and its reason
+    renders psi=NULL (a NULL inside F.concat would null the reason)."""
+    root = str(tmp_path / "null_landing")
+    rows = [
+        ("c1", i, "user", None, None, f"2026-01-01 00:0{i}:00")
+        for i in range(3)
+    ] + [("c2", 0, "user", "x", None, "2026-01-01 09:00:00")]
+    df = spark.createDataFrame(
+        rows, st.TRANSCRIPT_DDL.replace("timestamp", "string")
+    )
+    df.withColumn("ts", df.ts.cast("timestamp")).coalesce(1).write.parquet(root)
+    viol = str(tmp_path / "null_viol")
+    for q in st.validate_stream(
+        spark.readStream.schema(st.TRANSCRIPT_DDL).parquet(root),
+        violations_out=viol,
+        checkpoint_dir=str(tmp_path / "null_ck"),
+        psi_ref={1: 10},
+        psi_bin_expr="length(text)",
+        psi_watermark="30 minutes",
+    ):
+        q.awaitTermination(120)
+    drift = spark.read.parquet(
+        os.path.join(viol, f"batch_id={st.DRIFT_BATCH_ID}")
+    ).collect()
+    assert [r.reason for r in drift] == [
+        "window [2026-01-01 00:00:00, 00:10:00): psi=NULL over 3 rows"
+    ]
 
 
 def test_stateful_ordering_idle_state_eviction(spark, tmp_path, land_files):

@@ -11,11 +11,11 @@ validated data, a golden corpus), plus the streaming-side knobs.
 
 One aggregation job: groupBy(bin).count over the reference table. The
 bin expression is stored verbatim so the streaming leg bins the live
-data identically. The streaming PSI is close to drift.psi_split's but
-not equal: streaming.streaming_psi floors both shares at 1e-6 before
-taking their difference (psi_split floors only inside the log), and
-its window shares divide by a row count that includes NULL-bin rows.
-Batch-calibrated thresholds therefore carry over approximately.
+data identically. streaming.streaming_psi folds the live windows with
+drift.psi_split's term builder, so thresholds calibrated on the batch
+paths carry over. Its shares divide by a window's binned rows (rows
+whose bin is NULL land in no bin), and a window where every bin is NULL
+has psi NULL and is reported as drifted.
 """
 
 from __future__ import annotations
