@@ -136,66 +136,150 @@ def conf_bytes(spark: SparkSession, key: str) -> int:
     )
 
 
-def one_task_bytes(spark: SparkSession) -> int:
-    """``spark.sql.files.openCostInBytes`` (4 MiB by default): the size
-    up to which a stage gathers its input into one task rather than
-    shuffle it. Spark's file scan charges this cost for opening a file,
-    so smaller files share a scan task, and on two or more cores one
-    larger file splits into two or more scan tasks."""
-    return conf_bytes(spark, "spark.sql.files.openCostInBytes")
-
-
+_ADAPTIVE = "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec"
+_RDD_SCAN = "org.apache.spark.sql.execution.RDDScanExec"
+_SHUFFLE_DEP = "org.apache.spark.ShuffleDependency"
 # plan nodes that keep a frame from running in the task that scans it:
-# an exchange (adaptive plans wrap every plan that has one), or a node
-# whose RDD is built by running jobs first (a cached relation's plan,
-# and subqueries below)
+# an exchange, or a node whose RDD is built by running jobs first (a
+# cached relation's plan, and the adaptive plans of subqueries)
 _NOT_IN_PLACE = (
     "org.apache.spark.sql.execution.exchange.Exchange",
-    "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec",
+    _ADAPTIVE,
     "org.apache.spark.sql.execution.columnar.InMemoryTableScanExec",
 )
 
 
+def _shuffles(gateway, rdd) -> bool:
+    """Whether computing ``rdd`` runs a shuffle: a ``ShuffleDependency``
+    in its lineage (a filled local checkpoint's lineage ends at its
+    stored blocks)."""
+    from py4j.java_gateway import is_instance_of
+
+    seen, todo = set(), [rdd]
+    while todo:
+        rdd = todo.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        deps = rdd.dependencies()
+        for i in range(deps.size()):
+            dep = deps.apply(i)
+            if is_instance_of(gateway, dep, _SHUFFLE_DEP):
+                return True
+            todo.append(dep.rdd())
+    return False
+
+
 def one_task(df: DataFrame) -> bool:
-    """Whether ``df`` can run whole in one task where it is scanned, so
-    ``df.coalesce(1)`` plans no exchange and is ``SinglePartition``:
+    """Whether ``df`` is gathered into one task: ``df.coalesce(1)`` then
+    plans no exchange and is ``SinglePartition``, which satisfies a
+    window's and an aggregate's distribution. This is the one rule for
+    every such step: the stats probe (``stats.bucketed_probe_stats``),
+    the conversation window (``violations.window_route``) and the
+    verdict aggregate (``verdict.verdicts``). Deciding runs no job.
 
-    1. its physical plan holds no exchange (and no node whose RDD would
-       run jobs to be built, so this decision runs none);
-    2. its size estimate is at most ``one_task_bytes``, or Spark plans
-       it as exactly one partition anyway.
+    ``df`` is one task when both hold:
 
-    Below ``openCostInBytes`` Spark still scans each file as a task of
-    its own (100 k synth turns in two files, a 2.2 MB estimate: 2
-    tasks), and a stage after that scan would shuffle what one task
-    can hold. Gathering it gives up that scan parallelism.
-    The cap was measured with one ``run_validation`` (a violation sink
-    and a checkpoint manifest, 40% of the turns in one conversation,
-    two scan files, ``local[2]``, 16 shuffle partitions, 4-vCPU host;
-    medians of 7 alternating warm runs after 2 warm-up rounds, the
-    other route forced by moving this cap for the window and the stats
-    probe only). Just under it, 183 k turns at a 3.85 MiB estimate:
-    2.42 s in place against 3.36 s via the exchanges. Just over it,
-    205 k turns at 4.28 MiB: 2.86 s via the exchanges against 2.16 s
-    forced in place. So the cap costs nothing where it gathers, and
-    errs toward the exchange past it."""
+    1. No exchange in what that task would run. The physical plan has
+       no exchange, no cached scan and no subquery (whose plans run jobs
+       to be built); an adaptive plan is read through to its initial
+       plan, where the exchanges are already inserted. A frame backed
+       by an RDD (a local checkpoint, a foreachBatch micro-batch) also
+       needs an RDD lineage with no shuffle, unless every block of it
+       is already stored.
+    2. Small enough. The size is the stored bytes when every block of
+       ``df`` is stored (``stored_bytes``, exact), else the optimizer's
+       estimate. It is at most ``spark.sql.files.openCostInBytes`` and
+       at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the
+       most AQE gives one reducer (an ``openCostInBytes`` of 0 or an
+       advisory size of ``1b`` forces every exchange).
+
+    Why openCostInBytes: Spark's file scan charges it for opening a
+    file, so below it files share a scan task and on two or more cores
+    one larger file splits into two or more. Below it Spark still scans
+    each file as a task of its own (100 k synth turns in two files, a
+    2.2 MB estimate: 2 tasks), and a stage after that scan would
+    shuffle what one task can hold. Gathering gives up that scan
+    parallelism, and on the reduce side
+    ``spark.sql.adaptive.coalescePartitions.parallelismFirst`` (the
+    default) keeps ``defaultParallelism`` reducers once a shuffle
+    passes ``minPartitionSize`` (1 MiB; the 2.1 MB window shuffle of
+    that input ran as 2 tasks). Measured with one ``run_validation``
+    (a violation sink and a checkpoint manifest, 40% of the turns in
+    one conversation, two scan files, ``local[2]``, 16 shuffle
+    partitions, 4-vCPU host; medians of 7 alternating warm runs after
+    2 warm-up rounds, the other route forced for the window and the
+    stats probe only): just under the cap, 183 k turns at a 3.85 MiB
+    estimate, 2.42 s in place against 3.36 s via the exchanges; just
+    over it, 205 k turns at 4.28 MiB, 2.86 s via the exchanges against
+    2.16 s forced in place. So the cap costs nothing where it gathers,
+    and errs toward the exchange past it. Past it the gathered stats
+    probe's cost follows the number of conversations: via the
+    exchanges level 1 combines map-side, so its shuffle carries at
+    most one row per conversation and scan task (18 KB on those
+    100 k turns, read by one reducer; the level-2 exchange then moves
+    18 KB in and 1.8 KB out in a job of one task), while gathered
+    the scan, both levels and their merge run in one task. Medians of
+    5 alternating collects (``local[2]``, 16 shuffle partitions) of a
+    probe that gathered only level 1's output: one-turn conversations
+    at a 4.8 MB estimate, 0.72 s gathered against 0.75 s via the
+    exchange; 20 turns per conversation at 38 MB, 0.75 s on both;
+    one-turn conversations at 57 MB, 5.28 s against 3.84 s.
+
+    Why no exception for a frame Spark plans as one partition: its scan
+    is one task on either route, but the reduce side is not. Below the
+    cap such a frame gathers like any other (a 3.4 MB file of 170 k
+    turns, ``local[2]``: a write of the suite's violations took 1.09 s
+    with the window in place against 1.15 s via its exchange). Past it,
+    measured
+    on a one-partition synth input (20 turns per conversation,
+    ``local[2]``, 16 shuffle partitions, 4-vCPU host; medians and
+    quartiles of 11 alternating pairs after 2 warm-up rounds, the
+    other route forced for that step only). The stats probe's collect:
+    at a 23.8 MiB estimate (500 k turns) 0.496 s (0.464-0.520)
+    gathered against 0.330 s (0.280-0.389) via the exchanges, at
+    57.2 MiB (1.2 M turns) 0.957 s (0.831-0.973) against 0.535 s
+    (0.526-0.693), the exchanges faster in 22 of 22 pairs; with
+    one-turn conversations, medians of 11 pairs, 0.98 s against 0.80 s
+    and 1.88 s against 1.79 s. A write of the suite's
+    violations: 2.582 s (2.318-2.631) in place against 2.447 s
+    (2.286-2.581), and 5.211 s (4.637-5.568) against 4.989 s
+    (4.665-5.339), in place faster in 7 of 22 pairs. So such a frame
+    takes the exchanges past ``openCostInBytes`` like any other.
+
+    Why stored bytes: they are exact, where a lazy frame's estimate
+    can be far from the rows it yields. A lazy frame is gathered only
+    when computing it runs no exchange, as for the violation rows of a
+    window in place, which one task computes anyway: the verdict
+    aggregate then rides that task, one job instead of a map stage's
+    job and the reduce job. A checkpoint that no job has filled yet is
+    judged by the lineage it would run."""
     from py4j.java_gateway import is_instance_of
 
     spark = df.sparkSession
     gateway = spark.sparkContext._gateway
     plan = df._jdf.queryExecution().executedPlan()
-    nodes = [plan]
+    if is_instance_of(gateway, plan, _ADAPTIVE):
+        plan = plan.initialPlan()
+    rdds, nodes = [], [plan]
     while nodes:
         node = nodes.pop()
         if not node.subqueries().isEmpty() or any(
             is_instance_of(gateway, node, c) for c in _NOT_IN_PLACE
         ):
             return False
+        if is_instance_of(gateway, node, _RDD_SCAN):
+            rdds.append(node.rdd())
         children = node.children()
         nodes += [children.apply(i) for i in range(children.size())]
-    if size_estimate(df) <= one_task_bytes(spark):
-        return True
-    return plan.execute().getNumPartitions() == 1
+    stored = stored_bytes(df)
+    if stored is None and any(_shuffles(gateway, r) for r in rdds):
+        return False
+    size = size_estimate(df) if stored is None else stored
+    return size <= min(
+        conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+        conf_bytes(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes"),
+    )
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ocsf_validator_spark.localframe import (
     empty_df,
     local_df,
+    one_task,
     release_checkpoint,
 )
 
@@ -49,15 +50,10 @@ from ocsf_validator_spark.spec import (
     Severity,
     transcript_suite,
 )
-from ocsf_validator_spark.stats import (
-    DEFAULT_BUCKETS,
-    bucketed_probe_stats,
-    stats_route,
-)
+from ocsf_validator_spark.stats import DEFAULT_BUCKETS, bucketed_probe_stats
 from ocsf_validator_spark.verdict import (
     exit_code_rows,
     summarize_rows,
-    verdict_route,
     verdicts,
 )
 from ocsf_validator_spark.violations import (
@@ -211,15 +207,17 @@ def run_validation(
     collected.
 
     With ``report_json`` the report carries the route each adaptive
-    step took, read from the helper that step's own call reads:
-    ``window_route`` (``violations.window_route``: ``"in_place"`` when
-    the input is small and the window runs in one task, else
-    ``"exchange"``), ``stats_route`` (``stats.stats_route``) and
-    ``verdict_route`` (``verdict.verdict_route``), each ``"one_task"``
-    when that aggregate finishes in one task without its exchange, else
-    ``"exchange"``, and ``skew_route``: the conversations split into
-    chunks, or None when none is (no skew, a carried run, or a window
-    in place).
+    step took, read from ``localframe.one_task`` of the frame that step
+    reads, the one rule its own call applies: ``stats_route`` (the
+    input) and ``verdict_route`` (the violation rows), each
+    ``"one_task"`` when that aggregate finishes in one task without its
+    exchange, else ``"exchange"``; ``window_route`` (the input, through
+    ``violations.window_route``: ``"in_place"`` or ``"exchange"``, and
+    always ``"exchange"`` on a carried run); and ``skew_route``: the
+    conversations split into chunks, or None when none is (no skew, a
+    carried run, or a window in place). With no sink the violation rows
+    stay lazy; those of a window in place are gathered too, so the
+    verdict collect runs the window and the aggregate in one task.
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -295,7 +293,7 @@ def run_validation(
     # of every flagship run per the BENCH.md phase tables).
     # distinct_count (no mergeable form) falls back to dataset_findings'
     # shared agg job.
-    routes = {"stats_route": stats_route(df)}
+    routes = {"stats_route": "one_task" if one_task(df) else "exchange"}
     bucket_stats = bucketed_probe_stats(
         df,
         conv_col=conv_col,
@@ -424,9 +422,9 @@ def run_validation(
         # Phase 4 — verdicts: one groupBy over the (small) violations set
         # unioned with the observed-bucket grid; collected ONCE. Report,
         # exit code, and manifest metrics all derive driver-side from
-        # these rows. The stored rows' size decides the route, so it is
-        # read once the sinks have filled them.
-        routes["verdict_route"] = verdict_route(viol)
+        # these rows. Stored rows are judged by their exact size, so the
+        # route is read once the sinks have filled them.
+        routes["verdict_route"] = "one_task" if one_task(viol) else "exchange"
         vd_rows = verdicts(
             df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed,

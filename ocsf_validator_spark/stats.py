@@ -25,11 +25,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocsf_validator_spark.localframe import (
-    local_df,
-    one_task_bytes,
-    size_estimate,
-)
+from ocsf_validator_spark.localframe import local_df, one_task
 
 DEFAULT_BUCKETS = 64
 
@@ -96,31 +92,6 @@ def column_stats(
     )
 
 
-def stats_route(df: DataFrame) -> str:
-    """How ``bucketed_probe_stats`` plans its two levels over ``df``:
-    ``"one_task"`` when the optimizer's size estimate of ``df`` is at
-    most ``spark.sql.files.openCostInBytes`` (``localframe.
-    one_task_bytes``), else ``"exchange"``.
-
-    Via the exchanges, level 1 combines map-side, so its shuffle carries
-    at most one row per conversation and scan task: on 100 k turns
-    (2.2 MB) it is 18 KB, which AQE reads in one reducer, and the
-    level-2 exchange is then a job of one task that moves 18 KB in and
-    1.8 KB out. On the one-task route the scan, both levels and their
-    merge run in one task, so its cost grows with the input and the
-    number of conversations. The cap is the measured one, not the AQE
-    advisory size (64 MiB). Medians of 5 alternating collects on
-    ``local[2]`` with 16 shuffle partitions, when this route still ran
-    level 1 on the scan's tasks and gathered only its output: one-turn
-    conversations (a level 1 as large as the input) at a 4.8 MB
-    estimate, 0.72 s gathered against 0.75 s via the exchange; 20 turns
-    per conversation at 38 MB, 0.75 s on both; one-turn conversations
-    at 57 MB, 5.28 s against 3.84 s. The route that also scans in one
-    task is measured within a whole run in ``localframe.one_task``."""
-    cap = one_task_bytes(df.sparkSession)
-    return "one_task" if size_estimate(df) <= cap else "exchange"
-
-
 def bucketed_probe_stats(
     df: DataFrame,
     conv_col: str = "conv_id",
@@ -165,7 +136,7 @@ def bucketed_probe_stats(
     _skew array<struct<n:long, conv>> sorted desc) — one row per bucket.
 
     Both levels run in the scan's task, without an exchange, when
-    ``stats_route(df)`` is ``"one_task"``: they aggregate
+    ``localframe.one_task(df)`` holds: they aggregate
     ``df.coalesce(1)``, whose ``SinglePartition`` satisfies both
     groupings, so the collect runs 1 job where the exchange route runs
     3 (level 1's exchange, level 2's, then the final aggregate).
@@ -179,7 +150,7 @@ def bucketed_probe_stats(
     # run ZERO extra jobs. Same pure-codegen discipline as max_aggs.
     merge_aggs = merge_aggs or {}
     _MERGE = {"sum": F.sum, "min": F.min, "max": F.max}
-    if stats_route(df) == "one_task":
+    if one_task(df):
         df = df.coalesce(1)
     l1 = df.groupBy(conv_col).agg(
         F.count(F.lit(1)).alias("_n"),

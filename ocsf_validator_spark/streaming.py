@@ -16,9 +16,8 @@ north-star extension for validating an APPEND-ONLY transcript stream
   of duplicating rows.
 
   Cost: a small micro-batch (files of at most ``spark.sql.files.
-  openCostInBytes`` in all, or one file below the AQE advisory size) is
-  one Spark job, the sink write: the fused window runs in one scan
-  task (``violations.window_route``).
+  openCostInBytes`` in all) is one Spark job, the sink write: the
+  fused window runs in one scan task (``violations.window_route``).
   A larger batch adds the window's exchange as a job of its own. The
   violation count (manifest line, ``on_batch``) and the input row
   count (``on_batch``) ride that write as observed metrics

@@ -19,31 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocsf_validator_spark.localframe import local_df, one_task_bytes, stored_bytes
+from ocsf_validator_spark.localframe import local_df, one_task
 from ocsf_validator_spark.spec import ConstraintSet, Severity
 from ocsf_validator_spark.stats import DEFAULT_BUCKETS, bucket_col
 
 SEV_RANK = "CASE severity WHEN 'FATAL' THEN 4 WHEN 'ERROR' THEN 3 WHEN 'WARNING' THEN 2 WHEN 'INFO' THEN 1 ELSE 0 END"
-
-
-def verdict_route(violations: DataFrame) -> str:
-    """How ``verdicts`` plans its aggregate over ``violations``:
-    ``"one_task"`` when they are a local checkpoint whose stored rows
-    (``localframe.stored_bytes``, memory plus disk) are at most
-    ``spark.sql.files.openCostInBytes``, else ``"exchange"``.
-
-    Gathered, the grid and the violation rows go through
-    ``coalesce(1)`` into one task, which aggregates them, so the collect
-    is one job instead of a map stage's job and the reduce job. Only
-    stored rows have a size known before the collect: a lazy frame
-    would be computed by the collect itself, and its size estimate can
-    be far from the rows it yields, so it keeps the exchange. Call this
-    after the sinks have filled the checkpoint; before that it reads
-    ``"exchange"``."""
-    size = stored_bytes(violations)
-    if size is not None and size <= one_task_bytes(violations.sparkSession):
-        return "one_task"
-    return "exchange"
 
 
 def verdicts(
@@ -67,7 +47,8 @@ def verdicts(
     ``observed_buckets`` (usually already in hand from the stats pass)
     skips the full-table distinct scan the default path needs. A suite
     that repeats a constraint id raises ``ValueError``. The aggregate
-    runs in one task when ``verdict_route(violations)`` says so."""
+    runs in one task, 1 job instead of 2, when
+    ``localframe.one_task(violations)`` holds."""
     spark = df.sparkSession
     if bucket_expr is None:
         bucket_expr = bucket_col(conv_col, num_buckets)
@@ -108,7 +89,7 @@ def verdicts(
     cells = grid.select(
         "*", F.lit(None).cast("int").alias("_n"), F.lit(0).alias("_sev")
     ).unionByName(hits)
-    if verdict_route(violations) == "one_task":
+    if one_task(violations):
         cells = cells.coalesce(1)
     return (
         cells.groupBy("bucket", "constraint_id")

@@ -36,13 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ocsf_validator_spark.localframe import (
-    conf_bytes,
-    empty_df,
-    local_df,
-    one_task,
-    size_estimate,
-)
+from ocsf_validator_spark.localframe import empty_df, local_df, one_task
 
 from ocsf_validator_spark.compile import violation_entries_guarded
 from ocsf_validator_spark.spec import (
@@ -538,12 +532,8 @@ def fused_group_violations(
     does not already satisfy the window's distribution. ``all_violations``
     hands this function ``df.coalesce(1)`` when the input is small
     (see ``window_route``); ``SinglePartition`` satisfies both
-    windows, so the pass then runs in that task with no exchange. That
-    route gives up parallelism on both sides: an input below
-    ``spark.sql.files.openCostInBytes`` that Spark scans as two or more
-    tasks is read by one, and via the exchange AQE keeps up to
-    ``defaultParallelism`` reducers once the shuffle passes
-    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MiB).
+    windows, so the pass then runs in that task with no exchange, at
+    the price in parallelism that ``localframe.one_task`` measures.
 
     Scale note: partitionBy(conv_id) puts each conversation in one task.
     ``chunk_rows`` (the skew route) splits conversations too large for
@@ -1844,43 +1834,13 @@ def residual_violations(
 
 def window_route(df: DataFrame, carry: DataFrame | None = None) -> str:
     """How ``all_violations`` plans the conversation window over ``df``:
-    ``"in_place"`` when the whole input runs in one small task, else
-    ``"exchange"``. With ``carry`` it is always ``"exchange"``: the
-    carried state's carrier rows reach the window through its exchange.
-
-    In place means both of:
-
-    1. ``localframe.one_task(df)``: no exchange in the physical plan of
-       ``df``, and a size estimate of at most ``spark.sql.files.
-       openCostInBytes`` or one partition as Spark plans it;
-    2. the size estimate is at most
-       ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the outer
-       cap on a one-partition input (set it to ``1b`` to force the
-       exchange).
-
-    Then ``df.coalesce(1)`` is ``SinglePartition``, which satisfies the
-    window's and the coverage aggregate's distributions, so the suite
-    runs as one scan-to-sink stage with no exchange. Deciding runs no
-    job. It takes parallelism away on both sides: an input below
-    ``openCostInBytes`` that Spark scans as two or more tasks
-    (``batch_skew``'s 2.2 MB input of two files scans as 2) is read by
-    one, and on the reduce
-    side ``spark.sql.adaptive.coalescePartitions.parallelismFirst``
-    (the default) would keep ``defaultParallelism`` reducers once a
-    shuffle passes ``minPartitionSize`` (1 MiB; ``batch_skew``'s 2.1 MB
-    window shuffle ran as 2 tasks). Measured at both caps: one 3.4 MB
-    file of 170 k turns (one partition, ``local[2]``), a write of the
-    suite's violations took 1.09 s in place against 1.15 s via the
-    exchange; the openCostInBytes cap is measured in
-    ``localframe.one_task``."""
-    if carry is not None:
-        return "exchange"
-    cap = conf_bytes(
-        df.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    )
-    if size_estimate(df) > cap or not one_task(df):
-        return "exchange"
-    return "in_place"
+    ``"in_place"`` when ``localframe.one_task(df)`` holds, so
+    ``df.coalesce(1)`` satisfies the window's and the coverage
+    aggregate's distributions and the suite runs as one scan-to-sink
+    stage with no exchange, else ``"exchange"``. With ``carry`` it is
+    always ``"exchange"``: the carried state's carrier rows reach the
+    window through its exchange. Deciding runs no job."""
+    return "in_place" if carry is None and one_task(df) else "exchange"
 
 
 def skew_chunk_rows(spark: SparkSession, n_rows: int) -> int:
@@ -1926,14 +1886,12 @@ def all_violations(
     With carry, skewed conversations are not chunked: the carried
     out-of-order bound and opening suppression are per conversation.
 
-    A small input (``window_route`` is ``"in_place"``: no exchange in
-    its plan, a size estimate of at most ``openCostInBytes`` or one
-    partition, and at most the AQE advisory size) is planned as
-    ``df.coalesce(1)``, so the whole suite runs in one task with no
-    exchange, where Spark would have scanned it in two or more tasks
-    and AQE could have kept two or more reducers (see
-    ``window_route``). Its ``skewed_convs`` are not chunked: one task
-    has nothing to balance. Deciding runs no job."""
+    A small input (``window_route`` is ``"in_place"``, the rule of
+    ``localframe.one_task``) is planned as ``df.coalesce(1)``, so the
+    whole suite runs in one task with no exchange, where Spark would
+    have scanned it in two or more tasks and AQE could have kept two or
+    more reducers. Its ``skewed_convs`` are not chunked: one task has
+    nothing to balance. Deciding runs no job."""
     in_place = window_route(df, carry) == "in_place"
     if in_place:
         df = df.coalesce(1)

@@ -97,10 +97,10 @@ def peak_exec_memory_of(spark):
 @pytest.fixture()
 def no_one_task(spark):
     """``no_one_task(fn) -> fn()``: run fn with the one-task routes
-    forced onto their exchanges: no non-empty input fits an
-    openCostInBytes of 0, so the stats probe, the verdict aggregate and
-    the window over an input Spark plans as two or more partitions all
-    take their exchange."""
+    forced onto their exchanges: no non-empty frame fits an
+    openCostInBytes of 0, so ``localframe.one_task`` holds for none,
+    and the stats probe, the window and the verdict aggregate all take
+    their exchange."""
 
     def run(fn):
         prev = spark.conf.get("spark.sql.files.openCostInBytes")

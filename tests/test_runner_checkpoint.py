@@ -281,17 +281,20 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
         ("sink", "exchange", 8),
         ("sink+cap", "exchange", 9),
         ("sink+quarantine", "exchange", 11),
+        ("none", "in_place", 2),
+        ("none", "exchange", 7),
     ],
     ids=[
         "sink", "sink+cap", "sink+quarantine",
         "sink-exchange", "sink+cap-exchange", "sink+quarantine-exchange",
+        "no-sink", "no-sink-exchange",
     ],
 )
 def test_routed_run_with_sinks_job_count(
     spark, tmp_path, jobs_of, persisted_rdds, no_one_task, sinks, route, pin
 ):
-    """A run_validation with a skewed conversation, a checkpoint
-    manifest and a violation sink. The input is small, so in place the
+    """A run_validation with a skewed conversation, a checkpoint manifest
+    and a violation sink (or none). The input is small, so in place the
     stats probe (1), the sink write (1: scan, window and write in one
     task, which stores the violation rows) and the verdict collect over
     the small stored rows (1) make 3 jobs, and the skewed conversation
@@ -301,9 +304,13 @@ def test_routed_run_with_sinks_job_count(
     the conversation is chunked: stats 3 (two exchanges, then the final
     aggregate), the sink write 3 (the skew-chunk carriers' exchange, the
     window's, then the write) and the verdict 2 make 8; the cap 9, the
-    quarantine leg 11. Every leg after the first sink reads the stored
-    rows, the report names the routes, and nothing the run stored is
-    left persisted when it returns."""
+    quarantine leg 11. With no sink the violation rows stay lazy: in
+    place they are gathered too, so the verdict collect runs the scan,
+    the window and the aggregate in one task (2 jobs); forced, it runs
+    the carriers', the window's and its own exchange (7). Every leg
+    after the first sink reads the stored rows, the report names the
+    routes, and nothing the run stored is left persisted when it
+    returns."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -314,7 +321,9 @@ def test_routed_run_with_sinks_job_count(
             return jobs_of(lambda: run_validation(
                 spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
                 checkpoint_dir=str(tmp_path / "ckpt"),
-                violations_out=str(tmp_path / "viol"),
+                violations_out=(
+                    None if sinks == "none" else str(tmp_path / "viol")
+                ),
                 report_json=str(tmp_path / "r.json"),
                 max_violation_rows=5 if sinks == "sink+cap" else None,
                 quarantine_out=(
@@ -804,8 +813,9 @@ def test_report_json_and_gc_state(spark, tmp_path, capsys):
     assert r1["exit_code"] == 0 and r1["n_rows"] == 1
     # a one-row, one-file increment is one small task: window in place
     assert r1["window_route"] == "in_place"
-    # the stats probe finishes in one task; with no sink nothing stores
-    # the violation rows, so the verdict keeps its exchange
+    # the stats probe finishes in one task; the --fd leg's broadcast
+    # join is an exchange in the violation rows' plan, so the verdict
+    # keeps its exchange
     assert (r1["stats_route"], r1["verdict_route"]) == ("one_task", "exchange")
     assert "phase_sec" in r1 and isinstance(r1["constraints"], list)
     inc([("a", 1, "assistant", "t1", "search", "2026-01-01 00:00:01")])
@@ -898,10 +908,10 @@ def test_run_validation_shuffle_bytes(
 ):
     """Shuffle bytes of one run_validation over a fixed 20 k-turn input.
     With a violation sink every phase runs in one task and it writes
-    none (without one, the verdict over the lazy violation rows keeps
-    its exchange). With the one-task routes forced onto their exchanges
-    and no sink it is pinned at the zstd figure (442,806 B) plus 5%;
-    lz4 blocks wrote 855,456 B."""
+    none (without one too: the verdict gathers the lazy violation rows
+    of the window in place). With the one-task routes forced onto their
+    exchanges and no sink it is pinned at the zstd figure (442,806 B)
+    plus 5%; lz4 blocks wrote 855,456 B."""
     df = synth_transcripts(spark, n_turns=20_000, seed=1)
     res, n = shuffle_bytes_of(lambda: run_validation(
         spark, df, quiet=True, violations_out=str(tmp_path / "viol")

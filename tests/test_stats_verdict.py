@@ -537,7 +537,8 @@ def test_loop_detector_semantics(spark):
 def test_stats_routes_agree(spark, jobs_of, no_one_task):
     """A small input's stats probe scans and runs both levels in one
     task: 1 job where the exchange route runs 3, and the same rows."""
-    from ocsf_validator_spark.stats import bucketed_probe_stats, stats_route
+    from ocsf_validator_spark.localframe import one_task
+    from ocsf_validator_spark.stats import bucketed_probe_stats
     from ocsf_validator_spark.synth import synth_transcripts
 
     df = synth_transcripts(spark, n_turns=3000, seed=11, skew_turns=600)
@@ -551,9 +552,9 @@ def test_stats_routes_agree(spark, jobs_of, no_one_task):
         ).collect()
         return sorted(rows, key=lambda r: r.bucket)
 
-    assert stats_route(df) == "one_task"
+    assert one_task(df)
     gathered, n_gathered = jobs_of(collect)
-    assert no_one_task(lambda: stats_route(df)) == "exchange"
+    assert not no_one_task(lambda: one_task(df))
     exchanged, n_exchanged = no_one_task(lambda: jobs_of(collect))
     assert (n_gathered, n_exchanged) == (1, 3)
     assert gathered == exchanged
@@ -561,37 +562,45 @@ def test_stats_routes_agree(spark, jobs_of, no_one_task):
 
 
 def test_verdict_routes_agree(spark, transcripts, jobs_of, no_one_task):
-    """Stored violation rows of at most openCostInBytes are aggregated
+    """Violation rows that ``localframe.one_task`` gathers are aggregated
     in one task: the collect runs 1 job where the exchange route runs 2,
-    with the same rows. A lazy frame, and a checkpoint no job has filled
-    yet, keep the exchange."""
-    from ocsf_validator_spark.localframe import release_checkpoint
-    from ocsf_validator_spark.verdict import verdict_route
+    with the same rows. Two such inputs: the stored rows of a filled
+    checkpoint, and the lazy rows of a window that runs in place. Lazy
+    windowed rows of an exchange, and a checkpoint of them that no job
+    has filled yet, keep the exchange their lineage would run."""
+    from ocsf_validator_spark.localframe import one_task, release_checkpoint
+    from ocsf_validator_spark.synth import synth_transcripts
+    from ocsf_validator_spark.violations import window_route
 
-    lazy = all_violations(transcripts, SUITE)
-    assert verdict_route(lazy) == "exchange"
-    v = lazy.localCheckpoint(eager=False)
-    try:
-        assert verdict_route(v) == "exchange"
-        v.write.format("noop").mode("overwrite").save()
+    def agree(df, v):
         observed = sorted({
-            int(r.b) for r in transcripts.select(
+            int(r.b) for r in df.select(
                 bucket_col("conv_id", 8).alias("b")
             ).collect()
         })
 
         def collect():
             return sorted(verdicts(
-                transcripts, v, SUITE, num_buckets=8,
-                observed_buckets=observed,
+                df, v, SUITE, num_buckets=8, observed_buckets=observed,
             ).collect())
 
-        assert verdict_route(v) == "one_task"
+        assert one_task(v)
         gathered, n_gathered = jobs_of(collect)
-        assert no_one_task(lambda: verdict_route(v)) == "exchange"
+        assert not no_one_task(lambda: one_task(v))
         exchanged, n_exchanged = no_one_task(lambda: jobs_of(collect))
+        assert (n_gathered, n_exchanged) == (1, 2)
+        assert gathered == exchanged
+        assert any(r.violation_count for r in gathered)
+
+    lazy = all_violations(transcripts, SUITE)
+    assert not one_task(lazy)
+    v = lazy.localCheckpoint(eager=False)
+    try:
+        assert not one_task(v)
+        v.write.format("noop").mode("overwrite").save()
+        agree(transcripts, v)
     finally:
         release_checkpoint(v)
-    assert (n_gathered, n_exchanged) == (1, 2)
-    assert gathered == exchanged
-    assert any(r.violation_count for r in gathered)
+    df = synth_transcripts(spark, n_turns=2000, seed=42)
+    assert window_route(df) == "in_place"
+    agree(df, all_violations(df, SUITE))

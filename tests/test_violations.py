@@ -541,7 +541,7 @@ def _executed_plan(df) -> str:
 
 def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
     """One single-partition transcripts file, validated on both routes:
-    in place (one scan partition, below the AQE advisory size) the
+    in place (below openCostInBytes and the AQE advisory size) the
     suite plans no exchange and a write is one job; with the advisory
     size forced to one byte the window takes its exchange, a job of its
     own. Both routes emit the same violation rows. Three small files,
@@ -549,7 +549,7 @@ def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
     so they too run in place in one job, with the same rows."""
     from collections import Counter
 
-    from ocsf_validator_spark.localframe import one_task_bytes, size_estimate
+    from ocsf_validator_spark.localframe import conf_bytes, size_estimate
     from ocsf_validator_spark.synth import synth_transcripts
 
     path, multi = str(tmp_path / "one"), str(tmp_path / "three")
@@ -558,7 +558,8 @@ def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
     synth.repartition(3).write.parquet(multi)
     df = spark.read.parquet(multi)
     assert df.rdd.getNumPartitions() == 3
-    assert size_estimate(df) <= one_task_bytes(spark)
+    open_cost = conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    assert size_estimate(df) <= open_cost
     viol = all_violations(df, SUITE, include_coverage=False)
     _, jobs = jobs_of(lambda: viol.write.format("noop").mode("overwrite").save())
     assert (window_route(df), jobs) == ("in_place", 1)
@@ -592,11 +593,22 @@ def test_window_runs_in_place_on_a_one_task_input(spark, tmp_path, jobs_of):
 def test_window_route_keeps_the_exchange_of_an_exchange_input(spark, jobs_of):
     """An input whose plan already has an exchange keeps the exchange
     route, and deciding so runs no job (building the RDD of an
-    adaptive plan would run its shuffle stages)."""
+    adaptive plan would run its shuffle stages). Two such inputs: a
+    repartition, and a ``row_number()`` over ``conv_id``, whose
+    exchange only the adaptive plan's initial planning inserts."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     from ocsf_validator_spark.synth import synth_transcripts
 
-    df = synth_transcripts(spark, n_turns=500, seed=3).repartition(1)
-    out, jobs = jobs_of(lambda: (window_route(df), all_violations(df, SUITE)))
-    assert jobs == 0
-    assert out[0] == "exchange"
-    assert "Coalesce 1" not in _executed_plan(out[1])
+    scan = synth_transcripts(spark, n_turns=500, seed=3)
+    numbered = scan.withColumn(
+        "_n", F.row_number().over(Window.partitionBy("conv_id").orderBy("ts"))
+    )
+    for df in (scan.repartition(1), numbered):
+        out, jobs = jobs_of(
+            lambda: (window_route(df), all_violations(df, SUITE))
+        )
+        assert jobs == 0
+        assert out[0] == "exchange"
+        assert "Coalesce 1" not in _executed_plan(out[1])
