@@ -653,7 +653,7 @@ def q_suite_verdicts(
     t = _transcripts(spark, sf)
     suite = _events_suite()
     v = violations if violations is not None else all_violations(t, suite)
-    # observed buckets stay LAZY (verdicts' default distinct): column
+    # observed buckets stay LAZY (verdicts' default grid): column
     # pruning drops the transcript view's row_number window from that
     # branch — verified plan: a pure user_id FileScan + two-level
     # distinct — so the buckets frame rides the caller's job instead

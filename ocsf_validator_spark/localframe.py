@@ -175,8 +175,9 @@ def one_task(df: DataFrame) -> bool:
     plans no exchange and is ``SinglePartition``, which satisfies a
     window's and an aggregate's distribution. This is the one rule for
     every such step: the stats probe (``stats.bucketed_probe_stats``),
-    the conversation window (``violations.window_route``) and the
-    verdict aggregate (``verdict.verdicts``). Deciding runs no job.
+    the conversation window (``violations.window_route``), and the
+    verdict's aggregate and lazy bucket grid (``verdict.verdicts``, of
+    the violation rows and of the input). Deciding runs no job.
 
     ``df`` is one task when both hold:
 

@@ -11,9 +11,12 @@ Pipeline phases (the Spark lifecycle from SURVEY.md §3):
                                        FATAL early-exit (runner.py:233-234)
   1. resume filter (optional)        — drop buckets already completed for
                                        this (suite_version, snapshot_id)
-  2. stats pass                      — ONE fused groupBy(bucket) agg
+  2. stats pass                      — ONE fused groupBy(bucket) agg with
+                                       the skew probe; skipped when the
+                                       window runs in place (one task)
   3. violation pass                  — fused row projection ∪ group legs
   4. verdict pass                    — per-(bucket, constraint) scorecard
+                                       (in place: with each bucket's rows)
   5. sinks                           — violations/verdicts parquet, manifest
 
 Usage:
@@ -33,7 +36,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import (
@@ -85,6 +88,10 @@ def _bounds(spec: str, opts: str) -> tuple:
     if got["min"] is None and got["max"] is None:
         raise ValueError(spec)
     return got["min"], got["max"]
+
+
+# a collected verdict row: verdict.verdicts' five public columns
+_VERDICT_ROW = Row("bucket", "constraint_id", "severity", "violation_count", "pass")
 
 
 @dataclass
@@ -206,18 +213,30 @@ def run_validation(
     row once. The stored rows are released once the verdict rows are
     collected.
 
+    A window that runs in place (``violations.window_route``) runs no
+    stats probe, since one task has nothing to chunk: the enum coverage
+    flags ride the sink's job (all_violations' lazy coverage leg) and
+    the observed buckets with their row counts (the manifest's
+    ``n_rows``) ride the verdict collect (``verdicts``' lazy grid), so
+    a small run is 2 jobs with a sink and 1 without. Its MetricBounds
+    aggregate in one shared job while the plan is built. A rerun with
+    nothing pending learns so from the verdict rows; it returns before
+    the staged sinks are published and writes no manifest entry.
+
     With ``report_json`` the report carries the route each adaptive
     step took, read from ``localframe.one_task`` of the frame that step
     reads, the one rule its own call applies: ``stats_route`` (the
     input) and ``verdict_route`` (the violation rows), each
     ``"one_task"`` when that aggregate finishes in one task without its
-    exchange, else ``"exchange"``; ``window_route`` (the input, through
-    ``violations.window_route``: ``"in_place"`` or ``"exchange"``, and
-    always ``"exchange"`` on a carried run); and ``skew_route``: the
-    conversations split into chunks, or None when none is (no skew, a
-    carried run, or a window in place). With no sink the violation rows
-    stay lazy; those of a window in place are gathered too, so the
-    verdict collect runs the window and the aggregate in one task.
+    exchange, else ``"exchange"`` (in place the bucket counts of
+    ``stats_route`` ride the verdict's task); ``window_route`` (the
+    input, through ``violations.window_route``: ``"in_place"`` or
+    ``"exchange"``, and always ``"exchange"`` on a carried run); and
+    ``skew_route``: the conversations split into chunks, or None when
+    none is (no skew, a carried run, or a window in place). With no
+    sink the violation rows stay lazy; those of a window in place are
+    gathered too, so the verdict collect runs the window and the
+    aggregate in one task.
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -283,6 +302,12 @@ def run_validation(
                     "(run without --checkpoint for whole-table bounds)"
                 )
 
+    def nothing_pending() -> RunResult:
+        # everything already validated for this (suite, snapshot) —
+        # don't emit coverage findings against an empty remainder
+        say("nothing pending; all buckets previously completed")
+        return RunResult(0, 0, 0, time.time() - t0, skipped_buckets=skipped)
+
     # Phase 2 — single-pass stats, collected once: yields n_rows, the
     # observed-bucket list (so the verdict pass never rescans the input),
     # the dataset-level observations (violations.observation_aggs: enum
@@ -292,38 +317,44 @@ def run_validation(
     # where rounds 1-2 spent a separate third scan on the probe (12-15%
     # of every flagship run per the BENCH.md phase tables).
     # distinct_count (no mergeable form) falls back to dataset_findings'
-    # shared agg job.
-    routes = {"stats_route": "one_task" if one_task(df) else "exchange"}
-    bucket_stats = bucketed_probe_stats(
-        df,
-        conv_col=conv_col,
-        num_buckets=num_buckets,
-        probe_floor=skew_min_rows if detect_skew else None,
-        merge_aggs=observation_aggs(suite, df),
-    ).collect()
+    # shared agg job. A window that runs in place needs no probe: one
+    # task has nothing to chunk, the coverage flags ride the sink's job
+    # (all_violations' lazy coverage leg) and the buckets with their
+    # rows ride the verdict collect (its lazy grid, whose rows are one
+    # per bucket and constraint: a suite with no constraint probes).
+    routes = {
+        "stats_route": "one_task" if one_task(df) else "exchange",
+        "window_route": window_route(df, carry_state),
+    }
+    probe = routes["window_route"] == "exchange" or not suite.constraints
+    bucket_stats = observed = observed_enums = observed_metrics = None
+    if probe:
+        bucket_stats = bucketed_probe_stats(
+            df,
+            conv_col=conv_col,
+            num_buckets=num_buckets,
+            probe_floor=skew_min_rows if detect_skew else None,
+            merge_aggs=observation_aggs(suite, df),
+        ).collect()
+        observed = [int(r.bucket) for r in bucket_stats]
+        observed_enums, observed_metrics = fold_observations(
+            suite, df, bucket_stats
+        )
+        n_rows = observed_metrics["__n_rows"]
+        if n_rows == 0 and skipped > 0:
+            return nothing_pending()
     lap("stats")
-    observed = [int(r.bucket) for r in bucket_stats]
-    observed_enums, observed_metrics = fold_observations(
-        suite, df, bucket_stats
-    )
-    n_rows = observed_metrics["__n_rows"]
-    if n_rows == 0 and skipped > 0:
-        # everything already validated for this (suite, snapshot) —
-        # don't emit coverage findings against an empty remainder
-        say("nothing pending; all buckets previously completed")
-        return RunResult(0, 0, 0, time.time() - t0, skipped_buckets=skipped)
 
     # Phase 2b — skew routing decision, now pure driver arithmetic over
     # the probe structs collected with the stats (zero extra jobs):
     # conversations too big for one window task are split into turn_idx
     # chunks of one task's share of the rows. Threshold: ~4x that share
     # (never below skew_min_rows, the probe's collection floor, so the
-    # candidates are always a superset). A window that runs in place is
-    # one task, so nothing is chunked there (see all_violations).
+    # candidates are always a superset). A window in place is one task:
+    # nothing to chunk.
     skewed: list[str] = []
     skew_route = None
-    routes["window_route"] = window_route(df, carry_state)
-    if detect_skew:
+    if detect_skew and routes["window_route"] == "exchange":
         from ocsf_validator_spark.violations import skew_chunk_rows
 
         parallelism = int(
@@ -348,8 +379,6 @@ def run_validation(
                 # carried increments keep whole-conversation windows
                 # (see all_violations)
                 route = "the whole-conversation window (incremental carry)"
-            elif routes["window_route"] == "in_place":
-                route = "the whole-conversation window (one task, in place)"
             else:
                 # chunk count for dense turn_idx; gaps leave fewer
                 n_chunks = sum(-(-n // chunk_rows) for _, n in skewed_counts)
@@ -425,10 +454,21 @@ def run_validation(
         # these rows. Stored rows are judged by their exact size, so the
         # route is read once the sinks have filled them.
         routes["verdict_route"] = "one_task" if one_task(viol) else "exchange"
-        vd_rows = verdicts(
+        got = verdicts(
             df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed,
+            row_counts=not probe,
         ).collect()
+        vd_rows = [_VERDICT_ROW(*r[:5]) for r in got]
+        if not probe:
+            # the probe's per-bucket rows, read off the verdict's grid
+            bucket_stats = sorted(
+                {r.bucket: r for r in got if r.n_rows is not None}.values(),
+                key=lambda r: r.bucket,
+            )
+            n_rows = sum(int(r.n_rows) for r in bucket_stats)
+            if n_rows == 0 and skipped > 0:
+                return nothing_pending()  # the staged sinks are dropped
         for tmp in staging.values():
             _publish(spark, tmp)
     finally:

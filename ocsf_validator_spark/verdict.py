@@ -35,6 +35,7 @@ def verdicts(
     threshold: Severity = Severity.ERROR,
     bucket_expr=None,
     observed_buckets: list[int] | None = None,
+    row_counts: bool = False,
 ) -> DataFrame:
     """Build the complete per-(bucket, constraint) scorecard.
 
@@ -45,10 +46,16 @@ def verdicts(
     ``bucket_expr`` overrides the default xxhash64 bucket (e.g.
     stats.md5_bucket_col for oracle-reproducible bucketing).
     ``observed_buckets`` (usually already in hand from the stats pass)
-    skips the full-table distinct scan the default path needs. A suite
-    that repeats a constraint id raises ``ValueError``. The aggregate
-    runs in one task, 1 job instead of 2, when
-    ``localframe.one_task(violations)`` holds."""
+    is the bucket grid; without it the grid is a per-bucket count of
+    ``df``, gathered into one task when ``localframe.one_task(df)``
+    holds, with every constraint attached by exploding a literal array.
+    ``row_counts`` adds that count as a sixth column, ``n_rows``: a grid
+    bucket's input rows (None on bucket -1 and on an
+    ``observed_buckets`` grid), so a caller reads the buckets and their
+    rows from the verdict's own collect. A suite that repeats a
+    constraint id raises ``ValueError``. The aggregate runs in one task,
+    1 job instead of 2, when ``localframe.one_task(violations)``
+    holds."""
     spark = df.sparkSession
     if bucket_expr is None:
         bucket_expr = bucket_col(conv_col, num_buckets)
@@ -59,18 +66,25 @@ def verdicts(
             spark,
             [(int(b), cid, sev) for b in observed_buckets for cid, sev in cons],
             "bucket int, constraint_id string, constraint_severity string",
-        )
+        ).select("*", F.lit(None).cast("long").alias("_rows"))
     else:
+        src = df.coalesce(1) if one_task(df) else df
         grid = (
-            df.select(bucket_expr.alias("bucket"))
-            .distinct()
-            .crossJoin(
-                F.broadcast(
-                    local_df(
-                        spark, cons,
-                        "constraint_id string, constraint_severity string",
+            src.groupBy(bucket_expr.alias("bucket"))
+            .agg(F.count(F.lit(1)).alias("_rows"))
+            .select(
+                "bucket",
+                F.inline(F.array(*[
+                    F.struct(
+                        F.lit(cid).alias("constraint_id"),
+                        F.lit(sev).alias("constraint_severity"),
                     )
-                )
+                    for cid, sev in cons
+                ]).cast(
+                    "array<struct<constraint_id:string,"
+                    "constraint_severity:string>>"
+                )),
+                "_rows",
             )
         )
     # ONE aggregate over grid cells and violations: grid rows carry the
@@ -83,6 +97,7 @@ def verdicts(
         .alias("bucket"),
         "constraint_id",
         F.lit(None).cast("string").alias("constraint_severity"),
+        F.lit(None).cast("long").alias("_rows"),
         F.lit(1).alias("_n"),
         F.expr(SEV_RANK).alias("_sev"),
     )
@@ -97,6 +112,7 @@ def verdicts(
             F.max("constraint_severity").alias("_grid_sev"),
             F.count("_n").alias("violation_count"),
             F.max("_sev").alias("_max_sev"),
+            F.max("_rows").alias("n_rows"),
         )
         .filter(F.col("_grid_sev").isNotNull() | (F.col("bucket") == -1))
         .select(
@@ -110,6 +126,7 @@ def verdicts(
             ).alias("severity"),
             "violation_count",
             (F.col("_max_sev") < F.lit(int(threshold))).alias("pass"),
+            *(["n_rows"] if row_counts else []),
         )
     )
 

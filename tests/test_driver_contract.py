@@ -86,7 +86,7 @@ def test_verdict_diff_fused_stats_match_naive_scans(spark):
         assert obs_enums[half]["role"] == naive_obs, half
 
 
-@pytest.mark.parametrize("name,jobs", [("suite_verdicts", 6),
+@pytest.mark.parametrize("name,jobs", [("suite_verdicts", 5),
                                        ("verdict_diff", 7),
                                        ("suite_violations", 3),
                                        ("worst_conversations", 2),
@@ -97,7 +97,9 @@ def test_verdict_query_exec_jobs(spark, jobs_of, name, jobs):
     verdict queries the scorecard is one aggregate over the grid and
     the violations (suite_verdicts ran 10 jobs and verdict_diff 16 when
     the grid was a left join plus a second aggregate for the
-    dataset-level rows). The transcript view numbers turns in a window
+    dataset-level rows, and suite_verdicts 6 while its lazy grid
+    broadcast the constraints into a cross join instead of exploding a
+    literal array). The transcript view numbers turns in a window
     partitioned by conv_id, whose exchange the suite's conversation
     window reuses (one job more each when it was partitioned by
     user_id)."""

@@ -34,11 +34,20 @@ def test_fatal_schema_aborts(spark, transcripts):
 
 
 def test_checkpoint_resume(spark, tmp_path):
+    """A rerun of a completed (suite, snapshot) skips every bucket. The
+    input is small, so the window runs in place and no stats probe
+    runs: the rerun learns that nothing is pending from its verdict
+    collect, after the sink write, so it leaves the sink's rows, its
+    staging directories and the manifest as they were."""
+    from ocsf_validator_spark.violations import window_route
+
     manifest = str(tmp_path / "manifest")
+    sink = str(tmp_path / "viol")
     df = synth_transcripts(spark, n_turns=5000, seed=42)
+    assert window_route(df) == "in_place"
     r1 = run_validation(
         spark, df, num_buckets=16, quiet=True,
-        checkpoint_dir=manifest, snapshot_id="snapA",
+        checkpoint_dir=manifest, snapshot_id="snapA", violations_out=sink,
     )
     assert r1.exit_code in (0, 1)
     assert r1.manifest_entries, "first run must write manifest entries"
@@ -46,14 +55,21 @@ def test_checkpoint_resume(spark, tmp_path):
         ckpt.completed_buckets(manifest, transcript_suite().version(), "snapA")
     )
     assert n_buckets_done == len(r1.manifest_entries)
+    n_sink = spark.read.parquet(sink).count()
+    assert n_sink == r1.n_violations > 0
+    n_entries = len(ckpt.read_entries(manifest))
 
     # second run with same snapshot + suite: everything skipped
     r2 = run_validation(
         spark, df, num_buckets=16, quiet=True,
-        checkpoint_dir=manifest, snapshot_id="snapA",
+        checkpoint_dir=manifest, snapshot_id="snapA", violations_out=sink,
     )
     assert r2.skipped_buckets == n_buckets_done
     assert r2.n_rows == 0  # nothing pending
+    assert (r2.exit_code, r2.manifest_entries) == (0, [])
+    assert spark.read.parquet(sink).count() == n_sink
+    assert not [n for n in os.listdir(sink) if n.startswith("_staging")]
+    assert len(ckpt.read_entries(manifest)) == n_entries
 
     # different snapshot → full re-run (stale lineage never matches)
     r3 = run_validation(
@@ -103,20 +119,21 @@ def test_cli_main(tmp_path):
     assert code == 1  # synthetic defects present
 
 
-def test_skew_probe_adds_zero_jobs(spark, jobs_of):
-    """Round-3 contract: the skew probe rides the stats scan (two-level
-    aggregation in stats.bucketed_probe_stats), so detect_skew=True must
-    launch exactly as many jobs as detect_skew=False — rounds 1-2 paid a
-    separate full-scan probe job here."""
+def test_skew_probe_adds_zero_jobs(spark, jobs_of, no_one_task):
+    """The skew probe rides the stats scan (two-level aggregation in
+    stats.bucketed_probe_stats), so detect_skew=True launches exactly
+    as many jobs as detect_skew=False, where rounds 1-2 paid a separate
+    full-scan probe job. Both run on the forced exchange: a small input
+    whose window runs in place runs no stats probe at all."""
     df = synth_transcripts(spark, n_turns=5000, seed=42)
-    _, n_off = jobs_of(
+    _, n_off = no_one_task(lambda: jobs_of(
         lambda: run_validation(spark, df, num_buckets=8, quiet=True,
                                detect_skew=False),
-    )
-    _, n_on = jobs_of(
+    ))
+    _, n_on = no_one_task(lambda: jobs_of(
         lambda: run_validation(spark, df, num_buckets=8, quiet=True,
                                detect_skew=True),
-    )
+    ))
     assert n_on == n_off
 
 
@@ -275,13 +292,13 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
 @pytest.mark.parametrize(
     "sinks, route, pin",
     [
-        ("sink", "in_place", 3),
-        ("sink+cap", "in_place", 4),
-        ("sink+quarantine", "in_place", 6),
+        ("sink", "in_place", 2),
+        ("sink+cap", "in_place", 3),
+        ("sink+quarantine", "in_place", 5),
         ("sink", "exchange", 8),
         ("sink+cap", "exchange", 9),
         ("sink+quarantine", "exchange", 11),
-        ("none", "in_place", 2),
+        ("none", "in_place", 1),
         ("none", "exchange", 7),
     ],
     ids=[
@@ -294,23 +311,25 @@ def test_routed_run_with_sinks_job_count(
     spark, tmp_path, jobs_of, persisted_rdds, no_one_task, sinks, route, pin
 ):
     """A run_validation with a skewed conversation, a checkpoint manifest
-    and a violation sink (or none). The input is small, so in place the
-    stats probe (1), the sink write (1: scan, window and write in one
-    task, which stores the violation rows) and the verdict collect over
-    the small stored rows (1) make 3 jobs, and the skewed conversation
-    is not chunked; the schema audit adds none. The detail-row cap adds
-    its exchange (4); the quarantine leg adds its semi-join's exchanges
-    and write (6). With every one-task route forced onto its exchange
-    the conversation is chunked: stats 3 (two exchanges, then the final
-    aggregate), the sink write 3 (the skew-chunk carriers' exchange, the
-    window's, then the write) and the verdict 2 make 8; the cap 9, the
-    quarantine leg 11. With no sink the violation rows stay lazy: in
-    place they are gathered too, so the verdict collect runs the scan,
-    the window and the aggregate in one task (2 jobs); forced, it runs
-    the carriers', the window's and its own exchange (7). Every leg
-    after the first sink reads the stored rows, the report names the
-    routes, and nothing the run stored is left persisted when it
-    returns."""
+    and a violation sink (or none). The input is small, so in place no
+    stats probe runs and nothing is chunked: the sink write (1: scan,
+    window, coverage flags and write in one task, which stores the
+    violation rows) and the verdict collect (1: the stored rows and the
+    input's per-bucket row counts, the manifest's n_rows, aggregated in
+    one task) make 2 jobs; the schema audit adds none. The detail-row
+    cap adds its exchange (3); the quarantine leg adds its semi-join's
+    exchanges and write (5). With every one-task route forced onto its
+    exchange the stats probe runs and the conversation is chunked:
+    stats 3 (two exchanges, then the final aggregate), the sink write 3
+    (the skew-chunk carriers' exchange, the window's, then the write)
+    and the verdict 2 make 8; the cap 9, the quarantine leg 11. With no
+    sink the violation rows stay lazy: in place they are gathered too,
+    so the verdict collect runs the scan, the window, the coverage
+    flags, the bucket counts and the aggregate in one task (1 job);
+    forced, it runs the carriers', the window's and its own exchange
+    after the probe (7). Every leg after the first sink reads the
+    stored rows, the report names the routes, and nothing the run
+    stored is left persisted when it returns."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -348,6 +367,134 @@ def test_routed_run_with_sinks_job_count(
         assert rep["window_route"] == route
         assert n == pin
         assert persisted_rdds() - before == set()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _coverage_metric_suite():
+    """The transcript suite plus a second EnumCoverage on role and
+    three MetricBounds (two mergeable, one distinct_count), each of
+    which fires on synth data."""
+    from ocsf_validator_spark.spec import EnumCoverage, MetricBound
+
+    return transcript_suite().add(
+        EnumCoverage(column="role", values=("user", "moderator"),
+                     id_override="cov.extra"),
+        MetricBound(column="tool", metric="null_rate", hi=0.01),
+        MetricBound(column="turn_idx", metric="min", lo=1),
+        MetricBound(column="conv_id", metric="distinct_count", lo=10**6),
+    )
+
+
+@pytest.mark.parametrize(
+    "kind, pin", [("transcripts", 3), ("coverage+metrics", 4)]
+)
+def test_in_place_run_matches_the_exchange_run(
+    spark, tmp_path, jobs_of, no_one_task, kind, pin
+):
+    """A run whose window runs in place runs no stats probe: its
+    coverage flags ride the sink write and its buckets with their row
+    counts ride the verdict collect. It returns what the run forced
+    onto the exchanges (which probes first) returns: exit code, row
+    count, verdict rows, the manifest's per-bucket n_rows and
+    n_violations, and the sink rows. In place the sink write, the
+    verdict collect and the verdicts_out write make 3 jobs (4 when the
+    stats probe ran first). The MetricBounds' shared aggregate runs
+    eagerly while the plan is built and replaces the probe's job, so
+    that suite costs 4 (5 with the probe, whose mergeable aggregates
+    still left distinct_count to that shared job)."""
+    df = synth_transcripts(spark, n_turns=4000, seed=3)
+    suite = (
+        transcript_suite() if kind == "transcripts"
+        else _coverage_metric_suite()
+    )
+
+    def run(tag):
+        out = tmp_path / tag
+        return run_validation(
+            spark, df, suite, num_buckets=8, quiet=True,
+            checkpoint_dir=str(out / "ckpt"),
+            violations_out=str(out / "viol"),
+            verdicts_out=str(out / "vd"),
+            report_json=str(out / "r.json"),
+        )
+
+    def outputs(tag, res):
+        out = tmp_path / tag
+        with open(out / "r.json") as f:
+            assert json.load(f)["window_route"] == tag
+        return (
+            res.exit_code,
+            res.n_rows,
+            res.n_violations,
+            sorted(map(tuple, spark.read.parquet(str(out / "vd")).collect())),
+            sorted(
+                (e.bucket, e.n_rows, e.n_violations)
+                for e in res.manifest_entries
+            ),
+            sorted(
+                map(tuple, spark.read.parquet(str(out / "viol")).collect()),
+                key=repr,
+            ),
+        )
+
+    res, n = jobs_of(lambda: run("in_place"))
+    forced = no_one_task(lambda: run("exchange"))
+    got = outputs("in_place", res)
+    assert got == outputs("exchange", forced)
+    assert sum(n for _, n, _ in got[4]) == got[1] == 4000
+    assert got[2] > 0 and got[5]
+    if kind != "transcripts":
+        fired = {s["constraint_id"] for s in res.summary_rows
+                 if s["violation_count"]}
+        assert {"cov.extra", "metric.distinct_count.conv_id",
+                "metric.min.turn_idx", "metric.null_rate.tool"} <= fired
+    assert n == pin
+
+
+def test_report_json_keys(spark, tmp_path, capsys, no_one_task):
+    """The --report-json object and its phase_sec carry the same keys
+    on both routes (a quarantine_out run adds a "quarantine" lap). In
+    place the skewed conversation is neither chunked nor announced; on
+    the exchange the runner prints the chunked route."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        # threshold = max(100, 4 * 4000 / 8) = 2000 < the 2400-turn conv
+        df = synth_transcripts(spark, n_turns=4000, seed=3, skew_turns=2400)
+        for route in ("in_place", "exchange"):
+            path = str(tmp_path / f"{route}.json")
+
+            def run():
+                return run_validation(
+                    spark, df, num_buckets=8, skew_min_rows=100,
+                    report_json=path,
+                )
+
+            run() if route == "in_place" else no_one_task(run)
+            said = capsys.readouterr().out
+            with open(path) as f:
+                rep = json.load(f)
+            assert set(rep) == {
+                "exit_code", "n_rows", "n_violations", "wall_sec",
+                "turns_per_sec", "snapshot_id", "suite_version",
+                "skipped_buckets", "phase_sec", "skew_route",
+                "stats_route", "window_route", "verdict_route",
+                "constraints",
+            }
+            assert set(rep["phase_sec"]) == {
+                "audit", "stats", "skew_probe", "skew_path", "verdict"
+            }
+            assert (rep["window_route"], rep["n_rows"]) == (route, 4000)
+            routed = [
+                line for line in said.splitlines()
+                if line.startswith("skew: routing")
+            ]
+            if route == "in_place":
+                assert (routed, rep["skew_route"]) == ([], None)
+            else:
+                assert len(routed) == 1 and "chunked windows" in routed[0]
+                assert rep["skew_route"]["convs"] == 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
