@@ -95,7 +95,11 @@ from ocsf_validator_spark.stats import (
     md5_bucket_col,
 )
 from ocsf_validator_spark.verdict import verdicts
-from ocsf_validator_spark.violations import all_violations
+from ocsf_validator_spark.violations import (
+    all_violations,
+    fold_observations,
+    observation_aggs,
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -667,87 +671,56 @@ def q_suite_verdicts(
     )
 
 
-def _vd_observed_stats(ev: DataFrame, cov_vals: list) -> tuple[dict, dict]:
-    """ONE stats scan feeds BOTH of verdict_diff's runs: per
-    (bucket, even-half) group, the observed-bucket bit and the
-    enum-coverage set ride the same bounded aggregation (<=16 groups),
-    replacing the four separate full scans the two runs used to pay
-    (2x observed-bucket distinct + 2x dataset_findings coverage agg).
-    The per-half values are IDENTICAL to the per-run scans by
-    construction: role comes 1:1 from event_type, the parity predicate
-    on the derived conv_id is the same expression, and rows whose
-    parity is NULL (uncastable conv_id) fall only into the full run —
-    exactly what the filtered scan's NULL-dropping WHERE did.
-
-    Returns ({half: observed_bucket_list}, {half: observed_enums dict})
-    keyed by half=True for the even-conversation run, False for the
-    full run (tests/test_driver_contract.py pins equality with the
-    naive per-half scans)."""
-    stat_rows = (
-        ev.select(F.col("user_id").cast("string").alias("conv_id"), "event_type")
-        .select(
-            md5_bucket_col("conv_id", 8).alias("b"),
-            F.coalesce(
-                F.expr("CAST(conv_id AS BIGINT) % 2 = 0"), F.lit(False)
-            ).alias("g"),
-            F.col("event_type").alias("role"),
-        )
-        .groupBy("b", "g")
-        .agg(
-            F.collect_set(
-                F.when(F.col("role").isin(*cov_vals), F.col("role"))
-            ).alias("obs")
-        )
-        .collect()
-    )
-    obs_buckets = {
-        True: sorted({int(r["b"]) for r in stat_rows if r["g"]}),
-        False: sorted({int(r["b"]) for r in stat_rows}),
-    }
-    obs_enums = {
-        True: {"role": {v for r in stat_rows if r["g"] for v in r["obs"]}},
-        False: {"role": {v for r in stat_rows for v in r["obs"]}},
-    }
-    return obs_buckets, obs_enums
-
-
 def q_verdict_diff(spark: SparkSession, sf: str) -> DataFrame:
     """Run-over-run verdict regression report (verdict.verdict_diff):
     the scorecard of the even-conversation half (yesterday's snapshot)
     diffed against the full table (today's) — emits only regressed /
     fixed / new_fail / gone_fail / still_failing / count_changed rows,
-    change-proportional at any scale."""
+    change-proportional at any scale.
+
+    Both runs take their observed buckets and dataset-level
+    observations (violations.observation_aggs) from ONE collect of a
+    per-(bucket, half) aggregate, folded per run with
+    violations.fold_observations: the even run folds its half's rows,
+    the full run every row. A row whose parity is NULL (uncastable
+    conv_id) falls only into the full run, as the half's filter drops
+    it."""
     suite = _events_suite()
-    cov = [c for c in suite.constraints if isinstance(c, EnumCoverage)]
-    other = sorted({c.column for c in cov} - {"role"})
-    if other:
-        # the fused stats scan observes event_type, the events column
-        # behind the transcripts' role; any other coverage column would
-        # be judged against an empty observed set
-        raise ValueError(
-            "q_verdict_diff observes enum coverage only for 'role'; the "
-            f"events suite also declares EnumCoverage on {other}"
-        )
     t = _transcripts(spark, sf)
-    ev = _t(spark, sf, "events")
-    cov_vals = [v for c in cov for v in c.values]
-    obs_buckets, obs_enums = _vd_observed_stats(ev, cov_vals)
+    even = "CAST(conv_id AS BIGINT) % 2 = 0"
+    stats = (
+        t.groupBy(
+            md5_bucket_col("conv_id", 8).alias("bucket"),
+            F.coalesce(F.expr(even), F.lit(False)).alias("_half"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *[agg.alias(a) for a, (agg, _) in observation_aggs(suite, t).items()],
+        )
+        .collect()
+    )
 
     def _vd(pred: str | None) -> DataFrame:
         tt = t.filter(pred) if pred else t
-        half = pred is not None
+        rows = [r for r in stats if r["_half"] or not pred]
+        observed_enums, observed_metrics = fold_observations(suite, tt, rows)
         return verdicts(
             tt,
-            all_violations(tt, suite, observed_enums=obs_enums[half]),
+            all_violations(
+                tt,
+                suite,
+                observed_enums=observed_enums,
+                observed_metrics=observed_metrics,
+            ),
             suite,
             num_buckets=8,
             bucket_expr=md5_bucket_col("conv_id", 8),
-            observed_buckets=obs_buckets[half],
+            observed_buckets=sorted({int(r["bucket"]) for r in rows}),
         )
 
     from ocsf_validator_spark.verdict import verdict_diff
 
-    before = _vd("CAST(conv_id AS BIGINT) % 2 = 0")
+    before = _vd(even)
     after = _vd(None)
     return verdict_diff(before, after).orderBy(
         "bucket", "constraint_id", "status"

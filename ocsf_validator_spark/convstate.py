@@ -448,14 +448,13 @@ def commit(
     plan that writes the state."""
     from ocsf_validator_spark.violations import (
         _fusable,
-        _present,
-        _resolves,
+        _runs,
         fd_group_state,
         merge_fd_state,
     )
 
     state_dir = None
-    fz = _fusable(suite, df, keys) if _present(df, keys) else None
+    fz = _fusable(suite, df, keys)
     if fz:
         merged = merge_state(carry, boundary_state(df, fz[0], fz[1], keys))
         if stale_before_us is not None and CARRY_LAST_TS in merged.columns:
@@ -466,10 +465,8 @@ def commit(
         state_dir = write_state(merged, checkpoint_dir, tag=str(commit_id))
     fd_dirs = {}
     for c in suite.key_level():
-        if not isinstance(c, FunctionalDependency):
+        if not isinstance(c, FunctionalDependency) or not _runs(df, c):
             continue  # other key-level kinds carry no state
-        if not (c.determinants and _resolves(df, [*c.determinants, c.column])):
-            continue
         prior = (fd_carry or {}).get(c.constraint_id)
         fd_dirs[c.constraint_id] = write_fd_state(
             merge_fd_state(prior, fd_group_state(df, c)),

@@ -381,33 +381,6 @@ def ks_by_bucket(
     )
 
 
-def drift_findings(
-    cur_df: DataFrame,
-    ref_df: DataFrame,
-    checks: Sequence[tuple[str, str, str]] = (
-        ("drift.psi.text_len", "length(text)", "floor(_v / 16)"),
-        ("drift.psi.ts", "unix_timestamp(ts)", "floor(_v / 86400)"),
-    ),
-    psi_threshold: float = PSI_SIGNIFICANT,
-    severity: str = "ERROR",
-) -> list[tuple[str, float, bool, str]]:
-    """Run PSI drift checks; returns
-    [(constraint_id, psi, drifted, reason)] for the verdict layer."""
-    out = []
-    for cid, vexpr, bexpr in checks:
-        val = psi(cur_df, ref_df, vexpr, bexpr)
-        drifted = bool(val >= psi_threshold) if not math.isnan(val) else True
-        out.append(
-            (
-                cid,
-                val,
-                drifted,
-                f"PSI({vexpr})={val:.4f} vs threshold {psi_threshold}",
-            )
-        )
-    return out
-
-
 def volume_anomaly(
     df: DataFrame,
     ts_col: str = "ts",

@@ -513,22 +513,6 @@ def simhash_col(text_col: str = "text", bits: int = 16):
     )
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
-    """Candidate near-dup pairs: identical SimHash → same bucket.
-    (Banding by half-fingerprints would admit Hamming distance ≤ bits/2;
-    exact-bucket match is the strictest, cheapest variant.)"""
-    s = df.select(F.col(id_col), simhash_col(text_col, bits).alias("simhash"))
-    a = s.select(F.col(id_col).alias("a_id"), "simhash")
-    b = s.select(F.col(id_col).alias("b_id"), "simhash")
-    return (
-        a.join(b, "simhash")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "simhash")
-    )
-
-
 def dedup_against(
     new_df: DataFrame,
     prior_df: DataFrame,

@@ -39,15 +39,6 @@ def norm_expr(a: str) -> str:
     return f"sqrt(aggregate({a}, 0D, (s, v) -> s + v * v))"
 
 
-def cosine_expr(a: str, b: str) -> str:
-    return f"({dot_expr(a, b)} / ({norm_expr(a)} * {norm_expr(b)}))"
-
-
-def cosine_col(a_col: str, b_col: str) -> Column:
-    """Cosine similarity between two array columns, computed in double."""
-    return F.expr(cosine_expr(_dbl(a_col), _dbl(b_col)))
-
-
 def _py_norm(vec: list[float]) -> float:
     """Driver-side replay of ``norm_expr``: the identical sequential
     left-to-right s + v*v fold and sqrt over binary64, so a literal
@@ -79,7 +70,7 @@ def cosine_topk(
     replay of the SQL fold, see :func:`_py_norm`) — and the row vector
     is cast + normed ONCE via bind1 instead of once per sub-expression,
     so the per-row cost is one cast + one dot + one norm fold. Same
-    IEEE ops in the same order as the inline cosine_expr, so every
+    IEEE ops in the same order as the inline dot / (norm * norm), so every
     cos_sim is unchanged to the bit."""
     from ocsf_validator_spark.pipeline.decontam import bind1
 
@@ -206,7 +197,7 @@ def ivf_assign_col(
     At scale this column is the table's partition key.
 
     Bind-once discipline: the row vector is cast ONCE and its norm
-    folded ONCE (the inline cosine_expr re-cast and re-normed the row
+    folded ONCE (the inline dot / (norm * norm) re-cast and re-normed the row
     per CENTROID — 4·k·d work per row where k·d + 2·d suffices), the
     centroid norms fold driver-side (:func:`_py_norm`, bit-identical
     to the SQL fold), and the sims array binds once so the

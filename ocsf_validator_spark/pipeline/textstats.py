@@ -77,22 +77,6 @@ def lang_id_col(text_col: str = "text") -> Column:
     return out
 
 
-def fingerprint_cols(
-    text_col: str = "text", k: int = 16, stride: int = 8
-) -> list[Column]:
-    """Winnowing-style document fingerprint: md5-int hashes of character
-    k-grams sampled every ``stride``; min/max hash are the fingerprint
-    (min-hash of char shingles ≈ MOSS winnowing with window = doc)."""
-    grams = (
-        f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1), {stride}),"
-        f" i -> cast(conv(substring(md5(substring({text_col}, i, {k})), 1, 8), 16, 10) as bigint))"
-    )
-    return [
-        F.expr(f"array_min({grams})").alias("fp_min"),
-        F.expr(f"array_max({grams})").alias("fp_max"),
-    ]
-
-
 def text_profile(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

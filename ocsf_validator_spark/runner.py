@@ -219,9 +219,11 @@ def run_validation(
     the observed buckets with their row counts (the manifest's
     ``n_rows``) ride the verdict collect (``verdicts``' lazy grid), so
     a small run is 2 jobs with a sink and 1 without. Its MetricBounds
-    aggregate in one shared job while the plan is built. A rerun with
-    nothing pending learns so from the verdict rows; it returns before
-    the staged sinks are published and writes no manifest entry.
+    aggregate in one shared job while the plan is built. A rerun whose
+    manifest covers every bucket returns before any job. One whose
+    pending buckets hold no row learns so from the verdict rows; it
+    returns before the staged sinks are published and writes no
+    manifest entry.
 
     With ``report_json`` the report carries the route each adaptive
     step took, read from ``localframe.one_task`` of the frame that step
@@ -268,6 +270,12 @@ def run_validation(
             say(f"[FATAL] {r.constraint_id}: {r.reason}")
         return RunResult(2, 0, len(fatal), time.time() - t0, summary_rows=fatal)
 
+    def nothing_pending() -> RunResult:
+        # everything already validated for this (suite, snapshot) —
+        # don't emit coverage findings against an empty remainder
+        say("nothing pending; all buckets previously completed")
+        return RunResult(0, 0, 0, time.time() - t0, skipped_buckets=skipped)
+
     # Phase 1 — resume
     skipped = 0
     if checkpoint_dir:
@@ -276,6 +284,10 @@ def run_validation(
             df = ckpt.filter_pending(df, done, conv_col, num_buckets)
             skipped = len(done)
             say(f"resume: skipping {skipped} completed buckets")
+            # every bucket done leaves no row (a NULL conv_id hashes to
+            # a bucket too): return before any job
+            if done >= set(range(num_buckets)):
+                return nothing_pending()
             # whole-table gates (metric/quantile/volume/drift bounds,
             # FD/group-metric legs) aggregate whatever frame they get:
             # on a partial resume that is the PENDING buckets only, so
@@ -301,12 +313,6 @@ def run_validation(
                     f"pending buckets only: {', '.join(sorted(gated))} "
                     "(run without --checkpoint for whole-table bounds)"
                 )
-
-    def nothing_pending() -> RunResult:
-        # everything already validated for this (suite, snapshot) —
-        # don't emit coverage findings against an empty remainder
-        say("nothing pending; all buckets previously completed")
-        return RunResult(0, 0, 0, time.time() - t0, skipped_buckets=skipped)
 
     # Phase 2 — single-pass stats, collected once: yields n_rows, the
     # observed-bucket list (so the verdict pass never rescans the input),

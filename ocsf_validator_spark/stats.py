@@ -54,7 +54,6 @@ def column_stats(
     length_cols: Sequence[str] = ("text",),
     ts_cols: Sequence[str] = ("ts",),
     exact_distinct: bool = False,
-    extra_aggs: dict | None = None,
 ) -> DataFrame:
     """One row per bucket, all per-column stats as columns:
     row count, per-column null count, approx distinct (HLL), min/max,
@@ -63,15 +62,9 @@ def column_stats(
 
     ``exact_distinct`` swaps HLL for exact count_distinct (columns named
     ``{c}__distinct``) — used when cross-checking against an external
-    oracle; the HLL default is the at-scale path.
-
-    ``extra_aggs`` ({alias: Column}) lets callers piggyback additional
-    partial-aggregatable expressions on this same scan (the runner rides
-    its enum-coverage probes here so coverage costs zero extra scans)."""
+    oracle; the HLL default is the at-scale path."""
     columns = list(columns or df.columns)
     aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for alias, expr in (extra_aggs or {}).items():
-        aggs.append(expr.alias(alias))
     for c in columns:
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
         if exact_distinct:
@@ -282,18 +275,6 @@ def column_topk_values(
             "cnt",
             F.round(F.col("cnt") / F.col("total"), 6).alias("share"),
         )
-    )
-
-
-def value_histogram(df: DataFrame, expr: str, bin_expr: str) -> DataFrame:
-    """Generic histogram over an arbitrary SQL expression; ``bin_expr``
-    maps the value to an integer bin (e.g. day number for timestamps)."""
-    return (
-        df.select(F.expr(expr).alias("_v"))
-        .filter(F.col("_v").isNotNull())
-        .select(F.expr(bin_expr.format(v="_v")).cast("bigint").alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 

@@ -40,6 +40,7 @@ from ocsf_validator_spark.localframe import empty_df, local_df, one_task
 
 from ocsf_validator_spark.compile import violation_entries_guarded
 from ocsf_validator_spark.spec import (
+    GROUP_LEVEL,
     AllowedColumns,
     Alternation,
     Check,
@@ -52,6 +53,7 @@ from ocsf_validator_spark.spec import (
     MetricBound,
     Monotonic,
     OpeningRole,
+    PandasCheck,
     Precedence,
     QuantileBound,
     Severity,
@@ -119,34 +121,49 @@ def _resolve_path(schema: T.StructType, path: str):
     return cur
 
 
-def _resolves(df: DataFrame, cols: Sequence[str]) -> bool:
-    return all(_resolve_path(df.schema, c) is not None for c in cols)
-
-
 def _referenced_columns(c) -> list[str]:
-    if isinstance(c, Check):
-        # Check's `column` is only a LABEL for the constraint id; the
-        # predicate may reference any columns, so the label must not be
-        # treated as a referenced column (it used to be: a Check whose
-        # label was not a real column was silently never evaluated and
-        # reported as an unresolvable-column finding instead). A
-        # predicate naming a truly missing column now fails loudly at
-        # analysis — a config error is never a silent keep.
+    """Every column constraint ``c`` reads, for every kind. None for a
+    Check, whose ``column`` only labels its id (its predicate may name
+    any columns, and one naming a missing column fails at analysis),
+    for AllowedColumns (a schema diff) and for a DriftGate whose
+    ``column`` is a SQL expression rather than a (dotted) name."""
+    if isinstance(c, (Check, AllowedColumns)):
         return []
+    if isinstance(c, DriftGate):
+        name = all(p.isidentifier() for p in c.column.split("."))
+        return [c.column] if name else []
     if isinstance(c, Unique):
         return [*c.keys, *c.first_seen_order]
     if isinstance(c, FunctionalDependency):
         return [*c.determinants, c.column]
     if isinstance(c, GroupMetricBound):
         return [*c.by, c.column]
-    if isinstance(c, ClosingRole):
-        return [c.partition_by, c.order_by, c.column]
-    if isinstance(c, Monotonic):
-        return [c.partition_by, c.order_by, c.column]
     if isinstance(c, TurnOrdering):
         return [c.partition_by, c.order_by]
-    cols = getattr(c, "columns", None)  # PandasCheck
-    return list(cols) if cols else [c.column]
+    if isinstance(
+        c, (Monotonic, Precedence, OpeningRole, Alternation, ClosingRole)
+    ):
+        return [c.partition_by, c.order_by, c.column]
+    if isinstance(c, PandasCheck):
+        return list(c.columns)
+    return [c.column]
+
+
+def _unresolved(df: DataFrame, c) -> list[str]:
+    """The columns of ``c`` (``_referenced_columns``) that ``df`` cannot
+    supply, sorted: the one evaluability rule. Window kinds need
+    top-level names, because the fused pass projects bare names; every
+    other kind also takes a dotted struct path (``_resolve_path``)."""
+    cols = set(_referenced_columns(c))
+    if isinstance(c, GROUP_LEVEL):
+        return sorted(p for p in cols if p not in df.columns)
+    return sorted(p for p in cols if _resolve_path(df.schema, p) is None)
+
+
+def _runs(df: DataFrame, c) -> bool:
+    """Whether ``c`` is evaluated on ``df``; when not, dataset_findings
+    reports it "not evaluated" instead."""
+    return not _unresolved(df, c)
 
 
 def row_violations(
@@ -154,10 +171,9 @@ def row_violations(
 ) -> DataFrame:
     """All row-level constraints in ONE projection over one scan.
 
-    Constraints whose column doesn't resolve (top-level OR struct path)
-    are skipped here but REPORTED by dataset_findings as an
-    unresolvable-column finding — never a silent skip."""
-    cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
+    Constraints that cannot run (``_runs``) are skipped here and
+    REPORTED by dataset_findings — never a silent skip."""
+    cs = [c for c in suite.row_level() if _runs(df, c)]
     if not cs or not _present(df, keys):
         return _empty(df, keys)
     entries = violation_entries_guarded(cs)
@@ -393,31 +409,21 @@ def alternation_violations(
 def _fusable(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
     """Group constraints that all live on the same conversation window
     (partition = keys[0], order = keys[1]; Unique over exactly those two
-    keys). Returns (constraints, tie_break_cols) or None."""
+    keys). Returns (constraints, tie_break_cols) or None. A constraint
+    that cannot run (``_runs``) is left out, not a reason to unfuse:
+    dataset_findings reports it."""
+    if not _present(df, keys):
+        return None
     part, idx = keys[0], keys[1]
     cs, ties = [], []
     for c in suite.group_level():
+        if not _runs(df, c):
+            continue
         if isinstance(c, Unique):
-            if tuple(c.keys) != (part, idx) or not _present(df, c.keys):
+            if tuple(c.keys) != (part, idx):
                 return None
             ties = list(c.first_seen_order)
-            if not _present(df, ties):
-                return None
-        elif isinstance(
-            c, (TurnOrdering, Monotonic, Precedence, OpeningRole, Alternation)
-        ):
-            if c.partition_by != part or c.order_by != idx:
-                return None
-            need = (
-                [c.column]
-                if isinstance(
-                    c, (Monotonic, Precedence, OpeningRole, Alternation)
-                )
-                else []
-            )
-            if not _present(df, [part, idx, *need]):
-                return None
-        else:
+        elif c.partition_by != part or c.order_by != idx:
             return None
         cs.append(c)
     return (cs, ties) if cs else None
@@ -973,13 +979,13 @@ def fd_violations(
     if not _present(df, keys):
         return out
     for c in suite.key_level():
+        if not _runs(df, c):
+            continue
         if isinstance(c, GroupMetricBound):
-            if c.by and _resolves(df, [*c.by, c.column]):
-                out = out.unionByName(_gm_leg(df, c, keys))
+            out = out.unionByName(_gm_leg(df, c, keys))
         elif isinstance(c, ClosingRole):
-            if _resolves(df, [c.partition_by, c.order_by, c.column]):
-                out = out.unionByName(_closing_leg(df, c, keys))
-        elif c.determinants and _resolves(df, [*c.determinants, c.column]):
+            out = out.unionByName(_closing_leg(df, c, keys))
+        else:
             prior = carry.get(c.constraint_id) if carry else None
             out = out.unionByName(_fd_leg(df, c, keys, prior=prior))
     return out
@@ -1305,6 +1311,16 @@ def _fd_leg(
     )
 
 
+_GROUP_LEGS = {
+    Unique: unique_violations,
+    TurnOrdering: ordering_violations,
+    Monotonic: monotonic_violations,
+    Precedence: precedence_violations,
+    OpeningRole: opening_violations,
+    Alternation: alternation_violations,
+}
+
+
 def group_violations(
     df: DataFrame, suite: ConstraintSet, keys: Sequence[str] = DEFAULT_KEYS
 ) -> DataFrame:
@@ -1315,26 +1331,8 @@ def group_violations(
     if fused:
         return out.unionByName(fused_group_violations(df, *fused, keys))
     for c in suite.group_level():
-        if isinstance(c, Unique) and _present(df, c.keys):
-            out = out.unionByName(unique_violations(df, c, keys))
-        elif isinstance(c, TurnOrdering) and _present(df, [c.partition_by, c.order_by]):
-            out = out.unionByName(ordering_violations(df, c, keys))
-        elif isinstance(c, Monotonic) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(monotonic_violations(df, c, keys))
-        elif isinstance(c, Precedence) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(precedence_violations(df, c, keys))
-        elif isinstance(c, OpeningRole) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(opening_violations(df, c, keys))
-        elif isinstance(c, Alternation) and _present(
-            df, [c.column, c.partition_by, c.order_by]
-        ):
-            out = out.unionByName(alternation_violations(df, c, keys))
+        if _runs(df, c):
+            out = out.unionByName(_GROUP_LEGS[type(c)](df, c, keys))
     return out
 
 
@@ -1345,8 +1343,7 @@ def _observations(suite: ConstraintSet, df: DataFrame) -> list[tuple]:
     partial results: "max" for coverage flags, "sum" for null counts,
     "min" or "max" for extrema. row_count needs no aggregate (it is
     n_rows) and distinct_count has no mergeable form."""
-    cols = set(df.columns)
-    ds = [c for c in suite.dataset_level() if c.column in cols]
+    ds = [c for c in suite.dataset_level() if _runs(df, c)]
     cov = [c for c in ds if isinstance(c, EnumCoverage)]
     mb = [
         c for c in ds
@@ -1401,18 +1398,13 @@ def fold_observations(
     NULL."""
     rows = [r.asDict() for r in rows]
     n = sum(int(r["n_rows"]) for r in rows)
+    ds = [c for c in suite.dataset_level() if _runs(df, c)]
     enums: dict[str, set] = {
-        c.column: set()
-        for c in suite.dataset_level()
-        if isinstance(c, EnumCoverage) and c.column in df.columns
+        c.column: set() for c in ds if isinstance(c, EnumCoverage)
     }
     metrics: dict = {"__n_rows": n}
-    for c in suite.dataset_level():
-        if (
-            isinstance(c, MetricBound)
-            and c.metric == "row_count"
-            and c.column in df.columns
-        ):
+    for c in ds:
+        if isinstance(c, MetricBound) and c.metric == "row_count":
             metrics[c.constraint_id] = n
     for a, c, v, merge in _observations(suite, df):
         got = [r[a] for r in rows if r.get(a) is not None]
@@ -1437,10 +1429,17 @@ def dataset_findings(
     observed_metrics: dict | None = None,
 ) -> DataFrame:
     """Schema audit (unknown/missing columns — reference
-    validators.py:106-158's table-level survival) and enum coverage
-    (reference validate_unused_attrs, validators.py:169-198). Emitted
-    with NULL row keys, like the reference errors that carry a file but
-    no attribute trail.
+    validators.py:106-158's table-level survival), the "not evaluated"
+    report, enum coverage (reference validate_unused_attrs,
+    validators.py:169-198) and the dataset-level gates. Emitted with
+    NULL row keys, like the reference errors that carry a file but no
+    attribute trail.
+
+    Every constraint of every kind is either evaluated or reported here
+    as "column(s) ... do not resolve in schema; constraint not
+    evaluated", never both and never neither: this one loop and every
+    evaluator (the row, window, key and residual legs, the observation
+    table and the gates below) decide by the same rule, ``_runs``.
 
     ALL EnumCoverage constraints share ONE lazy aggregation leg built
     from observation_aggs' int flags, one per declared value, so the
@@ -1471,21 +1470,13 @@ def dataset_findings(
                         c.severity.name,
                     )
                 )
-    # a constraint referencing a column that doesn't resolve (top-level
-    # or struct path) is itself a reportable defect — the evaluation
-    # passes skip it, but NEVER silently: the user who declared
-    # NotNull("meta.width") against a schema without it gets a finding,
-    # not a false PASS (reference reports missing attrs the same way).
-    for c in [
-        *suite.row_level(),
-        *suite.group_level(),
-        *suite.key_level(),
-        *suite.residual_level(),
-    ]:
-        missing = sorted(
-            p for p in set(_referenced_columns(c))
-            if _resolve_path(df.schema, p) is None
-        )
+    # a constraint that cannot run (_runs, the rule every evaluator
+    # selects by) is itself a reportable defect — never a silent skip:
+    # the user who declared NotNull("meta.width") against a schema
+    # without it gets a finding, not a false PASS (reference reports
+    # missing attrs the same way)
+    for c in suite.constraints:
+        missing = _unresolved(df, c)
         if missing:
             rows.append(
                 (
@@ -1496,12 +1487,15 @@ def dataset_findings(
                     c.severity.name,
                 )
             )
+
+    def runnable(kind) -> list:
+        return [
+            c for c in suite.dataset_level()
+            if isinstance(c, kind) and _runs(df, c)
+        ]
+
     # a coverage constraint with no declared values has nothing to miss
-    cov = [
-        c
-        for c in suite.dataset_level()
-        if isinstance(c, EnumCoverage) and c.column in df.columns and c.values
-    ]
+    cov = [c for c in runnable(EnumCoverage) if c.values]
     cov_leg = None
     if cov and include_coverage:
         if observed_enums is None:
@@ -1556,18 +1550,7 @@ def dataset_findings(
                                 c.severity.name,
                             )
                         )
-    mb = [c for c in suite.dataset_level() if isinstance(c, MetricBound)]
-    for c in [m for m in mb if m.column not in df.columns]:
-        rows.append(
-            (
-                c.constraint_id,
-                *nulls,
-                f"column(s) {c.column} do not resolve in schema; "
-                "constraint not evaluated",
-                c.severity.name,
-            )
-        )
-    mb = [c for c in mb if c.column in df.columns]
+    mb = runnable(MetricBound)
     if mb and include_coverage:
         # observed_metrics (fold_observations' {constraint_id: value}
         # + "__n_rows": the runner's zero-extra-scan path, aggregates
@@ -1647,18 +1630,7 @@ def dataset_findings(
                     f"{c.metric}({c.column}) = {v} above max {c.hi}",
                     c.severity.name,
                 ))
-    qb = [c for c in suite.dataset_level() if isinstance(c, QuantileBound)]
-    for c in [x for x in qb if x.column not in df.columns]:
-        rows.append(
-            (
-                c.constraint_id,
-                *nulls,
-                f"column(s) {c.column} do not resolve in schema; "
-                "constraint not evaluated",
-                c.severity.name,
-            )
-        )
-    qb = [c for c in qb if c.column in df.columns]
+    qb = runnable(QuantileBound)
     if qb and include_coverage:
         # exact order statistics via histogram narrowing; all bounds on
         # one column share a single exact_quantiles pass. %.6f render
@@ -1697,28 +1669,10 @@ def dataset_findings(
                         f"quantile({c.q}, {c.column}) = {v:.6f} "
                         f"above max {c.hi}", c.severity.name,
                     ))
-    dg = [c for c in suite.dataset_level() if isinstance(c, DriftGate)]
-    # DriftGate's column may be a full SQL VALUE EXPRESSION (the
-    # baseline-file loader records e.g. "cast(length(text)/50 as
-    # long)"); only bare identifiers get the membership check — an
-    # invalid expression raises loudly at evaluation instead
-    for c in [
-        x for x in dg
-        if x.column.isidentifier() and x.column not in df.columns
-    ]:
-        rows.append(
-            (
-                c.constraint_id,
-                *nulls,
-                f"column(s) {c.column} do not resolve in schema; "
-                "constraint not evaluated",
-                c.severity.name,
-            )
-        )
-    dg = [
-        c for c in dg
-        if not c.column.isidentifier() or c.column in df.columns
-    ]
+    # a DriftGate column may be a SQL value expression (the baseline
+    # loader records e.g. "cast(length(text)/50 as long)"): it reads no
+    # named column, so it always runs and an invalid one raises
+    dg = runnable(DriftGate)
     if dg and include_coverage:
         from ocsf_validator_spark import drift as _drift
 
@@ -1746,18 +1700,7 @@ def dataset_findings(
                     f"{c.threshold} vs recorded baseline",
                     c.severity.name,
                 ))
-    vg = [c for c in suite.dataset_level() if isinstance(c, VolumeGate)]
-    for c in [x for x in vg if x.column not in df.columns]:
-        rows.append(
-            (
-                c.constraint_id,
-                *nulls,
-                f"column(s) {c.column} do not resolve in schema; "
-                "constraint not evaluated",
-                c.severity.name,
-            )
-        )
-    vg = [c for c in vg if c.column in df.columns]
+    vg = runnable(VolumeGate)
     if vg and include_coverage:
         from ocsf_validator_spark.drift import volume_anomaly
 
@@ -1793,7 +1736,7 @@ def residual_violations(
     only, so the Arrow return path is defect-proportional."""
     import pandas as pd
 
-    cs = [c for c in suite.residual_level() if _resolves(df, c.columns)]
+    cs = [c for c in suite.residual_level() if _runs(df, c)]
     if not cs or not _present(df, keys):
         return _empty(df, keys)
     need = list(dict.fromkeys([*keys, *(col for c in cs for col in c.columns)]))
@@ -1895,9 +1838,9 @@ def all_violations(
     in_place = window_route(df, carry) == "in_place"
     if in_place:
         df = df.coalesce(1)
-    fused = _fusable(suite, df, keys) if _present(df, keys) else None
+    fused = _fusable(suite, df, keys)
     if fused:
-        row_cs = [c for c in suite.row_level() if isinstance(c, Check) or _resolves(df, [c.column])]
+        row_cs = [c for c in suite.row_level() if _runs(df, c)]
         chunk_rows = None
         if skewed_convs and carry is None and not in_place:
             n = (observed_metrics or {}).get("__n_rows")

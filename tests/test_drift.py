@@ -9,7 +9,6 @@ import math
 import pytest
 
 from ocsf_validator_spark.drift import (
-    drift_findings,
     histogram,
     ks_by_bucket,
     ks_distance,
@@ -104,13 +103,6 @@ def test_ks_by_bucket_arrow(samples):
     bad = ks_by_bucket(drifted, ref_sample, "length(text)", num_buckets=4).collect()
     assert all(r.drifted for r in bad)
     assert all(r.ks > r.threshold for r in bad)
-
-
-def test_drift_findings(samples):
-    ref, _, drifted = samples
-    findings = drift_findings(drifted, ref)
-    assert all(f[2] for f in findings)  # all drifted
-    assert any("drift.psi.text_len" == f[0] for f in findings)
 
 
 def test_histogram_counts(samples):

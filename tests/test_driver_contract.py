@@ -44,46 +44,85 @@ def test_entry_runs(spark):
     ]
 
 
-def test_verdict_diff_fused_stats_match_naive_scans(spark):
-    """verdict_diff's single fused stats scan must reproduce EXACTLY
-    what the two runs' separate probe scans used to compute: the
-    observed-bucket list and the enum-coverage observation set, per
-    half (even-conversation run vs full run). Pinned against the naive
-    per-half formulations so the fusion can never drift from the
-    per-run semantics it replaced."""
-    from pyspark.sql import functions as F
-
+def test_verdict_diff_fused_stats_match_naive_scans(spark, monkeypatch):
+    """verdict_diff's one fused per-(bucket, half) observation collect
+    must give EXACTLY what two naive runs compute on their own, each
+    with the lazy observed-bucket grid and the lazy coverage leg over
+    its own frame. The events suite gains a second EnumCoverage column
+    (``tool``, NULL throughout the view), so the fold covers more than
+    the role column alone."""
+    from ocsf_validator_spark.spec import ConstraintSet, EnumCoverage
     from ocsf_validator_spark.stats import md5_bucket_col
+    from ocsf_validator_spark.verdict import verdict_diff, verdicts
+    from ocsf_validator_spark.violations import all_violations
 
-    ev = e._t(spark, SF, "events")
-    suite = e._events_suite()
-    cov = [c for c in suite.constraints if type(c).__name__ == "EnumCoverage"]
-    assert cov, "events suite is expected to declare EnumCoverage(role)"
-    cov_vals = [v for c in cov for v in c.values]
+    base = e._events_suite()
+    suite = ConstraintSet(
+        name=base.name,
+        constraints=[
+            *base.constraints,
+            EnumCoverage(column="tool", values=("search", "none")),
+        ],
+    )
+    monkeypatch.setattr(e, "_events_suite", lambda: suite)
+    t = e._transcripts(spark, SF)
 
-    obs_buckets, obs_enums = e._vd_observed_stats(ev, cov_vals)
-
-    base = ev.select(F.col("user_id").cast("string").alias("conv_id"),
-                     F.col("event_type").alias("role"))
-    pred = "CAST(conv_id AS BIGINT) % 2 = 0"
-    for half, frame in ((True, base.filter(pred)), (False, base)):
-        naive_buckets = sorted(
-            int(r[0])
-            for r in frame.select(md5_bucket_col("conv_id", 8).alias("b"))
-            .distinct()
-            .collect()
+    def naive(pred):
+        tt = t.filter(pred) if pred else t
+        return verdicts(
+            tt,
+            all_violations(tt, suite),
+            suite,
+            num_buckets=8,
+            bucket_expr=md5_bucket_col("conv_id", 8),
         )
-        assert obs_buckets[half] == naive_buckets, half
-        naive_obs = {
-            x
-            for r in frame.agg(
-                F.collect_set(
-                    F.when(F.col("role").isin(*cov_vals), F.col("role"))
-                ).alias("o")
-            ).collect()
-            for x in (r["o"] or [])
-        }
-        assert obs_enums[half]["role"] == naive_obs, half
+
+    want = verdict_diff(
+        naive("CAST(conv_id AS BIGINT) % 2 = 0"), naive(None)
+    ).orderBy("bucket", "constraint_id", "status")
+    got = e.q_verdict_diff(spark, SF).collect()
+    assert got and got == want.collect()
+
+
+def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
+    """A second EnumCoverage column is judged per run from the fused
+    observation collect, never dropped for want of a role-only scan:
+    covering one odd conversation id of ``conv_id`` at ERROR, the even
+    half (which never sees it) rejects the column and the full run
+    observes it, so the diff reports that dataset-level finding gone."""
+    from ocsf_validator_spark.spec import (
+        ConstraintSet,
+        EnumCoverage,
+        Severity,
+    )
+
+    odd = (
+        e._transcripts(spark, SF)
+        .filter("CAST(conv_id AS BIGINT) % 2 = 1")
+        .select("conv_id")
+        .first()["conv_id"]
+    )
+    base = e._events_suite()
+    suite = ConstraintSet(
+        name=base.name,
+        constraints=[
+            *base.constraints,
+            EnumCoverage(
+                column="conv_id", values=(odd,), severity=Severity.ERROR
+            ),
+        ],
+    )
+    monkeypatch.setattr(e, "_events_suite", lambda: suite)
+    rows = [
+        r
+        for r in e.q_verdict_diff(spark, SF).collect()
+        if r["constraint_id"] == "coverage.conv_id"
+    ]
+    assert [
+        (r["bucket"], r["status"], r["pass_before"], r["count_before"],
+         r["count_after"])
+        for r in rows
+    ] == [(-1, "gone_fail", False, 1, None)]
 
 
 @pytest.mark.parametrize("name,jobs", [("suite_verdicts", 5),
@@ -106,29 +145,6 @@ def test_verdict_query_exec_jobs(spark, jobs_of, name, jobs):
     df = e.queries()[name](spark, SF)
     _, n = jobs_of(df.collect)
     assert n == jobs
-
-
-def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
-    """The fused stats scan observes enum coverage only under 'role'.
-    An events suite with EnumCoverage on another column must fail at
-    construction with a clear error, not judge that column against an
-    empty observed set."""
-    from ocsf_validator_spark.spec import ConstraintSet, EnumCoverage
-
-    base = e._events_suite()
-    monkeypatch.setattr(
-        e,
-        "_events_suite",
-        lambda: ConstraintSet(
-            name=base.name,
-            constraints=[
-                *base.constraints,
-                EnumCoverage(column="tool", values=("search",)),
-            ],
-        ),
-    )
-    with pytest.raises(ValueError, match=r"\['tool'\]"):
-        e.q_verdict_diff(spark, SF)
 
 
 def test_reader_memo_is_per_session(spark, tmp_path):

@@ -33,12 +33,11 @@ def test_fatal_schema_aborts(spark, transcripts):
     assert res.n_rows == 0  # aborted before any data pass
 
 
-def test_checkpoint_resume(spark, tmp_path):
-    """A rerun of a completed (suite, snapshot) skips every bucket. The
-    input is small, so the window runs in place and no stats probe
-    runs: the rerun learns that nothing is pending from its verdict
-    collect, after the sink write, so it leaves the sink's rows, its
-    staging directories and the manifest as they were."""
+def test_checkpoint_resume(spark, tmp_path, jobs_of):
+    """A rerun of a completed (suite, snapshot) skips every bucket. Its
+    manifest covers every bucket, so it returns right after reading the
+    manifest, in 0 jobs, and leaves the sink's rows, its staging
+    directories and the manifest as they were."""
     from ocsf_validator_spark.violations import window_route
 
     manifest = str(tmp_path / "manifest")
@@ -54,21 +53,23 @@ def test_checkpoint_resume(spark, tmp_path):
     n_buckets_done = len(
         ckpt.completed_buckets(manifest, transcript_suite().version(), "snapA")
     )
-    assert n_buckets_done == len(r1.manifest_entries)
+    assert n_buckets_done == len(r1.manifest_entries) == 16
     n_sink = spark.read.parquet(sink).count()
     assert n_sink == r1.n_violations > 0
     n_entries = len(ckpt.read_entries(manifest))
+    sink_files = sorted(os.listdir(sink))
 
     # second run with same snapshot + suite: everything skipped
-    r2 = run_validation(
+    r2, jobs = jobs_of(lambda: run_validation(
         spark, df, num_buckets=16, quiet=True,
         checkpoint_dir=manifest, snapshot_id="snapA", violations_out=sink,
-    )
+    ))
+    assert jobs == 0
     assert r2.skipped_buckets == n_buckets_done
     assert r2.n_rows == 0  # nothing pending
     assert (r2.exit_code, r2.manifest_entries) == (0, [])
+    assert sorted(os.listdir(sink)) == sink_files
     assert spark.read.parquet(sink).count() == n_sink
-    assert not [n for n in os.listdir(sink) if n.startswith("_staging")]
     assert len(ckpt.read_entries(manifest)) == n_entries
 
     # different snapshot → full re-run (stale lineage never matches)

@@ -3,7 +3,26 @@ scenario-for-scenario (see FIXTURES.md §4 for the mapping)."""
 
 from __future__ import annotations
 
-from ocsf_validator_spark.spec import transcript_suite
+import pandas as pd
+import pytest
+
+from ocsf_validator_spark.spec import (
+    Alternation,
+    ConstraintSet,
+    DriftGate,
+    EnumCoverage,
+    FunctionalDependency,
+    MetricBound,
+    Monotonic,
+    NotNull,
+    PandasCheck,
+    Precedence,
+    QuantileBound,
+    TurnOrdering,
+    Unique,
+    VolumeGate,
+    transcript_suite,
+)
 from ocsf_validator_spark.violations import (
     all_violations,
     dataset_findings,
@@ -612,3 +631,151 @@ def test_window_route_keeps_the_exchange_of_an_exchange_input(spark, jobs_of):
         assert jobs == 0
         assert out[0] == "exchange"
         assert "Coalesce 1" not in _executed_plan(out[1])
+
+
+
+NOT_EVALUATED = "constraint not evaluated"
+
+
+def _meta_frame(spark):
+    """Two conversations with a struct column ``meta``; c1's width
+    drops 9 -> 3 and c2 skips turn 1."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("c1", 0, "user", "a", "search", "2026-01-01 00:00:00", (9, "x")),
+        ("c1", 1, "assistant", "b", None, "2026-01-01 00:00:01", (3, "y")),
+        ("c2", 0, "user", "c", None, "2026-01-01 00:01:00", (1, "x")),
+        ("c2", 2, "assistant", "d", None, "2026-01-01 00:01:01", (2, "x")),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string, meta struct<width:int,kind:string>",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def _never(pdf):
+    return pd.Series(False, index=pdf.index), None
+
+
+_NE = NOT_EVALUATED
+EVALUABILITY_CASES = [
+    # (a) a struct path is bounded, as NotNull("meta.width") is
+    pytest.param(
+        (), [MetricBound(column="meta.width", metric="max", hi=5)],
+        {"metric.max.meta.width": "max(meta.width) = 9 above max 5"},
+        id="a-metric-struct-path",
+    ),
+    # (b) coverage is reported on a missing column and evaluated on a
+    # struct path
+    pytest.param(
+        ("tool",), [EnumCoverage(column="tool", values=("search",))],
+        {"coverage.tool": _NE}, id="b-coverage-missing",
+    ),
+    pytest.param(
+        (), [EnumCoverage(column="meta.kind", values=("x", "zzz"))],
+        {"coverage.meta.kind": "enum value 'zzz' never observed in meta.kind"},
+        id="b-coverage-struct-path",
+    ),
+    # (c) a window kind needs a top-level name
+    pytest.param(
+        (), [Monotonic(column="meta.width")],
+        {"monotonic.meta.width": _NE}, id="c-window-struct-path",
+    ),
+    # (d) the rest of the suite still runs, fused
+    pytest.param(
+        ("ts",), SUITE.constraints,
+        {
+            "unique.conv_turn": _NE,
+            "monotonic.ts": _NE,
+            "required.ts": _NE,
+            "order.turn_idx": "turn_idx gap: expected 1 got 2",
+        },
+        id="d-suite-without-ts",
+    ),
+    # a missing top-level column at every level
+    pytest.param(
+        (), [NotNull(column="ghost")], {"required.ghost": _NE}, id="row",
+    ),
+    pytest.param(
+        (),
+        [
+            Precedence(column="ghost", trigger="tool", prereq=("user",)),
+            Alternation(column="role", order_by="ghost"),
+        ],
+        {"precedence.ghost.tool": _NE, "alternation.role": _NE},
+        id="window",
+    ),
+    pytest.param(
+        (), [FunctionalDependency(column="ghost", determinants=("conv_id",))],
+        {"fd.conv_id->ghost": _NE}, id="key",
+    ),
+    pytest.param(
+        (),
+        [PandasCheck(column="ghost", columns=("ghost",), check=_never,
+                     check_id="ghost")],
+        {"residual.ghost": _NE}, id="residual",
+    ),
+    pytest.param(
+        (),
+        [
+            EnumCoverage(column="ghost", values=("a",)),
+            MetricBound(column="ghost", metric="null_rate", hi=0.5),
+            QuantileBound(column="ghost", q=0.5, hi=1),
+            DriftGate(column="ghost", baseline={"0": 1}),
+            VolumeGate(column="ghost"),
+        ],
+        {
+            "coverage.ghost": _NE,
+            "metric.null_rate.ghost": _NE,
+            "quantile.0.5.ghost": _NE,
+            "drift.psi.ghost": _NE,
+            "volume.day.ghost": _NE,
+        },
+        id="dataset",
+    ),
+]
+
+
+@pytest.mark.parametrize("drop,constraints,want", EVALUABILITY_CASES)
+def test_each_constraint_is_evaluated_or_reported(spark, drop, constraints, want):
+    """One evaluability rule: each constraint shows up either as its
+    violations or as exactly one "not evaluated" row, never both and
+    never neither. Window kinds need top-level names; every other kind
+    also takes a struct path."""
+    df = _meta_frame(spark).drop(*drop)
+    got = _by_id(all_violations(df, ConstraintSet("s", list(constraints))).collect())
+    for cid, reason in want.items():
+        reasons = [r.reason for r in got.get(cid, [])]
+        skipped = [x for x in reasons if x.endswith(NOT_EVALUATED)]
+        if reason == NOT_EVALUATED:
+            assert len(reasons) == len(skipped) == 1, (cid, reasons)
+        else:
+            assert not skipped and reason in reasons, (cid, reasons)
+
+
+def test_a_window_constraint_that_cannot_run_keeps_the_fused_pass(
+    spark, no_one_task
+):
+    """A window constraint on a struct path is reported and left out of
+    the fused pass, so the rest of the window family still plans one
+    conversation exchange rather than one leg per constraint."""
+    suite = ConstraintSet(
+        "s",
+        [
+            Unique(column="conv_turn", keys=("conv_id", "turn_idx"),
+                   first_seen_order=("ts",)),
+            TurnOrdering(column="turn_idx"),
+            Monotonic(column="ts"),
+            Monotonic(column="meta.width"),
+        ],
+    )
+    viol = no_one_task(
+        lambda: all_violations(_meta_frame(spark), suite, include_coverage=False)
+    )
+    plan = _executed_plan(viol)
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert sorted(r.constraint_id for r in viol.collect()) == [
+        "monotonic.meta.width", "order.turn_idx",
+    ]
