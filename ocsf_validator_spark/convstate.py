@@ -465,7 +465,7 @@ def commit(
         state_dir = write_state(merged, checkpoint_dir, tag=str(commit_id))
     fd_dirs = {}
     for c in suite.key_level():
-        if not isinstance(c, FunctionalDependency) or not _runs(df, c):
+        if not isinstance(c, FunctionalDependency) or not _runs(df, c, keys):
             continue  # other key-level kinds carry no state
         prior = (fd_carry or {}).get(c.constraint_id)
         fd_dirs[c.constraint_id] = write_fd_state(

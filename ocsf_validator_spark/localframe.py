@@ -92,6 +92,26 @@ def release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+def observed(obs) -> dict | None:
+    """The metrics the ``Observation`` ``obs`` collected during the
+    action that ran over its frame, as ``Observation.get`` returns them,
+    or None when that action reported an empty metrics row.
+
+    Spark completes the observation of every CollectMetrics node in the
+    action's analyzed plan, so reading waits for no more than the
+    action's end event. A node that leaves the plan before it runs
+    reports an empty row: when AQE proves an exchange empty at run time
+    it replaces the plan above it with an empty relation, dropping a
+    CollectMetrics node below that exchange (the input observation on a
+    zero-row micro-batch), and the optimizer's PruneFilters drops one
+    under a literal-false filter. ``Observation.get`` cannot convert
+    that row (``PythonSQLUtils.toPyRow`` asserts on it), so the JVM
+    row's length is read first."""
+    if obs._jo.getRow().length() == 0:
+        return None
+    return obs.get
+
+
 def stored_bytes(df: DataFrame) -> int | None:
     """Bytes a ``localCheckpoint``'d frame holds in storage (memory plus
     disk, from ``getRDDStorageInfo``), or None while it is not a
@@ -254,7 +274,10 @@ def one_task(df: DataFrame) -> bool:
     window in place, which one task computes anyway: the verdict
     aggregate then rides that task, one job instead of a map stage's
     job and the reduce job. A checkpoint that no job has filled yet is
-    judged by the lineage it would run."""
+    judged by the lineage it would run: the runner builds the verdict
+    over the unfilled checkpoint of a window in place and has it ride
+    the sink write that fills it (``runner._ride``), so a run with a
+    sink is that one job."""
     from py4j.java_gateway import is_instance_of
 
     spark = df.sparkSession

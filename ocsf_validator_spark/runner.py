@@ -16,7 +16,8 @@ Pipeline phases (the Spark lifecycle from SURVEY.md §3):
                                        window runs in place (one task)
   3. violation pass                  — fused row projection ∪ group legs
   4. verdict pass                    — per-(bucket, constraint) scorecard
-                                       (in place: with each bucket's rows)
+                                       (in place: with each bucket's rows,
+                                       riding the first sink's write)
   5. sinks                           — violations/verdicts parquet, manifest
 
 Usage:
@@ -34,14 +35,16 @@ import os
 import sys
 import time
 import uuid
+import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import (
     empty_df,
     local_df,
+    observed,
     one_task,
     release_checkpoint,
 )
@@ -162,6 +165,28 @@ def _publish(spark: SparkSession, staging: str) -> None:
             raise OSError(f"cannot move {st.getPath()} to {dest}")
 
 
+def _ride(frame: DataFrame, vd: DataFrame) -> tuple[DataFrame, Observation]:
+    """``frame`` to write with the rows of ``vd`` riding it, and the
+    ``Observation`` that holds them as ``rows``, the ``collect_list`` of
+    their structs, once the write has run. ``vd`` is observed on a
+    branch that ``violation_count < 0`` empties, projected to
+    ``frame``'s schema and unioned onto it in one partition: the write
+    stores no row of it, and ``frame``'s branch runs first in that
+    task, so a lazy checkpoint both read is filled before ``vd`` reads
+    it. The filter must be one the optimizer cannot fold: PruneFilters
+    drops a literal-false branch and its observation with it."""
+    seen = Observation()
+    empty = (
+        vd.observe(seen, F.collect_list(F.struct(*vd.columns)).alias("rows"))
+        .filter(F.col("violation_count") < 0)
+        .select(*[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in frame.schema.fields
+        ])
+    )
+    return frame.union(empty).coalesce(1), seen
+
+
 def run_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -201,29 +226,32 @@ def run_validation(
 
     The price is lineage: a lost cached block is recomputed, a lost
     checkpoint block is not. An executor lost between the first sink
-    write and the verdict collect fails the run with
+    write and the verdict's read of the stored rows fails the run with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The ``checkpoint_dir``
     manifest is written after the verdict, so a rerun revalidates those
     buckets. The sinks still append, but each writes into a
     ``_staging-<uuid>`` directory of this run inside the sink path,
     which Spark's file index skips. Its files move into the sink once
-    the verdict rows are collected, before the manifest is written, and
-    the staging directory is then deleted, also when the run fails. So
-    a failed run leaves no rows in the sinks, and its rerun writes each
+    the verdict rows are in, before the manifest is written, and the
+    staging directory is then deleted, also when the run fails. So a
+    failed run leaves no rows in the sinks, and its rerun writes each
     row once. The stored rows are released once the verdict rows are
-    collected.
+    in.
 
     A window that runs in place (``violations.window_route``) runs no
     stats probe, since one task has nothing to chunk: the enum coverage
     flags ride the sink's job (all_violations' lazy coverage leg) and
     the observed buckets with their row counts (the manifest's
-    ``n_rows``) ride the verdict collect (``verdicts``' lazy grid), so
-    a small run is 2 jobs with a sink and 1 without. Its MetricBounds
-    aggregate in one shared job while the plan is built. A rerun whose
-    manifest covers every bucket returns before any job. One whose
-    pending buckets hold no row learns so from the verdict rows; it
-    returns before the staged sinks are published and writes no
-    manifest entry.
+    ``n_rows``) ride the verdict (``verdicts``' lazy grid). With a sink
+    the verdict rides the first sink's write in turn, as one observed
+    metric of a row-less branch of it (``_ride``), so a small run is 1
+    job with or without a sink. Should that write report no metrics row
+    (``localframe.observed``), the verdict is collected in a job of its
+    own, with a ``RuntimeWarning``. Its MetricBounds aggregate in one
+    shared job while the plan is built. A rerun whose manifest covers
+    every bucket returns before any job. One whose pending buckets hold
+    no row learns so from the verdict rows; it returns before the
+    staged sinks are published and writes no manifest entry.
 
     With ``report_json`` the report carries the route each adaptive
     step took, read from ``localframe.one_task`` of the frame that step
@@ -231,7 +259,8 @@ def run_validation(
     input) and ``verdict_route`` (the violation rows), each
     ``"one_task"`` when that aggregate finishes in one task without its
     exchange, else ``"exchange"`` (in place the bucket counts of
-    ``stats_route`` ride the verdict's task); ``window_route`` (the
+    ``stats_route`` ride the verdict's task), and ``verdict_route`` is
+    ``"sink"`` when the verdict rode a sink write; ``window_route`` (the
     input, through ``violations.window_route``: ``"in_place"`` or
     ``"exchange"``, and always ``"exchange"`` on a carried run); and
     ``skew_route``: the conversations split into chunks, or None when
@@ -326,14 +355,14 @@ def run_validation(
     # shared agg job. A window that runs in place needs no probe: one
     # task has nothing to chunk, the coverage flags ride the sink's job
     # (all_violations' lazy coverage leg) and the buckets with their
-    # rows ride the verdict collect (its lazy grid, whose rows are one
-    # per bucket and constraint: a suite with no constraint probes).
+    # rows ride the verdict (its lazy grid, whose rows are one per
+    # bucket and constraint: a suite with no constraint probes).
     routes = {
         "stats_route": "one_task" if one_task(df) else "exchange",
         "window_route": window_route(df, carry_state),
     }
     probe = routes["window_route"] == "exchange" or not suite.constraints
-    bucket_stats = observed = observed_enums = observed_metrics = None
+    bucket_stats = observed_buckets = observed_enums = observed_metrics = None
     if probe:
         bucket_stats = bucketed_probe_stats(
             df,
@@ -342,7 +371,7 @@ def run_validation(
             probe_floor=skew_min_rows if detect_skew else None,
             merge_aggs=observation_aggs(suite, df),
         ).collect()
-        observed = [int(r.bucket) for r in bucket_stats]
+        observed_buckets = [int(r.bucket) for r in bucket_stats]
         observed_enums, observed_metrics = fold_observations(
             suite, df, bucket_stats
         )
@@ -406,7 +435,9 @@ def run_validation(
     # a sink reads the rows as well as the verdict pass, they are stored
     # once, in a lazy local checkpoint that the first sink's own job
     # fills. Not cache(): that costs one more job and one sink file per
-    # shuffle partition. The price is lineage (see the docstring).
+    # shuffle partition. The price is lineage (see the docstring). In
+    # place the verdict rides the first sink's write, after the branch
+    # that fills the checkpoint in its one task (_ride).
     lap("skew_probe")
     viol = all_violations(
         df,
@@ -429,6 +460,15 @@ def run_validation(
     }
     if stored:
         viol = viol.localCheckpoint(eager=False)
+
+    def verdict_frame() -> DataFrame:
+        return verdicts(
+            df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
+            threshold=threshold, observed_buckets=observed_buckets,
+            row_counts=not probe,
+        )
+
+    seen = None  # the verdict's Observation once it rides a sink write
     try:
         if violations_out:
             from ocsf_validator_spark.violations import cap_violations
@@ -441,6 +481,8 @@ def run_validation(
                 if max_violation_rows is None
                 else cap_violations(viol, max_violation_rows)
             )
+            if not probe:
+                sink, seen = _ride(sink, verdict_frame())
             sink.write.parquet(staging[violations_out])
         if quarantine_out:
             from ocsf_validator_spark.violations import split_quarantine
@@ -451,20 +493,32 @@ def run_validation(
             # set is the join's build side, so healthy data broadcasts
             # past it
             _, quarantined = split_quarantine(df, viol, threshold=threshold)
+            if not probe and seen is None:
+                quarantined, seen = _ride(quarantined, verdict_frame())
             quarantined.write.parquet(staging[quarantine_out])
             lap("quarantine")
 
         # Phase 4 — verdicts: one groupBy over the (small) violations set
-        # unioned with the observed-bucket grid; collected ONCE. Report,
-        # exit code, and manifest metrics all derive driver-side from
-        # these rows. Stored rows are judged by their exact size, so the
-        # route is read once the sinks have filled them.
-        routes["verdict_route"] = "one_task" if one_task(viol) else "exchange"
-        got = verdicts(
-            df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
-            threshold=threshold, observed_buckets=observed,
-            row_counts=not probe,
-        ).collect()
+        # unioned with the observed-bucket grid, read ONCE: observed on
+        # the sink write it rode, else collected. Report, exit code, and
+        # manifest metrics all derive driver-side from these rows. Stored
+        # rows are judged by their exact size, so a collect's route is
+        # read once the sinks have filled them.
+        got = None if seen is None else observed(seen)
+        if got is not None:
+            routes["verdict_route"] = "sink"
+            got = got["rows"]
+        else:
+            if seen is not None:
+                warnings.warn(
+                    "the sink write reported no verdict metrics row; "
+                    "collecting the verdict in a job of its own",
+                    RuntimeWarning,
+                )
+            routes["verdict_route"] = (
+                "one_task" if one_task(viol) else "exchange"
+            )
+            got = verdict_frame().collect()
         vd_rows = [_VERDICT_ROW(*r[:5]) for r in got]
         if not probe:
             # the probe's per-bucket rows, read off the verdict's grid

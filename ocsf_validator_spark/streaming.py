@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 
 from ocsf_validator_spark import convstate
 from ocsf_validator_spark.drift import emd_term, emd_value, psi_term
-from ocsf_validator_spark.localframe import release_checkpoint
+from ocsf_validator_spark.localframe import observed, release_checkpoint
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
 from ocsf_validator_spark.violations import all_violations, window_route
@@ -89,20 +89,11 @@ DRIFT_BATCH_ID = -2  # partition value of the windowed PSI drift leg
 
 def _observed(obs: Observation, name: str) -> int | None:
     """The long ``obs`` collected as ``name`` during the action that
-    ran over its frame; None when it is NULL or there is no metrics row.
-
-    One case reports no row: when AQE proves an exchange empty at run
-    time it replaces the plan above it with an empty relation, and a
-    CollectMetrics node below that exchange (the input observation on a
-    zero-row micro-batch) leaves the final plan, so the action finishes
-    with an empty metrics row. ``Observation.get`` cannot convert that
-    row (``PythonSQLUtils.toPyRow`` asserts on it), so the JVM row is
-    read directly."""
-    row = obs._jo.getRow()
-    if row.length() == 0:
-        return None
-    i = row.fieldIndex(name)
-    return None if row.isNullAt(i) else int(row.getLong(i))
+    ran over its frame; None when it is NULL or there is no metrics row
+    (``localframe.observed``: the input observation on a zero-row
+    micro-batch can leave the plan with the exchange above it)."""
+    got = observed(obs)
+    return None if got is None or got[name] is None else int(got[name])
 
 
 def _observed_rows(obs: Observation, frame: DataFrame) -> int:

@@ -40,6 +40,7 @@ from ocsf_validator_spark.localframe import empty_df, local_df, one_task
 
 from ocsf_validator_spark.compile import violation_entries_guarded
 from ocsf_validator_spark.spec import (
+    DATASET_LEVEL,
     GROUP_LEVEL,
     AllowedColumns,
     Alternation,
@@ -100,18 +101,13 @@ def _empty(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return empty_df(df.sparkSession, _violation_schema(df, keys))
 
 
-def _present(df: DataFrame, cols: Sequence[str]) -> bool:
-    return all(c in df.columns for c in cols)
-
-
 def _resolve_path(schema: T.StructType, path: str):
-    """DataType of a column or dotted struct path ('meta.width'), or
-    None when it doesn't resolve — the schema-walk analogue of the
-    reference's compare_keys recursion into nested dicts
-    (validators.py:59-103). A literal top-level column named with dots
-    wins over the nested interpretation."""
-    if path in schema.fieldNames():
-        return schema[path].dataType
+    """DataType of the column or dotted struct path ('meta.width') that
+    ``F.col(path)`` reads, or None when it doesn't resolve — the
+    schema-walk analogue of the reference's compare_keys recursion into
+    nested dicts (validators.py:59-103). As in ``F.col``, every dot
+    steps into a struct, so a top-level column whose name holds a dot
+    does not resolve: the evaluators would read it as a struct path."""
     cur: T.DataType = schema
     for part in path.split("."):
         if isinstance(cur, T.StructType) and part in cur.fieldNames():
@@ -149,21 +145,30 @@ def _referenced_columns(c) -> list[str]:
     return [c.column]
 
 
-def _unresolved(df: DataFrame, c) -> list[str]:
-    """The columns of ``c`` (``_referenced_columns``) that ``df`` cannot
-    supply, sorted: the one evaluability rule. Window kinds need
-    top-level names, because the fused pass projects bare names; every
-    other kind also takes a dotted struct path (``_resolve_path``)."""
+def _unresolved(
+    df: DataFrame, c, keys: Sequence[str] = DEFAULT_KEYS
+) -> list[str]:
+    """The columns ``c`` needs that ``df`` cannot supply, sorted: the one
+    evaluability rule. They are its ``_referenced_columns`` and, unless
+    it is a dataset-level kind (whose rows carry NULL keys), the
+    ``keys`` its violation rows carry. Keys and a window kind's columns
+    need top-level names, because those legs project bare names; every
+    other column also takes a dotted struct path (``_resolve_path``)."""
     cols = set(_referenced_columns(c))
+    top = set() if isinstance(c, DATASET_LEVEL) else set(keys)
     if isinstance(c, GROUP_LEVEL):
-        return sorted(p for p in cols if p not in df.columns)
-    return sorted(p for p in cols if _resolve_path(df.schema, p) is None)
+        top |= cols
+    return sorted(
+        p for p in cols | top
+        if _resolve_path(df.schema, p) is None or (p in top and "." in p)
+    )
 
 
-def _runs(df: DataFrame, c) -> bool:
-    """Whether ``c`` is evaluated on ``df``; when not, dataset_findings
-    reports it "not evaluated" instead."""
-    return not _unresolved(df, c)
+def _runs(df: DataFrame, c, keys: Sequence[str] = DEFAULT_KEYS) -> bool:
+    """Whether ``c`` is evaluated on ``df`` with violation rows keyed by
+    ``keys``; when not, dataset_findings reports it "not evaluated"
+    instead."""
+    return not _unresolved(df, c, keys)
 
 
 def row_violations(
@@ -173,8 +178,8 @@ def row_violations(
 
     Constraints that cannot run (``_runs``) are skipped here and
     REPORTED by dataset_findings — never a silent skip."""
-    cs = [c for c in suite.row_level() if _runs(df, c)]
-    if not cs or not _present(df, keys):
+    cs = [c for c in suite.row_level() if _runs(df, c, keys)]
+    if not cs:
         return _empty(df, keys)
     entries = violation_entries_guarded(cs)
     return (
@@ -412,12 +417,10 @@ def _fusable(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
     keys). Returns (constraints, tie_break_cols) or None. A constraint
     that cannot run (``_runs``) is left out, not a reason to unfuse:
     dataset_findings reports it."""
-    if not _present(df, keys):
-        return None
     part, idx = keys[0], keys[1]
     cs, ties = [], []
     for c in suite.group_level():
-        if not _runs(df, c):
+        if not _runs(df, c, keys):
             continue
         if isinstance(c, Unique):
             if tuple(c.keys) != (part, idx):
@@ -976,10 +979,8 @@ def fd_violations(
     group whose dependent disagrees with what an earlier increment
     established fires instead of silently passing within-increment."""
     out = _empty(df, keys)
-    if not _present(df, keys):
-        return out
     for c in suite.key_level():
-        if not _runs(df, c):
+        if not _runs(df, c, keys):
             continue
         if isinstance(c, GroupMetricBound):
             out = out.unionByName(_gm_leg(df, c, keys))
@@ -1036,11 +1037,7 @@ def _closing_leg(
         elif k == c.order_by:
             out_cols.append(F.col("_o").alias(k))
         else:
-            out_cols.append(
-                F.lit(None)
-                .cast(df.schema[k].dataType if k in df.columns else "string")
-                .alias(k)
-            )
+            out_cols.append(F.lit(None).cast(df.schema[k].dataType).alias(k))
     return bad.select(
         *out_cols,
         reason.alias("reason"),
@@ -1124,12 +1121,7 @@ def _gm_leg(
         shown,
         bound_txt,
     )
-    nulls = [
-        F.lit(None).cast(
-            df.schema[k].dataType if k in df.columns else "string"
-        ).alias(k)
-        for k in keys
-    ]
+    nulls = [F.lit(None).cast(df.schema[k].dataType).alias(k) for k in keys]
     return grp.filter(breach).select(
         F.lit(c.constraint_id).alias("constraint_id"),
         *nulls,
@@ -1325,13 +1317,11 @@ def group_violations(
     df: DataFrame, suite: ConstraintSet, keys: Sequence[str] = DEFAULT_KEYS
 ) -> DataFrame:
     out = _empty(df, keys)
-    if not _present(df, keys):
-        return out
     fused = _fusable(suite, df, keys)
     if fused:
         return out.unionByName(fused_group_violations(df, *fused, keys))
     for c in suite.group_level():
-        if _runs(df, c):
+        if _runs(df, c, keys):
             out = out.unionByName(_GROUP_LEGS[type(c)](df, c, keys))
     return out
 
@@ -1476,7 +1466,7 @@ def dataset_findings(
     # without it gets a finding, not a false PASS (reference reports
     # missing attrs the same way)
     for c in suite.constraints:
-        missing = _unresolved(df, c)
+        missing = _unresolved(df, c, keys)
         if missing:
             rows.append(
                 (
@@ -1736,8 +1726,8 @@ def residual_violations(
     only, so the Arrow return path is defect-proportional."""
     import pandas as pd
 
-    cs = [c for c in suite.residual_level() if _runs(df, c)]
-    if not cs or not _present(df, keys):
+    cs = [c for c in suite.residual_level() if _runs(df, c, keys)]
+    if not cs:
         return _empty(df, keys)
     need = list(dict.fromkeys([*keys, *(col for c in cs for col in c.columns)]))
     # each path must surface in pandas under its DECLARED dotted name
@@ -1840,7 +1830,7 @@ def all_violations(
         df = df.coalesce(1)
     fused = _fusable(suite, df, keys)
     if fused:
-        row_cs = [c for c in suite.row_level() if _runs(df, c)]
+        row_cs = [c for c in suite.row_level() if _runs(df, c, keys)]
         chunk_rows = None
         if skewed_convs and carry is None and not in_place:
             n = (observed_metrics or {}).get("__n_rows")

@@ -52,6 +52,24 @@ def jobs_of(spark):
     return run
 
 
+@pytest.fixture()
+def job_shape_of(spark):
+    """``job_shape_of(fn) -> (fn(), (jobs, stages, tasks))``: run fn under
+    a fresh job group and count the Spark jobs it launched, their stages
+    and those stages' tasks."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        out, jobs = _group_jobs(sc, fn)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        tasks = sum(tracker.getStageInfo(s).numTasks for s in stages)
+        return out, (len(jobs), len(stages), tasks)
+
+    return run
+
+
 def _stage_sum(sc, fn, metric):
     """Run fn under a fresh job group; return (fn(), the sum of
     metric(stage data) over its jobs' stages), read from the status

@@ -293,19 +293,20 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
 @pytest.mark.parametrize(
     "sinks, route, pin",
     [
-        ("sink", "in_place", 2),
-        ("sink+cap", "in_place", 3),
-        ("sink+quarantine", "in_place", 5),
+        ("sink", "in_place", 1),
+        ("sink+cap", "in_place", 2),
+        ("sink+quarantine", "in_place", 4),
         ("sink", "exchange", 8),
         ("sink+cap", "exchange", 9),
         ("sink+quarantine", "exchange", 11),
         ("none", "in_place", 1),
         ("none", "exchange", 7),
+        ("quarantine", "in_place", 3),
     ],
     ids=[
         "sink", "sink+cap", "sink+quarantine",
         "sink-exchange", "sink+cap-exchange", "sink+quarantine-exchange",
-        "no-sink", "no-sink-exchange",
+        "no-sink", "no-sink-exchange", "quarantine",
     ],
 )
 def test_routed_run_with_sinks_job_count(
@@ -313,17 +314,19 @@ def test_routed_run_with_sinks_job_count(
 ):
     """A run_validation with a skewed conversation, a checkpoint manifest
     and a violation sink (or none). The input is small, so in place no
-    stats probe runs and nothing is chunked: the sink write (1: scan,
-    window, coverage flags and write in one task, which stores the
-    violation rows) and the verdict collect (1: the stored rows and the
-    input's per-bucket row counts, the manifest's n_rows, aggregated in
-    one task) make 2 jobs; the schema audit adds none. The detail-row
-    cap adds its exchange (3); the quarantine leg adds its semi-join's
-    exchanges and write (5). With every one-task route forced onto its
-    exchange the stats probe runs and the conversation is chunked:
-    stats 3 (two exchanges, then the final aggregate), the sink write 3
-    (the skew-chunk carriers' exchange, the window's, then the write)
-    and the verdict 2 make 8; the cap 9, the quarantine leg 11. With no
+    stats probe runs and nothing is chunked, and the sink write is the
+    one job: scan, window, coverage flags and write in one task, which
+    stores the violation rows, then the verdict riding it (the stored
+    rows and the input's per-bucket row counts, the manifest's n_rows,
+    aggregated in the same task; the report's verdict_route reads
+    "sink"). The schema audit adds none. The detail-row cap adds its
+    exchange (2); the quarantine leg adds its semi-join's exchanges and
+    write (4); with no violation sink the verdict rides the quarantine
+    write (3). With every one-task route forced onto its exchange the
+    stats probe runs and the conversation is chunked: stats 3 (two
+    exchanges, then the final aggregate), the sink write 3 (the
+    skew-chunk carriers' exchange, the window's, then the write) and the
+    verdict collect 2 make 8; the cap 9, the quarantine leg 11. With no
     sink the violation rows stay lazy: in place they are gathered too,
     so the verdict collect runs the scan, the window, the coverage
     flags, the bucket counts and the aggregate in one task (1 job);
@@ -342,13 +345,14 @@ def test_routed_run_with_sinks_job_count(
                 spark, df, num_buckets=8, quiet=True, skew_min_rows=100,
                 checkpoint_dir=str(tmp_path / "ckpt"),
                 violations_out=(
-                    None if sinks == "none" else str(tmp_path / "viol")
+                    None if sinks in ("none", "quarantine")
+                    else str(tmp_path / "viol")
                 ),
                 report_json=str(tmp_path / "r.json"),
                 max_violation_rows=5 if sinks == "sink+cap" else None,
                 quarantine_out=(
                     str(tmp_path / "quar")
-                    if sinks == "sink+quarantine" else None
+                    if sinks.endswith("quarantine") else None
                 ),
             ))
 
@@ -358,7 +362,7 @@ def test_routed_run_with_sinks_job_count(
         if route == "in_place":
             assert rep["skew_route"] is None
             assert (rep["stats_route"], rep["verdict_route"]) == (
-                "one_task", "one_task"
+                "one_task", "one_task" if sinks == "none" else "sink"
             )
         else:
             assert rep["skew_route"]["convs"] == 1
@@ -370,6 +374,112 @@ def test_routed_run_with_sinks_job_count(
         assert persisted_rdds() - before == set()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _capture_rides(monkeypatch) -> list:
+    """The Observations of the verdicts ``runner._ride`` sets riding a
+    sink write, appended as the runner makes them."""
+    from ocsf_validator_spark import runner
+
+    seen, ride = [], runner._ride
+
+    def spy(frame, vd):
+        out, obs = ride(frame, vd)
+        seen.append(obs)
+        return out, obs
+
+    monkeypatch.setattr(runner, "_ride", spy)
+    return seen
+
+
+def test_in_place_sink_run_is_one_task(
+    spark, tmp_path, job_shape_of, persisted_rdds, monkeypatch
+):
+    """In place the verdict rides the violation sink's write, so a run
+    with a sink and a checkpoint manifest is 1 job of 1 stage and 1
+    task. The sink holds exactly the rows of a standalone all_violations,
+    in one file; the ridden verdict rows are those of a standalone
+    verdict collect; the stored rows are released."""
+    from ocsf_validator_spark.localframe import observed
+    from ocsf_validator_spark.verdict import verdicts
+    from ocsf_validator_spark.violations import all_violations
+
+    df = synth_transcripts(spark, n_turns=4000, seed=3)
+    suite = transcript_suite()
+    rides = _capture_rides(monkeypatch)
+    before = persisted_rdds()
+    res, shape = job_shape_of(lambda: run_validation(
+        spark, df, suite, num_buckets=8, quiet=True,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        violations_out=str(tmp_path / "viol"),
+        report_json=str(tmp_path / "r.json"),
+    ))
+    assert shape == (1, 1, 1)
+    assert persisted_rdds() - before == set()
+    with open(tmp_path / "r.json") as f:
+        assert json.load(f)["verdict_route"] == "sink"
+    files = [
+        n for n in os.listdir(tmp_path / "viol") if n.endswith(".parquet")
+    ]
+    assert len(files) == 1
+    viol = all_violations(df, suite)
+    assert sorted(
+        map(tuple, spark.read.parquet(str(tmp_path / "viol")).collect()),
+        key=repr,
+    ) == sorted(map(tuple, viol.collect()), key=repr)
+    (obs,) = rides
+    ridden = sorted(map(tuple, observed(obs)["rows"]))
+    assert ridden == sorted(map(tuple, verdicts(
+        df, viol, suite, num_buckets=8, row_counts=True
+    ).collect()))
+    rows = {r[0]: r[5] for r in ridden if r[0] >= 0}  # bucket: n_rows
+    assert res.n_rows == sum(rows.values()) == 4000
+
+
+def test_missing_verdict_metrics_row_is_collected(
+    spark, tmp_path, jobs_of, monkeypatch
+):
+    """An observation whose action reports no metrics row reads None
+    from localframe.observed, without hanging or failing in
+    Observation.get: here PruneFilters drops its node from under a
+    literal-false filter. A ridden verdict that comes back so is
+    collected in a job of its own, with a RuntimeWarning, and the report
+    names that collect's route; the run returns what the ridden run
+    does."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from ocsf_validator_spark import runner
+    from ocsf_validator_spark.localframe import observed
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).filter(
+        F.lit(False)
+    ).collect()
+    assert observed(obs) is None
+
+    df = synth_transcripts(spark, n_turns=4000, seed=3)
+
+    def run(tag):
+        res = run_validation(
+            spark, df, num_buckets=8, quiet=True,
+            checkpoint_dir=str(tmp_path / tag / "ckpt"),
+            violations_out=str(tmp_path / tag / "viol"),
+            report_json=str(tmp_path / tag / "r.json"),
+        )
+        with open(tmp_path / tag / "r.json") as f:
+            route = json.load(f)["verdict_route"]
+        entries = sorted(
+            (e.bucket, e.n_rows, e.n_violations) for e in res.manifest_entries
+        )
+        return route, (res.exit_code, res.n_rows, res.summary_rows, entries)
+
+    ridden = run("ridden")
+    monkeypatch.setattr(runner, "observed", lambda obs: None)
+    with pytest.warns(RuntimeWarning, match="no verdict metrics row"):
+        lost, n = jobs_of(lambda: run("lost"))
+    assert (ridden[0], lost[0], n) == ("sink", "one_task", 2)
+    assert lost[1] == ridden[1]
 
 
 def _coverage_metric_suite():
@@ -388,22 +498,22 @@ def _coverage_metric_suite():
 
 
 @pytest.mark.parametrize(
-    "kind, pin", [("transcripts", 3), ("coverage+metrics", 4)]
+    "kind, pin",
+    [("transcripts", 2), ("coverage+metrics", 3)],
+    ids=["transcripts", "coverage+metrics"],
 )
 def test_in_place_run_matches_the_exchange_run(
     spark, tmp_path, jobs_of, no_one_task, kind, pin
 ):
     """A run whose window runs in place runs no stats probe: its
     coverage flags ride the sink write and its buckets with their row
-    counts ride the verdict collect. It returns what the run forced
-    onto the exchanges (which probes first) returns: exit code, row
-    count, verdict rows, the manifest's per-bucket n_rows and
-    n_violations, and the sink rows. In place the sink write, the
-    verdict collect and the verdicts_out write make 3 jobs (4 when the
-    stats probe ran first). The MetricBounds' shared aggregate runs
-    eagerly while the plan is built and replaces the probe's job, so
-    that suite costs 4 (5 with the probe, whose mergeable aggregates
-    still left distinct_count to that shared job)."""
+    counts ride the verdict, which rides the sink write. It returns
+    what the run forced onto the exchanges (which probes first)
+    returns: exit code, row count, verdict rows, the manifest's
+    per-bucket n_rows and n_violations, and the sink rows. In place the
+    sink write and the verdicts_out write make 2 jobs. The MetricBounds'
+    shared aggregate runs eagerly while the plan is built and replaces
+    the probe's job, so that suite costs 3."""
     df = synth_transcripts(spark, n_turns=4000, seed=3)
     suite = (
         transcript_suite() if kind == "transcripts"
@@ -456,8 +566,10 @@ def test_in_place_run_matches_the_exchange_run(
 def test_report_json_keys(spark, tmp_path, capsys, no_one_task):
     """The --report-json object and its phase_sec carry the same keys
     on both routes (a quarantine_out run adds a "quarantine" lap). In
-    place the skewed conversation is neither chunked nor announced; on
-    the exchange the runner prints the chunked route."""
+    place the skewed conversation is neither chunked nor announced, and
+    verdict_route reads "sink": the verdict rode the sink write. On the
+    exchange the runner prints the chunked route and collects the
+    verdict through its exchange."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -470,6 +582,7 @@ def test_report_json_keys(spark, tmp_path, capsys, no_one_task):
                 return run_validation(
                     spark, df, num_buckets=8, skew_min_rows=100,
                     report_json=path,
+                    violations_out=str(tmp_path / f"{route}-viol"),
                 )
 
             run() if route == "in_place" else no_one_task(run)
@@ -487,6 +600,9 @@ def test_report_json_keys(spark, tmp_path, capsys, no_one_task):
                 "audit", "stats", "skew_probe", "skew_path", "verdict"
             }
             assert (rep["window_route"], rep["n_rows"]) == (route, 4000)
+            assert rep["verdict_route"] == (
+                "sink" if route == "in_place" else "exchange"
+            )
             routed = [
                 line for line in said.splitlines()
                 if line.startswith("skew: routing")

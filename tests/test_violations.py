@@ -735,6 +735,25 @@ EVALUABILITY_CASES = [
         },
         id="dataset",
     ),
+    # a keyed kind needs the keys its rows carry; a dataset-level one
+    # (NULL keys) does not
+    pytest.param(
+        ("turn_idx",),
+        [
+            NotNull(column="tool"),
+            FunctionalDependency(column="tool", determinants=("conv_id",)),
+            PandasCheck(column="tool", columns=("tool",), check=_never,
+                        check_id="tool"),
+            MetricBound(column="tool", metric="null_rate", hi=0.5),
+        ],
+        {
+            "required.tool": _NE,
+            "fd.conv_id->tool": _NE,
+            "residual.tool": _NE,
+            "metric.null_rate.tool": "null_rate(tool) = 3/4 above max 0.5",
+        },
+        id="missing-key",
+    ),
 ]
 
 
@@ -753,6 +772,36 @@ def test_each_constraint_is_evaluated_or_reported(spark, drop, constraints, want
             assert len(reasons) == len(skipped) == 1, (cid, reasons)
         else:
             assert not skipped and reason in reasons, (cid, reasons)
+
+
+def test_a_missing_key_or_a_dotted_name_is_reported(spark):
+    """With a row key missing, a keyed constraint is reported "not
+    evaluated" by all_violations and dataset_findings alike, where it
+    used to vanish from both. A top-level column whose name holds a dot
+    is read by F.col as a struct path, so a constraint on it is
+    reported too rather than failing at analysis; the struct path
+    itself is evaluated."""
+    df = spark.createDataFrame(
+        [("c", 0, None)], "conv_id string, turn_idx int, role string"
+    )
+
+    def reasons(frame, column):
+        suite = ConstraintSet("s", [NotNull(column=column)])
+        return [
+            [(r.turn_idx, r.reason) for r in out.collect()]
+            for out in (all_violations(frame, suite),
+                        dataset_findings(frame, suite))
+        ]
+
+    gone = "do not resolve in schema; constraint not evaluated"
+    assert reasons(df.drop("turn_idx"), "role") == [
+        [(None, f"column(s) turn_idx {gone}")]
+    ] * 2
+    assert reasons(df.withColumnRenamed("role", "a.b"), "a.b") == [
+        [(None, f"column(s) a.b {gone}")]
+    ] * 2
+    nested = df.selectExpr("conv_id", "turn_idx", "named_struct('b', role) a")
+    assert reasons(nested, "a.b") == [[(0, "a.b is required but null")], []]
 
 
 def test_a_window_constraint_that_cannot_run_keeps_the_fused_pass(
