@@ -4214,6 +4214,8 @@ d AS (
   SELECT *,
     CASE
       WHEN pass_before IS NULL AND NOT pass_after THEN 'new_fail'
+      WHEN pass_after IS NULL AND NOT pass_before AND bucket = -1
+           THEN 'fixed'
       WHEN pass_after IS NULL AND NOT pass_before THEN 'gone_fail'
       WHEN pass_before AND NOT pass_after THEN 'regressed'
       WHEN NOT pass_before AND pass_after THEN 'fixed'

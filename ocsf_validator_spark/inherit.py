@@ -147,7 +147,9 @@ def build_constraint(constraint_id: str, spec: Mapping[str, Any]) -> Constraint:
     kwargs.setdefault("id_override", constraint_id)
     try:
         return cls(**kwargs)
-    except TypeError as e:
+    except (TypeError, ValueError) as e:
+        # an unknown field, or a value the constraint rejects when it
+        # is built: the suite does not resolve
         raise SuiteResolutionError(f"constraint {constraint_id!r}: {e}") from e
 
 

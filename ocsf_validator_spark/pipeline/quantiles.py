@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ocsf_validator_spark.localframe import empty_df, local_df
+from ocsf_validator_spark.localframe import local_df
 
 # <= this many non-null values: collect once (Arrow), rank driver-side.
 # One million doubles is ~8 MB on the wire and a few tens of MB as a
@@ -188,9 +188,11 @@ def _quantile_map(
     stats: tuple[int, float | None, float | None, int] | None = None,
 ) -> tuple[dict[float, float], tuple[int, float | None, float | None, int]]:
     """q -> exact order-statistic value over ``vals`` (a ``v`` column,
-    ideally persisted by the caller). ``stats`` skips the stats job
-    when the caller already knows (n, lo, hi, n_inf) — a DERIVED
-    containing range is fine (the clamp routes edge values)."""
+    ideally persisted by the caller) by histogram narrowing; callers
+    reach it only once ``_probe_small`` found more than ``_SMALL_N``
+    rows. ``stats`` skips the stats job when the caller already knows
+    (n, lo, hi, n_inf) — a DERIVED containing range is fine (the clamp
+    routes edge values)."""
     if stats is None:
         stats = _stats_of(vals)
     n, lo, hi, n_inf = stats
@@ -199,13 +201,6 @@ def _quantile_map(
     ranks = {q: _rank(n, q) for q in qs}
     if n_inf == 0 and lo == hi:
         return {q: lo for q in qs}, stats
-    if n <= _SMALL_N:
-        # Arrow transfer: a py4j row collect of tens of thousands of
-        # rows costs seconds; toArrow moves the same values in one
-        # columnar batch (values are non-null non-NaN doubles, so the
-        # round trip is lossless)
-        vs = sorted(vals.toArrow().column("v").to_pylist())
-        return {q: vs[r - 1] for q, r in ranks.items()}, stats
     be = _bin_expr(lo, hi, n_bins)
     ht = (
         vals.select(be.alias("b"))

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import (
-    empty_df,
     local_df,
     observed,
     one_task,
@@ -50,10 +49,24 @@ from ocsf_validator_spark.localframe import (
 )
 
 from ocsf_validator_spark import checkpoint as ckpt
+from ocsf_validator_spark.inherit import SuiteResolutionError, resolve
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import (
+    Alternation,
+    Check,
+    ClosingRole,
     ConstraintSet,
+    DriftGate,
+    FunctionalDependency,
+    GroupMetricBound,
+    MetricBound,
+    OpeningRole,
+    Precedence,
+    QuantileBound,
     Severity,
+    VolumeGate,
+    drift_gate_from_baseline,
+    save_suite,
     transcript_suite,
 )
 from ocsf_validator_spark.stats import DEFAULT_BUCKETS, bucketed_probe_stats
@@ -70,27 +83,144 @@ from ocsf_validator_spark.violations import (
     window_route,
 )
 
-# metric vocabulary shared by MetricBound / GroupMetricBound CLI flags —
-# validated at argument-parse time so a typo exits 2 with [FATAL] like
-# every other malformed flag instead of a mid-run stack trace
-_METRIC_NAMES = frozenset(
-    ("null_rate", "row_count", "distinct_count", "min", "max")
-)
+
+def _tail(spec: str, opts: str, keys: tuple[str, ...]) -> dict[str, str]:
+    """The ``key=value`` texts of a flag's ``,``-separated tail
+    ``opts``; a key outside ``keys`` raises ValueError(spec)."""
+    got = {}
+    for kv in filter(None, opts.split(",")):
+        k, _, v = kv.partition("=")
+        if k not in keys:
+            raise ValueError(spec)
+        got[k] = v
+    return got
 
 
 def _bounds(spec: str, opts: str) -> tuple:
     """``(lo, hi)`` from a bound flag's ``min=X,max=Y`` tail (``opts``,
     either key optional): ints unless the text has a '.' or an 'e'. An
     unknown key, or no bound at all, raises ValueError(spec)."""
-    got = {"min": None, "max": None}
-    for kv in filter(None, opts.split(",")):
-        k, _, v = kv.partition("=")
-        if k not in got:
-            raise ValueError(spec)
-        got[k] = float(v) if "." in v or "e" in v else int(v)
-    if got["min"] is None and got["max"] is None:
+    got = _tail(spec, opts, ("min", "max"))
+    if not got:
         raise ValueError(spec)
-    return got["min"], got["max"]
+    return tuple(
+        None if v is None else float(v) if "." in v or "e" in v else int(v)
+        for v in (got.get("min"), got.get("max"))
+    )
+
+
+def _check(s: str) -> Check:
+    label, _, pred = s.partition("=")
+    if not (label and pred):
+        raise ValueError(s)
+    return Check(column=label, predicate=pred)
+
+
+def _metric_bound(s: str) -> MetricBound:
+    head, _, opts = s.partition(",")
+    col, _, metric = head.partition(":")
+    lo, hi = _bounds(s, opts)
+    if not col:
+        raise ValueError(s)
+    return MetricBound(column=col, metric=metric, lo=lo, hi=hi)
+
+
+def _drift_gate(s: str):
+    head, _, opts = s.partition(",")
+    path, _, metric = head.partition(":")
+    thr = _tail(s, opts, ("threshold",)).get("threshold")
+    return drift_gate_from_baseline(
+        path, metric=metric or "psi",
+        threshold=None if thr is None else float(thr),
+    )
+
+
+def _fd(s: str) -> FunctionalDependency:
+    dets, _, dep = s.partition("=")
+    if not dep:
+        raise ValueError(s)
+    return FunctionalDependency(
+        column=dep, determinants=tuple(x for x in dets.split(",") if x)
+    )
+
+
+def _quantile_bound(s: str) -> QuantileBound:
+    head, _, opts = s.partition(",")
+    col, _, q = head.partition(":")
+    lo, hi = _bounds(s, opts)
+    if not col:
+        raise ValueError(s)
+    return QuantileBound(column=col, q=float(q), lo=lo, hi=hi)
+
+
+def _volume_gate(s: str) -> VolumeGate:
+    head, _, opts = s.partition(",")
+    col, _, gran = head.partition(":")
+    k = int(_tail(s, opts, ("k",)).get("k", 3))
+    if not (col and gran):
+        raise ValueError(s)
+    return VolumeGate(column=col, granularity=gran, k=k)
+
+
+def _group_metric(s: str) -> GroupMetricBound:
+    head, _, opts = s.partition(",")
+    parts = head.split(":")  # BY columns split on '+'
+    lo, hi = _bounds(s, opts)
+    if len(parts) != 3 or not parts[0]:
+        raise ValueError(s)
+    col, metric, by = parts
+    return GroupMetricBound(
+        column=col, metric=metric, by=tuple(x for x in by.split("+") if x),
+        lo=lo, hi=hi,
+    )
+
+
+def _precedence(s: str) -> Precedence:
+    head, _, pre = s.partition("=")
+    col, _, trig = head.partition(":")
+    prereq = tuple(x for x in pre.split(",") if x)
+    if not (col and trig and prereq):
+        raise ValueError(s)
+    return Precedence(column=col, trigger=trig, prereq=prereq)
+
+
+def _values(s: str) -> tuple[str, tuple[str, ...]]:
+    """``COL=V1,V2`` as ``(COL, (V1, V2))``."""
+    col, _, vals = s.partition("=")
+    return col, tuple(x for x in vals.split(",") if x)
+
+
+def _allowed(cls, s: str):
+    """An OpeningRole or ClosingRole from ``COL=V1,V2``."""
+    col, allowed = _values(s)
+    if not (col and allowed):
+        raise ValueError(s)
+    return cls(column=col, allowed=allowed)
+
+
+def _alternation(s: str) -> Alternation:
+    col, scope = _values(s)
+    if not col:
+        raise ValueError(s)
+    return Alternation(column=col, scope=scope)
+
+
+# the constraint flags (argparse dests), each with its parser, in the
+# order their constraints join the suite (that order is part of
+# ConstraintSet.version, which the checkpoint manifest keys on)
+_FLAGS = {
+    "check": _check,
+    "metric_bound": _metric_bound,
+    "drift_gate": _drift_gate,
+    "fd": _fd,
+    "quantile_bound": _quantile_bound,
+    "volume_gate": _volume_gate,
+    "group_metric": _group_metric,
+    "precedence": _precedence,
+    "opening": lambda s: _allowed(OpeningRole, s),
+    "alternation": _alternation,
+    "closing": lambda s: _allowed(ClosingRole, s),
+}
 
 
 # a collected verdict row: verdict.verdicts' five public columns
@@ -191,7 +321,6 @@ def run_validation(
     spark: SparkSession,
     df: DataFrame,
     suite: ConstraintSet | None = None,
-    conv_col: str = "conv_id",
     num_buckets: int = DEFAULT_BUCKETS,
     strict: bool = False,
     checkpoint_dir: str | None = None,
@@ -310,7 +439,7 @@ def run_validation(
     if checkpoint_dir:
         done = ckpt.completed_buckets(checkpoint_dir, suite.version(), snapshot_id)
         if done:
-            df = ckpt.filter_pending(df, done, conv_col, num_buckets)
+            df = ckpt.filter_pending(df, done, num_buckets=num_buckets)
             skipped = len(done)
             say(f"resume: skipping {skipped} completed buckets")
             # every bucket done leaves no row (a NULL conv_id hashes to
@@ -322,13 +451,6 @@ def run_validation(
             # on a partial resume that is the PENDING buckets only, so
             # absolute-count bounds can spuriously fire or pass. Warn
             # rather than silently re-scope.
-            from ocsf_validator_spark.spec import (
-                DriftGate,
-                MetricBound,
-                QuantileBound,
-                VolumeGate,
-            )
-
             gated = [
                 c.constraint_id
                 for c in suite.dataset_level()
@@ -366,7 +488,6 @@ def run_validation(
     if probe:
         bucket_stats = bucketed_probe_stats(
             df,
-            conv_col=conv_col,
             num_buckets=num_buckets,
             probe_floor=skew_min_rows if detect_skew else None,
             merge_aggs=observation_aggs(suite, df),
@@ -463,7 +584,7 @@ def run_validation(
 
     def verdict_frame() -> DataFrame:
         return verdicts(
-            df, viol, suite, conv_col=conv_col, num_buckets=num_buckets,
+            df, viol, suite, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed_buckets,
             row_counts=not probe,
         )
@@ -605,7 +726,7 @@ def run_validation(
             vd_rows,
             suite.version(),
             snapshot_id,
-            partition_spec=f"pmod(xxhash64({conv_col}), {num_buckets})",
+            partition_spec=f"pmod(xxhash64(conv_id), {num_buckets})",
             bucket_rows=bucket_stats,
             wall_sec=wall,
         )
@@ -647,20 +768,18 @@ def run_validation(
     )
 
 
-def stream_main(spark: SparkSession, args) -> int:
-    """--stream: drain a landing directory through the streaming suite
+def stream_main(spark: SparkSession, args, suite: ConstraintSet) -> int:
+    """--stream: drain a landing directory through ``suite``
     (validate_stream, availableNow) and exit with the batch contract:
-    0 = clean, 1 = ERROR/FATAL violations found in this drain's batches
-    (coverage is excluded per micro-batch by design). The exit verdict
+    0 = clean, 1 = violations at or above the failure threshold (ERROR;
+    WARNING under --strict, which also quarantines at WARNING) found in
+    this drain's batches (coverage is excluded per micro-batch by
+    design). The exit verdict
     reads back only the sink rows THIS drain wrote: batch partitions by
     this drain's batch ids (with --stateful-ordering, cross-batch
     findings among them), and the append-across-drains --psi-ref drift
     leg (batch_id=-2) by the drain_id stamped on its rows, so a later
     clean drain does not re-fail on an earlier drain's findings."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from ocsf_validator_spark.streaming import (
         DRIFT_BATCH_ID,
         stream_transcripts,
@@ -668,6 +787,11 @@ def stream_main(spark: SparkSession, args) -> int:
     )
 
     drain_id = uuid.uuid4().hex[:12]
+    threshold = Severity.WARNING if args.strict else Severity.ERROR
+    # at or above that threshold, the rule violations.quarantine_keys applies
+    failing = F.col("severity").isin(
+        [s.name for s in Severity if s >= threshold]
+    )
     psi_kw: dict = {}
     if getattr(args, "psi_ref", None):
         # {"hist": {bin: count}, "bin_expr": "...", and optionally
@@ -687,11 +811,13 @@ def stream_main(spark: SparkSession, args) -> int:
         stream_transcripts(spark, args.input),
         violations_out=args.violations_out,
         checkpoint_dir=args.checkpoint,
+        suite=suite,
         manifest_dir=args.checkpoint + "_batches",
         on_batch=lambda bid, rows, nv: batches.append((bid, rows, nv)),
         stateful_ordering=args.stateful_ordering,
         drain_id=drain_id,
         quarantine_out=args.quarantine_out,
+        quarantine_threshold=threshold,
         **psi_kw,
     )
     queries = started if isinstance(started, tuple) else (started,)
@@ -705,10 +831,7 @@ def stream_main(spark: SparkSession, args) -> int:
     drained = [bid for bid, _, _ in batches]
     bad = (
         read_parquet(spark, args.violations_out)
-        .filter(
-            F.col("batch_id").isin(drained)
-            & F.col("severity").isin("ERROR", "FATAL")
-        )
+        .filter(F.col("batch_id").isin(drained) & failing)
         .limit(1)
         .count()
         > 0
@@ -722,10 +845,7 @@ def stream_main(spark: SparkSession, args) -> int:
         except Exception:
             return 0  # the leg emitted nothing yet — no directory
         bad = (
-            leg_rows.filter(
-                (F.col("drain_id") == drain_id)
-                & F.col("severity").isin("ERROR", "FATAL")
-            )
+            leg_rows.filter((F.col("drain_id") == drain_id) & failing)
             .limit(1)
             .count()
             > 0
@@ -983,27 +1103,54 @@ def main(argv: list[str] | None = None) -> int:
     if args.max_violation_rows is not None and args.max_violation_rows < 1:
         print(f"[FATAL] --max-violation-rows must be >= 1, got {args.max_violation_rows}")
         return 2
+    if args.stream and not (args.input and args.violations_out and args.checkpoint):
+        print("[FATAL] --stream requires --input, --violations-out, --checkpoint")
+        return 2
+    if args.stream and args.incremental:
+        print("[FATAL] --incremental and --stream are exclusive modes")
+        return 2
+    if args.incremental and not (args.input and args.checkpoint):
+        print("[FATAL] --incremental requires --input and --checkpoint")
+        return 2
+
+    # the one suite every mode validates, built before a session starts:
+    # a malformed source exits 2 with one [FATAL] line (the reference
+    # exits 2 when its schema graph cannot be resolved)
+    source = "--suite-json"
+    try:
+        suite = transcript_suite()
+        if args.suite_json:
+            with open(args.suite_json) as f:
+                suite = resolve(json.load(f), args.suite_name)
+        source = "--severity"
+        # an unknown constraint id or level is never a silently-kept
+        # default severity
+        suite = suite.with_severities(
+            dict(s.split("=", 1) for s in args.severity)
+        )
+        for dest, parse in _FLAGS.items():
+            source = "--" + dest.replace("_", "-")
+            for spec in getattr(args, dest):
+                suite.add(parse(spec))
+        source = "--dump-suite"
+        if args.dump_suite:
+            save_suite(suite, args.dump_suite)
+    except (
+        OSError, KeyError, TypeError, ValueError, SuiteResolutionError
+    ) as e:
+        print(f"[FATAL] bad {source}: {e}")
+        return 2
 
     from ocsf_validator_spark.session import get_spark
 
     spark = get_spark("ocsf-validator-runner", cores=args.cores)
-
     if args.stream:
-        if not (args.input and args.violations_out and args.checkpoint):
-            print("[FATAL] --stream requires --input, --violations-out, --checkpoint")
-            return 2
-        if args.incremental:
-            print("[FATAL] --incremental and --stream are exclusive modes")
-            return 2
-        return stream_main(spark, args)
+        return stream_main(spark, args, suite)
 
     inc_files: list | None = None
     carry_state = None
     fd_carry = {}
     if args.incremental:
-        if not (args.input and args.checkpoint):
-            print("[FATAL] --incremental requires --input and --checkpoint")
-            return 2
         from ocsf_validator_spark.sources import load_increment
 
         try:
@@ -1115,201 +1262,6 @@ def main(argv: list[str] | None = None) -> int:
             f"(salt={args.sample_salt}); verdicts cover the SAMPLE only"
         )
 
-    suite = None
-    if args.suite_json:
-        from ocsf_validator_spark.inherit import SuiteResolutionError, resolve
-
-        try:
-            with open(args.suite_json) as f:
-                registry = json.load(f)
-            suite = resolve(registry, args.suite_name)
-        except (OSError, json.JSONDecodeError, SuiteResolutionError) as e:
-            # compile-phase failure is FATAL (reference exits 2 when the
-            # schema/dependency graph cannot be resolved)
-            print(f"[FATAL] suite compilation failed: {e}")
-            return 2
-
-    if args.severity:
-        try:
-            overrides = dict(s.split("=", 1) for s in args.severity)
-            suite = (suite or transcript_suite()).with_severities(overrides)
-        except (KeyError, ValueError) as e:
-            # a typo'd constraint id or level is a config error — FATAL,
-            # never a silently-kept default severity
-            print(f"[FATAL] bad --severity: {e}")
-            return 2
-
-    if args.check or args.metric_bound:
-        from ocsf_validator_spark.spec import Check, MetricBound
-
-        suite = suite or transcript_suite()
-        try:
-            for s_ in args.check:
-                label, _, pred = s_.partition("=")
-                if not (label and pred):
-                    raise ValueError(s_)
-                suite.add(Check(column=label, predicate=pred))
-            for s_ in args.metric_bound:
-                head, _, opts = s_.partition(",")
-                col, _, metric = head.partition(":")
-                lo, hi = _bounds(s_, opts)
-                if not (col and metric):
-                    raise ValueError(s_)
-                if metric not in _METRIC_NAMES:
-                    # validate at parse time: an unknown metric used to
-                    # surface as an unhandled mid-run ValueError stack
-                    # trace instead of the clean [FATAL] exit-2 path
-                    raise ValueError(
-                        f"unknown metric {metric!r} (one of "
-                        f"{sorted(_METRIC_NAMES)})"
-                    )
-                suite.add(
-                    MetricBound(column=col, metric=metric, lo=lo, hi=hi)
-                )
-        except ValueError as e:
-            print(f"[FATAL] bad --check/--metric-bound: {e}")
-            return 2
-
-    if args.drift_gate:
-        from ocsf_validator_spark.spec import drift_gate_from_baseline
-
-        suite = suite or transcript_suite()
-        try:
-            for s_ in args.drift_gate:
-                head, _, opts = s_.partition(",")
-                path, _, metric = head.partition(":")
-                thr = None
-                for kv in filter(None, opts.split(",")):
-                    k_, _, v = kv.partition("=")
-                    if k_ == "threshold":
-                        thr = float(v)
-                    else:
-                        raise ValueError(s_)
-                suite.add(
-                    drift_gate_from_baseline(
-                        path, metric=metric or "psi", threshold=thr
-                    )
-                )
-        except (OSError, ValueError, KeyError) as e:
-            print(f"[FATAL] bad --drift-gate: {e}")
-            return 2
-
-    if args.fd or args.quantile_bound or args.volume_gate or args.group_metric:
-        from ocsf_validator_spark.spec import (
-            FunctionalDependency,
-            GroupMetricBound,
-            QuantileBound,
-            VolumeGate,
-        )
-
-        suite = suite or transcript_suite()
-        try:
-            for s_ in args.fd:
-                dets, _, dep = s_.partition("=")
-                det = tuple(x for x in dets.split(",") if x)
-                if not (det and dep):
-                    raise ValueError(s_)
-                suite.add(FunctionalDependency(column=dep, determinants=det))
-            for s_ in args.quantile_bound:
-                head, _, opts = s_.partition(",")
-                col, _, qtxt = head.partition(":")
-                lo, hi = _bounds(s_, opts)
-                if not (col and qtxt):
-                    raise ValueError(s_)
-                suite.add(
-                    QuantileBound(column=col, q=float(qtxt), lo=lo, hi=hi)
-                )
-            for s_ in args.volume_gate:
-                head, _, opts = s_.partition(",")
-                col, _, gran = head.partition(":")
-                k = 3
-                for kv in filter(None, opts.split(",")):
-                    kk, _, v = kv.partition("=")
-                    if kk == "k":
-                        k = int(v)
-                    else:
-                        raise ValueError(s_)
-                if not (col and gran):
-                    raise ValueError(s_)
-                suite.add(VolumeGate(column=col, granularity=gran, k=k))
-            for s_ in args.group_metric:
-                head, _, opts = s_.partition(",")
-                parts = head.split(":")
-                if len(parts) != 3:
-                    raise ValueError(s_)
-                col, metric, by_txt = parts
-                by = tuple(x for x in by_txt.split("+") if x) or tuple(
-                    x for x in by_txt.split(";") if x
-                )
-                # BY columns separated by '+' (',' starts the bounds)
-                lo, hi = _bounds(s_, opts)
-                if not (col and metric and by):
-                    raise ValueError(s_)
-                if metric not in _METRIC_NAMES:
-                    raise ValueError(
-                        f"unknown metric {metric!r} (one of "
-                        f"{sorted(_METRIC_NAMES)})"
-                    )
-                suite.add(
-                    GroupMetricBound(
-                        column=col, metric=metric, by=by, lo=lo, hi=hi
-                    )
-                )
-        except ValueError as e:
-            print(
-                "[FATAL] bad --fd/--quantile-bound/--volume-gate/"
-                f"--group-metric: {e}"
-            )
-            return 2
-
-    if args.precedence or args.opening or args.alternation or args.closing:
-        from ocsf_validator_spark.spec import (
-            Alternation,
-            ClosingRole,
-            OpeningRole,
-            Precedence,
-        )
-
-        suite = suite or transcript_suite()
-        try:
-            for s_ in args.precedence:
-                head, pre = s_.split("=", 1)
-                col, trig = head.split(":", 1)
-                prereq = tuple(x for x in pre.split(",") if x)
-                if not (col and trig and prereq):
-                    raise ValueError(s_)
-                suite.add(Precedence(column=col, trigger=trig, prereq=prereq))
-            for s_ in args.opening:
-                col, vals = s_.split("=", 1)
-                allowed = tuple(x for x in vals.split(",") if x)
-                if not (col and allowed):
-                    raise ValueError(s_)
-                suite.add(OpeningRole(column=col, allowed=allowed))
-            for s_ in args.alternation:
-                col, _, vals = s_.partition("=")
-                scope = tuple(x for x in vals.split(",") if x)
-                if not col:
-                    raise ValueError(s_)
-                suite.add(Alternation(column=col, scope=scope))
-            for s_ in args.closing:
-                col, _, vals = s_.partition("=")
-                allowed = tuple(x for x in vals.split(",") if x)
-                if not (col and allowed):
-                    raise ValueError(s_)
-                suite.add(ClosingRole(column=col, allowed=allowed))
-        except ValueError as e:
-            print(f"[FATAL] bad --precedence/--opening/--closing/--alternation: {e}")
-            return 2
-
-    if args.dump_suite:
-        from ocsf_validator_spark.spec import save_suite
-
-        try:
-            save_suite(suite or transcript_suite(), args.dump_suite)
-        except (OSError, TypeError, ValueError) as e:
-            print(f"[FATAL] --dump-suite failed: {e}")
-            return 2
-
     res = run_validation(
         spark,
         df,
@@ -1341,7 +1293,7 @@ def main(argv: list[str] | None = None) -> int:
 
         state_dir, fd_dirs = convstate.commit(
             df,
-            suite or transcript_suite(),
+            suite,
             args.checkpoint,
             snapshot,
             carry=carry_state,

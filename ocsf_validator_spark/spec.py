@@ -20,6 +20,18 @@ from enum import IntEnum
 from typing import Any, Mapping, Sequence
 
 
+# the metric vocabulary of MetricBound and GroupMetricBound
+METRICS = ("null_rate", "row_count", "distinct_count", "min", "max")
+
+
+def _known_metric(c: "Constraint", vocabulary: Sequence[str]) -> None:
+    if c.metric not in vocabulary:
+        raise ValueError(
+            f"{c.constraint_id}: unknown metric {c.metric!r} "
+            f"(one of {', '.join(vocabulary)})"
+        )
+
+
 class Severity(IntEnum):
     """Mirror of reference runner.py:31-55 (IGNORE/INFO/WARN/ERROR/FATAL)."""
 
@@ -56,6 +68,17 @@ class Constraint:
     @property
     def constraint_id(self) -> str:
         return self.id_override or f"{self.KIND}.{self.column}"
+
+    def __post_init__(self) -> None:
+        # a config error is never a silent keep: the dataset-level kinds
+        # read the WHOLE frame (and so do the runner's piggybacked
+        # aggregates), so a `where` there would be ignored — scope the
+        # input frame instead
+        if self.where and isinstance(self, DATASET_LEVEL):
+            raise ValueError(
+                f"{self.KIND} constraints are dataset-level; `where` is "
+                "not applied — filter the input frame instead"
+            )
 
     def version(self) -> str:
         """Stable content hash so the checkpoint manifest can detect a
@@ -422,6 +445,7 @@ class FunctionalDependency(Constraint):
     KIND = "fd"
 
     def __post_init__(self) -> None:
+        super().__post_init__()
         # empty determinants would silently skip the whole leg
         # (config error is never a silent keep)
         if not self.determinants:
@@ -491,15 +515,8 @@ class MetricBound(Constraint):
     KIND = "metric"
 
     def __post_init__(self) -> None:
-        # the dataset-level gates aggregate the WHOLE frame and the
-        # runner's piggybacked aggregates do too — a `where` here would
-        # be silently ignored (config error is never a silent keep):
-        # scope the input frame instead
-        if self.where:
-            raise ValueError(
-                f"{self.KIND} constraints are dataset-level; `where` is "
-                "not applied — filter the input frame instead"
-            )
+        super().__post_init__()
+        _known_metric(self, METRICS)
 
     @property
     def constraint_id(self) -> str:
@@ -533,17 +550,6 @@ class QuantileBound(Constraint):
     hi: Any = None
     KIND = "quantile"
 
-    def __post_init__(self) -> None:
-        # the dataset-level gates aggregate the WHOLE frame and the
-        # runner's piggybacked aggregates do too — a `where` here would
-        # be silently ignored (config error is never a silent keep):
-        # scope the input frame instead
-        if self.where:
-            raise ValueError(
-                f"{self.KIND} constraints are dataset-level; `where` is "
-                "not applied — filter the input frame instead"
-            )
-
     @property
     def constraint_id(self) -> str:
         return self.id_override or f"{self.KIND}.{self.q}.{self.column}"
@@ -570,17 +576,6 @@ class VolumeGate(Constraint):
     k: int = 3
     severity: Severity = Severity.WARNING
     KIND = "volume"
-
-    def __post_init__(self) -> None:
-        # the dataset-level gates aggregate the WHOLE frame and the
-        # runner's piggybacked aggregates do too — a `where` here would
-        # be silently ignored (config error is never a silent keep):
-        # scope the input frame instead
-        if self.where:
-            raise ValueError(
-                f"{self.KIND} constraints are dataset-level; `where` is "
-                "not applied — filter the input frame instead"
-            )
 
     @property
     def constraint_id(self) -> str:
@@ -614,15 +609,8 @@ class DriftGate(Constraint):
     KIND = "drift"
 
     def __post_init__(self) -> None:
-        # the dataset-level gates aggregate the WHOLE frame and the
-        # runner's piggybacked aggregates do too — a `where` here would
-        # be silently ignored (config error is never a silent keep):
-        # scope the input frame instead
-        if self.where:
-            raise ValueError(
-                f"{self.KIND} constraints are dataset-level; `where` is "
-                "not applied — filter the input frame instead"
-            )
+        super().__post_init__()
+        _known_metric(self, ("psi", "emd"))
 
     @property
     def constraint_id(self) -> str:
@@ -655,6 +643,7 @@ class GroupMetricBound(Constraint):
     KIND = "group_metric"
 
     def __post_init__(self) -> None:
+        super().__post_init__()
         # empty `by` would silently skip the whole leg (config error is
         # never a silent keep)
         if not self.by:
@@ -662,6 +651,7 @@ class GroupMetricBound(Constraint):
                 f"GroupMetricBound {self.column!r} needs at least one "
                 "grouping column in `by`"
             )
+        _known_metric(self, METRICS)
 
     @property
     def constraint_id(self) -> str:

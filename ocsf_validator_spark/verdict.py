@@ -185,7 +185,8 @@ def verdict_diff(before: DataFrame, after: DataFrame) -> DataFrame:
     something is wrong or changed:
 
     - ``regressed``      pass -> fail (the page-someone row)
-    - ``fixed``          fail -> pass
+    - ``fixed``          fail -> pass, or a dataset-level finding
+                         (bucket -1) that has no row now
     - ``new_fail``       bucket/constraint absent before, failing now
     - ``gone_fail``      was failing, bucket absent now (data vanished
                          before the defect was resolved)
@@ -213,6 +214,9 @@ def verdict_diff(before: DataFrame, after: DataFrame) -> DataFrame:
     pb, pa = F.col("_pb"), F.col("_pa")
     status = (
         F.when(pb.isNull() & ~pa, F.lit("new_fail"))
+        # bucket -1 (dataset-level findings) has rows only where a
+        # finding is: no row after means the finding cleared
+        .when(pa.isNull() & ~pb & (F.col("bucket") == -1), F.lit("fixed"))
         .when(pa.isNull() & ~pb, F.lit("gone_fail"))
         .when(pb & ~pa, F.lit("regressed"))
         .when(~pb & pa, F.lit("fixed"))

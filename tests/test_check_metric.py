@@ -153,13 +153,9 @@ def test_metric_bounds_edge_cases(spark):
     )
     rows = dataset_findings(df, suite2).collect()
     assert len(rows) == 1 and "do not resolve" in rows[0].reason
-    # unknown metric is a config error
-    suite3 = ConstraintSet(
-        name="m",
-        constraints=[MetricBound(column="role", metric="mean", hi=1)],
-    )
+    # unknown metric is a config error, rejected at construction
     with pytest.raises(ValueError, match="unknown metric"):
-        dataset_findings(df, suite3).collect()
+        MetricBound(column="role", metric="mean", hi=1)
 
 
 def test_metric_bounds_share_one_job(spark):
@@ -278,7 +274,9 @@ def test_dataset_kind_config_guards():
     """Config errors are never silent keeps: empty by/determinants and
     `where` on dataset-level kinds raise at construction."""
     from ocsf_validator_spark.spec import (
+        AllowedColumns,
         DriftGate,
+        EnumCoverage,
         FunctionalDependency,
         GroupMetricBound,
         QuantileBound,
@@ -302,8 +300,10 @@ def test_dataset_kind_config_guards():
         (QuantileBound, dict(q=0.5, lo=0)),
         (VolumeGate, dict()),
         (DriftGate, dict()),
+        (EnumCoverage, dict(values=("a",))),
+        (AllowedColumns, dict(allowed=("x",))),
     ):
-        with pytest.raises(ValueError):
+        with pytest.raises(ValueError, match="dataset-level"):
             cls(column="x", where="role = 'tool'", **kw)
 
 
@@ -491,14 +491,9 @@ def test_drift_gate_psi_and_emd_semantics(spark):
     )
     fired = dataset_findings(df, suite2).collect()
     assert len(fired) == 1 and fired[0].reason.startswith("psi(v) = ")
-    # unknown metric raises; round trip keeps the baseline as data
-    import pytest as _pytest
-
-    bad = ConstraintSet("d3").add(
+    # unknown metric raises at construction
+    with pytest.raises(ValueError, match="unknown metric"):
         DriftGate(column="v", baseline={"0": 1}, metric="chi2")
-    )
-    with _pytest.raises(ValueError):
-        dataset_findings(df, bad).collect()
 
 
 def test_drift_gate_registry_round_trip(spark):

@@ -89,7 +89,8 @@ def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
     observation collect, never dropped for want of a role-only scan:
     covering one odd conversation id of ``conv_id`` at ERROR, the even
     half (which never sees it) rejects the column and the full run
-    observes it, so the diff reports that dataset-level finding gone."""
+    observes it, so the diff reports that dataset-level finding fixed:
+    a cleared bucket -1 finding has no row after."""
     from ocsf_validator_spark.spec import (
         ConstraintSet,
         EnumCoverage,
@@ -122,7 +123,7 @@ def test_verdict_diff_rejects_a_second_coverage_column(spark, monkeypatch):
         (r["bucket"], r["status"], r["pass_before"], r["count_before"],
          r["count_after"])
         for r in rows
-    ] == [(-1, "gone_fail", False, 1, None)]
+    ] == [(-1, "fixed", False, 1, None)]
 
 
 @pytest.mark.parametrize("name,jobs", [("suite_verdicts", 5),

@@ -755,9 +755,72 @@ def test_cli_incremental_mode(spark, tmp_path, capsys):
                  "--checkpoint", manifest]) == 2
 
 
+def _registry(**specs) -> dict:
+    return {"transcripts": {"constraints": specs}}
+
+
+_BAD_SUITES = {
+    "metric": _registry(m={"kind": "metric", "column": "role",
+                           "metric": "bogus"}),
+    "group_metric": _registry(g={"kind": "group_metric", "column": "role",
+                                 "by": ["conv_id"], "metric": "bogus"}),
+    "drift": _registry(d={"kind": "drift", "column": "turn_idx",
+                          "baseline": {"0": 1}, "metric": "bogus"}),
+    "where": _registry(m={"kind": "metric", "column": "role",
+                          "metric": "max", "where": "role = 'user'"}),
+    "empty_by": _registry(g={"kind": "group_metric", "column": "role",
+                             "by": [], "metric": "row_count"}),
+    "not_json": "{not json",
+}
+
+
+@pytest.mark.parametrize("flag, value", [
+    ("--check", "nopredicate"),
+    ("--metric-bound", "role:bogus,max=1"),
+    ("--drift-gate", "{baseline}:chi2"),
+    ("--fd", "=lang"),
+    ("--quantile-bound", "turn_idx:0.5,max=1,foo=1"),
+    ("--volume-gate", "ts:day,j=3"),
+    ("--group-metric", "lang:null_rate:,max=0.01"),
+    ("--precedence", "role:tool"),
+    ("--opening", "role="),
+    ("--alternation", "=user"),
+    ("--closing", "role"),
+    *[("--suite-json", name) for name in _BAD_SUITES],
+    ("--severity", "ref.role=LOUD"),
+])
+def test_malformed_suite_source_is_fatal_before_spark(
+    tmp_path, monkeypatch, capsys, flag, value
+):
+    """Every malformed suite source exits 2 with one [FATAL] line while
+    the suite is built, before a session starts: an unknown metric, a
+    `where` on a dataset-level kind or an empty `by` is rejected when
+    the constraint is built, from a flag or a --suite-json alike."""
+    from ocsf_validator_spark import session
+    from ocsf_validator_spark.runner import main
+
+    def no_session(*a, **kw):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    baseline = tmp_path / "baseline.json"
+    baseline.write_text(json.dumps({"bin_expr": "turn_idx", "hist": {"0": 1}}))
+    if flag == "--suite-json":
+        bad = _BAD_SUITES[value]
+        value = str(tmp_path / "suite.json")
+        with open(value, "w") as f:
+            f.write(bad if isinstance(bad, str) else json.dumps(bad))
+    value = value.format(baseline=baseline)
+    assert main(["--synth", "10", flag, value]) == 2
+    out = capsys.readouterr().out.splitlines()
+    assert [ln for ln in out if ln.startswith("[FATAL]")] == out
+    assert len(out) == 1 and flag in out[0]
+
+
 def test_cli_stream_mode(spark, tmp_path):
-    """--stream drains a landing dir through the streaming suite and
-    exits with the batch contract (1 = ERROR violations found)."""
+    """--stream drains a landing dir through the suite the flags build
+    and exits with the batch contract (1 = ERROR violations found): a
+    --check lands in the stream sink and --dump-suite is written."""
     from pyspark.sql import functions as F
 
     from ocsf_validator_spark.runner import main
@@ -765,14 +828,19 @@ def test_cli_stream_mode(spark, tmp_path):
     root = str(tmp_path / "landing")
     synth_transcripts(spark, n_turns=3000, seed=42).write.parquet(root)
     viol = str(tmp_path / "sviol")
+    dumped = str(tmp_path / "suite.json")
     code = main([
         "--input", root, "--stream",
         "--violations-out", viol,
         "--checkpoint", str(tmp_path / "sckpt"),
+        "--check", "never=1 = 0", "--dump-suite", dumped,
     ])
     assert code == 1  # synth injects ERROR-level defects
     written = spark.read.parquet(viol)
     assert written.filter(F.col("severity") == "ERROR").count() > 0
+    assert written.filter(F.col("constraint_id") == "check.never").count() == 3000
+    with open(dumped) as f:
+        assert "check.never" in json.load(f)["transcripts"]["constraints"]
     # drained checkpoint: a second drain with no new files exits 0
     code2 = main([
         "--input", root, "--stream",
@@ -782,32 +850,66 @@ def test_cli_stream_mode(spark, tmp_path):
     assert code2 == 0
 
 
-def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
-    """--stream --stateful-ordering carries conversation state across
-    drains: a duplicate of a turn an EARLIER drain delivered is an ERROR
-    in the partition of the batch that re-delivers it (exit 1), and a
-    later clean drain does not re-read that drain's ERROR rows into its
-    own exit verdict, which reads only its own batch partitions."""
+def _land(spark, tmp_path, root, rows, name):
+    """One single-file parquet landing of ``rows`` (transcript columns,
+    ts as text) under ``root``, older than the next landing."""
     import glob as g
     import shutil
     import time as t
 
     from pyspark.sql import functions as F
 
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    staging = str(tmp_path / f"stage_{name}")
+    df.coalesce(1).write.parquet(staging)
+    part = g.glob(os.path.join(staging, "part-*.parquet"))[0]
+    os.makedirs(root, exist_ok=True)
+    shutil.copy(part, os.path.join(root, f"{name}.parquet"))
+    t.sleep(1.1)
+
+
+def test_cli_stream_strict_fails_and_quarantines_at_warning(spark, tmp_path):
+    """--stream --strict fails the drain and quarantines rows at WARNING,
+    as the batch runner does: a drain whose only finding is a WARNING
+    (a deprecated role) exits 0 without --strict and 1 with it, and
+    only the strict drain quarantines that row."""
     from ocsf_validator_spark.runner import main
 
-    def _land(root, rows, name):
-        df = spark.createDataFrame(
-            rows,
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        staging = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.parquet(staging)
-        part = g.glob(os.path.join(staging, "part-*.parquet"))[0]
-        os.makedirs(root, exist_ok=True)
-        shutil.copy(part, os.path.join(root, f"{name}.parquet"))
-        t.sleep(1.1)
+    root = str(tmp_path / "landing")
+    _land(spark, tmp_path, root, [
+        ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
+        ("c1", 1, "function", "b", None, "2026-01-01 00:00:01"),
+    ], "warn")
+    quarantined = {}
+    for strict in (False, True):
+        out = tmp_path / f"strict={strict}"
+        argv = [
+            "--input", root, "--stream",
+            "--violations-out", str(out / "viol"),
+            "--checkpoint", str(out / "ckpt"),
+            "--quarantine-out", str(out / "quar"),
+        ]
+        assert main(argv + ["--strict"] * strict) == int(strict)
+        quarantined[strict] = [
+            (r.conv_id, r.turn_idx)
+            for r in spark.read.parquet(str(out / "quar")).collect()
+        ]
+    assert quarantined == {False: [], True: [("c1", 1)]}
+
+
+def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
+    """--stream --stateful-ordering carries conversation state across
+    drains: a duplicate of a turn an EARLIER drain delivered is an ERROR
+    in the partition of the batch that re-delivers it (exit 1), and a
+    later clean drain does not re-read that drain's ERROR rows into its
+    own exit verdict, which reads only its own batch partitions."""
+    from pyspark.sql import functions as F
+
+    from ocsf_validator_spark.runner import main
 
     root = str(tmp_path / "landing2")
     viol = str(tmp_path / "sviol2")
@@ -816,13 +918,13 @@ def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
         "--input", root, "--stream", "--stateful-ordering",
         "--violations-out", viol, "--checkpoint", ck,
     ]
-    _land(root, [
+    _land(spark, tmp_path, root, [
         ("c1", 0, "user", "a", None, "2026-01-01 00:00:00"),
         ("c1", 1, "user", "b", None, "2026-01-01 00:00:01"),
     ], "a_first")
     assert main(argv) == 0
     # drain 2: a cross-drain duplicate -> ERROR in its batch, exit 1
-    _land(root, [
+    _land(spark, tmp_path, root, [
         ("c1", 1, "user", "dup", None, "2026-01-01 00:00:02"),
     ], "b_second")
     assert main(argv) == 1
@@ -831,7 +933,7 @@ def test_cli_stream_stateful_redrain_scoped(spark, tmp_path):
     )
     assert dup.filter(F.col("severity") == "ERROR").count() >= 1
     # drain 3: a CLEAN fresh conversation (complete within its batch)
-    _land(root, [
+    _land(spark, tmp_path, root, [
         ("c2", 0, "user", "c", None, "2026-01-01 00:00:03"),
         ("c2", 1, "user", "d", None, "2026-01-01 00:00:04"),
     ], "c_third")
