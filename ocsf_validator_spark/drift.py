@@ -396,7 +396,7 @@ def volume_anomaly(
     Shape at scale: ONE partial-agg exchange over the table (groupBy
     date_trunc bucket — map-side combine collapses to |buckets| per
     partition), then the count SERIES is eagerly checkpointed so the
-    fence passes (quantiles.exact_quantiles twice: median of counts,
+    fence passes (quantiles._med_mad, the kernel's median of counts and
     median of |cnt - median|) run over |buckets| rows, never re-scanning
     the source. Fences are exact order statistics of integer counts —
     engine-replayable to the bit (no mean/stddev, no float sums whose
@@ -435,7 +435,7 @@ def volume_anomaly(
     )
     # one shared-projection median/MAD composition: the tiny bucket
     # series takes the small-n collect path (two jobs, no window/join)
-    mm = _med_mad(counts, "cnt", 4096)
+    mm = _med_mad(counts, "cnt", 4096).get("")
     if mm is None:
         return local_df(spark, [], schema)
     med, mad = mm

@@ -2,57 +2,68 @@
 
 ``percentile_approx`` is merge-order-dependent and approximate; a naive
 exact quantile is ``orderBy(value)`` — a full shuffle + global sort of
-the column at 100 TB. This operator computes EXACT order statistics
-with histogram narrowing:
+the column at 100 TB. This module computes EXACT order statistics with
+ONE kernel over a narrow ``(_g, v)`` projection: the grouped functions
+group by their column, and a scalar call is the same kernel over one
+constant group (``_g = ''``). Histogram narrowing:
 
-1. one partial-agg scan for (count, min, max) of the non-null values —
-   this scan also MATERIALIZES the narrow ``(value)`` projection into
-   the block-manager cache, so every later pass reads the cached
-   8-byte column instead of re-evaluating the upstream plan (a windowed
-   latency frame or a broadcast-join deviation frame would otherwise
-   recompute per pass — the round-5 4–7-scan composition finding);
-2. one partial-agg histogram scan over ``n_bins`` equi-width bins —
-   the exchange carries at most ``n_partitions x n_bins`` fixed-width
-   rows; the driver walks the (<= n_bins)-row cumulative histogram to
-   locate, for each requested quantile, its bin and rank WITHIN that
-   bin;
+1. one partial-agg scan for each group's (count, min, max) of the
+   non-null values — when the caller persists the projection, this
+   scan also MATERIALIZES it in the block-manager cache, so every later
+   pass reads the cached narrow column instead of re-evaluating the
+   upstream plan (a windowed latency frame would otherwise recompute
+   per pass — the round-5 4–7-scan composition finding);
+2. one partial-agg histogram scan over ``n_bins`` equi-width bins per
+   group — the exchange carries at most ``n_partitions x groups x
+   n_bins`` fixed-width rows; the driver walks each group's cumulative
+   histogram to locate, for each requested quantile, its bin and rank
+   WITHIN that bin;
 3. one filtered pass over ONLY the boundary bins (~count/n_bins rows
-   each, a handful of bins total): a per-bin ``row_number`` window
+   each, a handful of bins per group): a per-bin ``row_number`` window
    picks the within-bin order statistic.
 
-Small inputs short-circuit: a ``limit(_SMALL_N + 1)`` Arrow probe
-collects the values ONCE when they fit, and the order statistics are
-picked driver-side — the identical rank over the identical sorted
-values (Python's float sort and SQL ``ASC`` agree on every finite
-double and ±inf; NaN is excluded before either sees it), with ONE job
-instead of three and no window/join. This is the path the ~30-row
-volume-anomaly bucket series and the small-SF correctness runs take;
-when the probe overflows, the big path pays one early-terminated
-partial scan and proceeds unchanged.
+The bin routing and the boundary rows are literal expressions built
+from the bounded group table (a CASE over ``_g``, IN lists), never a
+broadcast local frame: each broadcast of a literal frame is a job.
 
-The result is the exact global order statistic — the float fuzz of the
-bin boundaries cannot perturb it, because bins only ROUTE ranks; the
+Small inputs short-circuit: a ``limit(_SMALL_N + 1)`` Arrow probe
+collects the projection ONCE when it fits, and the order statistics are
+picked driver-side per group — the identical rank over the identical
+sorted values, with ONE job instead of the passes above. This is the
+path the ~30-row volume-anomaly bucket series and the small-SF
+correctness runs take; when the probe overflows, the big path pays one
+early-terminated partial scan and proceeds unchanged.
+
+The result is the exact order statistic — the float fuzz of the bin
+boundaries cannot perturb it, because bins only ROUTE ranks; the
 returned value is picked by ordering the VALUES themselves. Rank
 convention: ``rank(q) = floor((n - 1) * q) + 1`` (1-based, lower
 interpolation — the value at that position of the sorted column),
 which the DuckDB oracle replays with an explicit ``row_number``.
 
-Driver-side state is the histogram (<= n_bins rows, or <= _SMALL_N
-collected doubles on the small path) and the scalar (count, min, max)
-— bounded collects, same budget class as the token_budget_select
-cutoff grid. The public functions return LITERAL frames (<= |qs| or
-|groups| x |qs| rows — bounded by contract), so a composition that
-collects the result pays no extra pass.
+NaN rule: the projection drops NULL and NaN values; ±infinity take
+part. A median-absolute-deviation ``|v - med|`` is NaN where ``v`` and
+``med`` are the same infinity: such deviations take part in the rank
+and sort LAST, as SQL orders NaN. The driver sort uses the key
+``(isnan(d), d)``; the distributed routing sends NaN to a sentinel bin
+above the +inf bin.
 
-MAD compositions (:func:`mad_outliers`, :func:`group_mad_outliers`,
-:func:`robust_scale`) share one persisted projection across both
-phases and DERIVE the deviation phase's (count, range) from the value
-phase's stats — ``|v - med|`` has exactly ``n`` rows in
-``[0, max(hi - med, med - lo)]`` whenever the values are inf-free —
-because equi-width bins only need to CONTAIN the data, not fit it
-snugly (the clamp routes edge values), deriving the range cannot
-change which value a rank picks. That removes one full aggregation
-pass per composition on top of the shared-projection savings.
+Driver-side state is the histogram (<= groups x n_bins rows, or <=
+_SMALL_N collected values on the small path) and the per-group (count,
+min, max) — bounded collects, same budget class as the
+token_budget_select cutoff grid. The public functions return LITERAL
+frames (<= |groups| x |qs| rows — bounded by contract), so a
+composition that collects the result pays no extra pass.
+
+The median/MAD composition (:func:`mad_outliers`,
+:func:`group_mad_outliers`, :func:`robust_scale`) shares one persisted
+projection across both phases and DERIVES the deviation phase's
+(count, range) from the value phase's stats — ``|v - med|`` has exactly
+``n`` rows in ``[0, max(hi - med, med - lo)]`` whenever a group is
+inf-free — because equi-width bins only need to CONTAIN the data, not
+fit it snugly (the clamp routes edge values), deriving the range cannot
+change which value a rank picks. Only groups that hold an infinity
+recount their deviations.
 """
 
 from __future__ import annotations
@@ -71,68 +82,108 @@ from ocsf_validator_spark.localframe import local_df
 # (groups x n_bins) histogram collect — and it replaces two to three
 # scheduled jobs (each ~0.5 s of fixed AQE/broadcast/window latency at
 # any scale) with one columnar transfer. Above it, the histogram-
-# narrowing path keeps driver state at O(n_bins) regardless of n.
+# narrowing path keeps driver state at O(groups x n_bins) regardless of n.
 _SMALL_N = 1_000_000
 
 _INF = float("inf")
+
+Stats = dict[str, tuple[int, float | None, float | None, int]]
 
 
 def _rank(n: int, q: float) -> int:
     return int(math.floor((n - 1) * q)) + 1
 
 
-def _probe_small(vals: DataFrame):
-    """One-job small-input probe: collect up to _SMALL_N + 1 values via
-    Arrow. Returns the full value list when the input fits (the limit
-    returned everything there is), else None — the big path then pays
-    its stats job knowing the probe read at most one early-terminated
-    partial scan."""
-    t = vals.limit(_SMALL_N + 1).toArrow()
+def _group_key(group_col: str | None):
+    """The string-normalized group, or the constant '' for a scalar call."""
+    return F.lit("") if group_col is None else F.col(group_col).cast("string")
+
+
+def _values(
+    df: DataFrame, value_col: str, group_col: str | None = None
+) -> DataFrame:
+    """The narrow (_g string, v double) projection: NULL groups and
+    NULL/NaN values excluded (NaN has no place in a total order);
+    ±infinity participate."""
+    return df.select(
+        _group_key(group_col).alias("_g"),
+        F.col(value_col).cast("double").alias("v"),
+    ).filter(F.col("v").isNotNull() & ~F.isnan("v") & F.col("_g").isNotNull())
+
+
+def _probe_small(gvals: DataFrame) -> tuple[list, list] | None:
+    """One-job small-input probe: collect up to _SMALL_N + 1 rows via
+    Arrow. Returns the (groups, values) lists when the input fits (the
+    limit returned everything there is), else None — the big path then
+    pays its stats job knowing the probe read at most one
+    early-terminated partial scan."""
+    t = gvals.limit(_SMALL_N + 1).toArrow()
     if t.num_rows > _SMALL_N:
         return None
-    return t
+    return t.column("_g").to_pylist(), t.column("v").to_pylist()
 
 
-def _values_frame(df: DataFrame, value_col: str) -> DataFrame:
-    """The narrow (v double) projection: NULL and NaN excluded (NaN has
-    no place in a total order); ±infinity participate."""
-    return df.select(F.col(value_col).cast("double").alias("v")).filter(
-        F.col("v").isNotNull() & ~F.isnan("v")
-    )
+def _rank_groups(
+    gs: list, vs: list, qs: tuple[float, ...]
+) -> dict[tuple[str, float], float]:
+    """The driver-side small path: (group, q) -> order statistic of each
+    group's values, sorted NaN last (the NaN rule)."""
+    per_group: dict[str, list[float]] = {}
+    for g, v in zip(gs, vs):
+        per_group.setdefault(g, []).append(v)
+    out = {}
+    for g, xs in per_group.items():
+        xs.sort(key=lambda x: (math.isnan(x), x))
+        for q in qs:
+            out[(g, q)] = xs[_rank(len(xs), q) - 1]
+    return out
 
 
-def _stats_of(vals: DataFrame) -> tuple[int, float | None, float | None, int]:
-    """(n, finite lo, finite hi, n_inf) of the ``v`` column — one
-    partial-agg job (and the job that materializes a persisted vals)."""
+def _stats(gvals: DataFrame) -> Stats:
+    """group -> (n, finite lo, finite hi, n non-finite) — one partial-agg
+    job (and the job that materializes a persisted projection)."""
     finite = (F.col("v") > -_INF) & (F.col("v") < _INF)
-    r = vals.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.when(finite, F.col("v"))).alias("lo"),
-        F.max(F.when(finite, F.col("v"))).alias("hi"),
-        F.count(F.when(~finite, F.lit(1))).alias("n_inf"),
-    ).collect()[0]
-    return r["n"], r["lo"], r["hi"], r["n_inf"]
-
-
-def _bin_expr(lo: float | None, hi: float | None, n_bins: int):
-    """Equi-width routing bin of ``v``: sentinel bins -1 / n_bins for
-    ±inf; a degenerate finite range (all-inf, or one distinct finite
-    value alongside infs) parks every finite row in bin 0 so a zero
-    width never reaches the arithmetic. The greatest/least clamp makes
-    any CONTAINING range valid — bins only route ranks."""
-    if lo is None or lo == hi:
-        finite_bin = F.lit(0)
-    else:
-        width = (hi - lo) / n_bins
-        finite_bin = F.greatest(
-            F.lit(0),
-            F.least(
-                F.floor((F.col("v") - F.lit(lo)) / F.lit(width)).cast("int"),
-                F.lit(n_bins - 1),
-            ),
+    return {
+        r["_g"]: (r["n"], r["lo"], r["hi"], r["n_inf"])
+        for r in gvals.groupBy("_g")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.when(finite, F.col("v"))).alias("lo"),
+            F.max(F.when(finite, F.col("v"))).alias("hi"),
+            F.count(F.when(~finite, F.lit(1))).alias("n_inf"),
         )
+        .collect()
+    }
+
+
+def _lookup(key, table: dict[str, float]):
+    """The (group -> value) table as one literal CASE over ``key``: the
+    per-group state reaches the executors inside the plan (for the one
+    constant group it folds to the bare literal)."""
+    (g0, x0), *rest = table.items()
+    expr = F.when(key == g0, F.lit(x0))
+    for g, x in rest:
+        expr = expr.when(key == g, F.lit(x))
+    return expr
+
+
+def _bin_expr(grid: dict[str, tuple[float, float]], n_bins: int):
+    """Equi-width routing bin of ``v`` by its group's (lo, width):
+    sentinel bins -1 / n_bins / n_bins + 1 for -inf / +inf / NaN (the
+    NaN rule). The greatest/least clamp makes any CONTAINING range valid
+    — bins only route ranks."""
+    lo = _lookup(F.col("_g"), {g: lo for g, (lo, _w) in grid.items()})
+    width = _lookup(F.col("_g"), {g: w for g, (_lo, w) in grid.items()})
+    finite_bin = F.greatest(
+        F.lit(0),
+        F.least(
+            F.floor((F.col("v") - lo) / width).cast("int"),
+            F.lit(n_bins - 1),
+        ),
+    )
     return (
-        F.when(F.col("v") == -_INF, F.lit(-1))
+        F.when(F.isnan("v"), F.lit(n_bins + 1))
+        .when(F.col("v") == -_INF, F.lit(-1))
         .when(F.col("v") == _INF, F.lit(n_bins))
         .otherwise(finite_bin)
     )
@@ -155,66 +206,103 @@ def _walk_hist(
 
 
 def _boundary_frame(
-    vals: DataFrame, bin_expr, targets: dict[float, tuple[int, int]]
+    binned: DataFrame, targets: set[tuple[str, int, int]]
 ) -> DataFrame:
-    """The boundary-bin pass as a LAZY frame (q, value): filter to the
-    target bins, per-bin row_number over the VALUES, broadcast-join the
-    (q -> bin, within-bin rank) routing table — one pass no matter how
-    many quantiles, several quantiles sharing one (bin, rank) each get
-    their own row. Kept as a separate builder so the no-global-sort
-    plan contract stays pytest-pinnable."""
-    spark = vals.sparkSession
-    need_bins = sorted({b for b, _ in targets.values()})
-    w = Window.partitionBy("b").orderBy(F.col("v").asc())
-    boundary = (
-        vals.select("v", bin_expr.alias("b"))
-        .filter(F.col("b").isin(need_bins))
-        .select("v", "b", F.row_number().over(w).alias("rn"))
-    )
-    targets_df = local_df(
-        spark,
-        [(float(q), b, local) for q, (b, local) in targets.items()],
-        "q double, b int, rn int",
-    )
-    return boundary.join(F.broadcast(targets_df), ["b", "rn"]).select(
-        "q", F.col("v").alias("value")
+    """The boundary-bin pass as a LAZY frame (_g, b, rn, v): filter to
+    the target (group, bin)s, per-bin row_number over the VALUES, keep
+    the target (group, bin, within-bin rank) rows — one pass no matter
+    how many groups and quantiles, routed by literal IN lists. Kept as a
+    separate builder so the no-global-sort plan contract stays
+    pytest-pinnable."""
+
+    def keys(rows):
+        return [
+            F.struct(*[F.lit(x).alias(c) for x, c in zip(r, ("_g", "b", "rn"))])
+            for r in rows
+        ]
+
+    w = Window.partitionBy("_g", "b").orderBy(F.col("v").asc())
+    return (
+        binned.filter(
+            F.struct("_g", "b").isin(keys({t[:2] for t in targets}))
+        )
+        .select("_g", "b", "v", F.row_number().over(w).alias("rn"))
+        .filter(F.struct("_g", "b", "rn").isin(keys(targets)))
     )
 
 
 def _quantile_map(
-    vals: DataFrame,
+    gvals: DataFrame, stats: Stats, qs: tuple[float, ...], n_bins: int
+) -> dict[tuple[str, float], float]:
+    """(group, q) -> exact order statistic over ``gvals`` (persisted by
+    the caller when its upstream is worth caching), given each group's
+    ``stats`` — a DERIVED containing range is fine (the clamp routes edge
+    values). Degenerate groups (all values equal, incl. single-row
+    groups) resolve to driver literals; when the other groups' rows fit
+    ``_SMALL_N`` they are collected once and ranked driver-side;
+    otherwise the histogram and boundary passes run."""
+    out: dict[tuple[str, float], float] = {}
+    grid: dict[str, tuple[float, float]] = {}  # live group -> (lo, width)
+    for g, (n, lo, hi, n_inf) in stats.items():
+        if n_inf == 0 and lo == hi:
+            out.update({(g, q): lo for q in qs})
+            continue
+        if lo is None:  # no finite value: the sentinels do all the routing
+            lo = hi = 0.0
+        grid[g] = (lo, (hi - lo) / n_bins or 1.0)
+    if not grid:
+        return out
+    live = gvals.filter(F.col("_g").isin(list(grid)))
+    if sum(stats[g][0] for g in grid) <= _SMALL_N:
+        t = live.toArrow()
+        out.update(
+            _rank_groups(t.column("_g").to_pylist(), t.column("v").to_pylist(), qs)
+        )
+        return out
+    binned = live.select("_g", "v", _bin_expr(grid, n_bins).alias("b"))
+    hist: dict[str, dict[int, int]] = {}
+    ht = binned.groupBy("_g", "b").agg(F.count(F.lit(1)).alias("c")).toArrow()
+    for g, b, c in zip(
+        ht.column("_g").to_pylist(),
+        ht.column("b").to_pylist(),
+        ht.column("c").to_pylist(),
+    ):
+        hist.setdefault(g, {})[b] = c
+    routes = {}  # (group, q) -> (group, bin, within-bin rank)
+    for g in grid:
+        ranks = {q: _rank(stats[g][0], q) for q in qs}
+        for q, (b, local) in _walk_hist(hist[g], ranks).items():
+            routes[(g, q)] = (g, b, local)
+    picked = {
+        (r["_g"], r["b"], r["rn"]): r["v"]
+        for r in _boundary_frame(binned, set(routes.values())).collect()
+    }
+    out.update({gq: picked[t] for gq, t in routes.items()})
+    return out
+
+
+def _quantiles(
+    df: DataFrame,
+    value_col: str,
     qs: tuple[float, ...],
     n_bins: int,
-    stats: tuple[int, float | None, float | None, int] | None = None,
-) -> tuple[dict[float, float], tuple[int, float | None, float | None, int]]:
-    """q -> exact order-statistic value over ``vals`` (a ``v`` column,
-    ideally persisted by the caller) by histogram narrowing; callers
-    reach it only once ``_probe_small`` found more than ``_SMALL_N``
-    rows. ``stats`` skips the stats job when the caller already knows
-    (n, lo, hi, n_inf) — a DERIVED containing range is fine (the clamp
-    routes edge values)."""
-    if stats is None:
-        stats = _stats_of(vals)
-    n, lo, hi, n_inf = stats
-    if n == 0:
-        return {}, stats
-    ranks = {q: _rank(n, q) for q in qs}
-    if n_inf == 0 and lo == hi:
-        return {q: lo for q in qs}, stats
-    be = _bin_expr(lo, hi, n_bins)
-    ht = (
-        vals.select(be.alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .toArrow()
-    )
-    hist = dict(zip(ht.column("b").to_pylist(), ht.column("c").to_pylist()))
-    targets = _walk_hist(hist, ranks)
-    out = {
-        r["q"]: r["value"]
-        for r in _boundary_frame(vals, be, targets).collect()
-    }
-    return out, stats
+    persist: bool,
+    group_col: str | None = None,
+) -> dict[tuple[str, float], float]:
+    """(group, q) -> exact order statistic: the probe's driver-side rank,
+    else the distributed passes (over a persisted projection when
+    ``persist``)."""
+    gvals = _values(df, value_col, group_col)
+    probe = _probe_small(gvals)
+    if probe is not None:
+        return _rank_groups(*probe, qs)
+    if persist:
+        gvals.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _quantile_map(gvals, _stats(gvals), qs, n_bins)
+    finally:
+        if persist:
+            gvals.unpersist()
 
 
 def exact_quantiles(
@@ -234,158 +322,12 @@ def exact_quantiles(
     join); for a plain column-pruned scan the re-scan is cheaper than
     the cache build (measured), hence the default.
     """
-    spark = df.sparkSession
-    vals = _values_frame(df, value_col)
-    probe = _probe_small(vals)
-    if probe is not None:
-        vs = sorted(probe.column("v").to_pylist())
-        if not vs:
-            return local_df(spark, [], "q double, value double")
-        qmap = {q: vs[_rank(len(vs), q) - 1] for q in qs}
-    else:
-        if persist:
-            vals.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            qmap, _ = _quantile_map(vals, qs, n_bins)
-        finally:
-            if persist:
-                vals.unpersist()
-        if not qmap:
-            return local_df(spark, [], "q double, value double")
+    qmap = _quantiles(df, value_col, qs, n_bins, persist)
     return local_df(
-        spark,
-        [(float(q), float(qmap[q])) for q in sorted(qs)],
+        df.sparkSession,
+        [(float(q), float(qmap[("", q)])) for q in sorted(qs)] if qmap else [],
         "q double, value double",
     )
-
-
-# ---------------------------------------------------------------------------
-# grouped variant
-# ---------------------------------------------------------------------------
-
-
-def _group_values(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """(_g string, v double): string-normalized group (so broadcast
-    grid/routing frames join without an implicit cast on the big side),
-    NULL groups and NULL/NaN values excluded."""
-    return df.select(
-        F.col(group_col).cast("string").alias("_g"),
-        F.col(value_col).cast("double").alias("v"),
-    ).filter(F.col("v").isNotNull() & ~F.isnan("v") & F.col("_g").isNotNull())
-
-
-def _group_stats(
-    gvals: DataFrame,
-) -> dict[str, tuple[int, float | None, float | None, int]]:
-    finite = (F.col("v") > -_INF) & (F.col("v") < _INF)
-    return {
-        r["_g"]: (r["n"], r["lo"], r["hi"], r["n_inf"])
-        for r in gvals.groupBy("_g")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.when(finite, F.col("v"))).alias("lo"),
-            F.max(F.when(finite, F.col("v"))).alias("hi"),
-            F.count(F.when(~finite, F.lit(1))).alias("n_inf"),
-        )
-        .collect()
-    }
-
-
-def _group_quantile_map(
-    gvals: DataFrame,
-    stats: dict[str, tuple[int, float | None, float | None, int]],
-    qs: tuple[float, ...],
-    n_bins: int,
-) -> dict[tuple[str, float], float]:
-    """(group, q) -> exact order-statistic value. Degenerate groups
-    (all values equal, incl. single-row groups) resolve to driver
-    literals; a small TOTAL row count collects the projection once and
-    ranks driver-side; otherwise the grid-join histogram + boundary
-    passes run over ``gvals`` (persisted by the caller)."""
-    spark = gvals.sparkSession
-    out: dict[tuple[str, float], float] = {}
-    live = {}  # group -> (lo, width, {q: global rank})
-    for g, (n, lo, hi, n_inf) in stats.items():
-        ranks = {q: _rank(n, q) for q in qs}
-        if n_inf == 0 and lo == hi:
-            for q in qs:
-                out[(g, q)] = lo
-        elif lo is None or lo == hi:
-            # all-inf group, or one distinct finite value among infs:
-            # finite rows park in bin 0, the inf sentinels do the rest
-            live[g] = (0.0, 1.0, ranks)
-        else:
-            live[g] = (lo, (hi - lo) / n_bins, ranks)
-    if not live:
-        return out
-    total_live = sum(stats[g][0] for g in live)
-    if total_live <= _SMALL_N:
-        per_group: dict[str, list[float]] = {g: [] for g in live}
-        live_set = set(live)
-        gt = gvals.toArrow()
-        for g, v in zip(
-            gt.column("_g").to_pylist(), gt.column("v").to_pylist()
-        ):
-            if g in live_set:
-                per_group[g].append(v)
-        for g, vs in per_group.items():
-            vs.sort()
-            for q, rk in live[g][2].items():
-                out[(g, q)] = vs[rk - 1]
-        return out
-
-    grid = local_df(
-        spark,
-        [(g, lo, w) for g, (lo, w, _) in live.items()],
-        "_g string, _lo double, _w double",
-    )
-    binned = gvals.join(F.broadcast(grid), "_g").select(
-        "_g",
-        "v",
-        F.when(F.col("v") == -_INF, F.lit(-1))
-        .when(F.col("v") == _INF, F.lit(n_bins))
-        .otherwise(
-            F.greatest(
-                F.lit(0),
-                F.least(
-                    F.floor(
-                        (F.col("v") - F.col("_lo")) / F.col("_w")
-                    ).cast("int"),
-                    F.lit(n_bins - 1),
-                ),
-            )
-        )
-        .alias("b"),
-    )
-    hist: dict[str, dict[int, int]] = {}
-    ht = binned.groupBy("_g", "b").agg(F.count(F.lit(1)).alias("c")).toArrow()
-    for g, b, c in zip(
-        ht.column("_g").to_pylist(),
-        ht.column("b").to_pylist(),
-        ht.column("c").to_pylist(),
-    ):
-        hist.setdefault(g, {})[b] = c
-
-    routing = []  # (group, bin, within-bin rank, q)
-    for g, (_lo, _w, ranks) in live.items():
-        for q, (b, local) in _walk_hist(hist[g], ranks).items():
-            routing.append((g, b, local, float(q)))
-    routes = local_df(
-        spark,
-        routing, "_g string, b int, rn int, q double"
-    )
-    w = Window.partitionBy("_g", "b").orderBy(F.col("v").asc())
-    picked = (
-        binned.join(
-            F.broadcast(routes.select("_g", "b").distinct()), ["_g", "b"]
-        )
-        .select("_g", "b", "v", F.row_number().over(w).alias("rn"))
-        .join(F.broadcast(routes), ["_g", "b", "rn"])
-        .select("_g", "q", "v")
-    )
-    for r in picked.collect():
-        out[(r["_g"], r["q"])] = r["v"]
-    return out
 
 
 def exact_group_quantiles(
@@ -411,35 +353,12 @@ def exact_group_quantiles(
 
     Returns (group_col, q, value) ordered by (group_col, q).
     """
-    spark = df.sparkSession
-    schema = f"{group_col} string, q double, value double"
-    gvals = _group_values(df, group_col, value_col)
-    probe = _probe_small(gvals)
-    if probe is not None:
-        per_group: dict[str, list[float]] = {}
-        for g, v in zip(
-            probe.column("_g").to_pylist(), probe.column("v").to_pylist()
-        ):
-            per_group.setdefault(g, []).append(v)
-        qmap = {}
-        for g, vs in per_group.items():
-            vs.sort()
-            for q in qs:
-                qmap[(g, q)] = vs[_rank(len(vs), q) - 1]
-    else:
-        gvals.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            stats = _group_stats(gvals)
-            if not stats:
-                return local_df(spark, [], schema)
-            qmap = _group_quantile_map(gvals, stats, qs, n_bins)
-        finally:
-            gvals.unpersist()
-    rows = sorted(
-        ((g, float(q), float(v)) for (g, q), v in qmap.items()),
-        key=lambda t: (t[0], t[1]),
+    qmap = _quantiles(df, value_col, qs, n_bins, True, group_col)
+    return local_df(
+        df.sparkSession,
+        sorted((g, float(q), float(v)) for (g, q), v in qmap.items()),
+        f"{group_col} string, q double, value double",
     )
-    return local_df(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -448,51 +367,82 @@ def exact_group_quantiles(
 
 
 def _med_mad(
-    df: DataFrame, value_col: str, n_bins: int
-) -> tuple[float, float] | None:
-    """(median, MAD) of ``value_col`` — exact order statistics over ONE
-    persisted narrow projection; the deviation phase derives its stats
-    from the value phase's whenever the column is inf-free (see module
-    head), so the big-n path is stats + 2x(histogram + boundary) = five
-    jobs over one cached column, and the small-n path is two jobs.
-    None when the column has no non-null non-NaN values."""
-    vals = _values_frame(df, value_col)
-    probe = _probe_small(vals)
+    df: DataFrame, value_col: str, n_bins: int, group_col: str | None = None
+) -> dict[str, tuple[float, float]]:
+    """group -> (median, MAD) of ``value_col`` — exact order statistics
+    (module-head NaN rule: a NaN deviation ranks last) over ONE narrow
+    projection. The small path ranks both phases driver-side over one
+    probe; the big path persists the projection, and the deviation
+    phase derives its stats from the value phase's for every inf-free
+    group (see module head), so only groups that hold an infinity pay a
+    recount. Empty when the column has no non-null non-NaN values."""
+    gvals = _values(df, value_col, group_col)
+    probe = _probe_small(gvals)
     if probe is not None:
-        vs = sorted(probe.column("v").to_pylist())
-        if not vs:
-            return None
-        med = vs[_rank(len(vs), 0.5) - 1]
-        devs = sorted(
-            d for d in (abs(v - med) for v in vs) if not math.isnan(d)
-        )
-        if not devs:
-            raise ValueError(
-                "MAD undefined: every |v - median| is NaN "
-                "(inf-dominated column)"
+        gs, vs = probe
+        meds = _rank_groups(gs, vs, (0.5,))
+        devs = [abs(v - meds[(g, 0.5)]) for g, v in zip(gs, vs)]
+        mads = _rank_groups(gs, devs, (0.5,))
+    else:
+        gvals.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            stats = _stats(gvals)
+            meds = _quantile_map(gvals, stats, (0.5,), n_bins)
+            if not meds:
+                return {}
+            med_of = {g: m for (g, _q), m in meds.items()}
+            dev = gvals.select(
+                "_g", F.abs(F.col("v") - _lookup(F.col("_g"), med_of)).alias("v")
             )
-        return med, devs[_rank(len(devs), 0.5) - 1]
-    vals.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        stats = _stats_of(vals)
-        n, lo, hi, n_inf = stats
-        if n == 0:
-            return None
-        if n_inf == 0 and lo == hi:
-            return lo, 0.0
-        med_map, _ = _quantile_map(vals, (0.5,), n_bins, stats=stats)
-        med = med_map[0.5]
-        dev = vals.select(F.abs(F.col("v") - F.lit(med)).alias("v"))
-        if n_inf == 0 and math.isfinite(med):
-            # derived: |v - med| has exactly n rows in [0, hi_dev]
-            hi_dev = max(hi - med, med - lo)
-            dev_stats = (n, 0.0, hi_dev, 0)
-        else:
-            dev_stats = None  # infs make |v - med| lossy: recount
-        mad_map, _ = _quantile_map(dev, (0.5,), n_bins, stats=dev_stats)
-        return med, mad_map[0.5]
-    finally:
-        vals.unpersist()
+            dev_stats: Stats = {
+                g: (n, 0.0, max(hi - med_of[g], med_of[g] - lo), 0)
+                for g, (n, lo, hi, n_inf) in stats.items()
+                if n_inf == 0
+            }
+            lossy = [g for g in stats if g not in dev_stats]
+            if lossy:
+                dev_stats.update(_stats(dev.filter(F.col("_g").isin(lossy))))
+            mads = _quantile_map(dev, dev_stats, (0.5,), n_bins)
+        finally:
+            gvals.unpersist()
+    return {g: (m, mads[(g, q)]) for (g, q), m in meds.items()}
+
+
+def _mad_screen(
+    df: DataFrame,
+    group_col: str | None,
+    value_col: str,
+    id_cols: tuple[str, ...],
+    k: int,
+    n_bins: int,
+) -> DataFrame:
+    """The median/MAD outlier screen behind :func:`mad_outliers` and
+    :func:`group_mad_outliers`: the fences land as literal CASEs over
+    the group, so the flag pass is one filter over the base scan — no
+    join, the big side never shuffles."""
+    schema = ", ".join(
+        ([f"`{group_col}` string"] if group_col else [])
+        + [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
+        + ["value double, median double, mad double, lo double, hi double"]
+    )
+    mm = _med_mad(df, value_col, n_bins, group_col)
+    if not mm:
+        return local_df(df.sparkSession, [], schema)
+    g = _group_key(group_col)
+    fences = {grp: (m, d, m - k * d, m + k * d) for grp, (m, d) in mm.items()}
+    med, mad, lo, hi = (
+        _lookup(g, {grp: f[i] for grp, f in fences.items()}) for i in range(4)
+    )
+    v = F.col(value_col).cast("double")
+    return df.filter(v.isNotNull() & ~F.isnan(v) & ((v < lo) | (v > hi))).select(
+        *([g.alias(group_col)] if group_col else []),
+        *[F.col(c) for c in id_cols],
+        v.alias("value"),
+        med.alias("median"),
+        mad.alias("mad"),
+        lo.alias("lo"),
+        hi.alias("hi"),
+    )
 
 
 def mad_outliers(
@@ -521,67 +471,7 @@ def mad_outliers(
     is empty or the spread degenerates to mad == 0 with nothing outside
     the point fence.
     """
-    spark = df.sparkSession
-    schema = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
-        + ["value double, median double, mad double, lo double, hi double"]
-    )
-    mm = _med_mad(df, value_col, n_bins)
-    if mm is None:
-        return local_df(spark, [], schema)
-    med, mad = mm
-    lo, hi = med - k * mad, med + k * mad
-    v = F.col(value_col).cast("double")
-    return (
-        df.filter(v.isNotNull() & ~F.isnan(v) & ((v < F.lit(lo)) | (v > F.lit(hi))))
-        .select(
-            *[F.col(c) for c in id_cols],
-            v.alias("value"),
-            F.lit(med).alias("median"),
-            F.lit(mad).alias("mad"),
-            F.lit(lo).alias("lo"),
-            F.lit(hi).alias("hi"),
-        )
-    )
-
-
-def _group_mad_flag_pass(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_cols: tuple[str, ...],
-    k: int,
-    meds: dict[str, float],
-    mads: dict[str, float],
-) -> DataFrame:
-    """The shared flag pass: fences land as a BROADCAST (group, lo, hi)
-    frame, so this is one broadcast-join + filter over the base scan —
-    the big side never shuffles."""
-    spark = df.sparkSession
-    fences = local_df(
-        spark,
-        [
-            (grp, med, mads[grp], med - k * mads[grp], med + k * mads[grp])
-            for grp, med in meds.items()
-        ],
-        "_g string, _med double, _mad double, _lo double, _hi double",
-    )
-    g = F.col(group_col).cast("string")
-    v = F.col(value_col).cast("double")
-    return (
-        df.filter(v.isNotNull() & ~F.isnan(v) & g.isNotNull())
-        .join(F.broadcast(fences), g == F.col("_g"))
-        .filter((v < F.col("_lo")) | (v > F.col("_hi")))
-        .select(
-            F.col("_g").alias(group_col),
-            *[F.col(c) for c in id_cols],
-            v.alias("value"),
-            F.col("_med").alias("median"),
-            F.col("_mad").alias("mad"),
-            F.col("_lo").alias("lo"),
-            F.col("_hi").alias("hi"),
-        )
-    )
+    return _mad_screen(df, None, value_col, id_cols, k, n_bins)
 
 
 def group_mad_outliers(
@@ -598,17 +488,13 @@ def group_mad_outliers(
     scale (a value ordinary for one type is a gross outlier for
     another; one global fence sees neither).
 
-    Both phases (per-group median of the values, then per-group median
-    of ``|v - median_g|``) run over ONE persisted (_g, v) projection —
-    two source scans total (projection build + flag pass) instead of
-    the former 4–7. The deviation phase derives each inf-free group's
-    (count, range) from the value phase's stats (module-head
-    derivation), so its stats job only ever runs for inf-bearing
-    groups. Driver state is two group-cardinality-sized median tables;
-    the fences land as a BROADCAST (group, lo, hi) frame, so the flag
-    pass is one broadcast-join + filter over the base scan — the big
-    side never shuffles. Same bounded-group-cardinality contract as
-    exact_group_quantiles (types/languages, not per-user). Fences are
+    The same median/MAD composition as :func:`mad_outliers`, per group:
+    both phases run over ONE (_g, v) projection — two source scans
+    total (projection build + flag pass). Driver state is two
+    group-cardinality-sized median tables; the fences land as literal
+    per-group CASEs, so the flag pass is one filter over the base scan —
+    the big side never shuffles. Same bounded-group-cardinality contract
+    as exact_group_quantiles (types/languages, not per-user). Fences are
     ``med - k*mad`` / ``med + k*mad`` on exact data values in a fixed
     order (ULP-replayable cross-engine, as in :func:`mad_outliers`).
 
@@ -617,76 +503,7 @@ def group_mad_outliers(
     spread degenerates to mad == 0 keep the point fence (off-median
     rows flag, as in the global screen).
     """
-    spark = df.sparkSession
-    schema = ", ".join(
-        [f"`{group_col}` string"]
-        + [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
-        + ["value double, median double, mad double, lo double, hi double"]
-    )
-    gvals = _group_values(df, group_col, value_col)
-    # one-job small path: both phases (per-group median, then median of
-    # |v - med_g|) fold driver-side over one Arrow probe. Restricted to
-    # all-finite values so the rare inf-bearing input keeps the exact
-    # behavior of the distributed route below.
-    probe = _probe_small(gvals)
-    if probe is not None:
-        pvs = probe.column("v").to_pylist()
-        if all(math.isfinite(v) for v in pvs):
-            per_group: dict[str, list[float]] = {}
-            for g, v in zip(probe.column("_g").to_pylist(), pvs):
-                per_group.setdefault(g, []).append(v)
-            if not per_group:
-                return local_df(spark, [], schema)
-            meds, mads = {}, {}
-            for g, vs in per_group.items():
-                vs.sort()
-                med = vs[_rank(len(vs), 0.5) - 1]
-                devs = sorted(abs(v - med) for v in vs)
-                meds[g] = med
-                mads[g] = devs[_rank(len(devs), 0.5) - 1]
-            return _group_mad_flag_pass(
-                df, group_col, value_col, id_cols, k, meds, mads
-            )
-    gvals.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        stats = _group_stats(gvals)
-        if not stats:
-            return local_df(spark, [], schema)
-        meds = {
-            g: v
-            for (g, _q), v in _group_quantile_map(
-                gvals, stats, (0.5,), n_bins
-            ).items()
-        }
-        med_df = local_df(
-        spark,
-            list(meds.items()), "_g string, _med double"
-        )
-        dev = gvals.join(F.broadcast(med_df), "_g").select(
-            "_g", F.abs(F.col("v") - F.col("_med")).alias("v")
-        )
-        dev_stats: dict[str, tuple[int, float | None, float | None, int]] = {}
-        lossy = []  # inf-bearing groups: |v - med| is lossy, recount
-        for g, (n, lo, hi, n_inf) in stats.items():
-            med = meds[g]
-            if n_inf == 0 and math.isfinite(med):
-                dev_stats[g] = (n, 0.0, max(hi - med, med - lo), 0)
-            else:
-                lossy.append(g)
-        if lossy:
-            recount = _group_stats(dev.filter(F.col("_g").isin(lossy)))
-            dev_stats.update(recount)
-        mads = {
-            g: v
-            for (g, _q), v in _group_quantile_map(
-                dev, dev_stats, (0.5,), n_bins
-            ).items()
-        }
-    finally:
-        gvals.unpersist()
-    return _group_mad_flag_pass(
-        df, group_col, value_col, id_cols, k, meds, mads
-    )
+    return _mad_screen(df, group_col, value_col, id_cols, k, n_bins)
 
 
 def winsorize(
@@ -769,9 +586,7 @@ def quantile_bin(
     qs = tuple(j / n_bins for j in range(1, n_bins))
     fences = [
         r["value"]
-        for r in exact_quantiles(df, value_col, qs=qs, n_bins=hist_bins)
-        .orderBy("q")
-        .collect()
+        for r in exact_quantiles(df, value_col, qs=qs, n_bins=hist_bins).collect()
     ]
     v = F.col(value_col).cast("double")
     ok = v.isNotNull() & ~F.isnan(v)
@@ -811,8 +626,7 @@ def robust_scale(
 
     Returns (*id_cols, value_col, scaled, median, mad).
     """
-    spark = df.sparkSession
-    mm = _med_mad(df, value_col, n_bins)
+    mm = _med_mad(df, value_col, n_bins).get("")
     if mm is None:
         schema = ", ".join(
             [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
@@ -821,7 +635,7 @@ def robust_scale(
                 "scaled double, median double, mad double",
             ]
         )
-        return local_df(spark, [], schema)
+        return local_df(df.sparkSession, [], schema)
     med, mad = mm
     v = F.col(value_col).cast("double")
     ok = v.isNotNull() & ~F.isnan(v)

@@ -1132,6 +1132,8 @@ def main(argv: list[str] | None = None) -> int:
             source = "--" + dest.replace("_", "-")
             for spec in getattr(args, dest):
                 suite.add(parse(spec))
+        source = "suite"
+        suite.by_id()  # a repeated constraint id, from any source
         source = "--dump-suite"
         if args.dump_suite:
             save_suite(suite, args.dump_suite)

@@ -147,3 +147,51 @@ def test_big_path_vocab_coverage(spark, monkeypatch):
         for r in K.vocab_coverage(df).collect()
     }
     assert fast == dist and len(fast) == 3
+
+
+# Spark jobs per public call on the 997-row input (3 groups, n_bins 16,
+# result collected): (within the cap, past the 50-value cap). The bin
+# routing and boundary rows are literal expressions, so no local frame
+# is broadcast, and a literal result frame collects without a job.
+JOBS = {
+    "exact_quantiles": (1, 7),
+    "exact_quantiles_persist": (1, 8),
+    "exact_group_quantiles": (1, 8),
+    "mad_outliers": (2, 13),
+    "group_mad_outliers": (2, 13),
+    "winsorize": (2, 8),
+    "robust_scale": (2, 13),
+    "quantile_bin": (2, 8),
+}
+
+
+@pytest.mark.parametrize("big", [False, True], ids=["small", "big"])
+def test_quantile_job_counts(spark, monkeypatch, jobs_of, big):
+    if big:
+        monkeypatch.setattr(Q, "_SMALL_N", 50)
+    rng = random.Random(42)
+    df = spark.createDataFrame(
+        [(i, f"g{i % 3}", rng.uniform(-100, 100)) for i in range(997)],
+        "event_id int, g string, value double",
+    )
+    calls = {
+        "exact_quantiles": lambda: Q.exact_quantiles(df, "value", n_bins=16),
+        "exact_quantiles_persist": lambda: Q.exact_quantiles(
+            df, "value", n_bins=16, persist=True
+        ),
+        "exact_group_quantiles": lambda: Q.exact_group_quantiles(
+            df, "g", "value", n_bins=16
+        ),
+        "mad_outliers": lambda: Q.mad_outliers(df, "value", n_bins=16),
+        "group_mad_outliers": lambda: Q.group_mad_outliers(
+            df, "g", "value", n_bins=16
+        ),
+        "winsorize": lambda: Q.winsorize(df, "value", n_bins=16),
+        "robust_scale": lambda: Q.robust_scale(df, "value", n_bins=16),
+        "quantile_bin": lambda: Q.quantile_bin(df, "value", hist_bins=16),
+    }
+    got = {
+        name: jobs_of(lambda: call().collect())[1]
+        for name, call in calls.items()
+    }
+    assert got == {name: n[big] for name, n in JOBS.items()}

@@ -70,21 +70,23 @@ def test_no_global_sort_in_plan(spark):
     # the big-n path's boundary pass is the only place a sort could
     # sneak in: pin that the VALUE column only ever sees the per-bin
     # LOCAL sort behind the hashpartitioning-on-bin exchange, never a
-    # global (range-partitioned) sort. (The public functions now run
-    # eagerly and return literal frames, so the pin targets the
-    # internal boundary-pass builder the big path executes.)
+    # global (range-partitioned) sort. (The public functions run
+    # eagerly and return literal frames, so the pin targets the one
+    # boundary-pass builder every big path executes.)
     from ocsf_validator_spark.pipeline.quantiles import (
         _bin_expr,
         _boundary_frame,
-        _values_frame,
+        _values,
     )
 
     rng = random.Random(7)
     df = spark.createDataFrame(
         [(rng.uniform(0, 1),) for _ in range(500)], "value double"
     )
-    vals = _values_frame(df, "value")
-    frame = _boundary_frame(vals, _bin_expr(0.0, 1.0, 32), {0.5: (16, 3)})
+    binned = _values(df, "value").select(
+        "_g", "v", _bin_expr({"": (0.0, 1 / 32)}, 32).alias("b")
+    )
+    frame = _boundary_frame(binned, {("", 16, 3)})
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower(), plan
     assert "hashpartitioning" in plan.lower(), plan
@@ -186,16 +188,29 @@ def test_grouped_nonfinite(spark):
 from ocsf_validator_spark.pipeline.quantiles import mad_outliers
 
 
+def naive_med_mad(vs):
+    """(median, MAD) by the oracle's rule: rank over all n rows, NaN
+    sorting last as SQL orders it (|inf - inf| is NaN)."""
+    svs = sorted(vs, key=lambda x: (math.isnan(x), x))
+    med = svs[(len(svs) - 1) // 2]
+    devs = sorted((abs(v - med) for v in svs), key=lambda x: (math.isnan(x), x))
+    return med, devs[(len(devs) - 1) // 2]
+
+
+def outside(v, lo, hi):
+    # SQL comparison: NaN is the greatest value, so v < NaN holds
+    return math.isnan(lo) or v < lo or v > hi
+
+
 def naive_mad(values, k=3):
-    vs = sorted(v for v in values if v is not None and not math.isnan(v))
-    med = vs[int(math.floor((len(vs) - 1) * 0.5))]
-    devs = sorted(abs(v - med) for v in vs)
-    mad = devs[int(math.floor((len(devs) - 1) * 0.5))]
+    med, mad = naive_med_mad(
+        [v for v in values if v is not None and not math.isnan(v)]
+    )
     lo, hi = med - k * mad, med + k * mad
     return {
         (i, v): (v, med, mad, lo, hi)
         for i, v in enumerate(values)
-        if v is not None and not math.isnan(v) and (v < lo or v > hi)
+        if v is not None and not math.isnan(v) and outside(v, lo, hi)
     }
 
 
@@ -255,13 +270,10 @@ def naive_group_mad(rows, k=3):
             by_g.setdefault(g, []).append(v)
     out = {}
     for g, vs in by_g.items():
-        svs = sorted(vs)
-        med = svs[int(math.floor((len(svs) - 1) * 0.5))]
-        devs = sorted(abs(v - med) for v in svs)
-        mad = devs[int(math.floor((len(devs) - 1) * 0.5))]
+        med, mad = naive_med_mad(vs)
         lo, hi = med - k * mad, med + k * mad
         for i, (gg, v) in enumerate(rows):
-            if gg == g and v is not None and not math.isnan(v) and (v < lo or v > hi):
+            if gg == g and v is not None and not math.isnan(v) and outside(v, lo, hi):
                 out[(g, i)] = (v, med, mad, lo, hi)
     return out
 
@@ -314,6 +326,39 @@ def test_group_mad_nulls_and_degenerate_group(spark):
 def test_group_mad_empty(spark):
     assert run_group_mad(spark, []) == {}
     assert run_group_mad(spark, [("a", None), (None, 1.0)]) == {}
+
+
+INF = float("inf")
+
+
+@pytest.mark.parametrize("cap", ["real", "forced"])
+@pytest.mark.parametrize("values", [
+    [1.0, 2.0, INF, INF, INF],
+    [INF, INF, INF],
+    [-INF, INF],
+    [1.0, 2.0, 3.0, 4.0, INF],
+    [-INF, 1.0, 2.0, 3.0, INF, INF],
+])
+def test_mad_infinite_values(spark, monkeypatch, values, cap):
+    """The NaN rule on both paths: a deviation |inf - inf| is NaN, takes
+    part in the MAD rank and sorts last, as the oracle's SQL orders it
+    — for a scalar call and a one-group call alike. The forced cap
+    sends these few rows down the distributed passes."""
+    from ocsf_validator_spark.pipeline import quantiles as Q
+
+    if cap == "forced":
+        monkeypatch.setattr(Q, "_SMALL_N", 1)
+
+    def nan_safe(d):
+        return {k: repr(t) for k, t in d.items()}
+
+    want = repr(naive_med_mad(values))
+    df = spark.createDataFrame([("a", v) for v in values], "g string, value double")
+    assert repr(Q._med_mad(df, "value", 32)[""]) == want
+    assert repr(Q._med_mad(df, "value", 32, "g")["a"]) == want
+    assert nan_safe(run_mad(spark, values)) == nan_safe(naive_mad(values))
+    rows = [("a", v) for v in values]
+    assert nan_safe(run_group_mad(spark, rows)) == nan_safe(naive_group_mad(rows))
 
 
 def test_winsorize_clips_at_exact_fences(spark):

@@ -788,6 +788,7 @@ _BAD_SUITES = {
     ("--closing", "role"),
     *[("--suite-json", name) for name in _BAD_SUITES],
     ("--severity", "ref.role=LOUD"),
+    ("suite", ("--check", "a=x > 1", "--check", "a=y > 1")),
 ])
 def test_malformed_suite_source_is_fatal_before_spark(
     tmp_path, monkeypatch, capsys, flag, value
@@ -795,7 +796,8 @@ def test_malformed_suite_source_is_fatal_before_spark(
     """Every malformed suite source exits 2 with one [FATAL] line while
     the suite is built, before a session starts: an unknown metric, a
     `where` on a dataset-level kind or an empty `by` is rejected when
-    the constraint is built, from a flag or a --suite-json alike."""
+    the constraint is built, from a flag or a --suite-json alike, and a
+    repeated constraint id when the suite is complete."""
     from ocsf_validator_spark import session
     from ocsf_validator_spark.runner import main
 
@@ -810,8 +812,11 @@ def test_malformed_suite_source_is_fatal_before_spark(
         value = str(tmp_path / "suite.json")
         with open(value, "w") as f:
             f.write(bad if isinstance(bad, str) else json.dumps(bad))
-    value = value.format(baseline=baseline)
-    assert main(["--synth", "10", flag, value]) == 2
+    argv = (
+        list(value) if isinstance(value, tuple)
+        else [flag, value.format(baseline=baseline)]
+    )
+    assert main(["--synth", "10", *argv]) == 2
     out = capsys.readouterr().out.splitlines()
     assert [ln for ln in out if ln.startswith("[FATAL]")] == out
     assert len(out) == 1 and flag in out[0]
