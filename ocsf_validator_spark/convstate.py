@@ -428,6 +428,28 @@ def idle_timeout_ms(text: str) -> int:
     return int(total)
 
 
+def check_carried(suite: ConstraintSet, keys=("conv_id", "turn_idx")) -> None:
+    """Raise ``ValueError`` naming each constraint of ``suite`` that the
+    carried state cannot serve: a group-level constraint over another
+    window than ``keys``, and a Unique that the fused pass of that
+    window does not rank (other keys, or another first_seen_order; see
+    violations._window_groups). A carried run (``runner
+    --incremental``, ``validate_stream(stateful_ordering=True)``)
+    refuses such a suite: it would judge those constraints from the
+    new sliver alone."""
+    from ocsf_validator_spark.violations import _window_groups
+
+    groups, uniques = _window_groups(suite, keys)
+    home = (keys[0], keys[1])
+    off = [c for w, (cs, _) in groups.items() if w != home for c in cs]
+    if off or uniques:
+        raise ValueError(
+            f"carried state serves window constraints over ({home[0]}, "
+            f"{home[1]}) only; not carried: "
+            + ", ".join(c.constraint_id for c in [*off, *uniques])
+        )
+
+
 def commit(
     df: DataFrame,
     suite: ConstraintSet,
@@ -441,22 +463,25 @@ def commit(
     """Fold ``df``'s boundary summaries into ``carry`` and each FD
     constraint's group state into its ``fd_carry`` entry, and write the
     snapshots tagged ``commit_id``. Returns ``(state_dir, fd_dirs)``
-    (no ``state_dir`` without fusable window constraints) for the
-    caller to make current: the runner in its file ledger, a stream with
-    ``publish``. ``stale_before_us`` (the idle GC) drops conversations
-    whose ``_c_last_ts`` is before that epoch-microsecond bound, in the
-    plan that writes the state."""
+    (no ``state_dir`` when no constraint that runs on ``df`` is over
+    the ``keys`` window) for the caller to make current: the runner in
+    its file ledger, a stream with ``publish``. A suite the carry
+    cannot serve raises ``ValueError`` (``check_carried``).
+    ``stale_before_us`` (the idle GC) drops conversations whose
+    ``_c_last_ts`` is before that epoch-microsecond bound, in the plan
+    that writes the state."""
     from ocsf_validator_spark.violations import (
-        _fusable,
         _runs,
+        _window_groups,
         fd_group_state,
         merge_fd_state,
     )
 
+    check_carried(suite, keys)
     state_dir = None
-    fz = _fusable(suite, df, keys)
-    if fz:
-        merged = merge_state(carry, boundary_state(df, fz[0], fz[1], keys))
+    conv = _window_groups(suite, keys, df)[0].get((keys[0], keys[1]))
+    if conv:
+        merged = merge_state(carry, boundary_state(df, *conv, keys))
         if stale_before_us is not None and CARRY_LAST_TS in merged.columns:
             merged = merged.filter(
                 F.col(CARRY_LAST_TS).isNull()

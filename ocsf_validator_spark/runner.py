@@ -49,6 +49,7 @@ from ocsf_validator_spark.localframe import (
 )
 
 from ocsf_validator_spark import checkpoint as ckpt
+from ocsf_validator_spark import convstate
 from ocsf_validator_spark.inherit import SuiteResolutionError, resolve
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import (
@@ -1134,6 +1135,11 @@ def main(argv: list[str] | None = None) -> int:
                 suite.add(parse(spec))
         source = "suite"
         suite.by_id()  # a repeated constraint id, from any source
+        if args.incremental or (args.stream and args.stateful_ordering):
+            source = "suite for " + (
+                "--incremental" if args.incremental else "--stateful-ordering"
+            )
+            convstate.check_carried(suite)
         source = "--dump-suite"
         if args.dump_suite:
             save_suite(suite, args.dump_suite)
@@ -1181,8 +1187,6 @@ def main(argv: list[str] | None = None) -> int:
         # window checks with the carried per-conversation boundaries
         # (convstate module contract) so duplicates/gaps/regressions
         # straddling increments are caught, not just within-increment
-        from ocsf_validator_spark import convstate
-
         carry_state = convstate.read_state(spark, args.checkpoint)
         if carry_state is not None:
             print("incremental: seeding carried conversation state")
@@ -1291,8 +1295,6 @@ def main(argv: list[str] | None = None) -> int:
         # list) commit a ledger part-file carrying only the state
         # pointers — file tracking there is snapshot lineage, not the
         # ledger.
-        from ocsf_validator_spark import convstate
-
         state_dir, fd_dirs = convstate.commit(
             df,
             suite,

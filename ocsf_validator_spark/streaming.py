@@ -166,7 +166,10 @@ def validate_stream(
     too. Batch N reads the newest commit below N under
     ``checkpoint_dir/carry``, deletes older ones, and commits its own
     keyed by N, so a replay overwrites it as the sink's partition is. A
-    carried batch takes the exchange route behind the carriers' semi
+    suite holding a constraint the carry cannot serve (a window other
+    than (conv_id, turn_idx), a Unique on other keys) raises
+    ``ValueError`` before the query starts (``convstate.check_carried``).
+    A carried batch takes the exchange route behind the carriers' semi
     join, and every batch's commit adds its boundary window, the state
     merge and the write: a one-file batch costs 3 jobs uncarried (in
     place), 7 carried. ``stateful_idle_timeout``
@@ -200,6 +203,8 @@ def validate_stream(
     if (psi_ref is None) != (psi_bin_expr is None):
         raise ValueError("psi_ref and psi_bin_expr must be given together")
     suite = suite or transcript_suite()
+    if stateful_ordering:
+        convstate.check_carried(suite)
     q_threshold = (
         Severity.ERROR if quarantine_threshold is None else quarantine_threshold
     )

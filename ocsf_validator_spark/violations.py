@@ -14,14 +14,16 @@ Three evaluation strategies by constraint class:
    explode emits only violating (row, constraint) pairs, so output is
    proportional to violations, not rows × constraints.
 
-2. GROUP-LEVEL (uniqueness / ordering / monotonicity) — when every
-   group constraint shares the conversation window (the transcript
-   suite's shape), ALL of them evaluate in ONE fused pass: a single
-   shuffle by conv_id + one sort by (turn_idx, tie-break), every check
-   expressed as lag/fill-forward columns over that one Window, then the
-   same array_compact+explode emission as the row leg. One shuffle for
-   the whole group family instead of one per constraint (the per-
-   constraint fallbacks below remain for heterogeneous suites).
+2. GROUP-LEVEL (uniqueness / ordering / monotonicity) — every group
+   constraint evaluates in the ONE fused pass of its window
+   (partition_by, order_by): a single shuffle by the partition column
+   + one sort by (order column, tie-break), every check expressed as
+   lag/fill-forward columns over that one Window, then the same
+   array_compact+explode emission as the row leg. The transcript
+   suite's constraints all share the conversation window (conv_id,
+   turn_idx), so the whole family is one shuffle, and the row family
+   rides it. A Unique on other keys is a key-level grouping check
+   (unique_violations).
 
 3. DATASET-LEVEL (schema audit, enum coverage) — driver schema diff and
    tiny anti-joins; emitted with NULL row keys.
@@ -71,7 +73,7 @@ DEFAULT_KEYS = ("conv_id", "turn_idx")
 # conversation exchange: at transcript scale `text` is the whole shuffle
 # payload, and an unbounded peer string in a reason row is useless past a
 # screenful anyway. Truncation is applied identically in the fused path
-# (chunked skew route included), the standalone unique path, and the DuckDB
+# (chunked skew route included), the key-level unique leg, and the DuckDB
 # oracles, so verdicts stay engine-exact: rows that tie on the truncated
 # prefix display the same peer string whichever of them wins the rank.
 TIE_DISPLAY_LEN = 256
@@ -207,7 +209,14 @@ def unique_violations(
     dup_keys = df.groupBy(*kcols).agg(F.count(F.lit(1)).alias("_n")).filter(
         F.col("_n") > 1
     )
-    dups = df.join(dup_keys.select(*kcols), kcols, "semi")
+    # null-safe, as the groupBy (and the fused window) groups NULL keys
+    found = dup_keys.select(
+        *[F.col(k).alias(f"_k{i}") for i, k in enumerate(kcols)]
+    )
+    same = F.lit(True)
+    for i, k in enumerate(kcols):
+        same = same & F.col(k).eqNullSafe(F.col(f"_k{i}"))
+    dups = df.join(found, same, "semi")
     # Phase 2: window ONLY over duplicate rows (tiny vs the table).
     order = [F.col(o).asc_nulls_last() for o in c.first_seen_order] or [
         F.lit(1)
@@ -251,185 +260,41 @@ def unique_violations(
     return out
 
 
-def ordering_violations(
-    df: DataFrame, c: TurnOrdering, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Dense turn numbering per conversation (north-star O3): within
-    Window.partitionBy(conv_id).orderBy(turn_idx), turn_idx must start
-    at 0 and increase by exactly 1. Duplicates and gaps both emit at the
-    offending row."""
-    part, idx = c.partition_by, c.order_by
-    w = Window.partitionBy(part).orderBy(F.col(idx).asc())
-    prev = F.lag(F.col(idx)).over(w)
-    expected = F.coalesce(prev + F.lit(1), F.lit(0))
-    staged = df.select(*keys, F.col(idx).alias("_idx"), prev.alias("_prev"), expected.alias("_exp"))
-    is_dup = F.col("_prev").isNotNull() & (F.col("_idx") == F.col("_prev"))
-    is_gap = F.col("_idx") > F.col("_exp")
-    return (
-        staged.filter(is_dup | is_gap)
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.when(
-                F.col("_idx") == F.col("_prev"),
-                F.concat(
-                    F.lit(f"duplicate {idx} "), F.col("_idx").cast("string")
-                ),
-            )
-            .otherwise(
-                F.concat(
-                    F.lit(f"{idx} gap: expected "),
-                    F.col("_exp").cast("string"),
-                    F.lit(" got "),
-                    F.col("_idx").cast("string"),
-                )
-            )
-            .alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
+def _window_groups(
+    suite: ConstraintSet,
+    keys: Sequence[str] = DEFAULT_KEYS,
+    df: DataFrame | None = None,
+) -> tuple[dict, list]:
+    """The group-level constraints of ``suite`` (with ``df``, only those
+    that run on it, ``_runs``) by the window each runs over:
+    ``({(partition_by, order_by): (constraints, ties)}, uniques)``.
 
-
-def monotonic_violations(
-    df: DataFrame, c: Monotonic, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Per-conversation monotonicity of ``column`` under stable turn
-    ordering (Window.partitionBy(conv_id).orderBy(turn_idx))."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    prev = F.lag(F.col(c.column)).over(w)
-    staged = df.select(*keys, F.col(c.column).alias("_cur"), prev.alias("_prev"))
-    bad = (
-        (F.col("_cur") < F.col("_prev"))
-        if not c.strict
-        else (F.col("_cur") <= F.col("_prev"))
-    )
-    return (
-        staged.filter(F.col("_prev").isNotNull() & bad)
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.concat(
-                F.lit(f"{c.column} not monotonic: "),
-                F.col("_cur").cast("string"),
-                F.lit(" after "),
-                F.col("_prev").cast("string"),
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
-
-
-def precedence_violations(
-    df: DataFrame, c: Precedence, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone Precedence leg (unfused fallback): running prereq
-    count over the conversation window's strictly-preceding frame, one
-    exchange on partition_by. Reason string identical to the fused and
-    skew paths (parity-pinned)."""
-    w = (
-        Window.partitionBy(c.partition_by)
-        .orderBy(F.col(c.order_by).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior = F.sum(
-        F.when(F.col(c.column).isin(*c.prereq), F.lit(1)).otherwise(F.lit(0))
-    ).over(w)
-    staged = df.select(
-        *keys, F.col(c.column).alias("_cur"), prior.alias("_prior")
-    )
-    return (
-        staged.filter(
-            (F.col("_cur") == F.lit(c.trigger))
-            & (F.coalesce(F.col("_prior"), F.lit(0)) == 0)
-        )
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.lit(
-                f"{c.column} '{c.trigger}' with no prior "
-                f"{'|'.join(c.prereq)}"
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
-
-
-def opening_violations(
-    df: DataFrame, c: OpeningRole, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone OpeningRole leg (unfused fallback): the first row of
-    each conversation under stable turn ordering must carry an allowed
-    value; NULL openers violate."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    staged = df.select(
-        *keys,
-        F.col(c.column).alias("_cur"),
-        F.row_number().over(w).alias("_rn1"),
-    )
-    return (
-        staged.filter(
-            (F.col("_rn1") == 1)
-            & (F.col("_cur").isNull() | ~F.col("_cur").isin(*c.allowed))
-        )
-        .select(
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *keys,
-            F.concat(
-                F.lit("conversation opens with "),
-                F.coalesce(F.col("_cur").cast("string"), F.lit("NULL")),
-            ).alias("reason"),
-            F.lit(c.severity.name).alias("severity"),
-        )
-    )
-
-
-def alternation_violations(
-    df: DataFrame, c: Alternation, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    """Standalone Alternation leg (unfused fallback): lag over the
-    conversation window, flag rows equal to their predecessor (scoped
-    to ``c.scope`` when set). Reason string identical to the fused
-    path (parity-pinned)."""
-    w = Window.partitionBy(c.partition_by).orderBy(F.col(c.order_by).asc())
-    staged = df.select(
-        *keys,
-        F.col(c.column).alias("_cur"),
-        F.lag(F.col(c.column)).over(w).alias("_prev"),
-    )
-    bad = F.col("_prev").isNotNull() & (F.col("_cur") == F.col("_prev"))
-    if c.scope:
-        bad = bad & F.col("_cur").isin(*c.scope)
-    return staged.filter(bad).select(
-        F.lit(c.constraint_id).alias("constraint_id"),
-        *keys,
-        F.concat(
-            F.lit(f"consecutive {c.column} '"),
-            F.col("_cur").cast("string"),
-            F.lit("'"),
-        ).alias("reason"),
-        F.lit(c.severity.name).alias("severity"),
-    )
-
-
-def _fusable(suite: ConstraintSet, df: DataFrame, keys: Sequence[str]):
-    """Group constraints that all live on the same conversation window
-    (partition = keys[0], order = keys[1]; Unique over exactly those two
-    keys). Returns (constraints, tie_break_cols) or None. A constraint
-    that cannot run (``_runs``) is left out, not a reason to unfuse:
-    dataset_findings reports it."""
-    part, idx = keys[0], keys[1]
-    cs, ties = [], []
+    A Unique on exactly ``keys`` joins the ``keys`` window's group, and
+    the first one in the suite sets that group's ``ties``: its
+    first_seen_order, which ranks every duplicate group of the pass.
+    ``uniques`` holds the rest, key-level grouping checks
+    (unique_violations) that rank by their own order: a Unique on other
+    keys, or on ``keys`` with another first_seen_order. Every other
+    window holds no Unique, so its ties are empty."""
+    home = (keys[0], keys[1])
+    groups: dict[tuple, list] = {}
+    uniques, ties = [], None
     for c in suite.group_level():
-        if not _runs(df, c, keys):
+        if df is not None and not _runs(df, c, keys):
             continue
         if isinstance(c, Unique):
-            if tuple(c.keys) != (part, idx):
-                return None
-            ties = list(c.first_seen_order)
-        elif c.partition_by != part or c.order_by != idx:
-            return None
-        cs.append(c)
-    return (cs, ties) if cs else None
+            order = list(c.first_seen_order)
+            if tuple(c.keys) != home or ties not in (None, order):
+                uniques.append(c)
+                continue
+            ties, window = order, home
+        else:
+            window = (c.partition_by, c.order_by)
+        groups.setdefault(window, []).append(c)
+    return {
+        w: (cs, (ties or []) if w == home else [])
+        for w, cs in groups.items()
+    }, uniques
 
 
 # chunk id of a chunked conversation's NULL turn_idx rows: they sort
@@ -519,6 +384,7 @@ def fused_group_violations(
     carry: DataFrame | None = None,
     chunk_rows: int | None = None,
     chunk_convs: Sequence[str] | None = None,
+    window: Sequence[str] | None = None,
 ) -> DataFrame:
     """All conversation-window constraints in ONE shuffle + ONE sort —
     and, when ``row_cs`` is passed, the entire row-level family rides the
@@ -528,7 +394,7 @@ def fused_group_violations(
 
     Window = partitionBy(conv).orderBy(idx, *tie_break nulls-last); the
     tie-break is the Unique constraint's first_seen_order, so occurrence
-    ranks and the kept first-seen peer are identical to the standalone
+    ranks and the kept first-seen peer are identical to the key-level
     unique_violations (reference first-seen-wins, validators.py:255-260).
     Duplicate-group bookkeeping (occurrence rank + first-seen) uses a
     second Window partitioned by (conv, idx) — hash(conv) already
@@ -572,10 +438,15 @@ def fused_group_violations(
     ``out-of-order`` under the ordering constraint (boundary-only state
     cannot rank it — see convstate's module contract). It cannot be
     combined with ``chunk_rows``: the out-of-order bound and the opening
-    suppression are per conversation, not per chunk."""
+    suppression are per conversation, not per chunk.
+
+    ``window`` is the (partition, order) pair the pass runs over when
+    it is not ``keys`` (all_violations' other windows); the emitted
+    rows carry ``keys`` either way. ``ties``, ``carry`` and
+    ``chunk_rows`` serve the ``keys`` window only."""
     if carry is not None and chunk_rows is not None:
         raise ValueError("carry and chunk_rows are mutually exclusive")
-    part, idx = keys[0], keys[1]
+    part, idx = window or keys[:2]
     entry_t = "struct<constraint_id:string,reason:string,severity:string>"
     mono_cols = [c.column for c in cs if isinstance(c, Monotonic)]
     alt_cols = [c.column for c in cs if isinstance(c, Alternation)]
@@ -592,11 +463,12 @@ def fused_group_violations(
         if isinstance(c, (Precedence, OpeningRole, Alternation))
     ]
     full_cols = list(dict.fromkeys([*mono_cols, *seq_cols]))
-    # ---- map-side stage: keys + bounded ties + mono columns + the row
-    # family's violation array, all computed BEFORE the exchange --------
-    pre_cols = [F.col(k) for k in keys]
+    # ---- map-side stage: keys + window + bounded ties + mono columns +
+    # the row family's violation array, all computed BEFORE the exchange
+    base = list(dict.fromkeys([*keys, part, idx]))
+    pre_cols = [F.col(k) for k in base]
     for t in ties:
-        if t in keys:
+        if t in base:
             continue
         if t in full_cols:
             # a Monotonic column doubling as a tie must keep its full
@@ -607,7 +479,7 @@ def fused_group_violations(
                 _tie_display(F.col(t), df.schema[t].dataType).alias(t)
             )
     pre_cols += [
-        F.col(m) for m in full_cols if m not in keys and m not in ties
+        F.col(m) for m in full_cols if m not in base and m not in ties
     ]
     if row_cs:
         # defect-proportional: NULL (not an empty array) for clean rows,
@@ -649,7 +521,9 @@ def fused_group_violations(
         # boundary-key re-append ranks after the carried occurrences
         tie_order = [F.col("_cr").desc(), *tie_order]
     w = Window.partitionBy(*wpart).orderBy(F.col(idx).asc(), *tie_order)
-    w2 = Window.partitionBy(*wpart, idx).orderBy(*tie_order)
+    # a Unique without first_seen_order ranks its duplicates in any
+    # order, as unique_violations does
+    w2 = Window.partitionBy(*wpart, idx).orderBy(*(tie_order or [F.lit(1)]))
     prev_idx = F.lag(F.col(idx)).over(w)
     cols: dict = {"_prev_idx": prev_idx}
     for m in lag_cols:
@@ -1301,29 +1175,6 @@ def _fd_leg(
     )
 
 
-_GROUP_LEGS = {
-    Unique: unique_violations,
-    TurnOrdering: ordering_violations,
-    Monotonic: monotonic_violations,
-    Precedence: precedence_violations,
-    OpeningRole: opening_violations,
-    Alternation: alternation_violations,
-}
-
-
-def group_violations(
-    df: DataFrame, suite: ConstraintSet, keys: Sequence[str] = DEFAULT_KEYS
-) -> DataFrame:
-    out = _empty(df, keys)
-    fused = _fusable(suite, df, keys)
-    if fused:
-        return out.unionByName(fused_group_violations(df, *fused, keys))
-    for c in suite.group_level():
-        if _runs(df, c, keys):
-            out = out.unionByName(_GROUP_LEGS[type(c)](df, c, keys))
-    return out
-
-
 def _observations(suite: ConstraintSet, df: DataFrame) -> list[tuple]:
     """The dataset-level observation table: ``(alias, constraint,
     value, merge)`` per EnumCoverage declared value and per mergeable
@@ -1784,12 +1635,14 @@ def all_violations(
     observed_metrics: dict | None = None,
     fd_carry: "dict[str, DataFrame] | None" = None,
 ) -> DataFrame:
-    """Full suite in as few scans as possible. When the group family is
-    window-fusable (the transcript shape), the row family rides the same
-    shuffle: ONE scan of the input for every per-row and per-conversation
-    constraint, plus the tiny bounded coverage agg (itself skippable via
-    ``observed_enums``). Heterogeneous suites fall back to one fused row
-    scan + per-constraint group legs.
+    """Full suite in as few scans as possible. Each window of the group
+    family runs as one fused pass (``_window_groups``), and the row
+    family rides the pass of the conversation window ``keys``: for the
+    transcript suite, ONE scan of the input for every per-row and
+    per-conversation constraint, plus the tiny bounded coverage agg
+    (itself skippable via ``observed_enums``). Each other window adds
+    one fused pass with its own exchange, and each Unique off that
+    window's ranking one key-level leg.
 
     ``skewed_convs`` (picked by the runner's stats-scan skew probe)
     are conversations too large for one window task. They stay on the
@@ -1801,8 +1654,9 @@ def all_violations(
     unused: the benchmark's traced decomposition still passes it.
 
     ``carry`` (incremental runs and carried streams): convstate
-    boundary-state table, seeded into the fused window pass (see
-    fused_group_violations).
+    boundary-state table, seeded into the conversation window's fused
+    pass (see fused_group_violations). A suite holding a constraint the
+    carry cannot serve raises ``ValueError`` (convstate.check_carried).
     With carry, skewed conversations are not chunked: the carried
     out-of-order bound and opening suppression are per conversation.
 
@@ -1812,11 +1666,16 @@ def all_violations(
     have scanned it in two or more tasks and AQE could have kept two or
     more reducers. Its ``skewed_convs`` are not chunked: one task has
     nothing to balance. Deciding runs no job."""
+    if carry is not None:
+        from ocsf_validator_spark.convstate import check_carried
+
+        check_carried(suite, keys)
     in_place = window_route(df, carry) == "in_place"
     if in_place:
         df = df.coalesce(1)
-    fused = _fusable(suite, df, keys)
-    if fused:
+    groups, uniques = _window_groups(suite, keys, df)
+    conv = groups.pop((keys[0], keys[1]), None)
+    if conv:
         row_cs = [c for c in suite.row_level() if _runs(df, c, keys)]
         chunk_rows = None
         if skewed_convs and carry is None and not in_place:
@@ -1826,7 +1685,7 @@ def all_violations(
             )
         main = fused_group_violations(
             df,
-            *fused,
+            *conv,
             keys,
             row_cs=row_cs,
             carry=carry,
@@ -1834,11 +1693,15 @@ def all_violations(
             chunk_convs=list(skewed_convs) if chunk_rows else None,
         )
     else:
-        main = row_violations(df, suite, keys).unionByName(
-            group_violations(df, suite, keys)
+        main = row_violations(df, suite, keys)
+    for window, (cs, ties) in groups.items():
+        main = main.unionByName(
+            fused_group_violations(df, cs, ties, keys, window=window)
         )
     if suite.residual_level():
         main = main.unionByName(residual_violations(df, suite, keys))
+    for c in uniques:
+        main = main.unionByName(unique_violations(df, c, keys))
     if suite.key_level():
         main = main.unionByName(fd_violations(df, suite, keys, carry=fd_carry))
     return main.unionByName(

@@ -212,6 +212,43 @@ def test_stream_replay_rewrites_its_own_batch(spark, tmp_path, land_files):
     assert drained() == first
 
 
+def test_carried_runs_refuse_what_the_carry_cannot_serve(spark, tmp_path):
+    """A window off (conv_id, turn_idx), or a Unique on other keys, is
+    not served by the carried state: a carried stream raises before a
+    query starts, a commit before it writes, a carried all_violations
+    before it plans. (The runner's refusal is a case of
+    test_malformed_suite_source_is_fatal_before_spark.)"""
+    from ocsf_validator_spark.spec import (
+        ConstraintSet,
+        Monotonic,
+        Unique,
+        transcript_suite,
+    )
+    from ocsf_validator_spark.violations import all_violations
+
+    df = _df(spark, INC1)
+    cs = transcript_suite().group_level()
+    state = convstate.boundary_state(df, cs, ["ts", "role", "text"])
+    active = len(spark.streams.active)
+    os.makedirs(tmp_path / "none")
+    for suite in (
+        transcript_suite().add(
+            Monotonic(column="ts", order_by="ts", id_override="mono.by_ts")
+        ),
+        ConstraintSet("u", [Unique(column="rt", keys=("role", "turn_idx"))]),
+    ):
+        with pytest.raises(ValueError, match="not carried"):
+            _drain(spark, str(tmp_path / "none"), str(tmp_path / "out"),
+                   suite=suite)
+        with pytest.raises(ValueError, match="not carried"):
+            convstate.commit(df, suite, str(tmp_path / "ck"), 0)
+        with pytest.raises(ValueError, match="not carried"):
+            all_violations(df, suite, carry=state)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "out")
+    assert not os.path.exists(tmp_path / "ck")
+
+
 def test_state_is_committed_with_the_ledger(spark, tmp_path):
     root, manifest, _ = _run_two_increments(spark, tmp_path, INC2)
     state = convstate.read_state(spark, manifest)

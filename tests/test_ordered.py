@@ -24,7 +24,7 @@ from ocsf_validator_spark.spec import (
 )
 from ocsf_validator_spark.synth import synth_transcripts
 from ocsf_validator_spark.violations import (
-    _fusable,
+    _window_groups,
     all_violations,
     fused_group_violations,
 )
@@ -55,7 +55,7 @@ def _diff(a, b):
 def test_scalable_matches_window(spark, partitions):
     df = _with_defects(spark)
     suite = transcript_suite()
-    cs, ties = _fusable(suite, df, KEYS)
+    cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
     want = fused_group_violations(df, cs, ties, KEYS)
     got = scalable_group_violations(df, cs, ties, KEYS, num_partitions=partitions)
     assert want.count() > 100
@@ -84,7 +84,7 @@ def test_scalable_straddling_groups(spark):
         )
         df = base.unionByName(giant)
         suite = transcript_suite()
-        cs, ties = _fusable(suite, df, KEYS)
+        cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
         want = fused_group_violations(df, cs, ties, KEYS)
         got = scalable_group_violations(df, cs, ties, KEYS, num_partitions=64)
         assert _diff(got, want) == 0
@@ -107,7 +107,7 @@ def test_scalable_null_ties(spark):
         ),
     )
     suite = transcript_suite()
-    cs, ties = _fusable(suite, df, KEYS)
+    cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
     want = fused_group_violations(df, cs, ties, KEYS)
     got = scalable_group_violations(df, cs, ties, KEYS, num_partitions=13)
     assert _diff(got, want) == 0
@@ -124,7 +124,7 @@ def test_scalable_null_ts_in_dup_group(spark):
         ),
     )
     suite = transcript_suite()
-    cs, ties = _fusable(suite, df, KEYS)
+    cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
     want = fused_group_violations(df, cs, ties, KEYS)
     got = scalable_group_violations(df, cs, ties, KEYS, num_partitions=7)
     assert _diff(got, want) == 0
@@ -152,7 +152,7 @@ def test_scalable_null_tie_straddles_boundary(spark):
         )
         df = base.unionByName(giant)
         suite = transcript_suite()
-        cs, ties = _fusable(suite, df, KEYS)
+        cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
         want = fused_group_violations(df, cs, ties, KEYS)
         got = scalable_group_violations(df, cs, ties, KEYS, num_partitions=32)
         assert _diff(got, want) == 0
@@ -193,7 +193,7 @@ def test_scalable_row_legs_ride_staged(spark):
 
     df = _with_defects(spark, n=8000)
     suite = transcript_suite()
-    cs, ties = _fusable(suite, df, KEYS)
+    cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
     row_cs = suite.row_level()
     want = fused_group_violations(df, cs, ties, KEYS).unionByName(
         row_violations(df, suite, KEYS)
@@ -263,6 +263,58 @@ def test_in_place_rows_equal_forced_exchange_chunks(spark, no_one_task):
     big = [r for r in in_place if r.conv_id == "c00000000"]
     assert any(r.turn_idx is None for r in big)
     assert any(r.constraint_id == "unique.conv_turn" for r in big)
+
+
+def test_foreign_window_keeps_the_chunks(spark, no_one_task):
+    """A window constraint off (conv_id, turn_idx) runs in the fused
+    pass of its own window: the conversation window keeps its skew
+    chunks, the plan holds 3 hash exchanges (the chunk carriers and the
+    two windows), and the rows are the transcript suite's plus the
+    naive per-conversation rule's for the foreign window."""
+    import re
+    from collections import Counter
+
+    df = synth_transcripts(spark, n_turns=6000, seed=7)
+    foreign = [
+        Monotonic(column="ts", order_by="ts", id_override="monotonic.ts_by_ts"),
+        Monotonic(
+            column="turn_idx", order_by="ts", id_override="monotonic.turn_by_ts"
+        ),
+    ]
+    suite = transcript_suite().add(*foreign)
+
+    def run():
+        viol = all_violations(
+            df, suite, skewed_convs=["c00000000"],
+            observed_metrics={"__n_rows": 6000}, include_coverage=False,
+        )
+        return viol._jdf.queryExecution().executedPlan().toString(), viol
+
+    plan, viol = no_one_task(run)
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 3, plan
+    assert "_chunk" in plan, plan
+    # naive rule: each conversation's rows in ts order (distinct within
+    # a conversation here), a Monotonic column must not fall
+    convs: dict = {}
+    for r in df.collect():
+        convs.setdefault(r.conv_id, []).append(r)
+    naive = []
+    for rows in convs.values():
+        rows.sort(key=lambda r: r.ts)
+        for prev, cur in zip(rows, rows[1:]):
+            for c in foreign:
+                if cur[c.column] < prev[c.column]:
+                    naive.append((
+                        c.constraint_id, cur.conv_id, cur.turn_idx,
+                        f"{c.column} not monotonic: {cur[c.column]} after "
+                        f"{prev[c.column]}",
+                        "ERROR",
+                    ))
+    assert naive
+    want = all_violations(df, transcript_suite(), include_coverage=False)
+    assert Counter(map(tuple, viol.collect())) == Counter(
+        map(tuple, want.collect())
+    ) + Counter(naive)
 
 
 # ---- the chunked kernel, case by case -------------------------------------

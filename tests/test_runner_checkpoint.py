@@ -789,6 +789,13 @@ _BAD_SUITES = {
     *[("--suite-json", name) for name in _BAD_SUITES],
     ("--severity", "ref.role=LOUD"),
     ("suite", ("--check", "a=x > 1", "--check", "a=y > 1")),
+    # a window the carried state does not serve, on a carried run
+    ("--incremental", ("--suite-json", "{carried}", "--incremental",
+                       "--input", "{tmp}", "--checkpoint", "{tmp}")),
+    ("--stateful-ordering", ("--suite-json", "{carried}", "--stream",
+                             "--stateful-ordering", "--input", "{tmp}",
+                             "--violations-out", "{tmp}",
+                             "--checkpoint", "{tmp}")),
 ])
 def test_malformed_suite_source_is_fatal_before_spark(
     tmp_path, monkeypatch, capsys, flag, value
@@ -796,8 +803,9 @@ def test_malformed_suite_source_is_fatal_before_spark(
     """Every malformed suite source exits 2 with one [FATAL] line while
     the suite is built, before a session starts: an unknown metric, a
     `where` on a dataset-level kind or an empty `by` is rejected when
-    the constraint is built, from a flag or a --suite-json alike, and a
-    repeated constraint id when the suite is complete."""
+    the constraint is built, from a flag or a --suite-json alike, a
+    repeated constraint id when the suite is complete, and on a carried
+    run a constraint the carried state does not serve."""
     from ocsf_validator_spark import session
     from ocsf_validator_spark.runner import main
 
@@ -812,11 +820,17 @@ def test_malformed_suite_source_is_fatal_before_spark(
         value = str(tmp_path / "suite.json")
         with open(value, "w") as f:
             f.write(bad if isinstance(bad, str) else json.dumps(bad))
+    carried = tmp_path / "carried.json"
+    carried.write_text(json.dumps(_registry(
+        m={"kind": "monotonic", "column": "ts", "order_by": "ts"}
+    )))
     argv = (
-        list(value) if isinstance(value, tuple)
+        [v.format(carried=carried, tmp=tmp_path) for v in value]
+        if isinstance(value, tuple)
         else [flag, value.format(baseline=baseline)]
     )
-    assert main(["--synth", "10", *argv]) == 2
+    src = [] if "--input" in argv else ["--synth", "10"]
+    assert main([*src, *argv]) == 2
     out = capsys.readouterr().out.splitlines()
     assert [ln for ln in out if ln.startswith("[FATAL]")] == out
     assert len(out) == 1 and flag in out[0]

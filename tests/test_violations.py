@@ -24,12 +24,15 @@ from ocsf_validator_spark.spec import (
     transcript_suite,
 )
 from ocsf_validator_spark.violations import (
+    _window_groups,
     all_violations,
     dataset_findings,
-    group_violations,
+    fused_group_violations,
     row_violations,
     window_route,
 )
+
+KEYS = ("conv_id", "turn_idx")
 
 SUITE = transcript_suite()
 
@@ -71,7 +74,7 @@ def test_row_violations(transcripts):
 
 
 def test_group_violations(transcripts):
-    rows = group_violations(transcripts, SUITE).collect()
+    rows = all_violations(transcripts, SUITE).collect()
     got = _by_id(rows)
 
     # scenario 5: uniqueness — fires on 2nd+ occurrence, keeps first-seen
@@ -101,8 +104,6 @@ def test_fused_null_idx_duplicate_keeps_peer_string(spark):
     as 'same group' and the peer string is built, not silently NULL."""
     from pyspark.sql import functions as F
 
-    from ocsf_validator_spark.violations import _fusable, fused_group_violations
-
     rows = [
         ("c1", None, "user", "first null", None, "2026-01-01 00:00:00"),
         ("c1", None, "user", "second null", None, "2026-01-01 00:00:01"),
@@ -112,15 +113,50 @@ def test_fused_null_idx_duplicate_keeps_peer_string(spark):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    cs, ties = _fusable(SUITE, df, ("conv_id", "turn_idx"))
+    cs, ties = _window_groups(SUITE, KEYS, df)[0][KEYS]
     out = fused_group_violations(
-        df, cs, ties, ("conv_id", "turn_idx"), row_cs=SUITE.row_level()
+        df, cs, ties, KEYS, row_cs=SUITE.row_level()
     ).collect()
     uniq = [r for r in out if r.constraint_id == "unique.conv_turn"]
     assert len(uniq) == 1
     assert uniq[0].reason is not None
     assert "occurrence 2" in uniq[0].reason
     assert "first null" in uniq[0].reason  # the kept peer's text tie
+
+
+def test_window_key_uniques_rank_by_their_own_order(spark):
+    """Two Unique(conv_id, turn_idx) with different first_seen_order
+    each rank one duplicate group by their own order and name their own
+    first-seen peer: the first sets the conversation window's ties, the
+    second runs as a key-level leg. Both group a NULL turn_idx."""
+    df = spark.createDataFrame(
+        [("c1", 0, "b", 1), ("c1", 0, "a", 2), ("c1", 1, "x", 3),
+         ("c2", None, "d", 4), ("c2", None, "c", 5)],
+        "conv_id string, turn_idx int, role string, n int",
+    )
+    by_n = Unique(column="by_n", keys=KEYS, first_seen_order=("n",))
+    by_role = Unique(column="by_role", keys=KEYS, first_seen_order=("role",))
+    suite = ConstraintSet(name="u", constraints=[by_n, by_role])
+    got = {
+        (r.constraint_id, r.conv_id, r.turn_idx, r.reason)
+        for r in all_violations(df, suite, include_coverage=False).collect()
+    }
+    assert got == {
+        ("unique.by_n", "c1", 0, "duplicate key (c1,0) occurrence 2; first seen 1"),
+        ("unique.by_role", "c1", 0, "duplicate key (c1,0) occurrence 2; first seen a"),
+        ("unique.by_n", "c2", None, "duplicate key (c2) occurrence 2; first seen 4"),
+        ("unique.by_role", "c2", None, "duplicate key (c2) occurrence 2; first seen c"),
+    }
+    # no first_seen_order: any occurrence may rank first
+    bare = ConstraintSet(name="b", constraints=[Unique(column="k", keys=KEYS)])
+    got = {
+        (r.conv_id, r.turn_idx, r.reason)
+        for r in all_violations(df, bare, include_coverage=False).collect()
+    }
+    assert got == {
+        ("c1", 0, "duplicate key (c1,0) occurrence 2; first seen "),
+        ("c2", None, "duplicate key (c2) occurrence 2; first seen "),
+    }
 
 
 def test_dataset_findings(transcripts):
@@ -157,13 +193,10 @@ def test_fused_plan_shape_one_exchange_one_sort(spark, transcripts):
     as ONE exchange and ONE sort — the (conv,turn) occurrence window
     reuses the conv exchange because hash(conv) already satisfies
     ClusteredDistribution((conv,turn)) and the sort keys are shared."""
-    from ocsf_validator_spark.spec import transcript_suite
-    from ocsf_validator_spark.violations import _fusable, fused_group_violations
-
     suite = transcript_suite()
-    cs, ties = _fusable(suite, transcripts, ("conv_id", "turn_idx"))
+    cs, ties = _window_groups(suite, KEYS, transcripts)[0][KEYS]
     fused = fused_group_violations(
-        transcripts, cs, ties, ("conv_id", "turn_idx"), row_cs=suite.row_level()
+        transcripts, cs, ties, KEYS, row_cs=suite.row_level()
     )
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -320,7 +353,6 @@ def test_fused_suite_zero_exchange_on_bucketed_table(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ocsf_validator_spark.spec import transcript_suite
-    from ocsf_validator_spark.violations import _fusable, fused_group_violations
 
     rows = [
         (f"c{i % 7}", j, "user", f"t{i}-{j}", None)
@@ -341,7 +373,7 @@ def test_fused_suite_zero_exchange_on_bucketed_table(spark, tmp_path):
     try:
         t = spark.table(tbl)
         suite = transcript_suite()
-        cs, ties = _fusable(suite, t, ("conv_id", "turn_idx"))
+        cs, ties = _window_groups(suite, KEYS, t)[0][KEYS]
         fused = fused_group_violations(
             t, cs, ties, ("conv_id", "turn_idx"), row_cs=suite.row_level()
         )
@@ -376,8 +408,6 @@ def test_tie_display_truncation_all_paths(spark):
     from ocsf_validator_spark.spec import ConstraintSet, Unique
     from ocsf_validator_spark.violations import (
         TIE_DISPLAY_LEN,
-        _fusable,
-        fused_group_violations,
         unique_violations,
     )
 
@@ -397,7 +427,7 @@ def test_tie_display_truncation_all_paths(spark):
         first_seen_order=("ts", "role", "text"),
     )
     suite = ConstraintSet(name="u", constraints=[uniq])
-    cs, ties = _fusable(suite, df, ("conv_id", "turn_idx"))
+    cs, ties = _window_groups(suite, KEYS, df)[0][KEYS]
 
     def reasons(out):
         return sorted(
