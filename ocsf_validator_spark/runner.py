@@ -19,6 +19,8 @@ Pipeline phases (the Spark lifecycle from SURVEY.md §3):
                                        (in place: with each bucket's rows,
                                        riding the first sink's write)
   5. sinks                           — violations/verdicts parquet, manifest
+  (3, 4 and the violation and quarantine sinks are one per-unit step,
+  ``_validate_unit``, which each stream micro-batch runs too)
 
 Usage:
     spark-submit --py-files ocsf_validator_spark.zip \
@@ -37,8 +39,9 @@ import time
 import uuid
 import warnings
 from dataclasses import dataclass, field
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark.localframe import (
@@ -77,10 +80,15 @@ from ocsf_validator_spark.verdict import (
     verdicts,
 )
 from ocsf_validator_spark.violations import (
+    DEFAULT_KEYS,
     all_violations,
+    cap_violations,
     dataset_findings,
+    failing,
     fold_observations,
     observation_aggs,
+    quarantine_keys,
+    split_quarantine,
     window_route,
 )
 
@@ -300,22 +308,158 @@ def _ride(frame: DataFrame, vd: DataFrame) -> tuple[DataFrame, Observation]:
     """``frame`` to write with the rows of ``vd`` riding it, and the
     ``Observation`` that holds them as ``rows``, the ``collect_list`` of
     their structs, once the write has run. ``vd`` is observed on a
-    branch that ``violation_count < 0`` empties, projected to
+    branch that ``spark_partition_id() < 0`` empties, projected to
     ``frame``'s schema and unioned onto it in one partition: the write
     stores no row of it, and ``frame``'s branch runs first in that
     task, so a lazy checkpoint both read is filled before ``vd`` reads
     it. The filter must be one the optimizer cannot fold: PruneFilters
-    drops a literal-false branch and its observation with it."""
+    drops a literal-false branch and its observation with it, and a
+    nondeterministic predicate is never folded."""
     seen = Observation()
     empty = (
         vd.observe(seen, F.collect_list(F.struct(*vd.columns)).alias("rows"))
-        .filter(F.col("violation_count") < 0)
+        .filter(F.spark_partition_id() < 0)
         .select(*[
             F.lit(None).cast(f.dataType).alias(f.name)
             for f in frame.schema.fields
         ])
     )
     return frame.union(empty).coalesce(1), seen
+
+
+@dataclass
+class _Unit:
+    """What ``_validate_unit`` gives back: the input's window route;
+    with a verdict, its rows and their route (``"sink"`` when they rode
+    a write); without one, the rows the violation sink received and
+    those at or above the threshold (``n``, ``n_failing``); the
+    ``input_aggs`` values."""
+
+    window_route: str
+    verdict_route: str | None = None
+    rows: list | None = None
+    counts: dict | None = None
+    inputs: dict = field(default_factory=dict)
+
+
+def _validate_unit(
+    df: DataFrame,
+    suite: ConstraintSet,
+    threshold: Severity,
+    violations_out: str | None = None,
+    quarantine_out: str | None = None,
+    batch_id: int | None = None,
+    max_violation_rows: int | None = None,
+    carry: DataFrame | None = None,
+    verdict: Callable[[DataFrame], DataFrame] | None = None,
+    publish_if: Callable[[list], bool] | None = None,
+    input_aggs: Sequence[Column] = (),
+    **build,
+) -> _Unit:
+    """Validate one unit, a run, an increment (``batch_id`` None) or a
+    micro-batch, and write its sinks: the step ``run_validation`` and
+    ``streaming.validate_stream`` share.
+
+    - Rows: ``all_violations(df, suite, carry=carry, **build)``.
+    - Stored: the rows, when two legs read them (the violation sink,
+      the quarantine split, the ``verdict``), as a lazy local
+      checkpoint the first write fills (not ``cache()``: under AQE that
+      costs a fill job and one sink file per shuffle partition). A lost
+      block then fails the unit; its rerun or replay rewrites it.
+    - Writes: ``mode("overwrite")`` into the unit's own directory. A run
+      stages each sink in a ``_staging-<uuid>`` directory inside it
+      (Spark's file index skips it) and moves the files into the sink
+      once the verdict is in and ``publish_if(verdict rows)`` holds; the
+      staging directory is deleted whatever happens, so a failed run
+      leaves no rows for its rerun to duplicate. A micro-batch replaces
+      its ``batch_id=<n>`` partition.
+    - Quarantine: the input rows whose key a violation at or above
+      ``threshold`` names, split in its write's one task in place.
+    - Released: the stored rows, whatever happens.
+    - Observed: in place (``violations.window_route``) the verdict and
+      the ``input_aggs`` ride the first write (``_ride``); an
+      observation beneath a lazy checkpoint in place would complete
+      with zeros when the checkpoint is taken. On the exchange route
+      the verdict is collected, and the ``input_aggs`` are observed on
+      the input: taking the checkpoint runs the exchange. A unit with
+      no verdict observes the rows its violation sink writes and those
+      at or above ``threshold``. What a write fails to report
+      (``localframe.observed``: a zero-row micro-batch can drop the
+      node) costs a job; a lost verdict also warns."""
+    unit = _Unit(window_route(df, carry))
+    in_place = unit.window_route == "in_place"
+    sinks = [out for out in (violations_out, quarantine_out) if out]
+    ride = in_place and bool(sinks)
+    read_in, read_vd, read_n = Observation(), None, None
+    viol = all_violations(
+        df.observe(read_in, *input_aggs) if input_aggs and not ride else df,
+        suite, carry=carry, **build,
+    )
+    stored = len(sinks) + (verdict is not None) > 1
+    if stored:
+        viol = viol.localCheckpoint(eager=False)
+    dest = {out: os.path.join(out, (
+        f"_staging-{uuid.uuid4().hex}" if batch_id is None
+        else f"batch_id={int(batch_id)}"
+    )) for out in sinks}
+    writes = []
+    if violations_out:
+        sink = (
+            viol if max_violation_rows is None
+            else cap_violations(viol, max_violation_rows)
+        )
+        counts = [
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(failing(threshold)).alias("n_failing"),
+        ]
+        read_n = None if verdict else Observation()
+        writes.append(sink.observe(read_n, *counts) if read_n else sink)
+    if quarantine_out and in_place:
+        # gathered and joined in one task: an inner join that hashes the
+        # distinct key set is the semi join, which the optimizer would
+        # push beneath the input's coalesce (PushDownLeftSemiAntiJoin)
+        bad = quarantine_keys(viol.coalesce(1), threshold).hint("shuffle_hash")
+        writes.append(df.coalesce(1).join(bad, list(DEFAULT_KEYS)).select(*df.columns))
+    elif quarantine_out:
+        writes.append(split_quarantine(df, viol, threshold=threshold)[1])
+    if ride and verdict:
+        writes[0], read_vd = _ride(writes[0], verdict(viol))
+    if ride and input_aggs:
+        writes[0], read_in = _ride(writes[0], df.coalesce(1).agg(*input_aggs))
+    try:
+        for frame, out in zip(writes, sinks):
+            frame.write.mode("overwrite").parquet(dest[out])
+        if read_n:
+            unit.counts = observed(read_n) or sink.agg(*counts).first().asDict()
+        if input_aggs:
+            got = observed(read_in)
+            unit.inputs = (
+                df.agg(*input_aggs).first().asDict() if got is None
+                else got["rows"][0].asDict() if ride else got
+            )
+        got = observed(read_vd) if read_vd else None
+        if got is not None:
+            unit.verdict_route, unit.rows = "sink", got["rows"]
+        elif verdict:
+            if read_vd:
+                warnings.warn(
+                    "the sink write reported no verdict metrics row; "
+                    "collecting the verdict in a job of its own",
+                    RuntimeWarning,
+                )
+            # stored rows are judged by their exact size, once filled
+            unit.verdict_route = "one_task" if one_task(viol) else "exchange"
+            unit.rows = verdict(viol).collect()
+        if batch_id is None and (publish_if is None or publish_if(unit.rows)):
+            for tmp in dest.values():
+                _publish(df.sparkSession, tmp)
+    finally:
+        if stored:
+            release_checkpoint(viol)
+        for tmp in dest.values() if batch_id is None else ():
+            fs, path = _hadoop(df.sparkSession, tmp)
+            fs.delete(path, True)
+    return unit
 
 
 def run_validation(
@@ -341,47 +485,32 @@ def run_validation(
     """Validate ``df`` against ``suite`` in the phases the module
     docstring lists and return the exit code, counts and summary.
 
-    With ``violations_out`` or ``quarantine_out`` the violation rows are
-    read more than once (the sinks and the verdict pass), so they are
-    stored once, as a lazy local checkpoint rather than ``cache()``.
-    Taking the checkpoint runs the window's exchanges; the first sink's
-    own job then computes the AQE-coalesced rows and stores them, and
-    the detail-row cap, the quarantine split and the verdict pass read
-    the stored rows. ``cache()`` would cost one job more, because under
-    AQE the first query over a cached frame fills it in a job of its
-    own. A cached plan also keeps every shuffle partition, so the sink
-    would write one file per partition and the verdict's map stage run
-    a task for each (16 files and 18 tasks against 2 and 4 for 100 k
-    turns at 16 shuffle partitions).
-
-    The price is lineage: a lost cached block is recomputed, a lost
-    checkpoint block is not. An executor lost between the first sink
-    write and the verdict's read of the stored rows fails the run with
-    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The ``checkpoint_dir``
-    manifest is written after the verdict, so a rerun revalidates those
-    buckets. The sinks still append, but each writes into a
-    ``_staging-<uuid>`` directory of this run inside the sink path,
-    which Spark's file index skips. Its files move into the sink once
-    the verdict rows are in, before the manifest is written, and the
-    staging directory is then deleted, also when the run fails. So a
-    failed run leaves no rows in the sinks, and its rerun writes each
-    row once. The stored rows are released once the verdict rows are
-    in.
+    Phases 3-4 are the per-unit step ``_validate_unit``, which each
+    ``streaming.validate_stream`` micro-batch runs too. With a sink the
+    violation rows are read more than once (the sinks and the verdict),
+    so the step stores them once, as a lazy local checkpoint: taking it
+    runs the window's exchanges, the first sink's own job computes and
+    stores the rows, and the detail-row cap, the quarantine split and
+    the verdict read them. The sinks still append, each through a
+    staging directory of this run that is published once the verdict
+    rows are in, before the ``checkpoint_dir`` manifest is written. So
+    a failed run, also one that loses a stored block, leaves no rows in
+    the sinks and no manifest entry, and its rerun writes each row
+    once.
 
     A window that runs in place (``violations.window_route``) runs no
     stats probe, since one task has nothing to chunk: the enum coverage
     flags ride the sink's job (all_violations' lazy coverage leg) and
     the observed buckets with their row counts (the manifest's
-    ``n_rows``) ride the verdict (``verdicts``' lazy grid). With a sink
-    the verdict rides the first sink's write in turn, as one observed
-    metric of a row-less branch of it (``_ride``), so a small run is 1
-    job with or without a sink. Should that write report no metrics row
-    (``localframe.observed``), the verdict is collected in a job of its
-    own, with a ``RuntimeWarning``. Its MetricBounds aggregate in one
-    shared job while the plan is built. A rerun whose manifest covers
+    ``n_rows``) ride the verdict (``verdicts``' lazy grid), which rides
+    the first sink's write (``_ride``; collected, with a
+    ``RuntimeWarning``, if that write reports no metrics row): a small
+    run is 1 job with or without a sink, and a quarantine sink adds
+    its one-task write. Its MetricBounds aggregate in one shared job
+    while the plan is built. A rerun whose manifest covers
     every bucket returns before any job. One whose pending buckets hold
-    no row learns so from the verdict rows; it returns before the
-    staged sinks are published and writes no manifest entry.
+    no row learns so from the verdict rows; it returns without
+    publishing the staged sinks and writes no manifest entry.
 
     With ``report_json`` the report carries the route each adaptive
     step took, read from ``localframe.one_task`` of the frame that step
@@ -397,7 +526,10 @@ def run_validation(
     none is (no skew, a carried run, or a window in place). With no
     sink the violation rows stay lazy; those of a window in place are
     gathered too, so the verdict collect runs the window and the
-    aggregate in one task.
+    aggregate in one task. Its ``phase_sec`` keeps the keys ``audit``,
+    ``stats``, ``skew_probe``, ``skew_path`` and ``verdict``; the rows
+    are built inside the step, so ``verdict`` holds their build, the
+    sinks and the verdict, and ``skew_path`` reads about 0.
     """
     suite = suite or transcript_suite()
     threshold = Severity.WARNING if strict else Severity.ERROR
@@ -466,20 +598,14 @@ def run_validation(
                     "(run without --checkpoint for whole-table bounds)"
                 )
 
-    # Phase 2 — single-pass stats, collected once: yields n_rows, the
-    # observed-bucket list (so the verdict pass never rescans the input),
-    # the dataset-level observations (violations.observation_aggs: enum
-    # coverage flags and MetricBound aggregates, all mergeable across
-    # the two-level aggregation), AND the skew-probe candidates
-    # (per-conversation heavy hitters) — ONE data scan for all four,
-    # where rounds 1-2 spent a separate third scan on the probe (12-15%
-    # of every flagship run per the BENCH.md phase tables).
-    # distinct_count (no mergeable form) falls back to dataset_findings'
-    # shared agg job. A window that runs in place needs no probe: one
-    # task has nothing to chunk, the coverage flags ride the sink's job
-    # (all_violations' lazy coverage leg) and the buckets with their
-    # rows ride the verdict (its lazy grid, whose rows are one per
-    # bucket and constraint: a suite with no constraint probes).
+    # Phase 2 — single-pass stats, collected once: n_rows, the observed
+    # buckets, the mergeable dataset-level observations
+    # (violations.observation_aggs) AND the skew-probe candidates, in
+    # ONE data scan (distinct_count falls back to dataset_findings'
+    # shared agg job). A window in place needs no probe: the coverage
+    # flags ride the sink's job and the buckets with their rows ride the
+    # verdict's lazy grid (one row per bucket and constraint: a suite
+    # with no constraint probes).
     routes = {
         "stats_route": "one_task" if one_task(df) else "exchange",
         "window_route": window_route(df, carry_state),
@@ -502,13 +628,10 @@ def run_validation(
             return nothing_pending()
     lap("stats")
 
-    # Phase 2b — skew routing decision, now pure driver arithmetic over
-    # the probe structs collected with the stats (zero extra jobs):
-    # conversations too big for one window task are split into turn_idx
-    # chunks of one task's share of the rows. Threshold: ~4x that share
-    # (never below skew_min_rows, the probe's collection floor, so the
-    # candidates are always a superset). A window in place is one task:
-    # nothing to chunk.
+    # Phase 2b — skew routing, driver arithmetic over the probe structs:
+    # conversations past ~4x one task's share of the rows (never below
+    # skew_min_rows, the probe's floor) are split into turn_idx chunks
+    # of that share. A window in place is one task: nothing to chunk.
     skewed: list[str] = []
     skew_route = None
     if detect_skew and routes["window_route"] == "exchange":
@@ -552,113 +675,46 @@ def run_validation(
                 f"rows ({n_big} rows) to {route}"
             )
 
-    # Phase 3 — violations: one fused scan (row legs + conv window, the
-    # routed conversations chunked) plus the bounded coverage agg. When
-    # a sink reads the rows as well as the verdict pass, they are stored
-    # once, in a lazy local checkpoint that the first sink's own job
-    # fills. Not cache(): that costs one more job and one sink file per
-    # shuffle partition. The price is lineage (see the docstring). In
-    # place the verdict rides the first sink's write, after the branch
-    # that fills the checkpoint in its one task (_ride).
+    # Phases 3-4 — violations, sinks and verdict, the per-unit step: one
+    # fused scan plus the bounded coverage agg; the verdict (one groupBy
+    # over the violation rows unioned with the observed-bucket grid) is
+    # read ONCE, and report, exit code and manifest derive from it.
     lap("skew_probe")
-    viol = all_violations(
+    lap("skew_path")  # the rows are built inside the step: see "verdict"
+    unit = _validate_unit(
         df,
         suite,
-        observed_enums=observed_enums,
-        observed_metrics=observed_metrics,
-        skewed_convs=skewed,
+        threshold,
+        violations_out=violations_out,
+        quarantine_out=quarantine_out,
+        max_violation_rows=max_violation_rows,
         carry=carry_state,
-        fd_carry=fd_carry,
-    )
-    lap("skew_path")
-    stored = bool(violations_out or quarantine_out)
-    # each sink is written to a staging directory of this run inside it
-    # and published once the verdict is in: a run that fails before
-    # then leaves no rows behind for its rerun to duplicate
-    staging = {
-        out: os.path.join(out, f"_staging-{uuid.uuid4().hex}")
-        for out in (violations_out, quarantine_out)
-        if out
-    }
-    if stored:
-        viol = viol.localCheckpoint(eager=False)
-
-    def verdict_frame() -> DataFrame:
-        return verdicts(
+        verdict=lambda viol: verdicts(
             df, viol, suite, num_buckets=num_buckets,
             threshold=threshold, observed_buckets=observed_buckets,
             row_counts=not probe,
+        ),
+        # a resumed run whose pending buckets hold no row (in place
+        # read off the verdict's grid) publishes nothing
+        publish_if=lambda rows: probe or not skipped or any(
+            r.n_rows for r in rows
+        ),
+        observed_enums=observed_enums,
+        observed_metrics=observed_metrics,
+        skewed_convs=skewed,
+        fd_carry=fd_carry,
+    )
+    routes["verdict_route"] = unit.verdict_route
+    vd_rows = [_VERDICT_ROW(*r[:5]) for r in unit.rows]
+    if not probe:
+        # the probe's per-bucket rows, read off the verdict's grid
+        bucket_stats = sorted(
+            {r.bucket: r for r in unit.rows if r.n_rows is not None}.values(),
+            key=lambda r: r.bucket,
         )
-
-    seen = None  # the verdict's Observation once it rides a sink write
-    try:
-        if violations_out:
-            from ocsf_validator_spark.violations import cap_violations
-
-            # cap bounds only the browsable DETAIL rows in the sink — the
-            # verdict pass below counts the uncapped stored rows, so
-            # pass/fail and violation_count stay exact
-            sink = (
-                viol
-                if max_violation_rows is None
-                else cap_violations(viol, max_violation_rows)
-            )
-            if not probe:
-                sink, seen = _ride(sink, verdict_frame())
-            sink.write.parquet(staging[violations_out])
-        if quarantine_out:
-            from ocsf_validator_spark.violations import split_quarantine
-
-            # route full input rows whose key carries a >= threshold
-            # violation to the quarantine table (key-level: duplicate
-            # keys quarantine every copy); the defect-proportional key
-            # set is the join's build side, so healthy data broadcasts
-            # past it
-            _, quarantined = split_quarantine(df, viol, threshold=threshold)
-            if not probe and seen is None:
-                quarantined, seen = _ride(quarantined, verdict_frame())
-            quarantined.write.parquet(staging[quarantine_out])
-            lap("quarantine")
-
-        # Phase 4 — verdicts: one groupBy over the (small) violations set
-        # unioned with the observed-bucket grid, read ONCE: observed on
-        # the sink write it rode, else collected. Report, exit code, and
-        # manifest metrics all derive driver-side from these rows. Stored
-        # rows are judged by their exact size, so a collect's route is
-        # read once the sinks have filled them.
-        got = None if seen is None else observed(seen)
-        if got is not None:
-            routes["verdict_route"] = "sink"
-            got = got["rows"]
-        else:
-            if seen is not None:
-                warnings.warn(
-                    "the sink write reported no verdict metrics row; "
-                    "collecting the verdict in a job of its own",
-                    RuntimeWarning,
-                )
-            routes["verdict_route"] = (
-                "one_task" if one_task(viol) else "exchange"
-            )
-            got = verdict_frame().collect()
-        vd_rows = [_VERDICT_ROW(*r[:5]) for r in got]
-        if not probe:
-            # the probe's per-bucket rows, read off the verdict's grid
-            bucket_stats = sorted(
-                {r.bucket: r for r in got if r.n_rows is not None}.values(),
-                key=lambda r: r.bucket,
-            )
-            n_rows = sum(int(r.n_rows) for r in bucket_stats)
-            if n_rows == 0 and skipped > 0:
-                return nothing_pending()  # the staged sinks are dropped
-        for tmp in staging.values():
-            _publish(spark, tmp)
-    finally:
-        if stored:
-            release_checkpoint(viol)
-        for tmp in staging.values():
-            fs, path = _hadoop(spark, tmp)
-            fs.delete(path, True)
+        n_rows = sum(int(r.n_rows) for r in bucket_stats)
+        if n_rows == 0 and skipped > 0:
+            return nothing_pending()  # the staged sinks were dropped
     lap("verdict")
     vd_schema = (
         "bucket int, constraint_id string, severity string, "
@@ -775,24 +831,25 @@ def stream_main(spark: SparkSession, args, suite: ConstraintSet) -> int:
     0 = clean, 1 = violations at or above the failure threshold (ERROR;
     WARNING under --strict, which also quarantines at WARNING) found in
     this drain's batches (coverage is excluded per micro-batch by
-    design). The exit verdict
-    reads back only the sink rows THIS drain wrote: batch partitions by
-    this drain's batch ids (with --stateful-ordering, cross-batch
-    findings among them), and the append-across-drains --psi-ref drift
-    leg (batch_id=-2) by the drain_id stamped on its rows, so a later
-    clean drain does not re-fail on an earlier drain's findings."""
+    design). The exit verdict reads only what THIS drain found. Each
+    batch's count of rows at or above the threshold (with
+    --stateful-ordering, cross-batch findings among them) rode its sink
+    write as an observed metric and sits in its manifest line
+    (``n_failing`` under ``<checkpoint>_batches``), so reading it runs
+    no Spark job, and a later clean drain does not re-fail on an
+    earlier drain's findings. Only the append-across-drains --psi-ref
+    drift leg (batch_id=-2), another query, is read back, filtered to
+    the drain_id stamped on its rows."""
     from ocsf_validator_spark.streaming import (
         DRIFT_BATCH_ID,
+        manifest_file,
         stream_transcripts,
         validate_stream,
     )
 
     drain_id = uuid.uuid4().hex[:12]
     threshold = Severity.WARNING if args.strict else Severity.ERROR
-    # at or above that threshold, the rule violations.quarantine_keys applies
-    failing = F.col("severity").isin(
-        [s.name for s in Severity if s >= threshold]
-    )
+    manifests = args.checkpoint + "_batches"
     psi_kw: dict = {}
     if getattr(args, "psi_ref", None):
         # {"hist": {bin: count}, "bin_expr": "...", and optionally
@@ -813,7 +870,7 @@ def stream_main(spark: SparkSession, args, suite: ConstraintSet) -> int:
         violations_out=args.violations_out,
         checkpoint_dir=args.checkpoint,
         suite=suite,
-        manifest_dir=args.checkpoint + "_batches",
+        manifest_dir=manifests,
         on_batch=lambda bid, rows, nv: batches.append((bid, rows, nv)),
         stateful_ordering=args.stateful_ordering,
         drain_id=drain_id,
@@ -829,14 +886,13 @@ def stream_main(spark: SparkSession, args, suite: ConstraintSet) -> int:
     if not batches:
         print("stream: nothing pending")
         return 0
-    drained = [bid for bid, _, _ in batches]
-    bad = (
-        read_parquet(spark, args.violations_out)
-        .filter(F.col("batch_id").isin(drained) & failing)
-        .limit(1)
-        .count()
-        > 0
-    )
+    # each drained batch's manifest line holds the rows at or above the
+    # threshold that its sink write observed: no job reads them back
+    def n_failing(bid: int) -> int:
+        with open(manifest_file(manifests, bid)) as f:
+            return json.load(f)["n_failing"]
+
+    bad = any(n_failing(bid) for bid, _, _ in batches)
     if psi_kw and not bad:
         # the drift leg appends across drains: only rows THIS drain
         # stamped may fail THIS drain's exit code
@@ -846,7 +902,7 @@ def stream_main(spark: SparkSession, args, suite: ConstraintSet) -> int:
         except Exception:
             return 0  # the leg emitted nothing yet — no directory
         bad = (
-            leg_rows.filter((F.col("drain_id") == drain_id) & failing)
+            leg_rows.filter((F.col("drain_id") == drain_id) & failing(threshold))
             .limit(1)
             .count()
             > 0

@@ -72,13 +72,15 @@ class Constraint:
     def __post_init__(self) -> None:
         # a config error is never a silent keep: the dataset-level kinds
         # read the WHOLE frame (and so do the runner's piggybacked
-        # aggregates), so a `where` there would be ignored — scope the
-        # input frame instead
-        if self.where and isinstance(self, DATASET_LEVEL):
-            raise ValueError(
-                f"{self.KIND} constraints are dataset-level; `where` is "
-                "not applied — filter the input frame instead"
-            )
+        # aggregates), and the group-level kinds the whole window or key
+        # group, so a `where` there would be ignored — scope the input
+        # frame instead
+        for level, kinds in (("dataset", DATASET_LEVEL), ("group", GROUP_LEVEL)):
+            if self.where and isinstance(self, kinds):
+                raise ValueError(
+                    f"{self.KIND} constraints are {level}-level; `where` "
+                    "is not applied — filter the input frame instead"
+                )
 
     def version(self) -> str:
         """Stable content hash so the checkpoint manifest can detect a

@@ -5,10 +5,10 @@ The reference is batch-only (SURVEY.md §2.10); this module is the
 north-star extension for validating an APPEND-ONLY transcript stream
 (e.g. the Iceberg table's incoming commits) without re-scanning history:
 
-- ``validate_stream``: readStream → foreachBatch. Every micro-batch runs
-  the SAME fused single-scan violation pass as the batch runner (row
-  family + conversation-window family share one shuffle), appends
-  violations to the sink, and writes a per-batch manifest line. Restart
+- ``validate_stream``: readStream → foreachBatch. Every micro-batch is
+  one call of the batch runner's per-unit step
+  (``runner._validate_unit``), coverage off: it writes the violations
+  and a per-batch manifest line. Restart
   resumes from the streaming checkpoint — exactly-once per micro-batch
   because the sink IS (batch_id)-keyed: each batch overwrites its own
   ``batch_id=<n>`` partition, so a replay after a failure between the
@@ -17,16 +17,11 @@ north-star extension for validating an APPEND-ONLY transcript stream
 
   Cost: a small micro-batch (files of at most ``spark.sql.files.
   openCostInBytes`` in all) is one Spark job, the sink write: the
-  fused window runs in one scan task (``violations.window_route``).
-  A larger batch adds the window's exchange as a job of its own. The
-  violation count (manifest line, ``on_batch``) and the input row
-  count (``on_batch``) ride that write as observed metrics
-  (``Observation``) rather than a cache and a count. Only the
-  quarantine leg stores the batch (a lazy local checkpoint, filled by
-  the sink write's own job), because it reads it a second time: three
-  jobs a one-task batch. On the exchange route it stores the batch's
-  violations as well, so the split does not rerun the exchange: five
-  jobs a batch.
+  fused window runs in one scan task (``violations.window_route``); a
+  larger batch adds the window's exchange. Its counts ride that write
+  as observed metrics. The quarantine leg adds its own write, whose
+  split runs in one task: two jobs a small batch, five on the
+  exchange route.
 
   Scope note: by default the conversation-window checks see one
   micro-batch at a time, so they catch intra-batch duplicates/disorder
@@ -56,15 +51,14 @@ import time
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocsf_validator_spark import convstate
 from ocsf_validator_spark.drift import emd_term, emd_value, psi_term
-from ocsf_validator_spark.localframe import observed, release_checkpoint
+from ocsf_validator_spark.runner import _validate_unit
 from ocsf_validator_spark.sources import read_parquet
 from ocsf_validator_spark.spec import ConstraintSet, Severity, transcript_suite
-from ocsf_validator_spark.violations import all_violations, window_route
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -87,20 +81,9 @@ CANONICAL_COLS = ("constraint_id", "conv_id", "turn_idx", "reason", "severity")
 DRIFT_BATCH_ID = -2  # partition value of the windowed PSI drift leg
 
 
-def _observed(obs: Observation, name: str) -> int | None:
-    """The long ``obs`` collected as ``name`` during the action that
-    ran over its frame; None when it is NULL or there is no metrics row
-    (``localframe.observed``: the input observation on a zero-row
-    micro-batch can leave the plan with the exchange above it)."""
-    got = observed(obs)
-    return None if got is None or got[name] is None else int(got[name])
-
-
-def _observed_rows(obs: Observation, frame: DataFrame) -> int:
-    """The row count ``obs`` collected as ``n`` over ``frame``; only a
-    missing metrics row (see ``_observed``) pays a job to count it."""
-    n = _observed(obs, "n")
-    return frame.count() if n is None else n
+def manifest_file(manifest_dir: str, batch_id: int) -> str:
+    """The path of micro-batch ``batch_id``'s manifest line."""
+    return os.path.join(manifest_dir, f"batch-{int(batch_id):012d}.json")
 
 
 def validate_stream(
@@ -130,26 +113,28 @@ def validate_stream(
     micro-batch is meaningless — absence in 10k rows is not absence in
     the table); everything else is the batch engine unchanged.
 
-    A small micro-batch (``window_route`` is ``"in_place"``) costs one
-    job, the sink write, with or without
-    ``manifest_dir`` and ``on_batch``: the window runs in the scan's
-    task, and the violation and input row counts they report are
-    observed metrics of that write. A batch that takes the exchange
-    route costs one job more, the window's exchange. Only
-    ``quarantine_out`` stores the batch rows, for the second read its
-    split makes, in a lazy local checkpoint that the sink write's own
-    job fills: a one-task batch costs three jobs. On the exchange route
-    the batch's violations are stored the same way, so the split does
-    not rerun the exchange: five jobs. In place they are not: the split
-    recomputes the window in its own first stage, which costs no job,
-    and a checkpoint would report the input row observation beneath it
-    before any row is read. What is stored is released when the batch
-    ends. A stored block lost before the split reads it fails the batch
-    instead of being recomputed; the streaming checkpoint has not
-    committed the batch, so the restarted query replays it.
+    Each micro-batch is one call of the batch runner's per-unit step
+    (``runner._validate_unit``: coverage off, the carry in, the sink at
+    ``batch_id=<n>``, which it replaces), under its rules for what is
+    stored, the quarantine split and what the write observes. A small
+    micro-batch (``window_route`` ``"in_place"``) costs one job, the
+    sink write, with or without ``manifest_dir`` and ``on_batch``: the
+    window runs in the scan's task, the violation counts are observed
+    on the write and the input row count rides it. On the exchange
+    route the window's exchange adds a job, and the input count is
+    observed on the input. ``quarantine_out`` reads the violations
+    twice, so they are stored in a lazy local checkpoint the sink write
+    fills, released when the batch ends: two jobs a one-task batch (the
+    split runs in the quarantine write's task), five on the exchange
+    route. A stored block lost before the split reads it fails the
+    batch; the streaming checkpoint has not committed it, so the
+    restarted query replays it.
 
-    Each manifest line carries the batch's ``window_route``
-    (``"in_place"`` or ``"exchange"``).
+    Each manifest line (``manifest_file``) carries ``window_route``,
+    ``n_violations`` (the rows the sink write received) and
+    ``n_failing`` (those at or above ``quarantine_threshold``): a
+    micro-batch builds no per-bucket verdict, and ``runner --stream``
+    reads its exit code from ``n_failing``.
 
     Sink layout: violations land under ``batch_id=<n>`` partition
     directories (idempotent replay), so reading ``violations_out``
@@ -194,7 +179,8 @@ def validate_stream(
     rows (key named by a >= ``quarantine_threshold`` violation from
     THIS batch's fused pass) into ``quarantine_out/batch_id=<n>`` with
     the same idempotent overwrite-per-batch replay semantics as the
-    violations sink.
+    violations sink. ``quarantine_threshold`` is also the threshold of
+    the manifest's ``n_failing``.
 
     Returns the StreamingQuery, or ``(batch_query, drift_query)`` with
     the drift leg; with ``available_now`` the caller can
@@ -225,101 +211,42 @@ def validate_stream(
             convstate.gc_state(carry_dir, below=batch_id)
             carry = convstate.read_state(spark, carry_dir, below=batch_id)
             fd_carry = convstate.read_fd_states(spark, carry_dir, below=batch_id)
-        # split_quarantine reads the batch rows and their violations a
-        # second time (and the state commit reads the rows again);
-        # store the rows (lazily, filled by the sink write's own job) so
-        # that leg costs no source re-read
-        stored: list[DataFrame] = []
-        try:
-            if quarantine_out:
-                batch_df = batch_df.localCheckpoint(eager=False)
-                stored.append(batch_df)
-            seen, found = Observation(), Observation()
-            n = F.count(F.lit(1)).alias("n")
-            # the idle GC's horizon: the batch's newest ts, observed on
-            # the sink write rather than collected
-            newest = (
-                [F.max(F.unix_micros(convstate.EVENT_TS)).alias("newest_us")]
-                if idle_us is not None and convstate.carries_ts(batch_df)
-                else []
-            )
-            seen_aggs = ([n] if on_batch else []) + newest
-            route = (
-                window_route(batch_df, carry)
-                if manifest_dir or quarantine_out
-                else None
-            )
-            viol = all_violations(
-                batch_df.observe(seen, *seen_aggs) if seen_aggs else batch_df,
-                suite,
-                include_coverage=False,
-                carry=carry,
-                fd_carry=fd_carry,
-            )
-            if quarantine_out and route == "exchange":
-                # store the violations too, so the split does not run
-                # the window's exchange again. In place the split
-                # recomputes the window in its own first stage at no
-                # job, and a checkpoint would report the input
-                # observation under it (as 0) before any row is read
-                viol = viol.localCheckpoint(eager=False)
-                stored.append(viol)
-            # idempotent (batch_id)-keyed commit: a replayed batch
-            # OVERWRITES its own partition directory — at-least-once
-            # foreachBatch delivery becomes exactly-once in the sink
-            viol.observe(found, n).write.mode("overwrite").parquet(
-                os.path.join(violations_out, f"batch_id={int(batch_id)}")
-            )
-            n_viol = _observed_rows(found, viol)
-            n_rows = _observed_rows(seen, batch_df) if on_batch else None
-            if quarantine_out:
-                # route this batch's violating INPUT rows to the
-                # quarantine table, (batch_id)-keyed for the same
-                # idempotent replay
-                from ocsf_validator_spark.violations import split_quarantine
-
-                _, quarantined = split_quarantine(
-                    batch_df, viol, threshold=q_threshold
-                )
-                quarantined.write.mode("overwrite").parquet(
-                    os.path.join(quarantine_out, f"batch_id={int(batch_id)}")
-                )
-            if carry_dir:
-                newest_us = _observed(seen, "newest_us") if newest else None
-                convstate.publish(
-                    carry_dir,
-                    batch_id,
-                    *convstate.commit(
-                        batch_df,
-                        suite,
-                        carry_dir,
-                        batch_id,
-                        carry=carry,
-                        fd_carry=fd_carry,
-                        stale_before_us=(
-                            None if newest_us is None else newest_us - idle_us
-                        ),
-                    ),
-                )
-        finally:
-            for frame in stored:
-                release_checkpoint(frame)
+        # the input rows on_batch reports, and the idle GC's horizon:
+        # the batch's newest ts
+        newest = idle_us is not None and convstate.carries_ts(batch_df)
+        unit = _validate_unit(
+            batch_df, suite, q_threshold, violations_out=violations_out,
+            quarantine_out=quarantine_out, batch_id=batch_id, carry=carry,
+            input_aggs=(
+                ([F.count(F.lit(1)).alias("n")] if on_batch else [])
+                + ([F.max(F.unix_micros(convstate.EVENT_TS)).alias("newest_us")]
+                   if newest else [])
+            ),
+            include_coverage=False, fd_carry=fd_carry,
+        )
+        if carry_dir:
+            newest_us = unit.inputs.get("newest_us")
+            stale = None if newest_us is None else newest_us - idle_us
+            convstate.publish(carry_dir, batch_id, *convstate.commit(
+                batch_df, suite, carry_dir, batch_id, carry=carry,
+                fd_carry=fd_carry, stale_before_us=stale,
+            ))
+        n_viol = int(unit.counts["n"])
         if manifest_dir:
             os.makedirs(manifest_dir, exist_ok=True)
             line = {
                 "batch_id": int(batch_id),
                 "n_violations": n_viol,
-                "window_route": route,
+                "n_failing": int(unit.counts["n_failing"]),
+                "window_route": unit.window_route,
                 "suite_version": suite.version(),
                 "wall_sec": round(time.time() - t0, 3),
                 "finished_at": time.time(),
             }
-            with open(
-                os.path.join(manifest_dir, f"batch-{batch_id:012d}.json"), "w"
-            ) as f:
+            with open(manifest_file(manifest_dir, batch_id), "w") as f:
                 json.dump(line, f)
         if on_batch:
-            on_batch(int(batch_id), n_rows, n_viol)
+            on_batch(int(batch_id), int(unit.inputs["n"]), n_viol)
 
     writer = (
         sdf.writeStream.foreachBatch(_process)

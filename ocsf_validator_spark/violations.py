@@ -1753,6 +1753,12 @@ def cap_violations(
     )
 
 
+def failing(threshold: Severity) -> Column:
+    """Whether a violation row's ``severity`` is at or above
+    ``threshold``: the rows that fail a run and quarantine their key."""
+    return F.col("severity").isin([s.name for s in Severity if s >= threshold])
+
+
 def quarantine_keys(
     viol: DataFrame,
     threshold: Severity = Severity.ERROR,
@@ -1761,8 +1767,7 @@ def quarantine_keys(
     """Distinct row keys named by at least one violation at or above
     ``threshold``. Dataset-level findings (NULL keys — coverage,
     schema audit) name no row and quarantine nothing."""
-    names = [s.name for s in Severity if s >= threshold]
-    out = viol.filter(F.col("severity").isin(names))
+    out = viol.filter(failing(threshold))
     for k in keys:
         out = out.filter(F.col(k).isNotNull())
     return out.select(*keys).distinct()

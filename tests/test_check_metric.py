@@ -272,14 +272,22 @@ def test_check_label_need_not_be_a_column(spark):
 
 def test_dataset_kind_config_guards():
     """Config errors are never silent keeps: empty by/determinants and
-    `where` on dataset-level kinds raise at construction."""
+    `where` on dataset-level and group-level kinds raise at
+    construction (neither the fused window nor unique_violations reads
+    it)."""
     from ocsf_validator_spark.spec import (
         AllowedColumns,
+        Alternation,
         DriftGate,
         EnumCoverage,
         FunctionalDependency,
         GroupMetricBound,
+        Monotonic,
+        OpeningRole,
+        Precedence,
         QuantileBound,
+        TurnOrdering,
+        Unique,
         VolumeGate,
     )
 
@@ -304,6 +312,17 @@ def test_dataset_kind_config_guards():
         (AllowedColumns, dict(allowed=("x",))),
     ):
         with pytest.raises(ValueError, match="dataset-level"):
+            cls(column="x", where="role = 'tool'", **kw)
+    for cls, kw in (
+        (Unique, dict(keys=("conv_id", "turn_idx"))),
+        (TurnOrdering, dict()),
+        (Monotonic, dict()),
+        (Precedence, dict(trigger="tool", prereq=("user",))),
+        (OpeningRole, dict(allowed=("user",))),
+        (Alternation, dict(scope=("user", "assistant"))),
+    ):
+        assert cls(column="x", **kw).where is None
+        with pytest.raises(ValueError, match="group-level"):
             cls(column="x", where="role = 'tool'", **kw)
 
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -295,13 +296,13 @@ def test_schema_audit_runs_no_job(spark, jobs_of):
     [
         ("sink", "in_place", 1),
         ("sink+cap", "in_place", 2),
-        ("sink+quarantine", "in_place", 4),
+        ("sink+quarantine", "in_place", 2),
         ("sink", "exchange", 8),
         ("sink+cap", "exchange", 9),
         ("sink+quarantine", "exchange", 11),
         ("none", "in_place", 1),
         ("none", "exchange", 7),
-        ("quarantine", "in_place", 3),
+        ("quarantine", "in_place", 1),
     ],
     ids=[
         "sink", "sink+cap", "sink+quarantine",
@@ -320,9 +321,9 @@ def test_routed_run_with_sinks_job_count(
     rows and the input's per-bucket row counts, the manifest's n_rows,
     aggregated in the same task; the report's verdict_route reads
     "sink"). The schema audit adds none. The detail-row cap adds its
-    exchange (2); the quarantine leg adds its semi-join's exchanges and
-    write (4); with no violation sink the verdict rides the quarantine
-    write (3). With every one-task route forced onto its exchange the
+    exchange (2); the quarantine leg adds its write (2), whose key set
+    and join run gathered in its one task; with no violation sink the
+    verdict rides the quarantine write (1). With every one-task route forced onto its exchange the
     stats probe runs and the conversation is chunked: stats 3 (two
     exchanges, then the final aggregate), the sink write 3 (the
     skew-chunk carriers' exchange, the window's, then the write) and the
@@ -768,6 +769,8 @@ _BAD_SUITES = {
                           "baseline": {"0": 1}, "metric": "bogus"}),
     "where": _registry(m={"kind": "metric", "column": "role",
                           "metric": "max", "where": "role = 'user'"}),
+    "group_where": _registry(u={"kind": "monotonic", "column": "ts",
+                                "where": "role = 'user'"}),
     "empty_by": _registry(g={"kind": "group_metric", "column": "role",
                              "by": [], "metric": "row_count"}),
     "not_json": "{not json",
@@ -802,10 +805,10 @@ def test_malformed_suite_source_is_fatal_before_spark(
 ):
     """Every malformed suite source exits 2 with one [FATAL] line while
     the suite is built, before a session starts: an unknown metric, a
-    `where` on a dataset-level kind or an empty `by` is rejected when
-    the constraint is built, from a flag or a --suite-json alike, a
-    repeated constraint id when the suite is complete, and on a carried
-    run a constraint the carried state does not serve."""
+    `where` on a dataset-level or group-level kind or an empty `by` is
+    rejected when the constraint is built, from a flag or a --suite-json
+    alike, a repeated constraint id when the suite is complete, and on a
+    carried run a constraint the carried state does not serve."""
     from ocsf_validator_spark import session
     from ocsf_validator_spark.runner import main
 
@@ -867,6 +870,37 @@ def test_cli_stream_mode(spark, tmp_path):
         "--checkpoint", str(tmp_path / "sckpt"),
     ])
     assert code2 == 0
+
+
+def test_cli_stream_runs_only_the_batch_jobs(
+    spark, tmp_path, jobs_of, monkeypatch
+):
+    """--stream reads its exit code from the manifest lines its batches
+    wrote (each line's n_failing, observed on the batch's sink write),
+    so a drain of a one-file landing runs exactly the micro-batch's
+    jobs: the one in-place sink write, and no read-back of the sink."""
+    from ocsf_validator_spark import streaming
+    from ocsf_validator_spark.runner import main
+
+    root = str(tmp_path / "landing")
+    synth_transcripts(spark, n_turns=2000, seed=42).coalesce(1).write.parquet(root)
+    queries, start = [], streaming.validate_stream
+
+    def spy(*a, **kw):
+        queries.append(start(*a, **kw))
+        return queries[-1]
+
+    monkeypatch.setattr(streaming, "validate_stream", spy)
+    argv = [
+        "--input", root, "--stream",
+        "--violations-out", str(tmp_path / "viol"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ]
+    (code, *_), n = jobs_of(lambda: (main(argv), *queries))
+    assert (code, n) == (1, 1)
+    (line,) = glob.glob(str(tmp_path / "ckpt_batches" / "batch-*.json"))
+    with open(line) as f:
+        assert json.load(f)["n_failing"] > 0
 
 
 def _land(spark, tmp_path, root, rows, name):

@@ -748,7 +748,7 @@ def test_validate_stream_zero_row_batch(spark, tmp_path, land_files):
     [
         ("none", "in_place", 1),
         ("callbacks", "in_place", 1),
-        ("quarantine", "in_place", 3),
+        ("quarantine", "in_place", 2),
         ("quarantine", "exchange", 5),
         ("stateful", "in_place", (3, 7)),
         ("stateful", "exchange", (4, 7)),
@@ -765,10 +765,12 @@ def test_validate_stream_jobs_per_batch(
     window runs in it (manifest ``window_route`` "in_place") and the
     batch is one job, the sink write: the violation and input counts
     ride the write as observed metrics. The quarantine leg stores the
-    batch (a local checkpoint the sink write fills) and re-reads it: 3
-    jobs a batch. With the AQE advisory size forced to one byte the
-    window takes its exchange; the leg then stores the violations too,
-    so the split does not rerun that exchange: 5 jobs a batch. With
+    violations (a local checkpoint the sink write fills) and its split
+    reads them and the batch gathered in the quarantine write's one
+    task: 2 jobs a batch. With the AQE advisory size forced to one byte
+    the window takes its exchange, which taking the checkpoint runs,
+    and the split plans its key set through an exchange and a
+    broadcast: 5 jobs a batch. With
     ``stateful_ordering`` a pin is (first batch, carried batch): the
     first batch has no state to read, and every batch pays the state
     commit; a carried batch takes the exchange route. Nothing is left
@@ -807,12 +809,54 @@ def test_validate_stream_jobs_per_batch(
         assert [rows for _, rows, _ in sorted(seen)] == counts
         assert {bid: nv for bid, _, nv in seen} == sink
         assert _manifest(out + "/manifest") == sink
+        assert _manifest(out + "/manifest", "n_failing") == {
+            bid: spark.read.parquet(f"{out}/viol/batch_id={bid}")
+            .filter("severity IN ('ERROR', 'FATAL')").count()
+            for bid in sink
+        }
         routes = _manifest(out + "/manifest", "window_route")
         carried_route = "exchange" if opts == "stateful" else route
         assert routes == {
             bid: route if bid == min(routes) else carried_route
             for bid in routes
         }
+
+
+def test_micro_batch_matches_run_validation(spark, tmp_path, land_files):
+    """A micro-batch and a batch run are one validation step
+    (runner._validate_unit): on one landed file, the micro-batch's sink
+    rows equal run_validation's leaving out its coverage rows (NULL
+    keys; a micro-batch runs no coverage), its quarantine rows equal
+    run_validation's, and its manifest's n_failing counts the batch
+    run's sink rows at or above ERROR."""
+    from ocsf_validator_spark.runner import run_validation
+    from ocsf_validator_spark.violations import failing
+    from ocsf_validator_spark.spec import Severity
+
+    root, out = str(tmp_path / "land1"), str(tmp_path / "out1")
+    land_files(root, [synth_transcripts(spark, n_turns=2000, seed=42)])
+    q = _drain(spark, root, out, manifest_dir=out + "/manifest",
+               quarantine_out=out + "/quar")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    run_validation(
+        spark, spark.read.parquet(root), num_buckets=8, quiet=True,
+        violations_out=out + "/bviol", quarantine_out=out + "/bquar",
+    )
+
+    def rows(path, keyed=False):
+        df = spark.read.parquet(path)
+        if keyed:
+            df = df.filter(F.col("conv_id").isNotNull() | F.col("turn_idx").isNotNull())
+        return sorted(map(tuple, df.drop("batch_id").collect()), key=repr)
+
+    stream_rows = rows(out + "/viol")
+    assert stream_rows and stream_rows == rows(out + "/bviol", keyed=True)
+    assert rows(out + "/quar") and rows(out + "/quar") == rows(out + "/bquar")
+    batch_failing = spark.read.parquet(out + "/bviol").filter(
+        failing(Severity.ERROR) & F.col("conv_id").isNotNull()
+    ).count()
+    assert _manifest(out + "/manifest", "n_failing") == {0: batch_failing}
 
 
 def test_validate_stream_restart_contract(spark, tmp_path):
